@@ -583,9 +583,9 @@ object Dedup {
     * table (rare by construction: at most rows/cap keys) joins back against
     * the band rows with AQE free to broadcast it, and the band rows
     * themselves are never sort-shuffled. Measured ~3x cheaper than the
-    * window form at sf0.1 (PerfLab `simhash`), and the win grows with data:
-    * at 100 TB the window form would sort-shuffle every band row. Sub-cap
-    * rows come back with `bn` null.
+    * window form at sf0.1 (PERF_NOTES, "Figures from retired probes"), and
+    * the win grows with data: at 100 TB the window form would sort-shuffle
+    * every band row. Sub-cap rows come back with `bn` null.
     */
   private[graft] def withBucketStats(buckets: DataFrame, keys: Seq[String], rep: Column,
       cap: Long): DataFrame = {

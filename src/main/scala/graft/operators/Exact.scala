@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Oracle-exact numeric helpers.
   *
@@ -14,9 +13,9 @@ import org.apache.spark.sql.types.DecimalType
   * ([[graft.plans.SumInt128]]), which is order-independent, overflow-proof
   * to ~1.7e34 in value terms, and stays on whole-stage codegen's primitive
   * fast path — ~2.4× faster than decimal accumulation on the lineitem
-  * aggregate family (PerfLab `dsum`). The DuckDB twins sum the identically
-  * rounded BIGINT units (DuckDB widens to HUGEINT natively) and convert
-  * through the same bit-exact int128→double ([[graft.plans.Int128ToDouble]]
+  * aggregate family (PERF_NOTES, "Exact-sum decomposition"). The DuckDB
+  * twins sum the identically rounded BIGINT units (DuckDB widens to
+  * HUGEINT natively) and convert through the same bit-exact int128→double ([[graft.plans.Int128ToDouble]]
   * replicates DuckDB's CastBigintToFloating), so results hash-match at any
   * magnitude. Per-value rounding is HALF_UP at 4 dp like the old
   * DECIMAL(18,4) route; the two can disagree only where the binary product
@@ -54,10 +53,9 @@ object Exact {
   def sqlDsumOver(x: String, over: String): String =
     s"(CAST(SUM(${graft.plans.ScaledLong.sql(x, "10000.0")}) $over AS DOUBLE) / 10000.0)"
 
-  /** Decimal-exact form, kept for weighted/conditional sums whose twins
-    * predate the unit form (PerfLab also uses it as the measured baseline).
+  /** Decimal-exact DuckDB form, kept for weighted/conditional sums whose
+    * twins predate the unit form.
     */
-  def decSum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
   def sqlDecSum(x: String): String =
     s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 }

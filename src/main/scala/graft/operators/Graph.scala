@@ -99,10 +99,16 @@ object Graph {
     * double-division read-out, and the same HALF_UP 6 dp rounding Spark's
     * `round` applies — GraphSpec pins local ≡ distributed row-for-row.
     * Above the ceiling (web scale) the distributed loop runs unchanged.
+    * The ceiling must stay below Int.MaxValue: the probing collect is a
+    * `limit(cap + 1)`, and a larger cap would silently truncate the edges.
     */
-  private[graft] def localMaxEdges(s: SparkSession): Long =
-    s.conf.getOption("graft.graph.localMaxEdges")
+  private[graft] def localMaxEdges(s: SparkSession): Long = {
+    val cap = s.conf.getOption("graft.graph.localMaxEdges")
       .map(_.toLong).getOrElse(1000000L)
+    require(cap < Int.MaxValue,
+      s"graft.graph.localMaxEdges must be below ${Int.MaxValue}, got $cap")
+    cap
+  }
 
   /** Driver-local replica of the distributed rank loop's arithmetic —
     * shared by [[pageRank]]'s small-graph path. */
@@ -150,7 +156,7 @@ object Graph {
     // distributed loop runs unchanged
     val cap = localMaxEdges(s)
     val e = raw.select(col("src"), col("dst")).as[(Long, Long)]
-      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      .limit((cap + 1).toInt).collect()
     if (e.length <= cap) return pageRankLocal(e).toSeq.toDF("node", "pr")
     pageRankDistributed(s, raw)
   }

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQueryProgress, Trigger}
 import graft.operators.Exact._
 
 /** C-block streaming (SURVEY §2 C3/C4): the same event computations as the
@@ -240,29 +241,15 @@ object Streams {
   }
 
   def streamingTypeTransitions(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_trans_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"))
       .as[TEv]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsTransitions,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, src.groupByKey(_.user_id)
+      .transformWithState(new TwsTransitions,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append()),
+      "append", rocksDb = true)
   }
 
   /** C34 — BATCH-BOOTSTRAP of streaming state via
@@ -317,7 +304,6 @@ object Streams {
     import graft.operators.Tables
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val name = "graft_stream_boot_sink_" + sinkId.incrementAndGet()
     // batch side: the old era's final OPEN session per user (ms-grain cut,
     // so both engines and the stream filter agree exactly)
     val evb = Tables.events(s, d)
@@ -347,24 +333,11 @@ object Streams {
       .filter(col("ts") > lit(cut2))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsBootSession,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append(),
-          openState)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, src.groupByKey(_.user_id)
+      .transformWithState(new TwsBootSession,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append(),
+        openState),
+      "append", rocksDb = true)
   }
 
   /** C33 — BURST detection via transformWithState LIST state (round-13;
@@ -412,29 +385,15 @@ object Streams {
   }
 
   def streamingBurstDetect(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_burst_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .as[PEv]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsBurst,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, src.groupByKey(_.user_id)
+      .transformWithState(new TwsBurst,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append()),
+      "append", rocksDb = true)
   }
 
   /** Era fixture for C32 (the C25/C28 modTime-ordered discipline): old-era
@@ -476,31 +435,17 @@ object Streams {
 
   def streamingSessionTimers(s: SparkSession, d: String): DataFrame = {
     val dir = twsFixtureDir(s, d)
-    val name = "graft_stream_twst_sink_" + sinkId.incrementAndGet()
     import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val src = s.readStream
-        .schema("user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-        .withWatermark("ts", "1 hour")
-        .as[Ev2]
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsTimedSession,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    val src = s.readStream
+      .schema("user_id BIGINT, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/*.parquet")
+      .withWatermark("ts", "1 hour")
+      .as[Ev2]
+    drain(s, src.groupByKey(_.user_id)
+      .transformWithState(new TwsTimedSession,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append()),
+      "append", rocksDb = true)
   }
 
   private val sinkId = new java.util.concurrent.atomic.AtomicInteger()
@@ -550,22 +495,57 @@ object Streams {
     }
   }
 
-  /** Stateful-operator partition count for the gated run-to-completion
-    * queries, decoupled from the session's batch shuffle width via
-    * `graft.streaming.statePartitions` (default 8). State partitioning is
-    * fixed for a streaming query's lifetime at first start and each state
-    * partition pays per-micro-batch store open/commit I/O, so it should be
-    * sized to sustained throughput and key cardinality — NOT inherited from
-    * a compute-width conf tuned for batch scans (PerfLab `streamjoin`:
-    * the sf0.1 stream-stream join is 7.0 s at 32 state partitions, 2.0 s at
-    * 8 — pure store overhead, identical results). A production deployment
-    * raises the conf for high-cardinality keyed state.
+  /** Per-batch progress of the last [[runToCompletion]] query (spec probe). */
+  @volatile private[graft] var lastProgress: Seq[StreamingQueryProgress] = Nil
+
+  /** Runs one bounded streaming query to completion — the one place every
+    * gated streaming key starts, drains and stops a query. `writer` is built
+    * inside the conf scope and started with an AvailableNow trigger; the
+    * query is stopped and the session conf restored even when it fails.
+    *
+    * The stateful-operator partition count is decoupled from the session's
+    * batch shuffle width via `graft.streaming.statePartitions` (default 8).
+    * State partitioning is fixed for a streaming query's lifetime at first
+    * start and each state partition pays per-micro-batch store open/commit
+    * I/O, so it should be sized to sustained throughput and key cardinality
+    * — NOT inherited from a compute-width conf tuned for batch scans (the
+    * sf0.1 stream-stream join measured 7.0 s at 32 state partitions, 2.0 s
+    * at 8 — pure store overhead, identical results; PERF_NOTES, "Figures
+    * from retired probes"). A production deployment raises the conf for
+    * high-cardinality keyed state. `rocksDb` selects the RocksDB state
+    * store, which transformWithState requires.
     */
-  private def withStateParts[T](s: SparkSession)(body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
-    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
+  private[graft] def runToCompletion(s: SparkSession, rocksDb: Boolean = false)(
+      writer: => DataStreamWriter[_]): Seq[StreamingQueryProgress] = {
+    val parts = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    // explicit settings only: getOption returns a registered conf's default,
+    // and restoring that would leave the default pinned as a setting
+    val explicit = s.conf.getAll
+    val saved = Seq(parts, provider).map(k => k -> explicit.get(k))
+    s.conf.set(parts, s.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
+    if (rocksDb) s.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+      lastProgress = q.recentProgress.toSeq
+      lastProgress
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** [[runToCompletion]] into a uniquely named memory sink: returns a frame
+    * backed by the drained rows, with the sink's catalog view already
+    * dropped (the frame keeps the rows; nothing is left in the session). */
+  private def drain(s: SparkSession, df: => Dataset[_], mode: String,
+      rocksDb: Boolean = false): DataFrame = {
+    val name = "graft_stream_sink_" + sinkId.incrementAndGet()
+    runToCompletion(s, rocksDb)(
+      df.writeStream.format("memory").queryName(name).outputMode(mode))
+    try s.table(name) finally s.catalog.dropTempView(name)
   }
 
   /** C5 as a CORRECTNESS-GATED query: exact streaming dedup over a bounded
@@ -575,33 +555,19 @@ object Streams {
     * batch/stream equality in-process; this entry keys it to the DuckDB
     * batch-DISTINCT oracle so the streaming block has a driver-checked
     * CORRECTNESS row too. The memory sink holds one row per DISTINCT pair —
-    * bounded by the key space, not the stream length — and each invocation
-    * registers a fresh uniquely-named sink view (a few KB each; a session
-    * running this thousands of times should drop them).
+    * bounded by the key space, not the stream length.
     *
     * The explicit 2-column schema prunes the parquet scan to the dedup keys,
     * sidestepping the TIMESTAMP(NANOS) `ts` column entirely (see
     * Tables.events for the batch-side handling).
     */
-  def streamingDedup(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_dedup_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = s.readStream
-        .schema("user_id BIGINT, event_type STRING")
-        // the sf dirs ship events as a single FILE. FileStreamSource derives
-        // basePath from a NON-glob path as the path itself (a file → "must be
-        // a directory" failure; a user-supplied basePath option is overridden).
-        // A glob that matches exactly that file makes the derived basePath the
-        // parent directory, which is what the source needs.
-        .parquet(s"$d/{events.parquet}")
-        .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
-  }
+  def streamingDedup(s: SparkSession, d: String): DataFrame =
+    drain(s, s.readStream
+      .schema("user_id BIGINT, event_type STRING")
+      // the glob makes the single-file source's basePath its directory
+      // (see eventsStream)
+      .parquet(s"$d/{events.parquet}")
+      .dropDuplicates("user_id", "event_type"), "append")
 
   /** C3 as a CORRECTNESS-GATED query: the same tumbling-window aggregation
     * as `windowedAgg`, run over the bounded file source to completion in
@@ -614,16 +580,8 @@ object Streams {
     * the batch side.
     */
   def streamingWindowAgg(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_winagg_sink_" + sinkId.incrementAndGet()
     val src = eventsStream(s, d, "event_type STRING, value DOUBLE")
-    withStateParts(s) {
-      val q = windowedAgg(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, windowedAgg(src), "complete")
   }
 
   /** C6 as a CORRECTNESS-GATED query: stream-static enrichment — the event
@@ -631,26 +589,17 @@ object Streams {
     * (the Structured Streaming analogue of a map-side dim join; the static
     * side is re-resolvable per batch, no state store involved). Append mode
     * emits each enriched row exactly once, so the drained sink equals the
-    * batch join the oracle runs. The memory sink holds one small row per
-    * event — fine at bench scale; a production run would write a file sink.
+    * batch join the oracle runs.
     */
   def streamingEnrich(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_enrich_sink_" + sinkId.incrementAndGet()
     val dim = graft.operators.Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    withStateParts(s) {
-      val q = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-        .parquet(s"$d/{events.parquet}")
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("c_mktsegment"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, s.readStream
+      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
+      .parquet(s"$d/{events.parquet}")
+      .join(broadcast(dim), col("user_id") === col("c_custkey"))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"), col("c_mktsegment")), "append")
   }
 
   /** C4 as a CORRECTNESS-GATED query: the flatMapGroupsWithState session
@@ -663,48 +612,23 @@ object Streams {
     * maxFilesPerTrigger), so per-user iterators see all events at once and
     * the emitted set is deterministic.
     */
-  def streamingSessionize(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_sess_sink_" + sinkId.incrementAndGet()
+  def streamingSessionize(s: SparkSession, d: String): DataFrame =
+    drain(s, sessionize(sessionEvents(s, d)), "append")
+
+  /** The events stream as [[Ev]]: normalized TimestampType → exact epoch-µs
+    * for the session state machines. */
+  private def sessionEvents(s: SparkSession, d: String): Dataset[Ev] = {
     import s.implicits._
-    // normalized TimestampType → exact epoch-µs for the state machine
-    val src = eventsStream(s, d, "user_id BIGINT, value DOUBLE")
+    eventsStream(s, d, "user_id BIGINT, value DOUBLE")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]
-    withStateParts(s) {
-      val q = sessionize(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
   }
 
   /** C30's gated driver: [[sessionizeTws]] run to completion over the
     * bounded source, on the RocksDB provider (set for this query, restored
     * after — transformWithState rejects the default HDFS-backed store). */
-  def streamingSessionizeTws(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_tws_sink_" + sinkId.incrementAndGet()
-    import s.implicits._
-    val src = eventsStream(s, d, "user_id BIGINT, value DOUBLE")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Ev]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = sessionizeTws(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
-  }
+  def streamingSessionizeTws(s: SparkSession, d: String): DataFrame =
+    drain(s, sessionizeTws(sessionEvents(s, d)), "append", rocksDb = true)
 
   /** Fixture for C37: the event corpus split into two time-ordered halves
     * (one parquet file each), fingerprint-cached like the other stream
@@ -779,7 +703,7 @@ object Streams {
     * exercising — stop a stateful query with open state at a batch
     * boundary, start a NEW query from the same checkpoint, and the final
     * result is identical to the uninterrupted run. (The stop is graceful
-    * — processAllAvailable + stop — so what this key proves is state
+    * — drain, then stop — so what this key proves is state
     * restoration and commit-log continuation across query objects;
     * restart after a MID-batch crash additionally leans on the file
     * sink's commit-log dedup of a partially written batch, which this
@@ -801,18 +725,16 @@ object Streams {
     * the gated key and the mid-batch-crash spec so the recovery property
     * is pinned on the SAME query. Returns the processed batch ids. */
   private[graft] def recoveryPhase(s: SparkSession, in: String, ckpt: String,
-      out: String): Seq[Long] = withStateParts(s) {
+      out: String): Seq[Long] = {
     import s.implicits._
     val src = s.readStream.schema("user_id BIGINT, ts TIMESTAMP")
       .parquet(s"$in/*.parquet")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         lit(0.0).as("value")).as[Ev]
-    val q = sessionizeTws(src)
+    runToCompletion(s, rocksDb = true)(sessionizeTws(src)
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    q.recentProgress.toSeq.map(_.batchId)
+      .outputMode("append")).map(_.batchId)
   }
 
   /** Spec accessor: the C37 fixture location (read-only). */
@@ -838,21 +760,12 @@ object Streams {
         fs, new org.apache.hadoop.fs.Path(in, name), false, hconf); ()
     }
     def runPhase(): Seq[Long] = recoveryPhase(s, in.toString, ckpt, out)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      arrive("half0.parquet")
-      runPhase() // phase 1: committed, then stopped with open state
-      arrive("half1.parquet")
-      val p2 = runPhase() // phase 2: fresh query, same checkpoint
-      require(p2.nonEmpty && p2.forall(_ >= 1),
-        s"phase 2 did not resume from the checkpoint: batch ids $p2")
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
+    arrive("half0.parquet")
+    runPhase() // phase 1: committed, then stopped with open state
+    arrive("half1.parquet")
+    val p2 = runPhase() // phase 2: fresh query, same checkpoint
+    require(p2.nonEmpty && p2.forall(_ >= 1),
+      s"phase 2 did not resume from the checkpoint: batch ids $p2")
     s.read.parquet(out)
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
@@ -1159,19 +1072,15 @@ object Streams {
     fs.delete(base, true); fs.mkdirs(base)
     val snap = new org.apache.hadoop.fs.Path(base, "snap").toString
     val ckpt = new org.apache.hadoop.fs.Path(base, "ckpt").toString
-    withStateParts(s) {
-      // NTZ, matching the batch reader's type for the same parquet (the
-      // oracle compares naive timestamps)
-      val q = s.readStream
-        .schema("o_custkey BIGINT, o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$fix/*.parquet")
-        .writeStream
-        .foreachBatch((b: DataFrame, id: Long) => applyCdcBatch(s, snap, b, id))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
-    }
+    // NTZ, matching the batch reader's type for the same parquet (the
+    // oracle compares naive timestamps)
+    runToCompletion(s)(s.readStream
+      .schema("o_custkey BIGINT, o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$fix/*.parquet")
+      .writeStream
+      .foreachBatch((b: DataFrame, id: Long) => applyCdcBatch(s, snap, b, id))
+      .option("checkpointLocation", ckpt))
     val df = readCdcSnapshot(s, snap)
       .select(col("o_custkey"), col("n_orders"), col("last_odate"),
         col("sum_dec").cast("double").as("sum_price"))
@@ -1191,28 +1100,8 @@ object Streams {
     * oracle runs. (The oracle's time-range self-join is the quadratic
     * formulation; the streaming operator is the scale path.)
     */
-  def streamingJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_join_sink_" + sinkId.incrementAndGet()
-    def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"))
-        .select(col("p_id"), col("c_id"), col("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
-  }
+  def streamingJoin(s: SparkSession, d: String): DataFrame =
+    timeBoundedJoin(s, d, "inner")
 
   /** C26 — stream-stream LEFT OUTER time-bounded join (round-12; completes
     * the C7 join family): every purchase joins the same user's clicks in
@@ -1229,29 +1118,8 @@ object Streams {
     * watermark are still held in state at stream end and must NOT emit a
     * null row — asserted by the spec's accounting.
     */
-  def streamingOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_ojoin_sink_" + sinkId.incrementAndGet()
-    def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"),
-          "left_outer")
-        .select(col("p_id"), col("c_id"), col("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
-  }
+  def streamingOuterJoin(s: SparkSession, d: String): DataFrame =
+    timeBoundedJoin(s, d, "left_outer")
 
   /** C29 — stream-stream FULL OUTER time-bounded join (round-12 verdict
     * item 9; completes the C7/C26 family): BOTH sides emit on state
@@ -1266,8 +1134,14 @@ object Streams {
     * both null branches non-vacuous AND both held-at-stream-end sets
     * non-emitting.
     */
-  def streamingFullOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_fojoin_sink_" + sinkId.incrementAndGet()
+  def streamingFullOuterJoin(s: SparkSession, d: String): DataFrame =
+    timeBoundedJoin(s, d, "full_outer")
+
+  /** The C7/C26/C29 join: purchases ⋈ the same user's clicks in the
+    * preceding 30 minutes, both sides watermarked so state expires.
+    * `user_id` is the purchase side's, or the click side's on a
+    * null-purchase row (the two agree on every matched row). */
+  private def timeBoundedJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
     def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -1275,20 +1149,13 @@ object Streams {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"),
-          "full_outer")
-        .select(col("p_id"), col("c_id"),
-          coalesce(col("user_id"), col("c_user")).as("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
+          col("c_ts") <= col("p_ts"),
+        joinType)
+      .select(col("p_id"), col("c_id"),
+        coalesce(col("user_id"), col("c_user")).as("user_id")), "append")
   }
 
   case class FunnelEv(user_id: Long, event_type: String, ts_us: Long)
@@ -1341,19 +1208,11 @@ object Streams {
     * against the SAME oracle as the batch `event_funnel`.
     */
   def streamingFunnel(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_funnel_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "user_id BIGINT, event_type STRING")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
       .as[FunnelEv]
-    withStateParts(s) {
-      val q = funnelStages(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val stages = s.table(name)
+    val stages = drain(s, funnelStages(src), "append")
       .groupBy(col("user_id")).agg(max(col("stage")).as("stage"))
     def stageRow(k: Int, nm: String): DataFrame =
       stages.filter(col("stage") >= k).agg(count(lit(1)).as("n_users"))
@@ -1370,22 +1229,13 @@ object Streams {
     * against the SAME oracle as `events_rate_alert`.
     */
   def streamingRateAlert(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_alert_sink_" + sinkId.incrementAndGet()
     val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    // the drained sink joins a derivation of ITSELF; the shared helper
-    // aliases the stats side so the MemoryPlan self-join's attribute
-    // references stay distinct
-    graft.operators.Signals.rateAlertFrom(
-      s.table(name).alias("h"), s.table(name))
+    val hourly = drain(s, src
+      .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
+      .agg(count(lit(1)).as("n")), "complete")
+    // the drained sink joins a derivation of ITSELF; the alias keeps the
+    // MemoryPlan self-join's attribute references distinct
+    graft.operators.Signals.rateAlertFrom(hourly.alias("h"), hourly)
   }
 
   /** C16 — streaming count-min sketch (batch B55's twin): the counter grid
@@ -1398,18 +1248,11 @@ object Streams {
     */
   def streamingFreqSketch(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Signals
-    val name = "graft_stream_cms_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Signals.cmsGridKeys(
-          s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"))
-        .groupBy(col("r"), col("bucket"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Signals.cmsEstimatesFrom(s.table(name),
+    val grid = drain(s, Signals.cmsGridKeys(
+        s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"))
+      .groupBy(col("r"), col("bucket"))
+      .agg(count(lit(1)).as("c")), "complete")
+    Signals.cmsEstimatesFrom(grid,
       graft.operators.Tables.events(s, d).select(col("user_id")))
   }
 
@@ -1425,19 +1268,11 @@ object Streams {
     */
   def streamingHllDistinct(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Relational
-    val name = "graft_stream_hll_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Relational.hllBucketRho(
-          s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"),
-          "user_id")
-        .groupBy(col("bucket"))
-        .agg(max(col("rho")).as("reg"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Relational.hllFromRegs(s.table(name))
+    Relational.hllFromRegs(drain(s, Relational.hllBucketRho(
+        s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"),
+        "user_id")
+      .groupBy(col("bucket"))
+      .agg(max(col("rho")).as("reg")), "complete"))
   }
 
   /** C18 — streaming quantile estimates (batch B36's twin): the fixed-width
@@ -1451,19 +1286,11 @@ object Streams {
     */
   def streamingQuantileHist(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Analytics
-    val name = "graft_stream_aq_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Analytics.aqBinned(
-          s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
-            .parquet(s"$d/{orders.parquet}"))
-        .groupBy(col("o_orderpriority"), col("bin"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Analytics.quantilesFromHist(s.table(name))
+    Analytics.quantilesFromHist(drain(s, Analytics.aqBinned(
+        s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
+          .parquet(s"$d/{orders.parquet}"))
+      .groupBy(col("o_orderpriority"), col("bin"))
+      .agg(count(lit(1)).as("c")), "complete"))
   }
 
   /** C21 — streaming twin of B61's log-bucket rank sketch: the stream
@@ -1477,19 +1304,11 @@ object Streams {
     */
   def streamingQuantileSketch(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Analytics
-    val name = "graft_stream_dd_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Analytics.ddBucketed(
-          s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
-            .parquet(s"$d/{orders.parquet}"))
-        .groupBy(col("o_orderpriority"), col("idx"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Analytics.ddSketchReport(s.table(name))
+    Analytics.ddSketchReport(drain(s, Analytics.ddBucketed(
+        s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
+          .parquet(s"$d/{orders.parquet}"))
+      .groupBy(col("o_orderpriority"), col("idx"))
+      .agg(count(lit(1)).as("c")), "complete"))
   }
 
   /** C19 — streaming per-window top-k: the trending-items query every event
@@ -1508,19 +1327,11 @@ object Streams {
 
   def streamingTopK(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val name = "graft_stream_topk_sink_" + sinkId.incrementAndGet()
     val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("hour_start"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, src
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("hour_start"), col("event_type"), col("n")), "complete")
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("hour_start")).orderBy(col("n").desc, col("event_type"))))
       .filter(col("rank") <= StreamTopK)
@@ -1538,19 +1349,11 @@ object Streams {
     * Gated against C22's recursive-CTE oracle.
     */
   def streamingCusumShift(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_cusum_sink_" + sinkId.incrementAndGet()
     val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("h"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    graft.operators.Signals.cusumReport(s.table(name))
+    graft.operators.Signals.cusumReport(drain(s, src
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("h"), col("event_type"), col("n")), "complete"))
   }
 
   /** C25 — the LATE-DATA gate (round-11 verdict item 5): watermarks are
@@ -1624,9 +1427,6 @@ object Streams {
       dir.toString
     }
   }
-
-  /** Probe access: per-batch progress of the last late-data run. */
-  @volatile private[graft] var lastProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
 
   /** C28 — streaming dedup with BOUNDED state (round-12 verdict item 6):
     * C5's `dropDuplicates` keeps a state row per distinct key FOREVER —
@@ -1711,48 +1511,26 @@ object Streams {
     }
   }
 
-  /** Probe access: per-batch progress of the last bounded-dedup run. */
-  @volatile private[graft] var lastDedupProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
-
   def streamingDedupWithinWatermark(s: SparkSession, d: String): DataFrame = {
     val dir = dedupFixtureDir(s, d)
-    val name = "graft_stream_ddw_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val src = s.readStream
-        .schema("user_id BIGINT, event_type STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-      val q = src
-        .withWatermark("ts", "6 hours")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      lastDedupProgress = q.recentProgress.toSeq
-      q.stop()
-    }
-    s.table(name)
+    drain(s, s.readStream
+      .schema("user_id BIGINT, event_type STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/*.parquet")
+      .withWatermark("ts", "6 hours")
+      .dropDuplicatesWithinWatermark("user_id", "event_type"), "append")
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_emits"))
   }
 
   def streamingLateData(s: SparkSession, d: String): DataFrame = {
     val dir = lateFixtureDir(s, d)
-    val name = "graft_stream_late_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val src = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
-          "value DOUBLE, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-      val q = windowedAgg(src.drop("event_id", "user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      lastProgress = q.recentProgress.toSeq
-      q.stop()
-    }
-    s.table(name)
+    val src = s.readStream
+      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
+        "value DOUBLE, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/*.parquet")
+    drain(s, windowedAgg(src.drop("event_id", "user_id")), "append")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -70,6 +70,43 @@ class StreamingSpec extends SparkSpec {
     assert(got == want && want.nonEmpty)
   }
 
+  test("every streaming key leaves views, streams and conf as it found them; its frame reads twice") {
+    def views() = spark.catalog.listTables().collect().count(_.isTemporary)
+    Streams.queries.toSeq.sortBy(_._1).foreach { case (key, run) =>
+      val views0 = views()
+      val active0 = spark.streams.active.length
+      val conf0 = spark.conf.getAll
+      val df = run(spark, sf)
+      val rows = df.collect()
+      val n = df.count()
+      assert(rows.length.toLong == n, s"$key: collect saw ${rows.length} rows, count $n")
+      assert(views() == views0, s"$key left a temp view")
+      assert(spark.streams.active.length == active0, s"$key left an active stream")
+      val conf1 = spark.conf.getAll
+      val changed = (conf0.keySet ++ conf1.keySet).filter(k => conf0.get(k) != conf1.get(k))
+      assert(changed.isEmpty, s"$key changed session conf: ${changed.mkString(", ")}")
+    }
+  }
+
+  test("runToCompletion rethrows a failing stream, stops it and restores the conf") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val conf0 = spark.conf.getAll
+    val err = intercept[Exception] {
+      Streams.runToCompletion(spark, rocksDb = true)(
+        spark.readStream.schema("user_id BIGINT").parquet(s"$sf/{events.parquet}")
+          .as[Long]
+          .map { u => if (u >= 0) throw new IllegalStateException("planted stream failure"); u }
+          .writeStream.format("noop"))
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(e => String.valueOf(e.getMessage).contains("planted stream failure")),
+      s"unexpected failure: $err")
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    val conf1 = spark.conf.getAll
+    keys.foreach(k => assert(conf1.get(k) == conf0.get(k), s"$k not restored"))
+  }
+
   test("C25: late rows beyond the watermark are provably dropped, count pinned") {
     import graft.operators.Tables
     val out = Streams.streamingLateData(spark, sf)
@@ -148,7 +185,7 @@ class StreamingSpec extends SparkSpec {
       "no key exercised TTL-survivor dedup")
     // engine accounting: the bridge batch's eviction pass removes EXACTLY
     // the expired registry rows
-    val bridgeRemoved = Streams.lastDedupProgress
+    val bridgeRemoved = Streams.lastProgress
       .find(p => p.batchId == 1L)
       .map(p => p.stateOperators.map(_.numRowsRemoved).sum)
     assert(bridgeRemoved.contains(evicted.size.toLong),
@@ -158,7 +195,7 @@ class StreamingSpec extends SparkSpec {
     val nLate = ev.filter(pmod(col("event_id"), lit(10L)) === 0 &&
       col("ts") <= lit(lateCut)).count()
     assert(nLate > 0, "no planted late rows at this SF — gate vacuous")
-    val dropped = Streams.lastDedupProgress
+    val dropped = Streams.lastProgress
       .map(p => p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
     assert(dropped.sum == nLate,
       s"numRowsDroppedByWatermark ${dropped.mkString(",")} != planted $nLate")

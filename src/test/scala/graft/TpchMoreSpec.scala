@@ -149,6 +149,14 @@ class TpchMoreSpec extends SparkSpec {
     } finally spark.conf.unset("graft.graph.localMaxEdges")
   }
 
+  test("pagerank: a local-edge cap at or above Int.MaxValue fails instead of truncating") {
+    // the probing collect is limit(cap + 1): a cap past Int.MaxValue would
+    // truncate the edges and rank a partial graph
+    spark.conf.set("graft.graph.localMaxEdges", Long.MaxValue.toString)
+    try intercept[IllegalArgumentException](graft.operators.Graph.pageRank(spark, sf))
+    finally spark.conf.unset("graft.graph.localMaxEdges")
+  }
+
   test("graph_triangles equals a local brute force; orientation caps outdegree at sqrt(2m)") {
     val got = graft.operators.Graph.graphTriangles(spark, sf).collect()
       .map(r => r.getAs[Long]("partkey") -> r.getAs[Long]("n_triangles")).toMap
