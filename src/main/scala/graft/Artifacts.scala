@@ -17,18 +17,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Artifacts {
 
-  /** Base directory for on-the-fly artifact/fixture storage (BPE rule
-    * tables, binary/late-data fixtures, A24 scratch outputs). Defaults to
-    * the driver's java.io.tmpdir — correct on local[*] and on any cluster
-    * whose configured scratch path is shared — and is overridden with
-    * `graft.scratch.dir` for multi-node deployments, where it MUST point
-    * at a filesystem every executor and the driver can reach (HDFS/object
-    * store): artifacts are written by executors and re-read by
+  /** Base directory for on-the-fly artifact/fixture storage: every stored
+    * artifact outside the five index families of [[stored]], plus the
+    * per-call scratch outputs of the source/sink and streaming keys.
+    * Defaults to the driver's java.io.tmpdir — correct on local[*] and on
+    * any cluster whose configured scratch path is shared — and is
+    * overridden with `graft.scratch.dir` for multi-node deployments, where
+    * it MUST point at a filesystem every executor and the driver can reach
+    * (HDFS/object store): artifacts are written by executors and re-read by
     * driver-planned scans, so a node-local path would scatter them.
-    * (The stored ANN/graph indexes have their own per-site confs —
-    * graft.ivf.dir, graft.int8.dir, graft.pq.dir, graft.ivfpq.dir,
-    * graft.graph.dir — with the same shared-FS contract; bucketed tables
-    * follow spark.sql.warehouse.dir. SURVEY §5 carries the inventory.)
     */
   def scratchBase(s: SparkSession): String =
     s.conf.getOption("graft.scratch.dir")
@@ -82,53 +79,98 @@ object Artifacts {
     java.lang.Long.toHexString(acc)
   }
 
-  /** A built artifact location plus the input fingerprint it was built
-    * from. */
-  final case class Built(fingerprint: String, location: String)
+  /** Index families whose root a deployment may pin with
+    * `graft.<family>.dir` (same shared-filesystem contract as
+    * [[scratchBase]]). A stored artifact's family is its name up to the
+    * first '_'. */
+  private val Families = Set("ivf", "int8", "pq", "ivfpq", "graph")
 
-  /** Build-once-per-(key, input-fingerprint): returns the cached location
-    * while the inputs are unchanged, re-runs `build` the moment the
-    * fingerprint moves. `compute` holds the map bucket during the build —
-    * same single-build guarantee the old `computeIfAbsent` sites had.
+  private def rootOf(s: SparkSession, name: String): String = {
+    val family = name.takeWhile(_ != '_')
+    (if (Families(family)) s.conf.getOption(s"graft.$family.dir") else None)
+      .getOrElse(scratchBase(s))
+  }
+
+  /** A stored artifact's input fingerprint and directory. */
+  private final case class Entry(fingerprint: String, dir: String)
+
+  /** The ledger: one entry per (name, dataset, root, params) — the artifact
+    * generation this JVM serves for that key. */
+  private val ledger = new ConcurrentHashMap[String, Entry]()
+
+  /** One monitor per ledger key. A build runs under its key's monitor, not
+    * inside `ledger.compute`: builds nest (a derived artifact reads its
+    * sources inside its own build), and a nested `compute` on the same
+    * map throws "Recursive update" or corrupts a bin. Nesting always runs
+    * from a derived artifact to its source, so the monitors cannot cycle. */
+  private val keyLocks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Build-once-per-(key, input fingerprint) stored artifact: the directory
+    * of artifact `name` for dataset `d`, built by `build` on first use and
+    * served from the ledger until a fingerprint of `inputs` (file names
+    * under `d`) moves.
     *
-    * Builders should version their OUTPUT location by the fingerprint
-    * (callers receive it as `build`'s argument): a rebuild that overwrote
-    * the previous generation's files in place would yank them out from
-    * under any lazily-held DataFrame still referencing the old location —
-    * per-generation dirs keep in-flight readers valid, at the cost of one
-    * small dir per in-JVM regeneration (rare by definition).
+    * `params` are the confs that SHAPE the artifact (cell count, file
+    * count, caps): flipping one mid-session selects a different key and
+    * directory instead of serving the artifact built under the old value.
+    * The root is `graft.<family>.dir` for the index families, else
+    * [[scratchBase]]; repointing it mid-session also rebuilds. The
+    * directory `<root>/graft_<name>-<hex>` hashes the name, dataset, params
+    * AND fingerprint, so two keys never share a directory and every
+    * generation has its own: a rebuild never overwrites files a
+    * lazily-held reader of the previous generation still scans. `build`
+    * receives that directory empty (a stale partial build never survives)
+    * and writes the artifact into it.
     */
-  def cachedLocation(
-      map: ConcurrentHashMap[String, Built], key: String, fp: String)(
-      build: String => String): String =
-    map.compute(key, (_, old) =>
-      if (old != null && old.fingerprint == fp) old
+  def stored(s: SparkSession, name: String, d: String, inputs: Seq[String],
+      params: Any*)(build: String => Unit): String =
+    storedFp(s, name, d, fingerprint(s, inputs.map(i => s"$d/$i"): _*),
+      params: _*)(build)
+
+  /** [[stored]] under a fingerprint the caller already holds — for an
+    * artifact derived from another stored artifact, which must be keyed on
+    * the fingerprint its source was resolved under (a regeneration landing
+    * between two fingerprint walks would otherwise bind the derived
+    * artifact of the old source generation to the new fingerprint). */
+  def storedFp(s: SparkSession, name: String, d: String, fp: String,
+      params: Any*)(build: String => Unit): String = {
+    val root = rootOf(s, name)
+    val key = (Seq(name, d, root) ++ params).mkString("@")
+    val hit = ledger.get(key)
+    if (hit != null && hit.fingerprint == fp) return hit.dir
+    keyLocks.computeIfAbsent(key, _ => new AnyRef).synchronized {
+      val old = ledger.get(key)
+      if (old != null && old.fingerprint == fp) old.dir
       else {
         // a concurrent sweepStale must not run while a rebuild is in
-        // flight: in an A→B→A cycle the dir build(fp) is re-creating is
-        // still in `superseded` until the remove below, and a sweep in
-        // that window would delete the just-rebuilt CURRENT generation
-        // (r10 advice item 2). Builds share the read side; the sweep
+        // flight: in an A→B→A cycle the dir being re-created is still in
+        // `superseded` until the remove below, and a sweep in that window
+        // would delete the just-rebuilt CURRENT generation. Builds share
+        // the read side (reentrant, so nested builds are fine); the sweep
         // needs the write side, so it can never interleave with a build.
         sweepLock.readLock().lock()
         try {
-          val b = Built(fp, build(fp))
+          val slug = java.lang.Long.toHexString(graft.plans.MixHash.polyHash(
+            (Seq(name, d) ++ params :+ fp).mkString("@")))
+          val dir = new Path(root, s"graft_$name-$slug")
+          val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+          fs.delete(dir, true); fs.mkdirs(dir)
+          val loc = dir.toString
+          build(loc)
           // the replaced generation's dir stays on disk (a lazily-held
           // reader of the old location must stay valid) but is RECORDED so
           // a long-lived session can reclaim it via [[sweepStale]]
-          if (old != null && old.location != b.location) {
-            superseded.add(old.location); ()
-          }
-          // a fingerprint CYCLE (A→B→A with deterministic slugs) rebuilds
-          // into a dir recorded as superseded during the A→B transition —
-          // it is live again and must leave the sweep set BEFORE the lock
-          // drops, or a sweep in the gap would delete the current
-          // generation
-          superseded.remove(b.location)
-          b
+          if (old != null && old.dir != loc) superseded.add(old.dir)
+          // a fingerprint CYCLE (A→B→A) rebuilds into a dir recorded as
+          // superseded during the A→B transition — it is live again and
+          // must leave the sweep set BEFORE the lock drops
+          superseded.remove(loc)
+          ledger.put(key, Entry(fp, loc))
+          loc
         } finally sweepLock.readLock().unlock()
       }
-    ).location
+    }
+  }
 
   /** On-disk locations of artifact generations this JVM has superseded
     * (rebuilt under a moved fingerprint). Kept until [[sweepStale]]. */
@@ -137,13 +179,13 @@ object Artifacts {
       new ConcurrentHashMap[String, java.lang.Boolean]())
 
   /** Guards the build-vs-sweep cycle race — see the note in
-    * [[cachedLocation]]: builds hold the read side (concurrent builds are
+    * [[storedFp]]: builds hold the read side (concurrent builds are
     * fine), [[sweepStale]] needs the write side. */
   private val sweepLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
 
   /** Opt-in reclamation for long-lived sessions: delete every artifact
     * generation this JVM superseded (the per-generation dirs
-    * [[cachedLocation]] deliberately leaves on disk so lazily-held readers
+    * [[stored]] deliberately leaves on disk so lazily-held readers
     * of the old generation stay valid). Call it at a point where no frame
     * referencing a pre-rebuild artifact is still alive — the caller owns
     * that judgment, which is why the sweep never runs implicitly. Returns
@@ -182,7 +224,7 @@ object Artifacts {
   }
 
   /** Generic build-once-per-(key, fingerprint) value cache — the
-    * [[cachedLocation]] pattern for non-path values (e.g. the events
+    * [[stored]] pattern for non-path values (e.g. the events
     * ts-type probe). One entry per key: a moved fingerprint REPLACES the
     * stale entry instead of accumulating beside it.
     */

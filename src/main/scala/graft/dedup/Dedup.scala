@@ -77,8 +77,12 @@ object Dedup {
     // injective relabeling of shingles preserves df counts and PPJoin's
     // prefix theorem, and the candidate set stays a superset of the true
     // pairs. Verification below still intersects the exact STRING arrays,
-    // so the verified output is identical for any hash (a 2^-64 collision
-    // could only add/remove a candidate, never change a verified pair).
+    // so a candidate is never verified on a hash match alone. A polyHash
+    // collision can still change the verified output: it merges two
+    // shingles' df counts, which can push the merged count past
+    // MaxShingleDf and cut both from the index — dropping a true pair
+    // whose prefix needed either shingle (probability ~2^-64 per pair of
+    // distinct shingles).
     val postings = docs
       .select(col("doc_id"), col("sz"), explode(col("shingles")).as("sh"))
       .select(col("doc_id"), col("sz"),
@@ -203,6 +207,9 @@ object Dedup {
     val dfTbl = s"graft_incr_dfh_$slug"
     val arrTbl = s"graft_incr_arrh_$slug"
     val names = Seq(prefixTbl, dfTbl, arrTbl)
+    // the string-keyed layout an older build left under the pre-"h" names:
+    // dropped with every rebuild, never read
+    val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
     // amortized across batches BY DESIGN, but never across a corpus
     // regeneration: the fingerprint ledger (in-JVM, with the persisted
     // _fingerprint fallback for fresh JVMs) forces a rebuild when
@@ -210,7 +217,7 @@ object Dedup {
     val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
     if (!names.forall(s.catalog.tableExists) ||
         graft.Artifacts.tableStale(s, prefixTbl, fp)) {
-      names.foreach(resetTable(s, _))
+      (names ++ legacy).foreach(resetTable(s, _))
       val nb = edgeBuckets(s)
       val old = withShingles(Tables.documents(s, d).filter(isOld))
         .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
@@ -333,17 +340,10 @@ object Dedup {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Edge-list parquet locations built this JVM, keyed by data dir — the E8
-    * pair graph is a PERSISTENT ARTIFACT (SURVEY §5): derive the PPJoin
-    * pipeline once per corpus, then every clustering run consumes the stored
-    * edges. Same build-once pattern as the E7 corpus index and the F3/F5
-    * stored ANN indexes.
-    */
-  private val pairsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The E2 verified pair set as a STORED per-corpus artifact (doc_a,
-    * doc_b, jac): materialized exactly once per (corpus, fingerprint) and
+    * doc_b, jac) — a PERSISTENT ARTIFACT (SURVEY §5), the same build-once
+    * pattern as the E7 corpus index and the F3/F5 stored ANN indexes:
+    * materialized exactly once per (corpus, fingerprint) and
     * scanned by every consumer — E8's clustering AND H17's split-leakage
     * audit read this instead of re-deriving the PPJoin pipeline. A
     * persist+count probe costs MORE than a full materialization (AQE is
@@ -361,21 +361,13 @@ object Dedup {
     * wrong clusters for it.
     */
   private def pairsArtifact(s: SparkSession, d: String): (String, String) = {
-    // keyed on (dataset, documents fingerprint): regenerating the corpus in
-    // place rebuilds the pair graph instead of serving stale edges
     val pairsFp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    val pairsLocStr = graft.Artifacts.cachedLocation(pairsBuilt, d, pairsFp) { fpv =>
+    (pairsFp, graft.Artifacts.storedFp(s, "dedup_pairs", d, pairsFp) { dir =>
       val (pairsUnsorted, scoped) = jaccardCore(s, d)
-      // generation-versioned location: a rebuild after an in-place corpus
-      // regeneration must not delete files a lazily-held reader of the OLD
-      // generation still references
-      val loc = warehousePath(s, s"graft_pairs_${dirSlug(d)}_${fpv}_edges")
       pairsUnsorted.select(col("doc_a"), col("doc_b"), col("jac"))
-        .write.mode("overwrite").parquet(loc.toString)
+        .write.mode("overwrite").parquet(dir)
       scoped.foreach(_.unpersist(false))
-      loc.toString
-    }
-    (pairsFp, pairsLocStr)
+    })
   }
 
   private[graft] def pairsParquet(s: SparkSession, d: String): DataFrame =
@@ -423,24 +415,12 @@ object Dedup {
     // state is bounded by the pair-graph size (tiny vs the corpus:
     // near-dup graphs are sparse), not the corpus.
     //
-    // The converged labels parquet follows the SAME per-generation
-    // discipline as the pair parquet (keyed on the fingerprint the PAIRS
-    // were resolved under — see [[pairsArtifact]] — generation-suffixed
-    // dir, build-once per (corpus, fingerprint)): an in-place overwrite
-    // per run would yank files out from under a lazily-held frame a
-    // previous clusterPairs call returned.
-    val labelsLoc = graft.Artifacts.cachedLocation(labelsBuilt, d, ccFp) { fpv =>
-      val loc = warehousePath(s, s"graft_pairs_${dirSlug(d)}_${fpv}_labels").toString
-      propagateMinLabels(s, pairsPq.toDF("src", "dst"), loc)
-      loc
-    }
-    s.read.parquet(labelsLoc)
+    // The converged labels parquet is a stored artifact keyed on the
+    // fingerprint the PAIRS were resolved under (see [[pairsArtifact]]).
+    s.read.parquet(graft.Artifacts.storedFp(s, "dedup_labels", d, ccFp) { dir =>
+      propagateMinLabels(s, pairsPq.toDF("src", "dst"), dir)
+    })
   }
-
-  /** Build-once ledger for the distributed-CC labels parquet — same
-    * per-(corpus, fingerprint) discipline as [[pairsBuilt]]. */
-  private val labelsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
 
   /** Round cap for the distributed CC iteration (`graft.dedup.ccMaxRounds`,
     * default 50). The alternating star algorithm converges in O(log n)

@@ -353,21 +353,11 @@ object Analytics {
   val ZscanDateLo = "1995-03-01"
   val ZscanDateHi = "1995-06-30"
 
-  private val zorderBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private[graft] def zorderLayoutDir(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/orders.parquet")
-    // the file-count conf SHAPES the artifact, so it belongs in both the
-    // cache key and the on-disk slug (the round-9 cache-contamination rule:
-    // flipping the conf mid-session must rebuild, and two entries must
-    // never share a directory)
+    // the file-count conf SHAPES the artifact: flipping it mid-session
+    // must rebuild
     val nFiles = s.conf.getOption("graft.zorder.files").map(_.toInt).getOrElse(16)
-    graft.Artifacts.cachedLocation(zorderBuilt, s"$d@$nFiles", fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        s"graft_zorder_${slug}_${nFiles}_$fpv").toString
+    graft.Artifacts.stored(s, "zorder_layout", d, Seq("orders.parquet"), nFiles) { dir =>
       val xb = pmod(col("o_custkey"), lit(65536L))
       val yb = datediff(col("o_orderdate"), lit(ZorderEpoch).cast("date"))
         .cast("long").bitwiseAND(lit(65535L))
@@ -378,7 +368,6 @@ object Analytics {
         .repartitionByRange(nFiles, col("zvalue"))
         .sortWithinPartitions(col("zvalue"))
         .write.mode("overwrite").parquet(dir)
-      dir
     }
   }
 

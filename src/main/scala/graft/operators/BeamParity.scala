@@ -336,26 +336,15 @@ object BeamParity {
     *
     * The directory is the operator's INPUT FIXTURE — a binary object store
     * standing in for the media corpus a user already has — so it is built
-    * ONCE per documents-table fingerprint ([[graft.Artifacts
-    * .cachedLocation]], the B33 zorder discipline) instead of
+    * ONCE per documents-table fingerprint ([[graft.Artifacts.stored]])
+    * instead of
     * delete-and-rewritten per call: A25/A26 measure binary INGESTION, and
     * regenerating 1-file-per-document scaffolding each run was charging
     * every bench rep ~N metadata round-trips of non-operator work (the
     * round-11 42 s regression on this key).
     */
-  private val binDocsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def writeBinaryDocs(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(binDocsBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bin_rt_${slug}_$fpv")
-      val dirStr = dir.toString
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true) // a stale partial build at this fp never survives
-      fs.mkdirs(dir)
+  private def writeBinaryDocs(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "binary_docs", d, Seq("documents.parquet")) { dirStr =>
       // executors resolve the FS from the DRIVER's Hadoop configuration
       // (broadcast via SerializableConfiguration) — a fresh Configuration()
       // would drop driver-only settings (object-store credentials, s3a
@@ -375,9 +364,7 @@ object BeamParity {
             try out.write(r.getAs[Array[Byte]](1)) finally out.close()
           }
         }
-      dirStr
     }
-  }
 
   /** Spec accessor: the fingerprint-versioned .bin fixture location (the
     * spec must not guess the fp suffix — it did until round 14, passing
@@ -445,18 +432,10 @@ object BeamParity {
     * pipeline. Built once per (corpus, fingerprint) like
     * [[writeBinaryDocs]]; A26's gate separately proves the rewrite
     * lossless against the documents oracle. */
-  private val binCompactBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private[graft] def compactedBlobs(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    val loc = graft.Artifacts.cachedLocation(binCompactBuilt, d, fp) { fpv =>
+    val loc = graft.Artifacts.stored(s, "binary_blobs", d, Seq("documents.parquet")) { dir =>
       val binDir = writeBinaryDocs(s, d)
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bin_blobs_${slug}_$fpv").toString
       compactBinaryDir(s, binDir, dir, BinCompactTargetBytes)
-      dir
     }
     s.read.parquet(loc).select(col("doc_id"), col("payload"))
   }
@@ -562,15 +541,8 @@ object BeamParity {
     * events table without touching the file). Built once per corpus
     * fingerprint (the A25 fixture discipline).
     */
-  private val jsonlBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def jsonlFixture(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(jsonlBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_jsonl_${slug}_$fpv").toString
+  private def jsonlFixture(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "jsonl_fixture", d, Seq("events.parquet")) { dir =>
       import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
       val vu = column(graft.plans.ScaledLong(
         expression(col("value").cast("double")), 10000.0))
@@ -582,9 +554,7 @@ object BeamParity {
           when(pmod(col("event_id"), lit(17L)) === 0, lit("")).otherwise(lit("}")))
           .as("line"))
         .coalesce(1).write.mode("overwrite").text(dir)
-      dir
     }
-  }
 
   def sourceJsonlQuarantine(s: SparkSession, d: String): DataFrame = {
     val parsed = s.read

@@ -26,7 +26,7 @@ import graft.plans.BpeDynamic
   * non-overlapping `replace`).
   *
   * The learned table is a STORED ARTIFACT (parquet, versioned by corpus
-  * fingerprint via [[graft.Artifacts.cachedLocation]] — the F3/F5 index
+  * fingerprint via [[graft.Artifacts.stored]] — the F3/F5 index
   * discipline): training runs once per corpus generation, and every
   * consumer (the gated readback, the learned token counts, the learned
   * packing) reads the stored table instead of retraining.
@@ -98,26 +98,17 @@ object BpeTrain {
     finally { docs.unpersist(blocking = false); () }
   }
 
-  private val rulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored-artifact location of the learned table for corpus `d` (train
     * once per corpus fingerprint, parquet out, consumers read back). */
-  private def rulesLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(rulesBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bpe_rules_${slug}_$fpv").toString
+  private def rulesLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "bpe_rules", d, Seq("documents.parquet")) { dir =>
       val rows = trainRules(s, d).zipWithIndex.map { case ((a, b, m, cnt), i) =>
         (i + 1, a.toLong, b.toLong, m.toLong, cnt)
       }
       import s.implicits._
       rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   /** The learned rule table, read back from the stored artifact (K rows —
     * bounded driver state by construction). */
@@ -391,24 +382,15 @@ object BpeTrain {
     finally { docs.unpersist(blocking = false); () }
   }
 
-  private val pretokRulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def pretokRulesLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(pretokRulesBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bpe_pretok_${slug}_$fpv").toString
+  private def pretokRulesLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "bpe_pretok_rules", d, Seq("documents.parquet")) { dir =>
       val rows = trainRulesPretok(s, d).zipWithIndex.map { case ((a, b, m, cnt), i) =>
         (i + 1, a.toLong, b.toLong, m.toLong, cnt)
       }
       import s.implicits._
       rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   private[graft] def learnedRulesPretok(s: SparkSession, d: String): (Seq[Int], Seq[Int], Seq[Int]) = {
     val rows = s.read.parquet(pretokRulesLocation(s, d))

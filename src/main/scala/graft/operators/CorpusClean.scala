@@ -911,23 +911,14 @@ object CorpusClean {
     * decontamination 5-grams of the eval prefix, built once per corpus
     * generation (fingerprint-versioned) so per-batch decontamination never
     * rescans corpus text. Tiny (eval prefix is [[EvalDocs]] docs). */
-  private val evalGramsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def evalGramsLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(evalGramsBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_evalgrams_${slug}_$fpv").toString
+  private def evalGramsLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "eval_grams", d, Seq("documents.parquet")) { dir =>
       Tables.documents(s, d).filter(col("doc_id") < EvalDocs)
         .select(explode(graft.plans.ShingleArray.shingles(
           col("text"), DecontaminationGram)).as("g"))
         .distinct()
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   /** H53 — INCREMENTAL flagship (round-14, verdict item 7): the
     * continuously-crawled-corpus shape. A new document batch arrives (E7's

@@ -27,39 +27,18 @@ object Graph {
     * once per (JVM, dataset), written to parquet, and scanned by every
     * subsequent run — at 100 TB the co-purchase graph is built by the
     * ingest pipeline and queried many times, so query-time work should be
-    * the scan, not the basket derivation. Location: `graft.graph.dir` conf,
-    * else tmpdir.
+    * the scan, not the basket derivation. A `graft.graph.dir`-family
+    * [[graft.Artifacts.stored]] artifact; the basket cap changes the
+    * derived edges, so it shapes the artifact too.
     */
-  private val edgesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def edges(s: SparkSession, d: String): DataFrame = {
-    // the per-dataset component goes on BOTH the conf path and the tmpdir
-    // fallback: a fixed suffix under a shared conf dir would let a second
-    // dataset's build silently clobber the first's cached artifact. Keyed on
-    // (dataset, resolved base dir, lineitem fingerprint) so regenerating the
-    // fact table in place — or repointing graft.graph.dir — rebuilds the
-    // edge artifact instead of serving the stale graph ([[graft.Artifacts]]).
-    val base = s.conf.getOption("graft.graph.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-graph")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/lineitem.parquet")
-    // the basket cap changes the derived edges, so it is part of the cache
-    // identity too — flipping graft.basket.maxItems mid-session must not
-    // serve edges derived under the old cap
-    val cap = TpchMore.basketMaxItems(s)
-    val path = graft.Artifacts.cachedLocation(
-        edgesBuilt, s"$d@$base@$cap", fp) { fpv =>
-      val slug = java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$cap@$fpv"))
-      val dir = base + s"/copurchase_edges-$slug"
+  private def edges(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(graft.Artifacts.stored(s, "graph_edges", d,
+        Seq("lineitem.parquet"), TpchMore.basketMaxItems(s)) { dir =>
       val pairs = TpchMore.coPurchasePairs(s, d, PrMinSupport)
       pairs.select(col("pa").as("src"), col("pb").as("dst"))
         .unionByName(pairs.select(col("pb").as("src"), col("pa").as("dst")))
         .write.mode("overwrite").parquet(dir)
-      dir
-    }
-    s.read.parquet(path)
-  }
+    })
 
   /** B57 — PageRank, [[PrIters]] fixed iterations, damping 0.85, ranks in
     * the mass-N normalization (init 1.0 per node, teleport 0.15). Exactness:

@@ -147,26 +147,17 @@ object QualityTrain {
     } finally { ftrain.unpersist(blocking = false); () }
   }
 
-  private val trajBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored-artifact location of the learned trajectory for corpus `d`
     * (train once per corpus fingerprint, parquet out, consumers read). */
-  private def trajLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(trajBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_quality_w_${slug}_$fpv").toString
+  private def trajLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "quality_trajectory", d, Seq("documents.parquet")) { dir =>
       val rows = trainTrajectory(s, d).zipWithIndex.map { case (w, i) =>
         (i + 1, w(0), w(1), w(2), w(3), w(4), w(5))
       }
       import s.implicits._
       rows.toDF("round", "w0", "w1", "w2", "w3", "w4", "w5")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   /** Final learned weight vector, read back from the stored artifact. */
   private[graft] def learnedWeights(s: SparkSession, d: String): Array[Long] = {

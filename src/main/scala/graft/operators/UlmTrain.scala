@@ -161,22 +161,13 @@ object UlmTrain {
     } finally { docs.unpersist(blocking = false); () }
   }
 
-  private val trajBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def trajLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(trajBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_ulm_traj_${slug}_$fpv").toString
+  private def trajLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ulm_trajectory", d, Seq("documents.parquet")) { dir =>
       import s.implicits._
       trainTrajectory(s, d)
         .toDF("round", "pid", "piece", "usage", "kept")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   /** The FINAL vocabulary (survivors of round [[Rounds]]), in priority
     * order — ≤ SeedN rows, bounded driver state. */

@@ -275,31 +275,14 @@ object Ann {
     * `(cell_id, cv, cn)`. This is how IVF deploys at scale: the index is an
     * OFFLINE artifact the ingest pipeline builds; queries only route and
     * probe. The per-JVM build here stands in for that offline step (same
-    * pattern as [[int8Index]]). Location: `graft.ivf.dir` conf, else tmpdir.
+    * pattern as [[int8Index]]). A [[graft.Artifacts.stored]] artifact of
+    * the `graft.ivf.dir` family, shaped by the training-sample conf and k.
     */
-  private val ivfBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def ivfIndexDir(s: SparkSession, d: String): String = {
-    // per-dataset component on BOTH the conf path and the tmpdir fallback
-    // (a fixed suffix under a shared conf dir would cross-clobber datasets);
-    // cache key includes the resolved base dir AND the input fingerprint, so
-    // regenerating embeddings.parquet in place — or repointing graft.ivf.dir
-    // mid-session — rebuilds instead of serving the stale index
-    val base = s.conf.getOption("graft.ivf.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivf")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
     val maxTrainKey = s.conf.getOption("graft.ann.trainSampleRows").getOrElse("")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfBuilt, s"$d@$base@$maxTrainKey@k$kCells", fp) { fpv =>
+    graft.Artifacts.stored(s, "ivf_index", d, Seq("embeddings.parquet"),
+        maxTrainKey, ivfCellsConf(s)) { dir =>
       import s.implicits._
-      // the on-disk slug carries everything the cache key carries (dataset,
-      // training-sample conf, AND input fingerprint): distinct entries
-      // writing to one directory would serve each other's index files, and
-      // a rebuild overwriting the previous generation in place would break
-      // lazily-held readers of it
-      val dir = base + "/index-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$maxTrainKey@k$kCells@$fpv"))
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
       // SAMPLED TRAINING (SURVEY §5's 100 TB path, now code): above
@@ -331,7 +314,6 @@ object Ann {
           .write.mode("overwrite").parquet(s"$dir/corpus")
         writeCentroids(s, cents, s"$dir/centroids")
       } finally e.unpersist(blocking = true)
-      dir
     }
   }
 
@@ -409,22 +391,14 @@ object Ann {
     pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
       lit(IvfIncrMod.toLong)) === lit(IvfIncrRes.toLong)
 
-  private val ivfIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The incremental index: `gen-0/corpus` (base assignment, trained on
     * base arrivals only), `centroids` (STORED — never touched by an
     * append), `gen-1/corpus` (the arrival batch assigned under the stored
     * centroids). Same per-(corpus, fingerprint) build-once discipline as
     * [[ivfIndexDir]]. */
-  private def ivfIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivf.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivf") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfIncrBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/index-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
+  private def ivfIncrDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ivf_incr", d, Seq("embeddings.parquet"),
+        ivfCellsConf(s)) { dir =>
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
       val baseSet = graft.CacheScope.scopedPersist(full.filter(!ivfDeltaPred))
@@ -438,9 +412,7 @@ object Ann {
       // — the base assignment is never read, so batch cost is O(|batch|)
       ivfAppendAssign(s, d, s"$dir/centroids")
         .write.mode("overwrite").parquet(s"$dir/gen-1/corpus")
-      dir
     }
-  }
 
   /** The append step's PLAN: assign ONLY the arrival batch under the
     * stored centroids (inlined as routing literals — the F24 device).
@@ -498,21 +470,13 @@ object Ann {
     * squared error exceeds the base's by this factor (permille). */
   val PqDriftRetrainPermille = 1200L
 
-  private val pqIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The incremental PQ artifact: `codebook` (trained on base arrivals —
     * never touched by an append), `gen-0/codes` (base encoding),
     * `gen-1/codes` (the arrival batch encoded under the stored
     * codebook). Same arrival split as F26 ([[ivfDeltaPred]]) so the two
     * incremental paths describe ONE ingest story. */
-  private def pqIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.pq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-pq") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(pqIncrBuilt, s"$d@$base", fp) { fpv =>
-      val dir = base + "/pq-incr-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
+  private def pqIncrDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "pq_incr", d, Seq("embeddings.parquet")) { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -529,9 +493,7 @@ object Ann {
       // codebook — gen-0 is never read, so batch cost is O(|batch|)
       pqAppendEncode(s, d, s"$dir/codebook")
         .write.mode("overwrite").parquet(s"$dir/gen-1/codes")
-      dir
     }
-  }
 
   /** The append step's PLAN: encode ONLY the arrival batch under the
     * stored codebook (512 rows, collected and inlined). Exposed to the
@@ -668,12 +630,9 @@ object Ann {
     * `byte[]` memcpy for the scoring kernel; [[graft.plans.DotProductInt8]]
     * accepts it natively). At 100 TB this table IS the serving artifact —
     * built by the ingest pipeline, scanned by queries; the per-JVM build
-    * here stands in for that offline step. Location: `graft.int8.dir`
-    * conf, else tmpdir.
+    * here stands in for that offline step (a `graft.int8.dir`-family
+    * [[graft.Artifacts.stored]] artifact).
     */
-  private val int8Built =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   // build-time-only UDF (one pass per dataset, not in the query hot path):
   // array<tinyint> → packed binary
   private val packBytes = udf((xs: Seq[Byte]) => xs.toArray)
@@ -699,24 +658,12 @@ object Ann {
       .withColumn("qn2", graft.plans.DotProductInt8.dot(col("q"), col("q")))
   }
 
-  private def int8Index(s: SparkSession, d: String): DataFrame = {
-    // per-dataset component on BOTH the conf path and the tmpdir fallback
-    // (a fixed suffix under a shared conf dir would cross-clobber datasets);
-    // keyed on (dataset, resolved base dir, input fingerprint) — see
-    // [[graft.Artifacts]] for the staleness rationale
-    val base = s.conf.getOption("graft.int8.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-int8")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val path = graft.Artifacts.cachedLocation(int8Built, s"$d@$base", fp) { fpv =>
-      val slug = java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
-      val dir = base + s"/embeddings_int8-$slug"
-      quantizedCodes(Tables.embeddings(s, d), Nil)
-        .write.mode("overwrite").parquet(dir)
-      dir
-    }
-    s.read.parquet(path)
-  }
+  private def int8Index(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(
+      graft.Artifacts.stored(s, "int8_codes", d, Seq("embeddings.parquet")) { dir =>
+        quantizedCodes(Tables.embeddings(s, d), Nil)
+          .write.mode("overwrite").parquet(dir)
+      })
 
   /** F5 — top-k retrieval over int8-QUANTIZED vectors (F4's format actually
     * queried): per-vector symmetric quantization q_i = round(127·x_i/max|x|),
@@ -939,23 +886,13 @@ object Ann {
     * what makes a filtered query cheap: the label predicate prunes to its
     * stripe's DIRECTORIES at planning time (no data touched outside the
     * stripe), and within the stripe the scan moves 8× fewer vector bytes
-    * than the float arrays. Same offline-build stand-in as [[int8Index]];
-    * location `graft.int8.dir` conf, else tmpdir.
+    * than the float arrays. Same offline-build stand-in as [[int8Index]],
+    * in the same `graft.int8.dir` family.
     */
-  private val int8LblBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def int8LabelIndex(s: SparkSession, d: String): DataFrame = {
-    val base = s.conf.getOption("graft.int8.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-int8")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val path = graft.Artifacts.cachedLocation(int8LblBuilt, s"$d@$base@lbl", fp) { fpv =>
-      val slug = java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@lbl@$fpv"))
-      val dir = base + s"/embeddings_int8_lbl-$slug"
+    val path = graft.Artifacts.stored(s, "int8_label", d, Seq("embeddings.parquet")) { dir =>
       quantizedCodes(Tables.embeddings(s, d), Seq("label"))
         .write.mode("overwrite").partitionBy("label").parquet(dir)
-      dir
     }
     // partition-column read-back: label comes back via partition inference;
     // pin the int type so the gate schema matches the unpartitioned source
@@ -1052,24 +989,15 @@ object Ann {
         col("m.sv").as("sv"), col("m.cell").as("cell"))
   }
 
-  private val pqBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored PQ index: `codes` (vec_id, codes ARRAY<INT>, n2i) + `codebook`
     * (sub, cell, cv, ci2) parquet, built once per (dataset, fingerprint) —
     * the same offline-artifact stand-in as [[int8Index]]/[[ivfIndexDir]].
     * `n2i` is the fixed-point reconstruction norm Σ_sub ‖codeword‖²·2^20 —
     * integer, so the build's per-vector sum is accumulation-order-proof.
-    * Location: `graft.pq.dir` conf, else tmpdir.
+    * Family root: `graft.pq.dir`.
     */
-  private def pqIndexDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.pq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-pq")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(pqBuilt, s"$d@$base", fp) { fpv =>
-      import s.implicits._
-      val dir = base + "/pq-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
+  private def pqIndexDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "pq_index", d, Seq("embeddings.parquet")) { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1082,10 +1010,8 @@ object Ann {
         pqCodesFrame(sv, cents, ci2)
           .write.mode("overwrite").parquet(s"$dir/codes")
         writePqCodebook(s, cents, ci2, s"$dir/codebook")
-        dir
       } finally sv.unpersist(blocking = true)
     }
-  }
 
   /** Deterministic per-subspace Lloyd over a PERSISTED subvector frame —
     * factored out of [[pqIndexDir]] so the incremental PQ artifact (F27)
@@ -1345,28 +1271,18 @@ object Ann {
     */
   val IvfPqNprobe = 2
 
-  private val ivfpqBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored per-cell PQ postings: (vec_id, codes, n2i) partitioned by the
     * IVF cell — built once per corpus fingerprint from the two existing
     * artifacts (cheap join, no retraining). */
-  private def ivfpqIndexDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfpqBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ivfpq-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
+  private def ivfpqIndexDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ivfpq_postings", d, Seq("embeddings.parquet"),
+        ivfCellsConf(s)) { dir =>
       val cells = s.read.parquet(s"${ivfIndexDir(s, d)}/corpus")
         .select(col("vec_id"), col("cell"))
       s.read.parquet(s"${pqIndexDir(s, d)}/codes")
         .join(cells, "vec_id")
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
     }
-  }
 
   def ivfpqTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1422,23 +1338,15 @@ object Ann {
   // maintenance — the F26/F27 reports only prove the artifacts' shape.
   // ------------------------------------------------------------------
 
-  private val ivfpqIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The generation store: `gen-0/postings` = base PQ codes joined to the
     * base IVF assignment (both trained on base arrivals only, F26/F27's
     * artifacts), `gen-1/postings` = the arrival batch's appended codes
     * joined to its appended assignment — each `partitionBy(cell)` so a
     * query batch still prunes to its routed cells' directories within
     * EVERY generation. */
-  private def ivfpqIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfpqIncrBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ivfpq-incr-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
+  private def ivfpqIncrDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ivfpq_incr", d, Seq("embeddings.parquet"),
+        ivfCellsConf(s)) { dir =>
       val cells0 = s.read.parquet(s"${ivfIncrDir(s, d)}/gen-0/corpus")
         .select(col("vec_id"), col("cell"))
       s.read.parquet(s"${pqIncrDir(s, d)}/gen-0/codes")
@@ -1450,9 +1358,7 @@ object Ann {
       // codebook; neither base artifact is read
       ivfpqAppendPostings(s, d).write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/gen-1/postings")
-      dir
     }
-  }
 
   /** The append step's PLAN: the arrival batch's postings rows from the
     * stored routing literals (F26's device) joined to its codes under
@@ -1560,22 +1466,13 @@ object Ann {
     pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
       lit(DeleteMod.toLong)) === lit(DeleteRes.toLong)
 
-  private val lifecycleBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The lifecycle artifact over the (immutable) F28 generation store:
     * `tombstones` (the persisted delete log), `cells/cell=K` (merged LIVE
     * postings for the cells compaction selected), `_MANIFEST` (every cell
     * → `new` or `ref`). Built once per corpus fingerprint. */
-  private def lifecycleDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-lc"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    val thr = compactPermilleConf(s)
-    graft.Artifacts.cachedLocation(lifecycleBuilt, s"$d@$base@k$kCells@t$thr", fp) { fpv =>
-      val dir = base + "/lc-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@t$thr@$fpv"))
+  private def lifecycleDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ivfpq_lifecycle", d, Seq("embeddings.parquet"),
+        ivfCellsConf(s), compactPermilleConf(s)) { dir =>
       val store = ivfpqIncrDir(s, d)
       // the delete log: O(|deletes|), never a base rewrite
       Tables.embeddings(s, d).select(col("vec_id")).filter(deletePred)
@@ -1602,9 +1499,7 @@ object Ann {
           out.write(s"$c\t$kind\n".getBytes("UTF-8"))
         }
       } finally out.close()
-      dir
     }
-  }
 
   /** The shared dirty-stats frame: per cell, generation row counts, dead
     * rows (tombstoned — all in gen-0 by the residue construction, but
@@ -1702,59 +1597,26 @@ object Ann {
     * by the mod-32 refinement of the mod-8 residue (3, 11, 19, 27 — all
     * ≡ 3 mod 8, power-of-two moduli so signed pmod == unsigned %), with
     * staggered mtimes so the file source's batch order is pinned. */
-  private val ingestFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private[graft] val IngestResidues: Seq[Long] = Seq(3L, 11L, 19L, 27L)
 
-  private def ingestFixtureDir(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(ingestFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_annstream_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+  private def ingestFixtureDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ann_stream_fixture", d, Seq("embeddings.parquet")) { dir =>
       val t0 = System.currentTimeMillis()
       IngestResidues.zipWithIndex.foreach { case (res, j) =>
         val batch = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"))
           .filter(pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
             lit(32L)) === lit(res))
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_arr$j")
-        batch.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"arr$j.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, t0 - (IngestResidues.length - j) * 60000L, -1); ()
+        graft.streaming.Streams.writeFixtureFile(s, dir, batch, s"arr$j",
+          t0 - (IngestResidues.length - j) * 60000L)
       }
-      dir.toString
     }
-  }
-
-  private val ingestBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
 
   /** The streamed generation store: runs the AvailableNow ingest once per
     * (JVM, corpus fingerprint, k) over the fixture feed. */
-  private def ingestDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-stream"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ingestBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ingest-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true); fs.mkdirs(p)
-      runIngestStream(s, d, dir)
-      dir
-    }
-  }
+  private def ingestDir(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "ivfpq_stream", d, Seq("embeddings.parquet"),
+      ivfCellsConf(s))(runIngestStream(s, d, _))
 
   /** One ingest run: stream the fixture feed, one file per micro-batch,
     * each batch encoded + routed under the stored artifacts and written

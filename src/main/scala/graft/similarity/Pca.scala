@@ -127,21 +127,14 @@ object Pca {
   // the stored rotation artifact
   // ------------------------------------------------------------------
 
-  private val rotBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Last rotation served in this JVM — the oracle-literal source. The
     * oracle strings are generated AFTER the gated queries run (Verify
     * dumps oracle SQL last), so by construction the stash holds the
     * rotation of the dataset under verification. */
   @volatile private var stash: Option[(Array[Double], Array[Array[Double]])] = None
 
-  private def rotLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(rotBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_pca_rot_${slug}_$fpv").toString
+  private def rotLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.stored(s, "pca_rotation", d, Seq("embeddings.parquet")) { dir =>
       // the exact integer Gram (F18's buffer) — dim² longs of driver state
       val units = Ann.embGramMatrix(s, d).collect()
       val n = Ann.GramDim
@@ -157,9 +150,7 @@ object Pca {
         .map { case ((ev, vec), j) => (j, ev, vec.toSeq) }.toSeq
         .toDF("j", "eigval_units", "rv")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
     }
-  }
 
   /** The learned rotation, read back from the stored artifact (and
     * stashed for oracle generation): eigenvalues + eigenvector rows,

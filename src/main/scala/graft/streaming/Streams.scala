@@ -396,40 +396,39 @@ object Streams {
       "append", rocksDb = true)
   }
 
+  /** Writes `df` as the one parquet file `<dir>/<name>.parquet` of a
+    * stream fixture and, when `modTime` is given, stamps its mtime: with
+    * maxFilesPerTrigger=1 the file source reads one file per micro-batch
+    * in mtime order, so the stamps pin the batch order. */
+  private[graft] def writeFixtureFile(s: SparkSession, dir: String, df: DataFrame,
+      name: String, modTime: Long = -1L): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
+    val fs = staging.getFileSystem(s.sparkContext.hadoopConfiguration)
+    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    val part = fs.listStatus(staging)
+      .map(_.getPath).find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
+    val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
+    fs.rename(part, target)
+    fs.delete(staging, true)
+    if (modTime >= 0) fs.setTimes(target, modTime, -1)
+  }
+
   /** Era fixture for C32 (the C25/C28 modTime-ordered discipline): old-era
     * events, an empty bridge (fires the mid-stream timer pass at the
     * post-batch0 watermark), then the new era. */
-  private val twsFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def twsFixtureDir(s: SparkSession, d: String): String = {
     import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(twsFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_twst_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+    graft.Artifacts.stored(s, "tws_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
       val cut2 = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
-      }
+      def writeOne(df: DataFrame, name: String, modTime: Long): Unit =
+        writeFixtureFile(s, loc, df, name, modTime)
       val t0 = System.currentTimeMillis()
       writeOne(ev.filter(col("ts") <= lit(cut2)), "batch0_oldera", t0 - 180000)
       writeOne(ev.filter(lit(false)), "batch1_bridge", t0 - 120000)
       writeOne(ev.filter(col("ts") > lit(cut2)), "batch2_newera", t0 - 60000)
-      dir.toString
     }
   }
 
@@ -634,18 +633,9 @@ object Streams {
     * (one parquet file each), fingerprint-cached like the other stream
     * fixtures. Arrival ORDER is controlled per run by the recovery driver
     * (phase 1 stages half0 only), so no modTime choreography is needed. */
-  private val recFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def recoveryFixtureDir(s: SparkSession, d: String): String = {
     import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(recFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_recov_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+    graft.Artifacts.stored(s, "recovery_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val mm = ev.agg(min(col("ts")), max(col("ts"))).head // 2 scalars, bounded
       val midMs = mm.getTimestamp(0).getTime +
@@ -675,21 +665,13 @@ object Streams {
         .limit(1).collect() // ≤1 row, bounded
       val cut = cutRow.headOption.map(_.getTimestamp(2))
         .getOrElse(new java.sql.Timestamp(midMs)) // degenerate-corpus fallback
-      def writeOne(df: DataFrame, name: String): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        fs.rename(part, new org.apache.hadoop.fs.Path(dir, s"$name.parquet"))
-        fs.delete(staging, true); ()
-      }
+      def writeOne(df: DataFrame, name: String): Unit =
+        writeFixtureFile(s, loc, df, name)
       writeOne(ev.filter(col("ts") <= lit(cut)), "half0")
       writeOne(ev.filter(col("ts") > lit(cut)), "half1")
       import s.implicits._
       writeOne(Seq(cut.getTime / 1000 * 1000000L + cut.getNanos / 1000)
         .toDF("cut_us"), "cutinfo")
-      dir.toString
     }
   }
 
@@ -773,39 +755,20 @@ object Streams {
   /** Fixture for C38: orders split into three date-ordered CDC slices, the
     * arrival choreography the other stream fixtures use (modTime order +
     * maxFilesPerTrigger=1 → one slice per micro-batch). */
-  private val cdcFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def cdcFixtureDir(s: SparkSession, d: String): String = {
     import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/orders.parquet")
-    graft.Artifacts.cachedLocation(cdcFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_cdc_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+    graft.Artifacts.stored(s, "cdc_fixture", d, Seq("orders.parquet")) { loc =>
       val o = Tables.orders(s, d)
         .select(col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
       val c1 = expr("timestamp'1996-01-01 00:00:00'")
       val c2 = expr("timestamp'1998-01-01 00:00:00'")
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1); ()
-      }
+      def writeOne(df: DataFrame, name: String, modTime: Long): Unit =
+        writeFixtureFile(s, loc, df, name, modTime)
       val t0 = System.currentTimeMillis()
       writeOne(o.filter(col("o_orderdate") < c1), "cdc0", t0 - 180000)
       writeOne(o.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2),
         "cdc1", t0 - 120000)
       writeOne(o.filter(col("o_orderdate") >= c2), "cdc2", t0 - 60000)
-      dir.toString
     }
   }
 
@@ -1376,9 +1339,6 @@ object Streams {
     * end (append mode, unlike C3's complete-mode gate, so emission timing
     * itself is under test). StreamingSpec pins the dropped-row count.
     */
-  private val lateFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Planted-late predicate, shared by the fixture build, the oracle text,
     * and the spec's recount. */
   private def isLate(maxTs: java.sql.Timestamp) =
@@ -1387,29 +1347,14 @@ object Streams {
 
   private def lateFixtureDir(s: SparkSession, d: String): String = {
     import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(lateFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_late_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+    graft.Artifacts.stored(s, "late_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
       val late = isLate(maxTs)
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
-      }
+      def writeOne(df: DataFrame, name: String, modTime: Long): Unit =
+        writeFixtureFile(s, loc, df, name, modTime)
       // modTimes 60 s apart pin the batch order: on-time, an EMPTY bridge,
       // then the late set. The bridge batch is load-bearing: Spark's
       // late-event filter deliberately uses the PREVIOUS batch's watermark
@@ -1424,7 +1369,6 @@ object Streams {
       writeOne(ev.filter(!late), "batch0_ontime", t0 - 180000)
       writeOne(ev.filter(lit(false)), "batch1_bridge", t0 - 120000)
       writeOne(ev.filter(late), "batch2_late", t0 - 60000)
-      dir.toString
     }
   }
 
@@ -1462,19 +1406,10 @@ object Streams {
     */
   val DedupTtlUs: Long = 6L * 3600 * 1000000
 
-  private val dedupFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def dedupFixtureDir(s: SparkSession, d: String): String = {
     import graft.operators.Tables
     import org.apache.spark.sql.expressions.Window
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(dedupFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_ddw_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
+    graft.Artifacts.stored(s, "dedup_watermark_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
@@ -1491,23 +1426,13 @@ object Streams {
       val late = ev
         .filter(pmod(col("event_id"), lit(10L)) === 0 && col("ts") <= lit(lateCut))
         .select(col("user_id"), col("event_type"), col("ts"))
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
-      }
+      def writeOne(df: DataFrame, name: String, modTime: Long): Unit =
+        writeFixtureFile(s, loc, df, name, modTime)
       val t0 = System.currentTimeMillis()
       writeOne(registry, "batch0_registry", t0 - 240000)
       writeOne(registry.filter(lit(false)), "batch1_bridge", t0 - 180000)
       writeOne(newEra, "batch2_newera", t0 - 120000)
       writeOne(late, "batch3_late", t0 - 60000)
-      dir.toString
     }
   }
 

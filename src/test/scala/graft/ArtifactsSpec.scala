@@ -86,25 +86,116 @@ class ArtifactsSpec extends SparkSpec {
     }
   }
 
+  /** A fresh dataset dir holding one small input file, `data.bin`. */
+  private def tinyDataset(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    Files.write(Paths.get(d, "data.bin"), Array.fill[Byte](16)('x'))
+    d
+  }
+
+  /** Runs `body` with the scratch root pointed at a fresh temp dir. */
+  private def withScratch[T](body: String => T): T = {
+    val root = Files.createTempDirectory("graft-scratch-spec").toString
+    spark.conf.set("graft.scratch.dir", root)
+    try body(root) finally spark.conf.unset("graft.scratch.dir")
+  }
+
   test("sweepStale never deletes a live generation after a fingerprint cycle") {
     // deterministic slugs mean a fingerprint cycle A→B→A rebuilds into the
     // SAME dir that was recorded as superseded during the A→B transition;
     // installing the new entry must take that dir back out of the sweep set
-    val map = new java.util.concurrent.ConcurrentHashMap[String, Artifacts.Built]()
-    val base = Files.createTempDirectory("graft-fp-cycle").toString
-    def build(fp: String): String = {
-      val p = Paths.get(base, "gen-" + fp)
-      Files.createDirectories(p)
-      p.toString
+    withScratch { _ =>
+      val d = tinyDataset("graft-fp-cycle")
+      def build(dir: String): Unit = assert(Files.isDirectory(Paths.get(dir)))
+      val locA1 = Artifacts.storedFp(spark, "cycle_spec", d, "A")(build)
+      val locB = Artifacts.storedFp(spark, "cycle_spec", d, "B")(build)
+      val locA2 = Artifacts.storedFp(spark, "cycle_spec", d, "A")(build)
+      assert(locA1 == locA2 && locA1 != locB)
+      Artifacts.sweepStale(spark)
+      assert(Files.exists(Paths.get(locA2)),
+        "sweep deleted the LIVE generation after an A→B→A fingerprint cycle")
+      assert(!Files.exists(Paths.get(locB)), "superseded generation survived the sweep")
     }
-    val locA1 = Artifacts.cachedLocation(map, "cyc", "A")(build)
-    val locB = Artifacts.cachedLocation(map, "cyc", "B")(build)
-    val locA2 = Artifacts.cachedLocation(map, "cyc", "A")(build)
-    assert(locA1 == locA2 && locA1 != locB)
-    Artifacts.sweepStale(spark)
-    assert(Files.exists(Paths.get(locA2)),
-      "sweep deleted the LIVE generation after an A→B→A fingerprint cycle")
-    assert(!Files.exists(Paths.get(locB)), "superseded generation survived the sweep")
+  }
+
+  test("concurrent first calls on one stored key build exactly once") {
+    withScratch { _ =>
+      val d = tinyDataset("graft-concurrent")
+      val builds = new java.util.concurrent.atomic.AtomicInteger()
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val calls = (1 to 4).map { _ =>
+          pool.submit(() => {
+            go.await()
+            Artifacts.stored(spark, "concurrent_spec", d, Seq("data.bin")) { dir =>
+              builds.incrementAndGet()
+              Thread.sleep(200) // hold the build open while the others arrive
+              Files.write(Paths.get(dir, "out"), Array[Byte](1))
+            }
+          })
+        }
+        go.countDown()
+        val locs = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)).toSet
+        assert(builds.get == 1, s"${builds.get} builds for one key")
+        assert(locs.size == 1 && Files.exists(Paths.get(locs.head, "out")))
+      } finally pool.shutdownNow()
+    }
+  }
+
+  test("a stored build that reads other stored artifacts completes") {
+    // a chain of nested builds, each reading the next artifact down inside
+    // its own build (the ivfpq → ivf/pq shape). Deeper than a fresh hash
+    // map's bin count, so a build run inside `compute` on the one shared
+    // map would hit a bin reserved by an enclosing build.
+    withScratch { _ =>
+      val d = tinyDataset("graft-nested")
+      def level(i: Int): String =
+        Artifacts.stored(spark, s"nested_spec_$i", d, Seq("data.bin")) { dir =>
+          val depth = if (i == 0) 0 else
+            new String(Files.readAllBytes(Paths.get(level(i - 1), "depth"))).toInt + 1
+          Files.write(Paths.get(dir, "depth"), depth.toString.getBytes)
+        }
+      val top = level(24)
+      assert(new String(Files.readAllBytes(Paths.get(top, "depth"))) == "24")
+      assert(level(24) == top, "a served nested artifact was rebuilt")
+    }
+  }
+
+  test("repointing graft.ivf.dir mid-session rebuilds into the new root") {
+    val d = Files.createTempDirectory("graft-repoint").toString
+    copyFile(s"$sf/embeddings.parquet", s"$d/embeddings.parquet")
+    val r1 = Files.createTempDirectory("graft-ivf-r1").toString
+    val r2 = Files.createTempDirectory("graft-ivf-r2").toString
+    spark.conf.set("graft.ivf.dir", r1)
+    try {
+      val a = graft.similarity.Ann.ivfIndexDirForSpec(spark, d)
+      assert(a.startsWith(r1 + "/"), s"index at $a, not under $r1")
+      spark.conf.set("graft.ivf.dir", r2)
+      val b = graft.similarity.Ann.ivfIndexDirForSpec(spark, d)
+      assert(b.startsWith(r2 + "/"), s"index at $b, not under $r2")
+      assert(Files.exists(Paths.get(b, "centroids")) && Files.exists(Paths.get(b, "corpus")))
+      // the first root's generation is still served when pointed back
+      spark.conf.set("graft.ivf.dir", r1)
+      assert(graft.similarity.Ann.ivfIndexDirForSpec(spark, d) == a)
+    } finally spark.conf.unset("graft.ivf.dir")
+  }
+
+  test("two names with equal dataset and params never share a directory") {
+    withScratch { _ =>
+      val d = tinyDataset("graft-names")
+      def at(name: String, param: Int): String =
+        Artifacts.stored(spark, name, d, Seq("data.bin"), param) { dir =>
+          Files.write(Paths.get(dir, "name"), name.getBytes)
+        }
+      val a = at("twin_a_spec", 7)
+      val b = at("twin_b_spec", 7)
+      assert(a != b)
+      assert(new String(Files.readAllBytes(Paths.get(a, "name"))) == "twin_a_spec")
+      assert(new String(Files.readAllBytes(Paths.get(b, "name"))) == "twin_b_spec")
+      // a param that shapes the artifact selects its own directory too
+      assert(at("twin_a_spec", 8) != a)
+    }
   }
 
   test("persisted _fingerprint validates tables across a (simulated) fresh JVM") {

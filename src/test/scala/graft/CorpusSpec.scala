@@ -18,7 +18,7 @@ class CorpusSpec extends SparkSpec {
     val phys = df.queryExecution.executedPlan.toString
     assert(phys.contains("graft_incr_prefix") && phys.contains("graft_incr_df")
       && phys.contains("graft_incr_arr"), "stored E7 index not in the plan")
-    assert(phys.contains("graft_evalgrams_"),
+    assert(phys.contains("graft_eval_grams-"),
       "stored eval-gram artifact not in the plan")
     // walk the optimized plan: every relation over documents.parquet must
     // sit beneath a Filter carrying the batch predicate (doc_id % 10 >= 8)

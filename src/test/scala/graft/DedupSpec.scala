@@ -421,6 +421,25 @@ class DedupSpec extends SparkSpec {
     assert(r2 == r1 && r1.nonEmpty)
   }
 
+  test("rebuilding the incremental index drops the legacy string-keyed tables") {
+    val slug = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+    val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
+    legacy.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      new scala.reflect.io.Directory(new java.io.File(wh, t)).deleteRecursively()
+      spark.range(3).write.saveAsTable(t)
+    }
+    assert(legacy.forall(spark.catalog.tableExists))
+    // a missing h-keyed table forces the rebuild
+    spark.sql(s"DROP TABLE IF EXISTS `graft_incr_prefixh_$slug`")
+    assert(Dedup.incrementalNew(spark, sf).collect().nonEmpty)
+    legacy.foreach { t =>
+      assert(!spark.catalog.tableExists(t), s"legacy table $t survived the rebuild")
+      assert(!new java.io.File(wh, t).exists, s"legacy table dir $t survived the rebuild")
+    }
+  }
+
   test("clusterPairs leaves no persisted or checkpointed blocks behind") {
     // clusterPairs localCheckpoints per-round label snapshots and persists
     // E2 intermediates; all of it must be explicitly freed — a long-lived
@@ -708,7 +727,7 @@ class DedupSpec extends SparkSpec {
     // the candidate stage scans the stored label-partitioned index, not the
     // float embeddings (the plan-shape claim behind the 8x-bandwidth story)
     val plan = idxDf.queryExecution.executedPlan.toString
-    assert(plan.contains("embeddings_int8_lbl"),
+    assert(plan.contains("graft_int8_label-"),
       "candidate stage does not read the stored label-partitioned int8 index")
   }
 
