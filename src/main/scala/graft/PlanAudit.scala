@@ -26,7 +26,7 @@ object PlanAudit {
     * global aggregate over tiny partial-agg rows — the one legitimate use.
     * Anything else with a 1p exchange is a single-task bottleneck.
     */
-  private val SinglePartitionOk = Set(
+  private[graft] val SinglePartitionOk = Set(
     "combine_global", "q14_promo", "side_singleton", "dedup_embedding",
     // ann_recall_curve: per-nprobe (hits, scanned) pairs — 2 one-row global
     // reduces of tiny partials per operating point (4 points = 8), the
@@ -129,7 +129,7 @@ object PlanAudit {
     * approx-percentile digests) — documented in PLANS.md; anything new is an
     * unbounded-buffer spill hazard until reviewed and added here.
     */
-  private val ObjectAggOk = Set(
+  private[graft] val ObjectAggOk = Set(
     // pipe_window_agg: the DSL's typed CombineAggregator — a constant-size
     // (Long, Long) buffer per (key, window), partial-agg before the shuffle
     "pipe_window_agg",

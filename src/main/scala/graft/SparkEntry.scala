@@ -5,6 +5,10 @@ import graft.operators._
 object SparkEntry {
   type Query = (SparkSession, String) => DataFrame
 
+  /** One gated operator: the query and the ANSI SQL that DuckDB runs on the
+    * same parquet tables to check it. */
+  case class Op(run: Query, oracle: String)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The end-to-end data-prep composite V2 is the engine's identity piece:
     * quality gate + language ID + keep-BEST near-dup dedup + eval-set
@@ -15,56 +19,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CorpusClean.corpusPrepareV2(spark, "/root/testdata/sf0.001")
 
-  /** Every operator module, named once: its queries and its oracles. A def,
-    * because Pca writes its oracle text from the rotation its gated query
-    * last served. */
-  private def modules: Seq[(Map[String, Query], Map[String, String])] = Seq(
-    Relational.queries -> Relational.oracles,
-    Analytics.queries -> Analytics.oracles,
-    TpchMore.queries -> TpchMore.oracles,
-    Graph.queries -> Graph.oracles,
-    BeamParity.queries -> BeamParity.oracles,
-    TextAnalysis.queries -> TextAnalysis.oracles,
-    CorpusClean.queries -> CorpusClean.oracles,
-    CorpusSpans.queries -> CorpusSpans.oracles,
-    Signals.queries -> Signals.oracles,
-    Bucketed.queries -> Bucketed.oracles,
-    SetSketch.queries -> SetSketch.oracles,
-    BpeTrain.queries -> BpeTrain.oracles,
-    QualityTrain.queries -> QualityTrain.oracles,
-    UlmTrain.queries -> UlmTrain.oracles,
-    ScaleCurve.queries -> ScaleCurve.oracles,
-    graft.dedup.Dedup.queries -> graft.dedup.Dedup.oracles,
-    graft.similarity.Ann.queries -> graft.similarity.Ann.oracles,
-    graft.similarity.Pca.queries -> graft.similarity.Pca.oracles,
-    graft.multimodal.Multimodal.queries -> graft.multimodal.Multimodal.oracles,
-    graft.streaming.Streams.queries -> graft.streaming.Streams.oracles)
+  /** Every operator module, named once. A def, because Pca writes its
+    * oracle text from the rotation its gated query last served. */
+  private def modules: Seq[Map[String, Op]] = Seq(
+    Relational.ops, Analytics.ops, TpchMore.ops, Graph.ops, BeamParity.ops,
+    TextAnalysis.ops, CorpusClean.ops, CorpusSpans.ops, Signals.ops,
+    Bucketed.ops, SetSketch.ops, BpeTrain.ops, QualityTrain.ops, UlmTrain.ops,
+    ScaleCurve.ops, graft.dedup.Dedup.ops, graft.similarity.Ann.ops,
+    graft.similarity.Pca.ops, graft.multimodal.Multimodal.ops,
+    graft.streaming.Streams.ops)
 
-  /** The driver maps merged from `ms`. A key declared by two modules, or a
-    * key without an oracle (or an oracle without a key), fails here
-    * instead of one declaration silently overwriting another. */
-  private[graft] def merged(ms: Seq[(Map[String, Query], Map[String, String])])
-      : (Map[String, Query], Map[String, String]) = {
-    def list(ks: Set[String]) = ks.toSeq.sorted.mkString(", ")
-    def union[V](maps: Seq[Map[String, V]], what: String): Map[String, V] = {
-      val dup = maps.flatMap(_.keys).groupBy(identity).collect {
-        case (k, ks) if ks.size > 1 => k
-      }
-      require(dup.isEmpty, s"$what keys declared by two modules: ${list(dup.toSet)}")
-      maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  /** The module maps merged into one. A key declared by two modules fails
+    * here instead of one declaration silently overwriting another. */
+  private[graft] def merged(ms: Seq[Map[String, Op]]): Map[String, Op] = {
+    val dup = ms.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k
     }
-    val q = union(ms.map(_._1), "query")
-    val o = union(ms.map(_._2), "oracle")
-    require(q.keySet == o.keySet,
-      s"keys without an oracle: ${list(q.keySet -- o.keySet)}; " +
-        s"oracles without a key: ${list(o.keySet -- q.keySet)}")
-    (q, o)
+    require(dup.isEmpty, s"keys declared by two modules: ${dup.toSeq.sorted.mkString(", ")}")
+    ms.foldLeft(Map.empty[String, Op])(_ ++ _)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, Query] = merged(modules)._1
+  lazy val queries: Map[String, Query] = merged(modules).map { case (k, op) => k -> op.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */
-  def oracleSql: Map[String, String] = merged(modules)._2
+  def oracleSql: Map[String, String] = merged(modules).map { case (k, op) => k -> op.oracle }
 }

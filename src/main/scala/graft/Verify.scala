@@ -25,7 +25,8 @@ object Verify {
     // planted UTF-8 corpus: accents, CJK, and supplementary-plane emoji all
     // hash-match through tools/check.py).
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // sorted key order: the run log and oracle_sql.json compare across commits
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       System.err.println(s"[verify] running $name")
@@ -56,7 +57,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.Tables
+import graft.SparkEntry.Op
 
 /** E-block (SURVEY §2): deduplication over `documents`.
   *
@@ -1238,23 +1239,6 @@ object Dedup {
     SELECT source_a, source_b, COUNT(*) AS n_pairs
     FROM m GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dup_matrix" -> dupMatrix _,
-    "text_winnow_fingerprint" -> winnowFingerprints _,
-    "dedup_url_canonical" -> dedupUrlCanonical _,
-    "dedup_boilerplate" -> dedupBoilerplate _,
-    "dedup_exact" -> dedupExact _,
-    "dedup_jaccard_pairs" -> jaccardPairs _,
-    "dedup_incremental" -> incrementalNew _,
-    "dedup_clusters" -> clusterPairs _,
-    "dedup_minhash" -> minhashPairs _,
-    "dedup_minhash_estimate" -> minhashEstimate _,
-    "corpus_dedup_sweep" -> dedupSweep _,
-    "dedup_simhash" -> simhashPairs _,
-    "dedup_winnow" -> winnowPairs _,
-    "dedup_embedding" -> embeddingPairs _
-  )
-
   /** SQL twin of the Winnow expression (plans/Winnow.scala): the base-257
     * polynomial rolling hash with natural 64-bit wraparound is replayed as a
     * direct polynomial sum in HUGEINT mod 2^64, mapped back to signed BIGINT
@@ -1446,25 +1430,25 @@ object Dedup {
         WHERE $jac >= $JaccardT)"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "dedup_url_canonical" -> dedupUrlCanonicalSql,
-    "dedup_boilerplate" -> dedupBoilerplateSql,
-    "dedup_winnow" -> winnowOracleSql,
-    "dedup_minhash" -> minhashOracleSql,
-    "dedup_minhash_estimate" -> minhashEstimateSql,
-    "corpus_dedup_sweep" -> dedupSweepSql,
-    "dedup_simhash" -> simhashOracleSql,
-    "dedup_exact" -> s"""
+  val ops: Map[String, Op] = Map(
+    "dedup_url_canonical" -> Op(dedupUrlCanonical _, dedupUrlCanonicalSql),
+    "dedup_boilerplate" -> Op(dedupBoilerplate _, dedupBoilerplateSql),
+    "dedup_winnow" -> Op(winnowPairs _, winnowOracleSql),
+    "dedup_minhash" -> Op(minhashPairs _, minhashOracleSql),
+    "dedup_minhash_estimate" -> Op(minhashEstimate _, minhashEstimateSql),
+    "corpus_dedup_sweep" -> Op(dedupSweep _, dedupSweepSql),
+    "dedup_simhash" -> Op(simhashPairs _, simhashOracleSql),
+    "dedup_exact" -> Op(dedupExact _, s"""
       SELECT ${TextFunctions.fingerprintSql("text")} AS fp,
         MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-      FROM documents GROUP BY 1 ORDER BY keep_id""",
+      FROM documents GROUP BY 1 ORDER BY keep_id"""),
     "dedup_jaccard_pairs" ->
-      s"WITH $jaccardPairsCtes SELECT doc_a, doc_b, jac FROM jp ORDER BY doc_a, doc_b",
-    "corpus_dup_matrix" -> dupMatrixSql,
-    "text_winnow_fingerprint" -> winnowFingerprintsSql,
+      Op(jaccardPairs _, s"WITH $jaccardPairsCtes SELECT doc_a, doc_b, jac FROM jp ORDER BY doc_a, doc_b"),
+    "corpus_dup_matrix" -> Op(dupMatrix _, dupMatrixSql),
+    "text_winnow_fingerprint" -> Op(winnowFingerprints _, winnowFingerprintsSql),
     // connected components via a recursive transitive-closure CTE: tractable
     // because near-dup components are tiny at oracle SF
-    "dedup_clusters" -> """
+    "dedup_clusters" -> Op(clusterPairs _, """
       WITH RECURSIVE
       w AS (SELECT doc_id, str_split(text,' ') AS ws FROM documents),
       sh AS (
@@ -1482,8 +1466,8 @@ object Dedup {
         UNION
         SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src)
       SELECT a AS doc_id, MIN(b) AS cluster_id
-      FROM reach GROUP BY a ORDER BY doc_id""",
-    "dedup_incremental" -> """
+      FROM reach GROUP BY a ORDER BY doc_id"""),
+    "dedup_incremental" -> Op(incrementalNew _, """
       WITH w AS (SELECT doc_id, str_split(text,' ') AS ws FROM documents),
       sh AS (
         SELECT doc_id,
@@ -1498,12 +1482,12 @@ object Dedup {
                 / (len(n.s) + len(o.s) - len(list_intersect(n.s, o.s))), 6) >= 0.8)
       SELECT doc_id FROM documents
       WHERE doc_id % 10 >= 8 AND doc_id NOT IN (SELECT doc_id FROM matched)
-      ORDER BY doc_id""",
-    "dedup_embedding" -> """
+      ORDER BY doc_id"""),
+    "dedup_embedding" -> Op(embeddingPairs _, """
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS cos
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
-      ORDER BY vec_a, vec_b"""
+      ORDER BY vec_a, vec_b""")
   )
 }

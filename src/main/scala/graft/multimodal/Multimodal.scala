@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables
+import graft.SparkEntry.Op
 
 /** G-block (SURVEY §2): multimodal payloads with REAL, codec-free decode
   * (round-11 verdict lead item — the former stubs are gone).
@@ -1439,30 +1440,6 @@ object Multimodal {
       CAST(frame AS BIGINT) AS peak_frame, e AS peak_energy
     FROM r WHERE rn = 1 ORDER BY doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_energy" -> audioEnergy _,
-    "mm_audio_energy_16bit" -> audioEnergy16 _,
-    "mm_audio_decode_mulaw" -> audioDecodeMulaw _,
-    "mm_audio_decode_adpcm" -> audioDecodeAdpcm _,
-    "mm_audio_spectrum" -> audioSpectrum _,
-    "mm_audio_downsample" -> audioDownsample _,
-    "mm_frame_dedup" -> frameDedup _,
-    "mm_scene_cuts" -> sceneCuts _,
-    "mm_audio_silence_trim" -> audioSilenceTrim _,
-    "mm_binary_meta" -> binaryMeta _,
-    "mm_image_features" -> imageFeatures _,
-    "mm_image_decode_png" -> imageDecodePng _,
-    "mm_image_decode_jpeg" -> imageDecodeJpeg _,
-    "mm_image_decode_jpeg_color" -> imageDecodeJpegColor _,
-    "mm_image_decode_jpeg_prog" -> imageDecodeJpegProg _,
-    "mm_prepare" -> mmPrepare _,
-    "mm_image_augment" -> imageAugment _,
-    "mm_frame_sample" -> frameSample _,
-    "mm_image_resize" -> imageResize _,
-    "mm_phash_dedup" -> phashDedup _,
-    "mm_phash2d_dedup" -> phash2dDedup _
-  )
-
   /** G6's twin: replay the manufactured frames, the per-frame signature
     * (ord == code point on this corpus; HUGEINT bit sum wrapped to Spark's
     * signed long), and the exact per-video hamming join.
@@ -1538,31 +1515,31 @@ object Multimodal {
       FROM ag ORDER BY doc_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "mm_audio_energy" -> audioEnergySql,
-    "mm_audio_energy_16bit" -> audioEnergy16Sql,
-    "mm_audio_decode_mulaw" -> audioDecodeMulawSql,
-    "mm_audio_decode_adpcm" -> audioDecodeAdpcmSql,
-    "mm_audio_spectrum" -> audioSpectrumSql,
-    "mm_audio_downsample" -> audioDownsampleSql,
-    "mm_frame_dedup" -> frameDedupSql,
-    "mm_scene_cuts" -> sceneCutsSql,
-    "mm_audio_silence_trim" -> audioSilenceTrimSql,
+  val ops: Map[String, Op] = Map(
+    "mm_audio_energy" -> Op(audioEnergy _, audioEnergySql),
+    "mm_audio_energy_16bit" -> Op(audioEnergy16 _, audioEnergy16Sql),
+    "mm_audio_decode_mulaw" -> Op(audioDecodeMulaw _, audioDecodeMulawSql),
+    "mm_audio_decode_adpcm" -> Op(audioDecodeAdpcm _, audioDecodeAdpcmSql),
+    "mm_audio_spectrum" -> Op(audioSpectrum _, audioSpectrumSql),
+    "mm_audio_downsample" -> Op(audioDownsample _, audioDownsampleSql),
+    "mm_frame_dedup" -> Op(frameDedup _, frameDedupSql),
+    "mm_scene_cuts" -> Op(sceneCuts _, sceneCutsSql),
+    "mm_audio_silence_trim" -> Op(audioSilenceTrim _, audioSilenceTrimSql),
     // DuckDB md5/hex operate on VARCHAR; the payload is exactly the UTF-8
     // bytes of `text`, so md5(text) == md5(encode(text)).
     // md5/hex operate on the same UTF-8 bytes both sides; magic prefix uses
     // char semantics (DuckDB can't substring a BLOB)
-    "mm_binary_meta" -> """
+    "mm_binary_meta" -> Op(binaryMeta _, """
       SELECT doc_id, octet_length(encode(text)) AS n_bytes,
         md5(text) AS content_md5,
         lower(hex(encode(substring(text, 1, 4)))) AS magic_hex
-      FROM documents ORDER BY doc_id""",
+      FROM documents ORDER BY doc_id"""),
     // positional replay of the DECODED raster: fixture pixels are the
     // 3·32² stride-sampled code points, so the oracle recomputes channel
     // sums and the integer-luminance histogram straight off the text —
     // while the Spark side must PARSE the P6 bytes to get the same values
     // (width/height are the parsed header fields)
-    "mm_image_features" -> {
+    "mm_image_features" -> Op(imageFeatures _, {
       val n = ImgGrid * ImgGrid * ImgChannels
       val nPix = ImgGrid * ImgGrid
       val bins = (0 until 16).map(b =>
@@ -1581,12 +1558,12 @@ object Multimodal {
         CAST(list_sum(list_transform(range($nPix), p -> raw[3*p+3])) AS BIGINT) AS sum_b,
         md5(concat_ws(',', ${bins.mkString(", ")})) AS hist_md5
       FROM s ORDER BY doc_id"""
-    },
+    }),
     // positional replay of the PNG fixture's pre-encode derivation: the
     // raster IS the stride-sampled code points, so the oracle recomputes
     // dims/sums/pixel-md5 straight off the text — the Spark side must
     // inflate + unfilter the genuine PNG bytes to land the same hash
-    "mm_image_decode_png" -> {
+    "mm_image_decode_png" -> Op(imageDecodePng _, {
       val n = ImgGrid * ImgGrid * ImgChannels
       val nPix = ImgGrid * ImgGrid
       s"""
@@ -1601,13 +1578,13 @@ object Multimodal {
         CAST(list_sum(list_transform(range($nPix), p -> raw[3*p+3])) AS BIGINT) AS sum_b,
         md5(array_to_string(raw, ',')) AS pixels_md5
       FROM s ORDER BY doc_id"""
-    },
+    }),
     // positional replay of the JPEG fixture's pre-encode derivation: the
     // block-constant construction makes the lossy round-trip EXACT, so
     // the oracle expands the 16 stride-sampled block values to the 32×32
     // raster positionally — the Spark side must huffman-decode, dequantize
     // and IDCT the genuine baseline stream to land the same hash
-    "mm_image_decode_jpeg" -> {
+    "mm_image_decode_jpeg" -> Op(imageDecodeJpeg _, {
       val g = JpegGridBlocks
       val blocks = g * g
       val edge = g * 8
@@ -1623,7 +1600,7 @@ object Multimodal {
         md5(array_to_string(list_transform(range($n), i ->
           raw[(i // ${edge * 8}) * $g + ((i % $edge) // 8) + 1]), ',')) AS pixels_md5
       FROM s ORDER BY doc_id"""
-    },
+    }),
     // positional replay of the COLOR JPEG fixture: the MCU-constant
     // construction makes the lossy round-trip DETERMINISTIC — per-MCU RGB
     // goes through the encoder's fixed-point RGB→YCbCr and the decoder's
@@ -1632,12 +1609,12 @@ object Multimodal {
     // the Spark side must huffman-decode the interleaved 4:2:0 scan,
     // IDCT, upsample and color-transform the genuine stream to land the
     // same hash
-    "mm_image_decode_jpeg_color" -> jpegColorOracleSql,
+    "mm_image_decode_jpeg_color" -> Op(imageDecodeJpegColor _, jpegColorOracleSql),
     // the PROGRESSIVE container decodes to the byte-identical image (the
     // construction is exactly invertible under both SOFs), so the oracle
     // IS G2d's — what differs is the Spark-side decode path the hash
     // exercises (SOF2 multi-scan coefficient accumulation)
-    "mm_image_decode_jpeg_prog" -> jpegColorOracleSql,
+    "mm_image_decode_jpeg_prog" -> Op(imageDecodeJpegProg _, jpegColorOracleSql),
     // the G13 flagship oracle composes the existing CTE devices: the G2c
     // block expansion for JPEG docs, the G8 pool/sign/pack pHash, the
     // quadratic hamming join + recursive-CTE connected components at
@@ -1645,7 +1622,7 @@ object Multimodal {
     // keep-best argmax, and H27's window prefix sum for the shard ids —
     // all replayed positionally from the text (payload bytes == text
     // bytes is A26's own gate)
-    "mm_prepare" -> {
+    "mm_prepare" -> Op(mmPrepare _, {
       val g = Phash2dGrid; val bk = Phash2dBlock
       val nPix = g * g; val nb = g / bk; val wBits = nb * nb
       s"""
@@ -1725,14 +1702,14 @@ object Multimodal {
         quality, sum_pix,
         md5(array_to_string(pix, ',')) AS pixels_md5, shard_id
       FROM sh ORDER BY entity_id"""
-    },
-    "mm_frame_sample" -> """
+    }),
+    "mm_frame_sample" -> Op(frameSample _, """
       SELECT doc_id, frame_idx, md5(substring(text, frame_idx * 256 + 1, 256)) AS frame_md5
       FROM (SELECT doc_id, text,
               unnest(range((length(text) + 255) // 256)) AS frame_idx
             FROM documents)
       WHERE frame_idx % 4 = 0
-      ORDER BY doc_id, frame_idx""",
+      ORDER BY doc_id, frame_idx"""),
     // the oracle replays the phash build (ord == ascii on this ASCII
     // corpus; HUGEINT bit sum wrapped to the signed 64-bit value Spark
     // holds) and takes the exact quadratic hamming join — tractable at
@@ -1740,7 +1717,7 @@ object Multimodal {
     // replays the 2-D build: 32×32 strided codes row-major, 4×4 block sums
     // via the same index arithmetic, integer sign-vs-mean, exact quadratic
     // hamming join at oracle SF
-    "mm_phash2d_dedup" -> {
+    "mm_phash2d_dedup" -> Op(phash2dDedup _, {
       val g = Phash2dGrid; val bk = Phash2dBlock; val nb = g / bk
       val wBits = nb * nb; val bp = bk * bk
       s"""
@@ -1783,8 +1760,8 @@ object Multimodal {
       FROM ph a JOIN ph b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.phash, b.phash)) <= $PhashHamT
       ORDER BY doc_a, doc_b"""
-    },
-    "mm_phash_dedup" -> s"""
+    }),
+    "mm_phash_dedup" -> Op(phashDedup _, s"""
       WITH s AS (
         SELECT doc_id,
           list_transform(range($PhashBitsDefault), i ->
@@ -1804,11 +1781,11 @@ object Multimodal {
         CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
       FROM ph a JOIN ph b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.phash, b.phash)) <= $PhashHamT
-      ORDER BY doc_a, doc_b""",
+      ORDER BY doc_a, doc_b"""),
     // each augmentation variant is a pure index map over the replayed
     // raster: flip mirrors x, rot90 reads (h-1-x, y), crop offsets by
     // (dim-crop)/2 — the same integer arithmetic the kernel runs
-    "mm_image_augment" -> {
+    "mm_image_augment" -> Op(imageAugment _, {
       val g = ImgGrid; val ch = ImgChannels
       val n = g * g * ch
       val rowB = g * ch
@@ -1831,11 +1808,11 @@ object Multimodal {
           raw[(($off + (k // $crRowB)) * $g + $off + ((k % $crRowB) // $ch)) * $ch
               + (k % $ch) + 1]), ',')) AS crop_md5
       FROM s ORDER BY doc_id"""
-    },
+    }),
     // replay the decoded raster, then the exact nearest-neighbor index map
     // ⌊d·32/12⌋ per axis (channel-interleaved, row-major) — Spark must
     // parse the P6 header to produce the same src dims and pixel walk
-    "mm_image_resize" -> {
+    "mm_image_resize" -> Op(imageResize _, {
       val n = ImgGrid * ImgGrid * ImgChannels
       val t = ResizeTarget
       val nOut = t * t * ImgChannels
@@ -1852,6 +1829,6 @@ object Multimodal {
                + (((k % ${t * ImgChannels}) // $ImgChannels) * $ImgGrid) // $t)
               * $ImgChannels + (k % $ImgChannels) + 1]), ',')) AS resized_md5
       FROM s ORDER BY doc_id"""
-    }
+    })
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** Second analytics block (SURVEY §2 B30+): aggregate-then-join, grouping
   * sets, funnel analysis, histogramming, CDC merge, and runtime bloom-filter
@@ -805,59 +806,30 @@ object Analytics {
       .select(col("doc_id"), col("source"), col("n_chars"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q18_large_volume" -> q18LargeVolume _,
-    "grouping_sets_agg" -> groupingSetsAgg _,
-    "event_funnel" -> eventFunnel _,
-    "events_funnel_time" -> eventsFunnelTime _,
-    "hist_bins" -> histBins _,
-    "merge_upsert" -> mergeUpsert _,
-    "join_bloom_prune" -> joinBloomPrune _,
-    "window_ntile" -> windowNtile _,
-    "q17_small_qty" -> q17SmallQty _,
-    "layout_zorder" -> layoutZorder _,
-    "layout_hilbert" -> layoutHilbert _,
-    "layout_zorder_scan" -> layoutZorderScan _,
-    "approx_quantile_hist" -> approxQuantileHist _,
-    "quantile_sketch_log" -> quantileSketchLog _,
-    "quality_fk_orphans" -> qualityFkOrphans _,
-    "quality_profile" -> qualityProfile _,
-    "q7_volume" -> q7Volume _,
-    "q13_custdist" -> q13Custdist _,
-    "q19_disjunctive" -> q19Disjunctive _,
-    "q22_idle_customers" -> q22IdleCustomers _,
-    "window_range_rolling" -> windowRangeRolling _,
-    "stats_outliers" -> statsOutliers _,
-    "cohort_retention" -> cohortRetention _,
-    "events_active_users" -> activeUsers _,
-    "events_debounce" -> eventsDebounce _,
-    "corpus_length_trim" -> corpusLengthTrim _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "quantile_sketch_log" -> quantileSketchLogSql,
-    "layout_zorder_scan" -> s"""
+  val ops: Map[String, Op] = Map(
+    "quantile_sketch_log" -> Op(quantileSketchLog _, quantileSketchLogSql),
+    "layout_zorder_scan" -> Op(layoutZorderScan _, s"""
       SELECT o_orderkey, o_custkey, o_orderdate
       FROM orders
       WHERE o_custkey BETWEEN $ZscanCustLo AND $ZscanCustHi
         AND o_orderdate BETWEEN DATE '$ZscanDateLo' AND DATE '$ZscanDateHi'
-      ORDER BY o_orderkey""",
-    "q18_large_volume" -> s"""
+      ORDER BY o_orderkey"""),
+    "q18_large_volume" -> Op(q18LargeVolume _, s"""
       SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
       FROM (SELECT l_orderkey, ${sqlDsum("l_quantity")} AS sum_qty
             FROM lineitem GROUP BY 1
             HAVING ${sqlDsum("l_quantity")} > 300) s
       JOIN orders ON o_orderkey = l_orderkey
       JOIN customer ON o_custkey = c_custkey
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""",
-    "grouping_sets_agg" -> s"""
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"""),
+    "grouping_sets_agg" -> Op(groupingSetsAgg _, s"""
       SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         ${sqlDsum("l_quantity")} AS sum_qty
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "events_funnel_time" -> eventsFunnelTimeSql,
-    "event_funnel" -> s"""
+      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
+    "events_funnel_time" -> Op(eventsFunnelTime _, eventsFunnelTimeSql),
+    "event_funnel" -> Op(eventFunnel _, s"""
       WITH s AS (SELECT user_id, MIN(ts) AS ts_signup FROM events
                  WHERE event_type = 'signup' GROUP BY 1),
       v AS (SELECT e.user_id, MIN(e.ts) AS ts_view FROM events e
@@ -872,37 +844,37 @@ object Analytics {
       SELECT 1 AS step, 'signup' AS stage, COUNT(*) AS n_users FROM s
       UNION ALL SELECT 2, 'view', COUNT(*) FROM v
       UNION ALL SELECT 3, 'purchase', COUNT(*) FROM p
-      ORDER BY step""",
-    "hist_bins" -> s"""
+      ORDER BY step"""),
+    "hist_bins" -> Op(histBins _, s"""
       SELECT CAST(FLOOR(o_totalprice / $HistBinWidth) AS BIGINT) AS bin,
         COUNT(*) AS n, ${sqlDsum("o_totalprice")} AS sum_price
-      FROM orders GROUP BY 1 ORDER BY 1""",
-    "merge_upsert" -> s"""
+      FROM orders GROUP BY 1 ORDER BY 1"""),
+    "merge_upsert" -> Op(mergeUpsert _, s"""
       SELECT o_custkey, COUNT(*) AS n_orders, MAX(o_orderdate) AS last_odate,
         ${sqlDsum("o_totalprice")} AS sum_price
-      FROM orders GROUP BY 1 ORDER BY 1""",
-    "join_bloom_prune" -> s"""
+      FROM orders GROUP BY 1 ORDER BY 1"""),
+    "join_bloom_prune" -> Op(joinBloomPrune _, s"""
       SELECT event_type, COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
       FROM events
       WHERE EXISTS (SELECT 1 FROM customer
                     WHERE c_custkey = user_id AND c_mktsegment = 'BUILDING')
-      GROUP BY 1 ORDER BY 1""",
-    "window_ntile" -> s"""
+      GROUP BY 1 ORDER BY 1"""),
+    "window_ntile" -> Op(windowNtile _, s"""
       SELECT o_orderpriority, quartile, COUNT(*) AS n,
         ${sqlDsum("o_totalprice")} AS sum_price
       FROM (SELECT o_orderpriority, o_totalprice,
               CAST(NTILE(4) OVER (PARTITION BY o_orderpriority
                 ORDER BY o_totalprice, o_orderkey) AS INTEGER) AS quartile
             FROM orders)
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q17_small_qty" -> s"""
+      GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "q17_small_qty" -> Op(q17SmallQty _, s"""
       WITH aq AS (SELECT l_partkey, ${sqlDavg("l_quantity")} AS aq
                   FROM lineitem GROUP BY 1)
       SELECT ROUND(${sqlDsum("l_extendedprice")} / 7.0, 6) AS avg_yearly
       FROM lineitem JOIN aq USING (l_partkey)
-      WHERE l_quantity < 0.2 * aq""",
-    "layout_hilbert" -> layoutHilbertSql,
-    "layout_zorder" -> s"""
+      WHERE l_quantity < 0.2 * aq"""),
+    "layout_hilbert" -> Op(layoutHilbert _, layoutHilbertSql),
+    "layout_zorder" -> Op(layoutZorder _, s"""
       WITH b AS (SELECT o_orderkey,
           o_custkey % 65536 AS xb,
           date_diff('day', TIMESTAMP '$ZorderEpoch 00:00:00', o_orderdate) & 65535 AS yb
@@ -915,8 +887,8 @@ object Analytics {
                ((y | (y << 2)) & 858993459) AS y FROM s2),
       s4 AS (SELECT o_orderkey, ((x | (x << 1)) & 1431655765) AS x,
                ((y | (y << 1)) & 1431655765) AS y FROM s3)
-      SELECT o_orderkey, (x | (y << 1)) AS zvalue FROM s4 ORDER BY o_orderkey""",
-    "approx_quantile_hist" -> s"""
+      SELECT o_orderkey, (x | (y << 1)) AS zvalue FROM s4 ORDER BY o_orderkey"""),
+    "approx_quantile_hist" -> Op(approxQuantileHist _, s"""
       WITH h AS (SELECT o_orderpriority,
           CAST(FLOOR(o_totalprice / $AqBinWidth) AS BIGINT) AS bin, COUNT(*) AS c
         FROM orders GROUP BY 1, 2),
@@ -928,8 +900,8 @@ object Analytics {
       SELECT o_orderpriority,
         MIN(CASE WHEN cum >= 0.5 * n THEN (bin + 1) * $AqBinWidth END) AS p50_est,
         MIN(CASE WHEN cum >= 0.9 * n THEN (bin + 1) * $AqBinWidth END) AS p90_est
-      FROM cw GROUP BY 1 ORDER BY 1""",
-    "quality_fk_orphans" -> """
+      FROM cw GROUP BY 1 ORDER BY 1"""),
+    "quality_fk_orphans" -> Op(qualityFkOrphans _, """
       SELECT 'lineitem->orders' AS fk_edge, COUNT(*) AS n_orphans FROM lineitem
         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
       UNION ALL
@@ -938,8 +910,8 @@ object Analytics {
       UNION ALL
       SELECT 'events->customer', COUNT(*) FROM events
         WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = user_id)
-      ORDER BY fk_edge""",
-    "quality_profile" -> """
+      ORDER BY fk_edge"""),
+    "quality_profile" -> Op(qualityProfile _, """
       SELECT 'o_orderstatus' AS column_name, COUNT(*) AS n_rows,
         COUNT(CASE WHEN o_orderstatus IS NULL THEN 1 END) AS n_null,
         COUNT(DISTINCT o_orderstatus) AS n_distinct FROM orders
@@ -951,8 +923,8 @@ object Analytics {
       SELECT 'o_custkey', COUNT(*),
         COUNT(CASE WHEN o_custkey IS NULL THEN 1 END),
         COUNT(DISTINCT o_custkey) FROM orders
-      ORDER BY column_name""",
-    "q7_volume" -> s"""
+      ORDER BY column_name"""),
+    "q7_volume" -> Op(q7Volume _, s"""
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         CAST(YEAR(l_shipdate) AS BIGINT) AS l_year,
         ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
@@ -963,14 +935,14 @@ object Analytics {
       JOIN nation n1 ON s_nationkey = n1.n_nationkey
       JOIN nation n2 ON c_nationkey = n2.n_nationkey
       WHERE n1.n_name <> n2.n_name
-      GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q13_custdist" -> """
+      GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
+    "q13_custdist" -> Op(q13Custdist _, """
       SELECT c_count, COUNT(*) AS custdist FROM (
         SELECT c_custkey, COUNT(o_orderkey) AS c_count
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         GROUP BY c_custkey)
-      GROUP BY c_count ORDER BY c_count""",
-    "q19_disjunctive" -> s"""
+      GROUP BY c_count ORDER BY c_count"""),
+    "q19_disjunctive" -> Op(q19Disjunctive _, s"""
       SELECT p_brand, COUNT(*) AS n_items,
         ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
       FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -980,8 +952,8 @@ object Analytics {
           AND l_quantity BETWEEN 10 AND 20)
         OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
           AND l_quantity BETWEEN 20 AND 30)
-      GROUP BY p_brand ORDER BY p_brand""",
-    "q22_idle_customers" -> s"""
+      GROUP BY p_brand ORDER BY p_brand"""),
+    "q22_idle_customers" -> Op(q22IdleCustomers _, s"""
       SELECT c_nationkey, COUNT(*) AS numcust,
         ${sqlDsum("c_acctbal")} AS totacctbal
       FROM customer
@@ -989,8 +961,8 @@ object Analytics {
                          WHERE c_acctbal > 0)
         AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                         AND o_orderdate >= TIMESTAMP '$IdleCutoff 00:00:00')
-      GROUP BY c_nationkey ORDER BY c_nationkey""",
-    "window_range_rolling" -> s"""
+      GROUP BY c_nationkey ORDER BY c_nationkey"""),
+    "window_range_rolling" -> Op(windowRangeRolling _, s"""
       SELECT o_orderkey, o_custkey,
         COUNT(*) OVER w AS roll_n,
         ${Exact.sqlDsumOver("o_totalprice", "OVER w")} AS roll_sum
@@ -998,8 +970,8 @@ object Analytics {
               o_orderdate) AS day FROM orders)
       WINDOW w AS (PARTITION BY o_custkey ORDER BY day
         RANGE BETWEEN $RollDays PRECEDING AND CURRENT ROW)
-      ORDER BY o_orderkey""",
-    "stats_outliers" -> s"""
+      ORDER BY o_orderkey"""),
+    "stats_outliers" -> Op(statsOutliers _, s"""
       WITH st AS (SELECT o_orderpriority,
           ${sqlDsum("o_totalprice")} AS sx,
           ${sqlDsum("o_totalprice * o_totalprice")} AS sxx,
@@ -1010,8 +982,8 @@ object Analytics {
         ROUND((o_totalprice - mean) / SQRT(varp), 6) AS z_score
       FROM orders o JOIN m USING (o_orderpriority)
       WHERE ABS((o_totalprice - mean) / SQRT(varp)) > $ZThreshold
-      ORDER BY o_orderkey""",
-    "cohort_retention" -> s"""
+      ORDER BY o_orderkey"""),
+    "cohort_retention" -> Op(cohortRetention _, s"""
       WITH ev AS (SELECT user_id,
           DATEDIFF('day', TIMESTAMP '$CohortEpoch 00:00:00', ts) AS day
         FROM events),
@@ -1020,8 +992,8 @@ object Analytics {
       SELECT day0 // 7 AS cohort_week, (day - day0) // 7 AS week_offset,
         COUNT(DISTINCT user_id) AS n_users
       FROM a JOIN f USING (user_id)
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    "events_active_users" -> s"""
+      GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "events_active_users" -> Op(activeUsers _, s"""
       WITH ev AS (SELECT DISTINCT user_id,
           DATEDIFF('day', TIMESTAMP '$CohortEpoch 00:00:00', ts) AS day
         FROM events),
@@ -1030,22 +1002,22 @@ object Analytics {
         FROM (SELECT DISTINCT day FROM ev) t
         JOIN ev e ON e.day BETWEEN t.day - 6 AND t.day
         GROUP BY 1)
-      SELECT day, dau, wau FROM dau JOIN wau USING (day) ORDER BY day""",
-    "events_debounce" -> s"""
+      SELECT day, dau, wau FROM dau JOIN wau USING (day) ORDER BY day"""),
+    "events_debounce" -> Op(eventsDebounce _, s"""
       WITH x AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
           LAG(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
             ORDER BY epoch_us(ts), event_id) AS prev
         FROM events)
       SELECT event_id, user_id, event_type FROM x
       WHERE prev IS NULL OR us - prev > $DebounceUs
-      ORDER BY event_id""",
-    "corpus_length_trim" -> """
+      ORDER BY event_id"""),
+    "corpus_length_trim" -> Op(corpusLengthTrim _, """
       WITH r AS (SELECT doc_id, source, n_chars,
           ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rk,
           COUNT(*) OVER (PARTITION BY source) AS n
         FROM documents)
       SELECT doc_id, source, n_chars FROM r
       WHERE rk * 100 > n * 5 AND rk * 100 <= n * 95
-      ORDER BY doc_id"""
+      ORDER BY doc_id""")
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** A-block (SURVEY §2): the reference's transform surface, re-expressed as
   * declarative Spark so Catalyst owns the physical plan. Each query is the
@@ -586,107 +587,79 @@ object BeamParity {
       (SELECT md5(array_to_string(list(line ORDER BY line), ','))
        FROM corrupt) AS corrupt_md5"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_jsonl_quarantine" -> sourceJsonlQuarantine _,
-    "pipe_window_agg" -> pipeWindowAgg _,
-    "pipe_window_session" -> pipeWindowSession _,
-    "pipe_partition" -> pipePartition _,
-    "source_binary_roundtrip" -> sourceBinaryRoundtrip _,
-    "source_binary_compacted" -> sourceBinaryCompacted _,
-    "sink_text_roundtrip" -> sinkTextRoundtrip _,
-    "source_orc_roundtrip" -> sourceOrcRoundtrip _,
-    "source_schema_evolution" -> sourceSchemaEvolution _,
-    "sink_partitioned_prune" -> sinkPartitionedPrune _,
-    "source_jsonl_roundtrip" -> sourceJsonlRoundtrip _,
-    "source_csv_roundtrip" -> sourceCsvRoundtrip _,
-    "create_values" -> createValues _,
-    "source_scan_pushdown" -> sourceScanPushdown _,
-    "pardo_map" -> pardoMap _,
-    "pardo_flatmap" -> pardoFlatmap _,
-    "pardo_filter" -> pardoFilter _,
-    "flatten_union" -> flattenUnion _,
-    "group_by_key" -> groupByKey _,
-    "combine_per_key" -> combinePerKey _,
-    "combine_global" -> combineGlobal _,
-    "combine_aggregator" -> combineAggregator _,
-    "side_singleton" -> sideSingleton _,
-    "side_dict_join" -> sideDictJoin _,
-    "side_list_filter" -> sideListFilter _
-  )
-
-  val oracles: Map[String, String] = Map(
+  val ops: Map[String, Op] = Map(
     // the DSL's windowed forms gate against the SAME oracles as the
     // DataFrame-native C1b/C2 operators: two independent implementations,
     // one replay — the strongest parity statement available
-    "pipe_window_agg" -> Relational.oracles("events_hopping_agg"),
-    "source_jsonl_quarantine" -> sourceJsonlQuarantineSql,
-    "pipe_window_session" -> Relational.oracles("events_session"),
+    "pipe_window_agg" -> Op(pipeWindowAgg _, Relational.ops("events_hopping_agg").oracle),
+    "source_jsonl_quarantine" -> Op(sourceJsonlQuarantine _, sourceJsonlQuarantineSql),
+    "pipe_window_session" -> Op(pipeWindowSession _, Relational.ops("events_session").oracle),
     "sink_text_roundtrip" ->
-      "SELECT doc_id, text FROM documents ORDER BY doc_id",
-    "source_schema_evolution" -> """
+      Op(sinkTextRoundtrip _, "SELECT doc_id, text FROM documents ORDER BY doc_id"),
+    "source_schema_evolution" -> Op(sourceSchemaEvolution _, """
       SELECT lang, COUNT(*) AS n_docs,
         COUNT(CASE WHEN doc_id % 2 = 1 THEN source END) AS n_with_source,
         CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars END) AS BIGINT) AS sum_chars
-      FROM documents GROUP BY lang ORDER BY lang""",
-    "sink_partitioned_prune" -> """
+      FROM documents GROUP BY lang ORDER BY lang"""),
+    "sink_partitioned_prune" -> Op(sinkPartitionedPrune _, """
       SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-      FROM documents WHERE lang = 'en' GROUP BY source ORDER BY source""",
+      FROM documents WHERE lang = 'en' GROUP BY source ORDER BY source"""),
     // payload is exactly text's UTF-8 bytes, so DuckDB's VARCHAR md5/strlen
     // see the same bytes the binary file holds (the G1 discipline)
-    "pipe_partition" -> """
+    "pipe_partition" -> Op(pipePartition _, """
       SELECT CAST(user_id % 3 AS BIGINT) AS part,
         COUNT(*) AS n_events,
         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-      FROM events GROUP BY 1 ORDER BY 1""",
-    "source_binary_roundtrip" -> """
+      FROM events GROUP BY 1 ORDER BY 1"""),
+    "source_binary_roundtrip" -> Op(sourceBinaryRoundtrip _, """
       SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
         md5(text) AS content_md5
-      FROM documents ORDER BY doc_id""",
-    "source_binary_compacted" -> """
+      FROM documents ORDER BY doc_id"""),
+    "source_binary_compacted" -> Op(sourceBinaryCompacted _, """
       SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
         md5(text) AS content_md5
-      FROM documents ORDER BY doc_id""",
+      FROM documents ORDER BY doc_id"""),
     "source_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id",
+      Op(sourceJsonlRoundtrip _, "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id"),
     "source_orc_roundtrip" ->
-      "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id",
+      Op(sourceOrcRoundtrip _, "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id"),
     "source_csv_roundtrip" ->
-      "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id",
+      Op(sourceCsvRoundtrip _, "SELECT doc_id, text, lang, n_chars FROM documents ORDER BY doc_id"),
     "create_values" ->
-      "SELECT * FROM (VALUES (CAST(1 AS BIGINT),'alpha'),(2,'bravo'),(3,'charlie'),(4,'delta'),(5,'echo')) t(id, name) ORDER BY id",
+      Op(createValues _, "SELECT * FROM (VALUES (CAST(1 AS BIGINT),'alpha'),(2,'bravo'),(3,'charlie'),(4,'delta'),(5,'echo')) t(id, name) ORDER BY id"),
     "source_scan_pushdown" ->
-      "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'F' AND o_totalprice > 100000.0 ORDER BY o_orderkey",
+      Op(sourceScanPushdown _, "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'F' AND o_totalprice > 100000.0 ORDER BY o_orderkey"),
     "pardo_map" ->
-      "SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS revenue FROM lineitem ORDER BY l_orderkey, l_linenumber",
+      Op(pardoMap _, "SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS revenue FROM lineitem ORDER BY l_orderkey, l_linenumber"),
     "pardo_flatmap" ->
-      "SELECT doc_id, unnest(str_split(text, ' ')) AS word FROM documents WHERE doc_id < 50 ORDER BY doc_id, word",
+      Op(pardoFlatmap _, "SELECT doc_id, unnest(str_split(text, ' ')) AS word FROM documents WHERE doc_id < 50 ORDER BY doc_id, word"),
     "pardo_filter" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity, l_discount FROM lineitem WHERE l_discount >= 0.05 AND l_quantity < 10 ORDER BY l_orderkey, l_linenumber",
+      Op(pardoFilter _, "SELECT l_orderkey, l_linenumber, l_quantity, l_discount FROM lineitem WHERE l_discount >= 0.05 AND l_quantity < 10 ORDER BY l_orderkey, l_linenumber"),
     "flatten_union" ->
-      "SELECT c_name AS name, 'customer' AS side FROM customer UNION ALL SELECT s_name, 'supplier' FROM supplier ORDER BY side, name",
+      Op(flattenUnion _, "SELECT c_name AS name, 'customer' AS side FROM customer UNION ALL SELECT s_name, 'supplier' FROM supplier ORDER BY side, name"),
     "group_by_key" ->
-      "SELECT o_custkey, string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey) AS orderkeys FROM orders GROUP BY o_custkey ORDER BY o_custkey",
+      Op(groupByKey _, "SELECT o_custkey, string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey) AS orderkeys FROM orders GROUP BY o_custkey ORDER BY o_custkey"),
     "combine_per_key" ->
-      s"SELECT user_id, COUNT(*) AS n_events, ${sqlDsum("value")} AS sum_value FROM events GROUP BY user_id ORDER BY user_id",
+      Op(combinePerKey _, s"SELECT user_id, COUNT(*) AS n_events, ${sqlDsum("value")} AS sum_value FROM events GROUP BY user_id ORDER BY user_id"),
     "combine_global" ->
-      s"SELECT COUNT(*) AS n, ${sqlDsum("l_quantity")} AS sum_qty, MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty FROM lineitem",
+      Op(combineGlobal _, s"SELECT COUNT(*) AS n, ${sqlDsum("l_quantity")} AS sum_qty, MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty FROM lineitem"),
     "combine_aggregator" ->
-      """SELECT l_returnflag,
+      Op(combineAggregator _, """SELECT l_returnflag,
            ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
                  / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 6) AS wavg_qty
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     "side_singleton" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${sqlDsum("o_totalprice")} AS sum_price
+      Op(sideSingleton _, s"""SELECT o_orderstatus, COUNT(*) AS n, ${sqlDsum("o_totalprice")} AS sum_price
           FROM orders
           WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)/COUNT(*) FROM orders)
-          GROUP BY o_orderstatus ORDER BY o_orderstatus""",
+          GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
     "side_dict_join" ->
-      s"""SELECT n_name, COUNT(*) AS n_customers, ${sqlDsum("c_acctbal")} AS sum_acctbal
+      Op(sideDictJoin _, s"""SELECT n_name, COUNT(*) AS n_customers, ${sqlDsum("c_acctbal")} AS sum_acctbal
           FROM customer JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY n_name ORDER BY n_name""",
+          GROUP BY n_name ORDER BY n_name"""),
     "side_list_filter" ->
-      """SELECT c_mktsegment, COUNT(*) AS n FROM customer
+      Op(sideListFilter _, """SELECT c_mktsegment, COUNT(*) AS n FROM customer
          WHERE c_nationkey IN (SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA')
-         GROUP BY c_mktsegment ORDER BY c_mktsegment"""
+         GROUP BY c_mktsegment ORDER BY c_mktsegment""")
   )
 }

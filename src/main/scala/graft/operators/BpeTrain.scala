@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.BpeDynamic
+import graft.SparkEntry.Op
 
 /** H33-H35 (SURVEY §2, round-11 verdict item 2): in-engine BPE merge-table
   * TRAINING — the distributed shape of sentencepiece/BPE vocabulary
@@ -493,23 +494,13 @@ object BpeTrain {
     FROM g ORDER BY source, pred_lang"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe_train_merges_pretok" -> trainMergesPretok _,
-    "corpus_fertility_pretok" -> fertilityPretok _,
-    "bpe_vocab_coverage" -> vocabCoverage _,
-    "bpe_train_merges" -> trainMerges _,
-    "bpe_learned_tokens" -> learnedTokens _,
-    "corpus_pack_bpe_learned" -> packBpeLearned _,
-    "corpus_tokenize_ids" -> tokenizeIds _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "bpe_train_merges_pretok" -> trainMergesPretokSql,
-    "corpus_fertility_pretok" -> fertilityPretokSql,
-    "bpe_vocab_coverage" -> vocabCoverageSql,
-    "bpe_train_merges" -> trainMergesSql,
-    "bpe_learned_tokens" -> learnedTokensSql,
-    "corpus_pack_bpe_learned" -> packBpeLearnedSql,
-    "corpus_tokenize_ids" -> tokenizeIdsSql
+  val ops: Map[String, Op] = Map(
+    "bpe_train_merges_pretok" -> Op(trainMergesPretok _, trainMergesPretokSql),
+    "corpus_fertility_pretok" -> Op(fertilityPretok _, fertilityPretokSql),
+    "bpe_vocab_coverage" -> Op(vocabCoverage _, vocabCoverageSql),
+    "bpe_train_merges" -> Op(trainMerges _, trainMergesSql),
+    "bpe_learned_tokens" -> Op(learnedTokens _, learnedTokensSql),
+    "corpus_pack_bpe_learned" -> Op(packBpeLearned _, packBpeLearnedSql),
+    "corpus_tokenize_ids" -> Op(tokenizeIds _, tokenizeIdsSql)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** B22 — bucketed co-located join as a gated query: the fact tables are
   * written ONCE per data dir as bucketed+sorted tables (hash-pre-shuffled on
@@ -64,13 +65,10 @@ object Bucketed {
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("bucketed_join" -> bucketedJoin _)
-
-  val oracles: Map[String, String] = Map(
-    "bucketed_join" -> s"""
+  val ops: Map[String, Op] = Map(
+    "bucketed_join" -> Op(bucketedJoin _, s"""
       SELECT o_orderpriority, COUNT(*) AS n,
         ${sqlDsum("l_extendedprice")} AS sum_price
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""")
+      GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
 }

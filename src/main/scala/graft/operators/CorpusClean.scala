@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.SparkEntry.Op
 
 /** Flagship composite: the corpus-cleaning pipeline a training-data run
   * actually executes, end to end in ONE declarative plan —
@@ -1564,61 +1565,32 @@ object CorpusClean {
     FROM wfe w LEFT JOIN p USING (source) ORDER BY w.source"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_budget_waterfill" -> budgetWaterfill _,
-    "corpus_mix_epochs" -> mixEpochs _,
-    "corpus_mix_temperature" -> mixTemperature _,
-    "corpus_shard_manifest" -> shardManifest _,
-    "corpus_funnel_report" -> funnelReport _,
-    "corpus_clean" -> corpusClean _,
-    "corpus_curriculum" -> curriculum _,
-    "corpus_sample_quota" -> sampleQuota _,
-    "corpus_shuffle" -> corpusShuffle _,
-    "corpus_mix_order" -> mixOrder _,
-    "corpus_prepare" -> corpusPrepare _,
-    "corpus_prepare_v2" -> corpusPrepareV2 _,
-    "corpus_prepare_incremental" -> corpusPrepareIncremental _,
-    "corpus_row_ids" -> rowIds _,
-    "corpus_sample_weighted" -> sampleWeighted _,
-    "corpus_split" -> trainSplit _,
-    "corpus_split_stratified" -> splitStratified _,
-    "corpus_token_stats" -> tokenStats _,
-    "corpus_token_budget" -> tokenBudget _,
-    "corpus_decontaminate" -> decontaminate _,
-    "corpus_decontaminate_spans" -> decontaminateSpans _,
-    "corpus_sample_mix" -> sampleMix _,
-    "corpus_chunk" -> chunk _,
-    "corpus_pack" -> pack _,
-    "corpus_pack_report" -> packReport _,
-    "corpus_pack_bpe" -> packBpe _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "corpus_budget_waterfill" -> budgetWaterfillSql,
-    "corpus_mix_epochs" -> mixEpochsSql,
-    "corpus_mix_temperature" -> mixTemperatureSql,
-    "corpus_shard_manifest" -> shardManifestSql,
-    "corpus_funnel_report" -> funnelReportSql,
-    "corpus_clean" -> corpusCleanSql,
-    "corpus_curriculum" -> curriculumSql,
-    "corpus_row_ids" -> rowIdsSql,
-    "corpus_sample_weighted" -> sampleWeightedSql,
-    "corpus_sample_quota" -> sampleQuotaSql,
-    "corpus_shuffle" -> corpusShuffleSql,
-    "corpus_mix_order" -> mixOrderSql,
-    "corpus_prepare" -> corpusPrepareSql,
-    "corpus_prepare_v2" -> corpusPrepareV2Sql,
-    "corpus_prepare_incremental" -> corpusPrepareIncrementalSql,
-    "corpus_split" -> splitSql,
-    "corpus_split_stratified" -> splitStratifiedSql,
-    "corpus_token_stats" -> tokenStatsSql,
-    "corpus_token_budget" -> tokenBudgetSql,
-    "corpus_decontaminate" -> decontaminateSql,
-    "corpus_decontaminate_spans" -> decontaminateSpansSql,
-    "corpus_sample_mix" -> sampleMixSql,
-    "corpus_chunk" -> chunkSql,
-    "corpus_pack" -> packSql,
-    "corpus_pack_report" -> packReportSql,
-    "corpus_pack_bpe" -> packBpeSql
+  val ops: Map[String, Op] = Map(
+    "corpus_budget_waterfill" -> Op(budgetWaterfill _, budgetWaterfillSql),
+    "corpus_mix_epochs" -> Op(mixEpochs _, mixEpochsSql),
+    "corpus_mix_temperature" -> Op(mixTemperature _, mixTemperatureSql),
+    "corpus_shard_manifest" -> Op(shardManifest _, shardManifestSql),
+    "corpus_funnel_report" -> Op(funnelReport _, funnelReportSql),
+    "corpus_clean" -> Op(corpusClean _, corpusCleanSql),
+    "corpus_curriculum" -> Op(curriculum _, curriculumSql),
+    "corpus_row_ids" -> Op(rowIds _, rowIdsSql),
+    "corpus_sample_weighted" -> Op(sampleWeighted _, sampleWeightedSql),
+    "corpus_sample_quota" -> Op(sampleQuota _, sampleQuotaSql),
+    "corpus_shuffle" -> Op(corpusShuffle _, corpusShuffleSql),
+    "corpus_mix_order" -> Op(mixOrder _, mixOrderSql),
+    "corpus_prepare" -> Op(corpusPrepare _, corpusPrepareSql),
+    "corpus_prepare_v2" -> Op(corpusPrepareV2 _, corpusPrepareV2Sql),
+    "corpus_prepare_incremental" -> Op(corpusPrepareIncremental _, corpusPrepareIncrementalSql),
+    "corpus_split" -> Op(trainSplit _, splitSql),
+    "corpus_split_stratified" -> Op(splitStratified _, splitStratifiedSql),
+    "corpus_token_stats" -> Op(tokenStats _, tokenStatsSql),
+    "corpus_token_budget" -> Op(tokenBudget _, tokenBudgetSql),
+    "corpus_decontaminate" -> Op(decontaminate _, decontaminateSql),
+    "corpus_decontaminate_spans" -> Op(decontaminateSpans _, decontaminateSpansSql),
+    "corpus_sample_mix" -> Op(sampleMix _, sampleMixSql),
+    "corpus_chunk" -> Op(chunk _, chunkSql),
+    "corpus_pack" -> Op(pack _, packSql),
+    "corpus_pack_report" -> Op(packReport _, packReportSql),
+    "corpus_pack_bpe" -> Op(packBpe _, packBpeSql)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Op
 
 /** Span-level corpus operators (SURVEY §2 H14+): sub-document repeated-span
   * removal and n-gram statistics — the "dedup below the document" family
@@ -1020,41 +1021,22 @@ object CorpusSpans {
       CAST(cs AS BIGINT) AS cluster_size
     FROM r WHERE rk = 1 ORDER BY doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dedup_keep_best" -> dedupKeepBest _,
-    "corpus_quality_ensemble" -> qualityEnsemble _,
-    "corpus_fertility" -> fertilityReport _,
-    "corpus_drift_report" -> driftReport _,
-    "corpus_domain_quota" -> domainQuota _,
-    "corpus_gopher_rules" -> gopherRules _,
-    "corpus_bloom_decontaminate" -> bloomDecontaminate _,
-    "corpus_lm_score" -> lmScore _,
-    "corpus_span_dedup" -> spanDedup _,
-    "corpus_span_dedup_anchor" -> spanDedupAnchor _,
-    "corpus_pii_report" -> piiReport _,
-    "corpus_ngram_counts" -> ngramCounts _,
-    "corpus_ngram_novelty" -> ngramNovelty _,
-    "corpus_contamination_score" -> contaminationScore _,
-    "corpus_split_leakage" -> splitLeakage _,
-    "corpus_dedup_report" -> dedupReport _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "corpus_quality_ensemble" -> qualityEnsembleSql,
-    "corpus_dedup_keep_best" -> dedupKeepBestSql,
-    "corpus_fertility" -> fertilityReportSql,
-    "corpus_drift_report" -> driftReportSql,
-    "corpus_domain_quota" -> domainQuotaSql,
-    "corpus_gopher_rules" -> gopherRulesSql,
-    "corpus_bloom_decontaminate" -> bloomDecontaminateSql,
-    "corpus_lm_score" -> lmScoreSql,
-    "corpus_span_dedup" -> spanDedupSql,
-    "corpus_span_dedup_anchor" -> spanDedupAnchorSql,
-    "corpus_ngram_counts" -> ngramCountsSql,
-    "corpus_ngram_novelty" -> ngramNoveltySql,
-    "corpus_contamination_score" -> contaminationScoreSql,
-    "corpus_split_leakage" -> splitLeakageSql,
-    "corpus_dedup_report" -> dedupReportSql,
-    "corpus_pii_report" -> piiReportSql
+  val ops: Map[String, Op] = Map(
+    "corpus_quality_ensemble" -> Op(qualityEnsemble _, qualityEnsembleSql),
+    "corpus_dedup_keep_best" -> Op(dedupKeepBest _, dedupKeepBestSql),
+    "corpus_fertility" -> Op(fertilityReport _, fertilityReportSql),
+    "corpus_drift_report" -> Op(driftReport _, driftReportSql),
+    "corpus_domain_quota" -> Op(domainQuota _, domainQuotaSql),
+    "corpus_gopher_rules" -> Op(gopherRules _, gopherRulesSql),
+    "corpus_bloom_decontaminate" -> Op(bloomDecontaminate _, bloomDecontaminateSql),
+    "corpus_lm_score" -> Op(lmScore _, lmScoreSql),
+    "corpus_span_dedup" -> Op(spanDedup _, spanDedupSql),
+    "corpus_span_dedup_anchor" -> Op(spanDedupAnchor _, spanDedupAnchorSql),
+    "corpus_ngram_counts" -> Op(ngramCounts _, ngramCountsSql),
+    "corpus_ngram_novelty" -> Op(ngramNovelty _, ngramNoveltySql),
+    "corpus_contamination_score" -> Op(contaminationScore _, contaminationScoreSql),
+    "corpus_split_leakage" -> Op(splitLeakage _, splitLeakageSql),
+    "corpus_dedup_report" -> Op(dedupReport _, dedupReportSql),
+    "corpus_pii_report" -> Op(piiReport _, piiReportSql)
   )
 }

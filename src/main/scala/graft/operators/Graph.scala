@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Exact._
 import graft.plans.ScaledLong
+import graft.SparkEntry.Op
 
 /** Graph analytics over DERIVED graphs (SURVEY §2 B57): iterative PageRank
   * on the co-purchase part graph. The pattern this block exists to prove:
@@ -260,13 +261,8 @@ object Graph {
     SELECT partkey, COUNT(*) AS n_triangles
     FROM v GROUP BY 1 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_pagerank" -> pageRank _,
-    "graph_triangles" -> graphTriangles _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "graph_pagerank" -> pageRankSql,
-    "graph_triangles" -> graphTrianglesSql
+  val ops: Map[String, Op] = Map(
+    "graph_pagerank" -> Op(pageRank _, pageRankSql),
+    "graph_triangles" -> Op(graphTriangles _, graphTrianglesSql)
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Op
 
 /** In-engine TRAINED quality classifier (SURVEY §2 H-block; round-12
   * verdict item 1): fixed-point logistic regression over engineered
@@ -308,15 +309,9 @@ object QualityTrain {
       CAST((10000 * SUM(score_fx)) // (COUNT(*) * $PScale) AS BIGINT) AS pred_bps
     FROM scored GROUP BY 1 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_quality_weights" -> qualityWeights _,
-    "corpus_quality_learned" -> qualityLearned _,
-    "corpus_quality_calibration" -> qualityCalibration _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "corpus_quality_weights" -> qualityWeightsSql,
-    "corpus_quality_learned" -> qualityLearnedSql,
-    "corpus_quality_calibration" -> qualityCalibrationSql
+  val ops: Map[String, Op] = Map(
+    "corpus_quality_weights" -> Op(qualityWeights _, qualityWeightsSql),
+    "corpus_quality_learned" -> Op(qualityLearned _, qualityLearnedSql),
+    "corpus_quality_calibration" -> Op(qualityCalibration _, qualityCalibrationSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** Relational query block (SURVEY §2 B + C1/C2): the engine's query surface,
   * expressed declaratively so Catalyst plans pushdown, partial aggregation,
@@ -728,53 +729,12 @@ object Relational {
     WHERE levenshtein(a.n, b.n) <= $FuzzyK
     ORDER BY 1, 2, 3"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_fuzzy_names" -> joinFuzzyNames _,
-    "join_record_linkage" -> joinRecordLinkage _,
-    "q1_pricing" -> q1Pricing _,
-    "q3_shipping" -> q3Shipping _,
-    "q5_local_supplier" -> q5LocalSupplier _,
-    "join_broadcast" -> joinBroadcast _,
-    "join_shuffle" -> joinShuffle _,
-    "join_semi" -> joinSemi _,
-    "join_anti" -> joinAnti _,
-    "join_outer" -> joinOuter _,
-    "window_rank" -> windowRank _,
-    "window_percent_rank" -> windowPercentRank _,
-    "window_running" -> windowRunning _,
-    "distinct_op" -> distinctOp _,
-    "topk_orders" -> topkOrders _,
-    "rollup_agg" -> rollupAgg _,
-    "cube_agg" -> cubeAgg _,
-    "asof_join" -> asofJoin _,
-    "asof_join_forward" -> asofJoinForward _,
-    "asof_join_exec" -> asofJoinExec _,
-    "json_extract" -> jsonExtract _,
-    "agg_percentiles" -> aggPercentiles _,
-    "q12_priority" -> q12Priority _,
-    "pivot_events" -> pivotEvents _,
-    "unpivot_quality" -> unpivotQuality _,
-    "q14_promo" -> q14Promo _,
-    "q10_returns" -> q10Returns _,
-    "salted_join_agg" -> saltedJoinAgg _,
-    "join_aqe_skew" -> joinAqeSkew _,
-    "events_window_agg" -> eventsWindowAgg _,
-    "events_hopping_agg" -> eventsHoppingAgg _,
-    "events_gap_fill" -> eventsGapFill _,
-    "events_session" -> eventsSession _,
-    "set_intersect_except" -> setIntersectExcept _,
-    "window_lead_lag" -> windowLeadLag _,
-    "range_join_follow" -> rangeJoinFollow _,
-    "skew_report" -> skewReport _,
-    "hll_distinct" -> hllDistinct _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "join_fuzzy_names" -> joinFuzzyNamesSql,
-    "join_record_linkage" -> joinRecordLinkageSql,
-    "q1_pricing" -> q1PricingSql,
-    "hll_distinct" -> hllDistinctSql,
-    "q3_shipping" -> s"""
+  val ops: Map[String, Op] = Map(
+    "join_fuzzy_names" -> Op(joinFuzzyNames _, joinFuzzyNamesSql),
+    "join_record_linkage" -> Op(joinRecordLinkage _, joinRecordLinkageSql),
+    "q1_pricing" -> Op(q1Pricing _, q1PricingSql),
+    "hll_distinct" -> Op(hllDistinct _, hllDistinctSql),
+    "q3_shipping" -> Op(q3Shipping _, s"""
       SELECT l_orderkey, o_orderdate,
         ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
       FROM lineitem
@@ -782,8 +742,8 @@ object Relational {
       JOIN customer ON o_custkey = c_custkey
       WHERE c_mktsegment = 'BUILDING'
       GROUP BY l_orderkey, o_orderdate
-      ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q5_local_supplier" -> s"""
+      ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
+    "q5_local_supplier" -> Op(q5LocalSupplier _, s"""
       SELECT n_name, ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
@@ -792,117 +752,117 @@ object Relational {
       JOIN nation ON s_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
       WHERE r_name = 'ASIA'
-      GROUP BY n_name ORDER BY n_name""",
-    "join_broadcast" -> s"""
+      GROUP BY n_name ORDER BY n_name"""),
+    "join_broadcast" -> Op(joinBroadcast _, s"""
       SELECT p_brand, COUNT(*) AS n, ${sqlDsum("l_quantity")} AS sum_qty
       FROM lineitem JOIN part ON l_partkey = p_partkey
-      GROUP BY p_brand ORDER BY p_brand""",
-    "join_shuffle" -> s"""
+      GROUP BY p_brand ORDER BY p_brand"""),
+    "join_shuffle" -> Op(joinShuffle _, s"""
       SELECT o_orderpriority, COUNT(*) AS n_items,
         ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "join_semi" -> """
+      GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    "join_semi" -> Op(joinSemi _, """
       SELECT c_mktsegment, COUNT(*) AS n FROM customer
       WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "join_anti" -> """
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    "join_anti" -> Op(joinAnti _, """
       SELECT c_mktsegment, COUNT(*) AS n FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders
                         WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "join_outer" -> """
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    "join_outer" -> Op(joinOuter _, """
       SELECT c_custkey, COUNT(o_orderkey) AS n_orders
       FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-      GROUP BY c_custkey ORDER BY c_custkey""",
-    "window_rank" -> """
+      GROUP BY c_custkey ORDER BY c_custkey"""),
+    "window_rank" -> Op(windowRank _, """
       SELECT o_custkey, o_orderkey, rn FROM (
         SELECT o_custkey, o_orderkey,
           ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
         FROM orders) t
-      WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "window_running" -> s"""
+      WHERE rn <= 3 ORDER BY o_custkey, rn"""),
+    "window_running" -> Op(windowRunning _, s"""
       SELECT event_id, user_id,
         ${Exact.sqlDsumOver("value", """OVER (
           PARTITION BY user_id ORDER BY ts, event_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")} AS running_value
-      FROM events ORDER BY event_id""",
-    "distinct_op" -> """
+      FROM events ORDER BY event_id"""),
+    "distinct_op" -> Op(distinctOp _, """
       SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
-      ORDER BY c_mktsegment, c_nationkey""",
-    "topk_orders" -> """
+      ORDER BY c_mktsegment, c_nationkey"""),
+    "topk_orders" -> Op(topkOrders _, """
       SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""",
-    "rollup_agg" -> s"""
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"""),
+    "rollup_agg" -> Op(rollupAgg _, s"""
       SELECT l_returnflag, l_linestatus, COUNT(*) AS n, ${sqlDsum("l_quantity")} AS sum_qty
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "cube_agg" -> s"""
+      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
+    "cube_agg" -> Op(cubeAgg _, s"""
       SELECT l_returnflag, l_linestatus, COUNT(*) AS n, ${sqlDsum("l_quantity")} AS sum_qty
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "window_percent_rank" -> """
+      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
+    "window_percent_rank" -> Op(windowPercentRank _, """
       SELECT o_orderkey, o_orderstatus,
         ROUND(percent_rank() OVER w, 6) AS pct_rank,
         ROUND(cume_dist() OVER w, 6) AS cum_dist
       FROM orders
       WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice)
-      ORDER BY o_orderkey""",
-    "asof_join" -> """
+      ORDER BY o_orderkey"""),
+    "asof_join" -> Op(asofJoin _, """
       SELECT o1.o_orderkey,
         (SELECT max(o2.o_orderdate) FROM orders o2
          WHERE o2.o_custkey = o1.o_custkey AND o2.o_orderdate < o1.o_orderdate) AS prev_date
-      FROM orders o1 ORDER BY o1.o_orderkey""",
-    "asof_join_forward" -> """
+      FROM orders o1 ORDER BY o1.o_orderkey"""),
+    "asof_join_forward" -> Op(asofJoinForward _, """
       SELECT o1.o_orderkey,
         (SELECT min(o2.o_orderdate) FROM orders o2
          WHERE o2.o_custkey = o1.o_custkey AND o2.o_orderdate > o1.o_orderdate) AS next_date
-      FROM orders o1 ORDER BY o1.o_orderkey""",
-    "asof_join_exec" -> """
+      FROM orders o1 ORDER BY o1.o_orderkey"""),
+    "asof_join_exec" -> Op(asofJoinExec _, """
       SELECT o1.o_orderkey,
         (SELECT max(o2.o_orderdate) FROM orders o2
          WHERE o2.o_custkey = o1.o_custkey AND o2.o_orderdate < o1.o_orderdate) AS prev_date
-      FROM orders o1 ORDER BY o1.o_orderkey""",
+      FROM orders o1 ORDER BY o1.o_orderkey"""),
     // NOTE: DuckDB SUM(integer) returns HUGEINT (int128); the driver's pandas
     // hash renders that differently from Spark's int64 even when values are
     // equal, so every integer SUM below is CAST back to BIGINT (round-1
     // hash-fail root cause for json_extract / pivot_events / q12_priority).
-    "json_extract" -> """
+    "json_extract" -> Op(jsonExtract _, """
       SELECT event_type, COUNT(*) AS n,
         CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    "pivot_events" -> """
+      FROM events GROUP BY event_type ORDER BY event_type"""),
+    "pivot_events" -> Op(pivotEvents _, """
       SELECT user_id,
         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
         CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
         CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
         CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-      FROM events GROUP BY user_id ORDER BY user_id""",
-    "unpivot_quality" -> s"""
+      FROM events GROUP BY user_id ORDER BY user_id"""),
+    "unpivot_quality" -> Op(unpivotQuality _, s"""
       SELECT doc_id, 'alpha_ratio' AS metric, ${graft.functions.TextFunctions.alphaRatioSql("text")} AS value FROM documents
       UNION ALL
       SELECT doc_id, 'space_ratio', ${graft.functions.TextFunctions.spaceRatioSql("text")} FROM documents
-      ORDER BY doc_id, metric""",
-    "q12_priority" -> """
+      ORDER BY doc_id, metric"""),
+    "q12_priority" -> Op(q12Priority _, """
       SELECT l_returnflag,
         CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q14_promo" -> s"""
+      GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    "q14_promo" -> Op(q14Promo _, s"""
       SELECT ROUND(
         100.0 * ${Exact.sqlDsum("CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
         / ${Exact.sqlDsum("l_extendedprice * (1 - l_discount)")}, 6) AS promo_ratio
-      FROM lineitem JOIN part ON l_partkey = p_partkey""",
-    "q10_returns" -> s"""
+      FROM lineitem JOIN part ON l_partkey = p_partkey"""),
+    "q10_returns" -> Op(q10Returns _, s"""
       SELECT c_custkey, c_name, ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS revenue
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
       WHERE l_returnflag = 'R'
       GROUP BY c_custkey, c_name
-      ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "skew_report" -> """
+      ORDER BY revenue DESC, c_custkey LIMIT 20"""),
+    "skew_report" -> Op(skewReport _, """
       WITH c AS (SELECT l_orderkey, COUNT(*) AS n FROM lineitem GROUP BY l_orderkey)
       SELECT COUNT(*) AS n_keys, MAX(n) AS max_n,
         ROUND(quantile_cont(n, 0.5), 6) AS p50,
@@ -910,28 +870,28 @@ object Relational {
         ROUND(quantile_cont(n, 0.99), 6) AS p99,
         ROUND(AVG(n), 6) AS avg_n,
         ROUND(MAX(n) / AVG(n), 6) AS skew
-      FROM c""",
-    "agg_percentiles" -> """
+      FROM c"""),
+    "agg_percentiles" -> Op(aggPercentiles _, """
       SELECT o_orderpriority, COUNT(*) AS n,
         ROUND(quantile_cont(o_totalprice, 0.5), 6) AS p50,
         ROUND(quantile_cont(o_totalprice, 0.9), 6) AS p90
-      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "salted_join_agg" -> s"""
+      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    "salted_join_agg" -> Op(saltedJoinAgg _, s"""
       SELECT c_mktsegment, COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
       FROM events JOIN customer ON user_id = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "join_aqe_skew" -> s"""
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    "join_aqe_skew" -> Op(joinAqeSkew _, s"""
       SELECT event_type, COUNT(*) AS n, ${sqlDsum("o_totalprice")} AS sum_price
       FROM (SELECT event_type,
               CASE WHEN event_id % 2 = 0 THEN 1 ELSE user_id END AS uid
             FROM events) e
       JOIN orders ON uid = o_custkey
-      GROUP BY event_type ORDER BY event_type""",
-    "events_window_agg" -> s"""
+      GROUP BY event_type ORDER BY event_type"""),
+    "events_window_agg" -> Op(eventsWindowAgg _, s"""
       SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
         COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "events_hopping_agg" -> s"""
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "events_hopping_agg" -> Op(eventsHoppingAgg _, s"""
       WITH both_hops AS (
         SELECT time_bucket(INTERVAL '30 minutes', ts) AS window_start,
                event_type, value FROM events
@@ -940,8 +900,8 @@ object Relational {
                AS window_start, event_type, value FROM events)
       SELECT window_start, event_type,
         COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
-      FROM both_hops GROUP BY 1, 2 ORDER BY 1, 2""",
-    "events_gap_fill" -> s"""
+      FROM both_hops GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "events_gap_fill" -> Op(eventsGapFill _, s"""
       WITH hourly AS (
         SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
           COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
@@ -957,8 +917,8 @@ object Relational {
         COALESCE(h.n, 0) AS n, COALESCE(h.sum_value, 0.0) AS sum_value
       FROM spine s LEFT JOIN hourly h
         ON s.event_type = h.event_type AND s.hour_start = h.hour_start
-      ORDER BY 1, 2""",
-    "set_intersect_except" -> """
+      ORDER BY 1, 2"""),
+    "set_intersect_except" -> Op(setIntersectExcept _, """
       WITH a AS (SELECT DISTINCT o_custkey FROM orders
                  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
                    AND o_orderdate < TIMESTAMP '1996-01-01'),
@@ -968,15 +928,15 @@ object Relational {
       SELECT o_custkey, 'both' AS tag FROM (SELECT * FROM a INTERSECT SELECT * FROM b)
       UNION ALL
       SELECT o_custkey, '1995_only' AS tag FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
-      ORDER BY tag, o_custkey""",
-    "window_lead_lag" -> """
+      ORDER BY tag, o_custkey"""),
+    "window_lead_lag" -> Op(windowLeadLag _, """
       SELECT event_id, user_id, event_type,
         epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us,
         lead(event_type) OVER w AS next_type
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ORDER BY event_id""",
-    "range_join_follow" -> s"""
+      ORDER BY event_id"""),
+    "range_join_follow" -> Op(rangeJoinFollow _, s"""
       WITH p AS (
         SELECT event_id AS p_id, user_id, epoch_us(ts) AS pu
         FROM events WHERE event_type = 'purchase'),
@@ -987,8 +947,8 @@ object Relational {
       FROM p LEFT JOIN e ON e.user_id = p.user_id
         AND e.eu >= p.pu AND e.eu < p.pu + ${FollowWindowUs}
         AND e.event_id <> p.p_id
-      GROUP BY p.p_id ORDER BY p.p_id""",
-    "events_session" -> s"""
+      GROUP BY p.p_id ORDER BY p.p_id"""),
+    "events_session" -> Op(eventsSession _, s"""
       WITH flagged AS (
         SELECT user_id, ts, event_id,
           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -1003,6 +963,6 @@ object Relational {
       SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
         COUNT(*) AS n_events
       FROM numbered GROUP BY user_id, session_seq
-      ORDER BY user_id, session_start"""
+      ORDER BY user_id, session_start""")
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Op
 
 /** Round-14, verdict item 1 — the measured scaling curve's GATED half: a
   * deterministic derived-corpus generator plus a (key × scale) report of
@@ -25,8 +26,8 @@ import org.apache.spark.sql.functions._
   * correctness-gated, not self-reported.
   *
   * The WALL-CLOCK half of the curve (1×/3×/10× of sf0.1, the seven heavy
-  * families) is measured by [[graft.tools.ScaleLab]] and published in
-  * PERF_NOTES §r14 — timings cannot be hash-gated; counts can.
+  * families) was measured once and is published in PERF_NOTES §r14 —
+  * timings cannot be hash-gated; counts can.
   *
   * Scale shape of the report itself: each count is one distributed
   * aggregate over a derived frame (the generator is a single
@@ -39,7 +40,7 @@ object ScaleCurve {
     * round 15 (verdict item 4): one proof key was ~10-20% of the whole
     * bench; 1x/2x hash-gate the linearity slope at sf0.01 while
     * [[ScaleCurveSpec]] re-asserts the full 1x/2x/4x curve (exact
-    * k-multiples + device envelope) and ScaleLab publishes measured
+    * k-multiples + device envelope) and PERF_NOTES §r14 holds measured
     * wall-clock exponents across a decade of growth. */
   val Scales: Seq[Int] = Seq(1, 2)
   /** The spec tier's extended curve (includes the 4x point). */
@@ -64,8 +65,8 @@ object ScaleCurve {
     * window equals the sf0.01 corpus, so the hash gate's numbers stay
     * exactly as meaningful there (planted dups fire, minhash pairs and
     * 2941→5882 overlap pairs survive) while the headline cost stops
-    * scaling with sf — growth-in-CORPUS wall-clock is ScaleLab's job;
-    * this key proves growth-in-REPLICATION counts. */
+    * scaling with sf — growth-in-CORPUS wall-clock is in PERF_NOTES
+    * §r14; this key proves growth-in-REPLICATION counts. */
   val SampleMod = 2L
   val DocWindow = 500L
   val UserWindow = 150L
@@ -270,11 +271,7 @@ object ScaleCurve {
     s"WITH\n$ctes\nSELECT * FROM ($rows) t ORDER BY key, scale"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scale_curve_report" -> scaleCurveReport _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "scale_curve_report" -> scaleCurveReportSql
+  val ops: Map[String, Op] = Map(
+    "scale_curve_report" -> Op(scaleCurveReport _, scaleCurveReportSql)
   )
 }

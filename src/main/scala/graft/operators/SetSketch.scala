@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{MixHash, ShingleArray, SketchAggs}
+import graft.SparkEntry.Op
 
 /** B62 — KMV/theta-sketch SET OPERATIONS across sources: estimated
   * union / intersection / Jaccard of the 3-word-shingle sets of every
@@ -151,11 +152,7 @@ object SetSketch {
     ORDER BY source_a, source_b"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_theta_overlap" -> sketchThetaOverlap _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sketch_theta_overlap" -> sketchThetaOverlapSql
+  val ops: Map[String, Op] = Map(
+    "sketch_theta_overlap" -> Op(sketchThetaOverlap _, sketchThetaOverlapSql)
   )
 }

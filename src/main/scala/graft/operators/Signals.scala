@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** Time-series signal operators over the events stream (SURVEY §2 C11+):
   * forward-fill on the densified timeline and self-calibrating rate alerts.
@@ -927,40 +928,22 @@ object Signals {
       ROUND(${sqlDsum("value")} / COUNT(*), 6) AS mean_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_bootstrap_ci" -> statsBootstrapCi _,
-    "events_attribution_position" -> eventsAttributionPosition _,
-    "agg_incremental_merge" -> aggIncrementalMerge _,
-    "events_attribution" -> eventsAttribution _,
-    "stats_ab_test" -> statsAbTest _,
-    "events_cusum_shift" -> eventsCusumShift _,
-    "events_anomaly_mad" -> eventsAnomalyMad _,
-    "stats_correlation" -> statsCorrelation _,
-    "events_gap_fill_locf" -> eventsGapFillLocf _,
-    "events_rate_alert" -> eventsRateAlert _,
-    "events_state_intervals" -> eventsStateIntervals _,
-    "events_session_native" -> eventsSessionNative _,
-    "events_session_dynamic" -> eventsSessionDynamic _,
-    "join_interval_overlap" -> joinIntervalOverlap _,
-    "freq_sketch_cms" -> freqSketchCms _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stats_bootstrap_ci" -> statsBootstrapCiSql,
-    "events_attribution_position" -> eventsAttributionPositionSql,
-    "events_anomaly_mad" -> eventsAnomalyMadSql,
-    "stats_correlation" -> statsCorrelationSql,
-    "events_gap_fill_locf" -> eventsGapFillLocfSql,
-    "events_rate_alert" -> eventsRateAlertSql,
-    "events_state_intervals" -> eventsStateIntervalsSql,
+  val ops: Map[String, Op] = Map(
+    "stats_bootstrap_ci" -> Op(statsBootstrapCi _, statsBootstrapCiSql),
+    "events_attribution_position" -> Op(eventsAttributionPosition _, eventsAttributionPositionSql),
+    "events_anomaly_mad" -> Op(eventsAnomalyMad _, eventsAnomalyMadSql),
+    "stats_correlation" -> Op(statsCorrelation _, statsCorrelationSql),
+    "events_gap_fill_locf" -> Op(eventsGapFillLocf _, eventsGapFillLocfSql),
+    "events_rate_alert" -> Op(eventsRateAlert _, eventsRateAlertSql),
+    "events_state_intervals" -> Op(eventsStateIntervals _, eventsStateIntervalsSql),
     // the native session_window form must equal C2's composition exactly
-    "agg_incremental_merge" -> aggIncrementalMergeSql,
-    "events_attribution" -> eventsAttributionSql,
-    "stats_ab_test" -> statsAbTestSql,
-    "events_cusum_shift" -> eventsCusumShiftSql,
-    "events_session_native" -> Relational.oracles("events_session"),
-    "events_session_dynamic" -> eventsSessionDynamicSql,
-    "join_interval_overlap" -> joinIntervalOverlapSql,
-    "freq_sketch_cms" -> freqSketchCmsSql
+    "agg_incremental_merge" -> Op(aggIncrementalMerge _, aggIncrementalMergeSql),
+    "events_attribution" -> Op(eventsAttribution _, eventsAttributionSql),
+    "stats_ab_test" -> Op(statsAbTest _, statsAbTestSql),
+    "events_cusum_shift" -> Op(eventsCusumShift _, eventsCusumShiftSql),
+    "events_session_native" -> Op(eventsSessionNative _, Relational.ops("events_session").oracle),
+    "events_session_dynamic" -> Op(eventsSessionDynamic _, eventsSessionDynamicSql),
+    "join_interval_overlap" -> Op(joinIntervalOverlap _, joinIntervalOverlapSql),
+    "freq_sketch_cms" -> Op(freqSketchCms _, freqSketchCmsSql)
   )
 }

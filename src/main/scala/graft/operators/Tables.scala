@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the star schema + LLM-pipeline tables.
   *
@@ -23,12 +23,13 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
 
   /** Physical-type probe for `events.ts`, cached per path (one parquet
-    * footer read). Generations of the testdata have shipped `ts` as either
-    * parquet TIMESTAMP(NANOS) — which Spark 4 only reads as raw int64 via
-    * the legacy `nanosAsLong` conf — or plain timestamp[us] (TIMESTAMP_NTZ
-    * on read). A source layer hardcoding one encoding breaks every events
-    * consumer when the file flips (round 6: 21 operators), so the reader
-    * probes and branches instead.
+    * footer read). `ts` may be timestamp[us/ms] with or without UTC
+    * adjustment (TIMESTAMP or TIMESTAMP_NTZ on read). A parquet
+    * TIMESTAMP(NANOS) `ts` fails here with Spark's own "Illegal Parquet
+    * type" error: reading it would need the legacy `nanosAsLong` conf, which
+    * is session-wide. A source layer hardcoding one encoding breaks every
+    * events consumer when the file flips (round 6: 21 operators), so the
+    * reader probes and branches instead.
     *
     * Cached per path with the metadata fingerprint as the staleness token
     * ([[graft.Artifacts.cachedValue]]): regenerating the file in place
@@ -46,20 +47,7 @@ object Tables {
   private def eventsTsTypeFp(s: SparkSession, d: String, fp: String): DataType = {
     val path = s"$d/events.parquet"
     graft.Artifacts.cachedValue(tsTypeCache, path, fp) {
-      try s.read.parquet(path).schema("ts").dataType
-      catch {
-        // Only the specific TIMESTAMP(NANOS) schema-inference failure
-        // ("Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))") selects the
-        // legacy-nanos branch; any other failure (missing file, corrupt
-        // footer, permissions) propagates untouched instead of flipping the
-        // session-wide legacy conf as a side effect.
-        case e: Exception if {
-          val m = String.valueOf(e.getMessage)
-          m.contains("TIMESTAMP(NANOS") || m.contains("Illegal Parquet type")
-        } =>
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(path).schema("ts").dataType
-      }
+      s.read.parquet(path).schema("ts").dataType
     }
   }
 
@@ -99,21 +87,14 @@ object Tables {
   /** events with `ts` normalized to TimestampType (UTC instants — every
     * entry point pins `spark.sql.session.timeZone=UTC`, so the NTZ→LTZ cast
     * is wall-clock-identical to DuckDB's naive read of the same file).
-    * For int64-nanos files, truncate to microseconds with integer division —
-    * `DIV`, not `/`, because a double round-trip at ~1.7e18 ns loses
-    * precision; matches DuckDB's own ns→µs truncation.
     */
   private def eventsNormalizedFp(s: SparkSession, d: String, fp: String): DataFrame =
     eventsTsTypeFp(s, d, fp) match {
       case TimestampType    => t(s, d, "events")
       case TimestampNTZType => t(s, d, "events")
         .withColumn("ts", col("ts").cast(TimestampType))
-      case LongType =>
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        t(s, d, "events").withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case other => throw new IllegalStateException(
-        s"events.ts has unsupported physical type $other — expected " +
-          "timestamp[us/ms], int64 nanos, or TIMESTAMP(NANOS)")
+        s"events.ts has unsupported physical type $other — expected timestamp[us/ms]")
     }
 
   def events(s: SparkSession, d: String): DataFrame = {

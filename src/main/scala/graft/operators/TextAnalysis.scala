@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.SparkEntry.Op
 
 /** D-block (SURVEY §2): text analysis over `documents`. All scoring is
   * composed from built-in codegen'd functions (see TextFunctions), with
@@ -782,65 +783,45 @@ object TextAnalysis {
     HAVING SUM(1 - 2 * CAST((h // 64) % 2 AS BIGINT)) <> 0
     ORDER BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_hash_embed" -> textHashEmbed _,
-    "text_readability" -> textReadability _,
-    "text_normalize_unicode" -> textNormalizeUnicode _,
-    "text_keyphrases" -> textKeyphrases _,
-    "text_strip_html" -> textStripHtml _,
-    "text_bm25_search" -> textBm25 _,
-    "text_mask_numbers" -> textMaskNumbers _,
-    "text_mask_pii" -> textMaskPii _,
-    "text_mojibake" -> textMojibake _,
-    "text_url_domains" -> textUrlDomains _,
-    "text_tokens" -> textTokens _,
-    "text_quality" -> textQuality _,
-    "text_langid" -> textLangid _,
-    "text_langid_ngram" -> textLangidNgram _,
-    "text_fingerprint" -> textFingerprint _,
-    "text_top_terms" -> textTopTerms _,
-    "text_repetition" -> textRepetition _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "text_hash_embed" -> textHashEmbedSql,
-    "text_readability" -> textReadabilitySql,
-    "text_normalize_unicode" -> textNormalizeUnicodeSql,
-    "text_keyphrases" -> textKeyphrasesSql,
-    "text_strip_html" -> textStripHtmlSql,
-    "text_bm25_search" -> textBm25Sql,
-    "text_mask_pii" -> textMaskPiiSql,
-    "text_mojibake" -> textMojibakeSql,
-    "text_url_domains" -> textUrlDomainsSql,
-    "text_mask_numbers" -> """
+  val ops: Map[String, Op] = Map(
+    "text_hash_embed" -> Op(textHashEmbed _, textHashEmbedSql),
+    "text_readability" -> Op(textReadability _, textReadabilitySql),
+    "text_normalize_unicode" -> Op(textNormalizeUnicode _, textNormalizeUnicodeSql),
+    "text_keyphrases" -> Op(textKeyphrases _, textKeyphrasesSql),
+    "text_strip_html" -> Op(textStripHtml _, textStripHtmlSql),
+    "text_bm25_search" -> Op(textBm25 _, textBm25Sql),
+    "text_mask_pii" -> Op(textMaskPii _, textMaskPiiSql),
+    "text_mojibake" -> Op(textMojibake _, textMojibakeSql),
+    "text_url_domains" -> Op(textUrlDomains _, textUrlDomainsSql),
+    "text_mask_numbers" -> Op(textMaskNumbers _, """
       SELECT event_id,
         CAST(LENGTH(regexp_extract_all(props, '[0-9]+')) AS INTEGER) AS n_masked,
         regexp_replace(props, '[0-9]+', '<NUM>', 'g') AS masked
-      FROM events ORDER BY event_id""",
-    "text_tokens" -> s"""
+      FROM events ORDER BY event_id"""),
+    "text_tokens" -> Op(textTokens _, s"""
       SELECT doc_id, ${wsTokensSql("text")} AS n_ws_tokens,
         ${bpeTokensSql("text")} AS n_bpe_tokens,
         length(text) AS n_chars_actual
-      FROM documents ORDER BY doc_id""",
-    "text_quality" -> s"""
+      FROM documents ORDER BY doc_id"""),
+    "text_quality" -> Op(textQuality _, s"""
       SELECT doc_id,
         ${alphaRatioSql("text")} AS alpha_ratio,
         ${spaceRatioSql("text")} AS space_ratio,
         ${stopwordRatioSql("text")} AS stopword_ratio,
         ${meanTokenLenSql("text")} AS mean_token_len
-      FROM documents ORDER BY doc_id""",
-    "text_langid" -> s"""
+      FROM documents ORDER BY doc_id"""),
+    "text_langid" -> Op(textLangid _, s"""
       SELECT ${langIdSql("text")} AS pred_lang, COUNT(*) AS n
-      FROM documents GROUP BY 1 ORDER BY 1""",
-    "text_langid_ngram" -> s"""
+      FROM documents GROUP BY 1 ORDER BY 1"""),
+    "text_langid_ngram" -> Op(textLangidNgram _, s"""
       SELECT doc_id, ${langIdSql("text")} AS lang_stop,
         ${langIdNgramSql("text")} AS lang_ngram,
         ${langIdNgramScoreSql("text")} AS ngram_score
-      FROM documents ORDER BY doc_id""",
-    "text_fingerprint" -> s"""
+      FROM documents ORDER BY doc_id"""),
+    "text_fingerprint" -> Op(textFingerprint _, s"""
       SELECT doc_id, ${fingerprintSql("text")} AS fp
-      FROM documents ORDER BY doc_id""",
-    "text_top_terms" -> s"""
+      FROM documents ORDER BY doc_id"""),
+    "text_top_terms" -> Op(textTopTerms _, s"""
       WITH tf AS (
         SELECT doc_id, term, COUNT(*) AS tf
         FROM (SELECT doc_id, unnest(${wordsSql("text")}) AS term FROM documents)
@@ -854,8 +835,8 @@ object TextAnalysis {
             ORDER BY tf.tf DESC, dfx.df ASC, tf.term ASC) AS rk
         FROM tf JOIN dfx USING (term) CROSS JOIN nx)
       SELECT doc_id, term, tf, df, weight FROM ranked WHERE rk <= 3
-      ORDER BY doc_id, term""",
-    "text_repetition" -> s"""
+      ORDER BY doc_id, term"""),
+    "text_repetition" -> Op(textRepetition _, s"""
       WITH w AS (SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
       g AS (SELECT doc_id, w, ${grams3Sql("w")} AS g FROM w)
       SELECT doc_id, len(w) AS n_words, len(list_distinct(w)) AS n_distinct_words,
@@ -865,6 +846,6 @@ object TextAnalysis {
         CASE WHEN len(g) > 0
           THEN CAST(len(g) - len(list_distinct(g)) AS DOUBLE) / len(g)
           ELSE 0.0 END AS dup_3gram_frac
-      FROM g ORDER BY doc_id"""
+      FROM g ORDER BY doc_id""")
   )
 }

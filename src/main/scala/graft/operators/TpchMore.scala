@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** TPC-H pattern completion (SURVEY §2 B46+): the remaining nine of the 22
   * TPC-H query shapes, adapted where this schema lacks `partsupp` or the
@@ -407,25 +408,10 @@ object TpchMore {
     SELECT l_partkey, value FROM vals, tot, np
     WHERE value * np > $Q11Multiple * total ORDER BY l_partkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q11_important_stock" -> q11ImportantStock _,
-    "snapshot_diff" -> snapshotDiff _,
-    "basket_pairs" -> basketPairs _,
-    "q6_forecast" -> q6Forecast _,
-    "q4_priority" -> q4PriorityExists _,
-    "q8_market_share" -> q8MarketShare _,
-    "q9_profit" -> q9Profit _,
-    "q15_top_supplier" -> q15TopSupplier _,
-    "q16_supplier_cnt" -> q16SupplierCnt _,
-    "q2_min_cost_supplier" -> q2MinCostSupplier _,
-    "q20_dominant_supplier" -> q20DominantSupplier _,
-    "q21_late_supplier" -> q21LateSupplier _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q11_important_stock" -> q11Sql,
-    "snapshot_diff" -> snapshotDiffSql,
-    "basket_pairs" -> s"""
+  val ops: Map[String, Op] = Map(
+    "q11_important_stock" -> Op(q11ImportantStock _, q11Sql),
+    "snapshot_diff" -> Op(snapshotDiff _, snapshotDiffSql),
+    "basket_pairs" -> Op(basketPairs _, s"""
       WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       p AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS support
@@ -439,14 +425,14 @@ object TpchMore {
       FROM p
       JOIN pc ca ON ca.l_partkey = pa
       JOIN pc cb ON cb.l_partkey = pb, nb
-      ORDER BY pa, pb""",
-    "q6_forecast" -> s"""
+      ORDER BY pa, pb"""),
+    "q6_forecast" -> Op(q6Forecast _, s"""
       SELECT ${sqlDsum("l_extendedprice * l_discount")} AS revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-    "q4_priority" -> """
+        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""),
+    "q4_priority" -> Op(q4PriorityExists _, """
       SELECT o_orderpriority, COUNT(*) AS order_count
       FROM orders
       WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -454,8 +440,8 @@ object TpchMore {
         AND EXISTS (SELECT 1 FROM lineitem
                     WHERE l_orderkey = o_orderkey
                       AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-      GROUP BY 1 ORDER BY 1""",
-    "q8_market_share" -> s"""
+      GROUP BY 1 ORDER BY 1"""),
+    "q8_market_share" -> Op(q8MarketShare _, s"""
       SELECT CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
         ROUND(
           ${sqlDsum(s"CASE WHEN n2.n_name = '$Q8Nation' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
@@ -471,8 +457,8 @@ object TpchMore {
       WHERE r_name = 'ASIA' AND p_type = 'PROMO'
         AND o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
           AND TIMESTAMP '1997-12-31 00:00:00'
-      GROUP BY 1 ORDER BY 1""",
-    "q9_profit" -> s"""
+      GROUP BY 1 ORDER BY 1"""),
+    "q9_profit" -> Op(q9Profit _, s"""
       SELECT n_name AS nation, CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
         ${sqlDsum("l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity")} AS sum_profit
       FROM lineitem
@@ -481,8 +467,8 @@ object TpchMore {
       JOIN orders ON l_orderkey = o_orderkey
       JOIN nation ON s_nationkey = n_nationkey
       WHERE p_name LIKE '%gear%'
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q15_top_supplier" -> s"""
+      GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "q15_top_supplier" -> Op(q15TopSupplier _, s"""
       WITH rev AS (
         SELECT l_suppkey, ${sqlDsum("l_extendedprice * (1 - l_discount)")} AS total_revenue
         FROM lineitem
@@ -492,15 +478,15 @@ object TpchMore {
       SELECT s_suppkey, s_name, total_revenue
       FROM supplier JOIN rev ON s_suppkey = l_suppkey
       WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
-      ORDER BY s_suppkey""",
-    "q16_supplier_cnt" -> s"""
+      ORDER BY s_suppkey"""),
+    "q16_supplier_cnt" -> Op(q16SupplierCnt _, s"""
       SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
       FROM lineitem JOIN part ON l_partkey = p_partkey
       WHERE p_brand <> 'Brand#45' AND p_type <> 'PROMO'
         AND p_size IN (${Q16Sizes.mkString(", ")})
         AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-      GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q2_min_cost_supplier" -> s"""
+      GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
+    "q2_min_cost_supplier" -> Op(q2MinCostSupplier _, s"""
       WITH pc AS (
         SELECT l_partkey, l_suppkey,
           ${sqlDavg("l_extendedprice / l_quantity")} AS unit_cost
@@ -511,8 +497,8 @@ object TpchMore {
       JOIN m ON pc.l_partkey = m.l_partkey AND pc.unit_cost = m.min_cost
       JOIN part ON p_partkey = pc.l_partkey
       WHERE p_size <= 5
-      GROUP BY 1, 2, 4 ORDER BY 1""",
-    "q20_dominant_supplier" -> s"""
+      GROUP BY 1, 2, 4 ORDER BY 1"""),
+    "q20_dominant_supplier" -> Op(q20DominantSupplier _, s"""
       WITH ps AS (
         SELECT l_partkey, l_suppkey, ${sqlDsum("l_quantity")} AS q
         FROM lineitem GROUP BY 1, 2),
@@ -521,8 +507,8 @@ object TpchMore {
       FROM ps JOIN pt USING (l_partkey)
       JOIN supplier ON s_suppkey = l_suppkey
       WHERE ns >= 3 AND q * ns > 2.0 * tot
-      GROUP BY 1, 2 ORDER BY 1""",
-    "q21_late_supplier" -> """
+      GROUP BY 1, 2 ORDER BY 1"""),
+    "q21_late_supplier" -> Op(q21LateSupplier _, """
       WITH late AS (
         SELECT l_orderkey, l_suppkey
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -536,6 +522,6 @@ object TpchMore {
         AND NOT EXISTS (SELECT 1 FROM late l3
                         WHERE l3.l_orderkey = l1.l_orderkey
                           AND l3.l_suppkey <> l1.l_suppkey)
-      GROUP BY 1 ORDER BY 1"""
+      GROUP BY 1 ORDER BY 1""")
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Op
 
 /** H51/H52 (round-14, verdict item 6): in-engine UNIGRAM-LM tokenizer
   * training — the SentencePiece-family alternative to the BPE trainer
@@ -292,13 +293,8 @@ object UlmTrain {
     FROM f GROUP BY 1 ORDER BY 1"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ulm_train_vocab" -> ulmTrainVocab _,
-    "corpus_fertility_ulm" -> fertilityUlm _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ulm_train_vocab" -> ulmTrainVocabSql,
-    "corpus_fertility_ulm" -> fertilityUlmSql
+  val ops: Map[String, Op] = Map(
+    "ulm_train_vocab" -> Op(ulmTrainVocab _, ulmTrainVocabSql),
+    "corpus_fertility_ulm" -> Op(fertilityUlm _, fertilityUlmSql)
   )
 }

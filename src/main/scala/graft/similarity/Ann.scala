@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup.withNorm
 import graft.operators.Tables
+import graft.SparkEntry.Op
 
 /** F-block (SURVEY §2): similarity search over the `embeddings` table.
   *
@@ -2565,38 +2566,6 @@ object Ann {
     SELECT qid, n_hits, CAST((10000 * n_hits) // $TopK AS BIGINT) AS recall_bps
     FROM h ORDER BY qid"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_ivfpq_topk" -> ivfpqTopK _,
-    "ann_ivfpq_append" -> ivfpqAppendTopK _,
-    "ann_ivfpq_delete" -> ivfpqDeleteTopK _,
-    "ann_ivfpq_compact" -> ivfpqCompactReport _,
-    "streaming_index_ingest" -> streamingIndexIngest _,
-    "ann_matryoshka_recall" -> matryoshkaRecall _,
-    "emb_gram_matrix" -> embGramMatrix _,
-    "ann_recall_curve" -> annRecallCurve _,
-    "ann_recall_report" -> annRecallReport _,
-    "ann_ivf_sampled_recall" -> ivfSampledRecall _,
-    "ann_hard_negatives" -> hardNegativesTopK _,
-    "ann_mips_topk" -> mipsTopK _,
-    "ann_binary_topk" -> binaryTopK _,
-    "dedup_semantic" -> semanticDedup _,
-    "ann_knn_join" -> knnJoin _,
-    "ann_knn_join_recall" -> knnJoinRecall _,
-    "ann_ivf_cell_report" -> ivfCellReport _,
-    "ann_ivf_append" -> ivfAppendReport _,
-    "ann_pq_append" -> pqAppendReport _,
-    "emb_pq_distortion" -> pqDistortionReport _,
-    "ann_pq_topk" -> pqTopK _,
-    "ann_brute_topk" -> bruteTopK _,
-    "ann_lsh_topk" -> lshTopK _,
-    "ann_ivf_topk" -> ivfTopK _,
-    "emb_quantize" -> embQuantize _,
-    "ann_quantized_topk" -> quantizedTopK _,
-    "ann_rerank_topk" -> rerankTopK _,
-    "ann_filtered_topk" -> filteredTopK _,
-    "ann_filtered_indexed" -> filteredIndexedTopK _
-  )
-
   /** Full SQL twin of lshTopK. The hyperplanes are deterministic constants
     * (fixed-seed Gaussian), so the oracle embeds the exact same doubles as
     * literals (shortest-round-trip decimal => bit-identical parse) and
@@ -3095,24 +3064,24 @@ object Ann {
     ORDER BY nprobe"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "dedup_semantic" -> semanticDedupSql,
-    "ann_knn_join" -> knnJoinSql,
-    "ann_knn_join_recall" -> knnJoinRecallSql,
-    "ann_ivf_cell_report" -> ivfCellReportSql,
-    "ann_ivf_append" -> ivfAppendReportSql,
-    "ann_pq_append" -> pqAppendReportSql,
-    "emb_pq_distortion" -> pqDistortionSql,
-    "ann_pq_topk" -> pqOracleSql,
-    "ann_ivfpq_topk" -> ivfpqOracleSql,
-    "ann_ivfpq_append" -> ivfpqAppendOracleSql,
-    "ann_ivfpq_delete" -> ivfpqDeleteOracleSql,
-    "ann_ivfpq_compact" -> ivfpqCompactOracleSql,
-    "streaming_index_ingest" -> streamingIndexIngestSql,
-    "ann_matryoshka_recall" -> matryoshkaRecallSql,
-    "emb_gram_matrix" -> embGramMatrixSql,
-    "ann_recall_curve" -> recallCurveSql,
-    "emb_quantize" -> """
+  val ops: Map[String, Op] = Map(
+    "dedup_semantic" -> Op(semanticDedup _, semanticDedupSql),
+    "ann_knn_join" -> Op(knnJoin _, knnJoinSql),
+    "ann_knn_join_recall" -> Op(knnJoinRecall _, knnJoinRecallSql),
+    "ann_ivf_cell_report" -> Op(ivfCellReport _, ivfCellReportSql),
+    "ann_ivf_append" -> Op(ivfAppendReport _, ivfAppendReportSql),
+    "ann_pq_append" -> Op(pqAppendReport _, pqAppendReportSql),
+    "emb_pq_distortion" -> Op(pqDistortionReport _, pqDistortionSql),
+    "ann_pq_topk" -> Op(pqTopK _, pqOracleSql),
+    "ann_ivfpq_topk" -> Op(ivfpqTopK _, ivfpqOracleSql),
+    "ann_ivfpq_append" -> Op(ivfpqAppendTopK _, ivfpqAppendOracleSql),
+    "ann_ivfpq_delete" -> Op(ivfpqDeleteTopK _, ivfpqDeleteOracleSql),
+    "ann_ivfpq_compact" -> Op(ivfpqCompactReport _, ivfpqCompactOracleSql),
+    "streaming_index_ingest" -> Op(streamingIndexIngest _, streamingIndexIngestSql),
+    "ann_matryoshka_recall" -> Op(matryoshkaRecall _, matryoshkaRecallSql),
+    "emb_gram_matrix" -> Op(embGramMatrix _, embGramMatrixSql),
+    "ann_recall_curve" -> Op(annRecallCurve _, recallCurveSql),
+    "emb_quantize" -> Op(embQuantize _, """
       WITH s AS (
         SELECT vec_id, embedding,
           list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
@@ -3126,12 +3095,12 @@ object Ann {
           THEN CAST(round(127.0 * CAST(x AS DOUBLE) / scale) AS BIGINT)
           ELSE 0 END AS q,
         scale
-      FROM u ORDER BY vec_id, i""",
-    "ann_lsh_topk" -> lshOracleSql,
-    "ann_ivf_topk" -> ivfOracleSql,
-    "ann_recall_report" -> annRecallReportSql,
-    "ann_ivf_sampled_recall" -> ivfSampledRecallSql,
-    "ann_quantized_topk" -> s"""
+      FROM u ORDER BY vec_id, i"""),
+    "ann_lsh_topk" -> Op(lshTopK _, lshOracleSql),
+    "ann_ivf_topk" -> Op(ivfTopK _, ivfOracleSql),
+    "ann_recall_report" -> Op(annRecallReport _, annRecallReportSql),
+    "ann_ivf_sampled_recall" -> Op(ivfSampledRecall _, ivfSampledRecallSql),
+    "ann_quantized_topk" -> Op(quantizedTopK _, s"""
       WITH v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings),
@@ -3156,8 +3125,8 @@ object Ann {
         SELECT qid, nid, rcos,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rcos DESC, nid) AS rank
         FROM p)
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_rerank_topk" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_rerank_topk" -> Op(rerankTopK _, s"""
       WITH v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings),
@@ -3191,8 +3160,8 @@ object Ann {
         FROM cand
         JOIN v qv ON qv.vec_id = cand.qid
         JOIN v nv ON nv.vec_id = cand.nid) t
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_mips_topk" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_mips_topk" -> Op(mipsTopK _, s"""
       WITH v AS (
         SELECT vec_id,
           list_transform(embedding,
@@ -3226,8 +3195,8 @@ object Ann {
         SELECT qid, nid, rip,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rip DESC, nid) AS rank
         FROM r) t
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_binary_topk" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_binary_topk" -> Op(binaryTopK _, s"""
       WITH p AS (
         SELECT vec_id,
           CAST(list_sum(list_transform(embedding[1:32],
@@ -3254,8 +3223,8 @@ object Ann {
         SELECT qid, nid, hamming, rcos,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rcos DESC, nid) AS rank
         FROM r) t
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_hard_negatives" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_hard_negatives" -> Op(hardNegativesTopK _, s"""
       WITH p AS (
         SELECT q.vec_id AS qid, q.label AS q_label, c.vec_id AS nid,
           ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) AS rcos
@@ -3265,8 +3234,8 @@ object Ann {
         SELECT qid, q_label, nid, rcos,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rcos DESC, nid) AS rank
         FROM p) t
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_brute_topk" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_brute_topk" -> Op(bruteTopK _, s"""
       WITH p AS (
         SELECT q.vec_id AS qid, c.vec_id AS nid,
           ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) AS rcos
@@ -3276,8 +3245,8 @@ object Ann {
         SELECT qid, nid, rcos,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rcos DESC, nid) AS rank
         FROM p) t
-      WHERE rank <= $TopK ORDER BY qid, rank""",
-    "ann_filtered_topk" -> s"""
+      WHERE rank <= $TopK ORDER BY qid, rank"""),
+    "ann_filtered_topk" -> Op(filteredTopK _, s"""
       WITH p AS (
         SELECT q.vec_id AS qid, q.label AS label, c.vec_id AS nid,
           ROUND(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) AS rcos
@@ -3288,8 +3257,8 @@ object Ann {
         SELECT qid, label, nid, rcos,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rcos DESC, nid) AS rank
         FROM p) t
-      WHERE rank <= $FilteredTopK ORDER BY qid, rank""",
-    "ann_filtered_indexed" -> s"""
+      WHERE rank <= $FilteredTopK ORDER BY qid, rank"""),
+    "ann_filtered_indexed" -> Op(filteredIndexedTopK _, s"""
       WITH v AS (
         SELECT vec_id, label,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -3326,6 +3295,6 @@ object Ann {
         FROM cand
         JOIN v qv ON qv.vec_id = cand.qid
         JOIN v nv ON nv.vec_id = cand.nid) t
-      WHERE rank <= $FilteredTopK ORDER BY qid, rank"""
+      WHERE rank <= $FilteredTopK ORDER BY qid, rank""")
   )
 }

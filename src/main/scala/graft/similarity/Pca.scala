@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup.withNorm
 import graft.operators.Tables
+import graft.SparkEntry.Op
 
 /** PCA / whitening over the embedding corpus (SURVEY §2 F-block; round-12
   * verdict item 2 — the consumer F18's exact Gram matrix was built for).
@@ -415,15 +416,9 @@ object Pca {
       ORDER BY n_dims"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pca_project" -> pcaProject _,
-    "emb_whiten" -> whiten _,
-    "ann_pca_recall" -> pcaRecall _
-  )
-
-  def oracles: Map[String, String] = Map(
-    "emb_pca_project" -> pcaProjectSql,
-    "emb_whiten" -> whitenSql,
-    "ann_pca_recall" -> pcaRecallSql
+  def ops: Map[String, Op] = Map(
+    "emb_pca_project" -> Op(pcaProject _, pcaProjectSql),
+    "emb_whiten" -> Op(whiten _, whitenSql),
+    "ann_pca_recall" -> Op(pcaRecall _, pcaRecallSql)
   )
 }

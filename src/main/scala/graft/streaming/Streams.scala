@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQueryProgress, Trigger}
+import graft.operators.{Analytics, Relational, Signals, Tables}
 import graft.operators.Exact._
+import graft.SparkEntry.Op
 
 /** C-block streaming (SURVEY §2 C3/C4): the same event computations as the
   * batch operators, expressed over Structured Streaming. Batch/stream parity
@@ -301,7 +303,6 @@ object Streams {
   }
 
   def streamingSessionizeBootstrap(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Tables
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     // batch side: the old era's final OPEN session per user (ms-grain cut,
@@ -418,7 +419,6 @@ object Streams {
     * events, an empty bridge (fires the mid-stream timer pass at the
     * post-batch0 watermark), then the new era. */
   private def twsFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
     graft.Artifacts.stored(s, "tws_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
@@ -470,8 +470,7 @@ object Streams {
     * parent directory, which is what the source needs.
     */
   private def eventsStream(s: SparkSession, d: String, restCols: String): DataFrame = {
-    import graft.operators.Tables
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     Tables.assertEventsEra(s, d)
     val glob = s"$d/{events.parquet}"
     Tables.eventsTsType(s, d) match {
@@ -482,15 +481,8 @@ object Streams {
         // time zone (same convention as the batch reader)
         s.readStream.schema(s"$restCols, ts TIMESTAMP_NTZ").parquet(glob)
           .withColumn("ts", col("ts").cast(TimestampType))
-      case LongType =>
-        // raw TIMESTAMP(NANOS): read as int64, truncate ns→µs with integer
-        // division (a double round-trip at ~1.7e18 loses precision)
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.readStream.schema(s"$restCols, ts BIGINT").parquet(glob)
-          .withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case other => throw new IllegalStateException(
-        s"events.ts has unsupported physical type $other — expected " +
-          "timestamp[us/ms], int64 nanos, or TIMESTAMP(NANOS)")
+        s"events.ts has unsupported physical type $other — expected timestamp[us/ms]")
     }
   }
 
@@ -557,8 +549,7 @@ object Streams {
     * bounded by the key space, not the stream length.
     *
     * The explicit 2-column schema prunes the parquet scan to the dedup keys,
-    * sidestepping the TIMESTAMP(NANOS) `ts` column entirely (see
-    * Tables.events for the batch-side handling).
+    * never reading the `ts` column.
     */
   def streamingDedup(s: SparkSession, d: String): DataFrame =
     drain(s, s.readStream
@@ -591,7 +582,7 @@ object Streams {
     * batch join the oracle runs.
     */
   def streamingEnrich(s: SparkSession, d: String): DataFrame = {
-    val dim = graft.operators.Tables.customer(s, d)
+    val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
     drain(s, s.readStream
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
@@ -634,7 +625,6 @@ object Streams {
     * fixtures. Arrival ORDER is controlled per run by the recovery driver
     * (phase 1 stages half0 only), so no modTime choreography is needed. */
   private def recoveryFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
     graft.Artifacts.stored(s, "recovery_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val mm = ev.agg(min(col("ts")), max(col("ts"))).head // 2 scalars, bounded
@@ -756,7 +746,6 @@ object Streams {
     * arrival choreography the other stream fixtures use (modTime order +
     * maxFilesPerTrigger=1 → one slice per micro-batch). */
   private def cdcFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
     graft.Artifacts.stored(s, "cdc_fixture", d, Seq("orders.parquet")) { loc =>
       val o = Tables.orders(s, d)
         .select(col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
@@ -1156,7 +1145,7 @@ object Streams {
                 st = st.copy(v = Some(e.ts_us))
               case "purchase" if st.v.nonEmpty && st.p.isEmpty &&
                   e.ts_us > st.v.get &&
-                  e.ts_us - st.v.get <= graft.operators.Analytics.FunnelPurchaseWindowUs =>
+                  e.ts_us - st.v.get <= Analytics.FunnelPurchaseWindowUs =>
                 st = st.copy(p = Some(e.ts_us))
               case _ =>
             }
@@ -1198,7 +1187,7 @@ object Streams {
       .agg(count(lit(1)).as("n")), "complete")
     // the drained sink joins a derivation of ITSELF; the alias keeps the
     // MemoryPlan self-join's attribute references distinct
-    graft.operators.Signals.rateAlertFrom(hourly.alias("h"), hourly)
+    Signals.rateAlertFrom(hourly.alias("h"), hourly)
   }
 
   /** C16 — streaming count-min sketch (batch B55's twin): the counter grid
@@ -1210,13 +1199,12 @@ object Streams {
     * oracle as `freq_sketch_cms`.
     */
   def streamingFreqSketch(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Signals
     val grid = drain(s, Signals.cmsGridKeys(
         s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"))
       .groupBy(col("r"), col("bucket"))
       .agg(count(lit(1)).as("c")), "complete")
     Signals.cmsEstimatesFrom(grid,
-      graft.operators.Tables.events(s, d).select(col("user_id")))
+      Tables.events(s, d).select(col("user_id")))
   }
 
   /** C17 — streaming HyperLogLog distinct (batch B16b's twin): register
@@ -1230,7 +1218,6 @@ object Streams {
     * family as B16b, instantiated over events.user_id.
     */
   def streamingHllDistinct(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Relational
     Relational.hllFromRegs(drain(s, Relational.hllBucketRho(
         s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"),
         "user_id")
@@ -1248,7 +1235,6 @@ object Streams {
     * B36's own oracle.
     */
   def streamingQuantileHist(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Analytics
     Analytics.quantilesFromHist(drain(s, Analytics.aqBinned(
         s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
           .parquet(s"$d/{orders.parquet}"))
@@ -1266,7 +1252,6 @@ object Streams {
     * cannot serve (its bin width bakes in a range guess).
     */
   def streamingQuantileSketch(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Analytics
     Analytics.ddSketchReport(drain(s, Analytics.ddBucketed(
         s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
           .parquet(s"$d/{orders.parquet}"))
@@ -1313,7 +1298,7 @@ object Streams {
     */
   def streamingCusumShift(s: SparkSession, d: String): DataFrame = {
     val src = eventsStream(s, d, "event_type STRING")
-    graft.operators.Signals.cusumReport(drain(s, src
+    Signals.cusumReport(drain(s, src
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("h"), col("event_type"), col("n")), "complete"))
@@ -1346,7 +1331,6 @@ object Streams {
       col("ts") <= lit(new java.sql.Timestamp(maxTs.getTime - 3L * 3600 * 1000))
 
   private def lateFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
     graft.Artifacts.stored(s, "late_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1407,7 +1391,6 @@ object Streams {
   val DedupTtlUs: Long = 6L * 3600 * 1000000
 
   private def dedupFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
     import org.apache.spark.sql.expressions.Window
     graft.Artifacts.stored(s, "dedup_watermark_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d)
@@ -1458,54 +1441,27 @@ object Streams {
     drain(s, windowedAgg(src.drop("event_id", "user_id")), "append")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map(
-      "streaming_late_data" -> streamingLateData _,
-      "streaming_dedup_within_watermark" -> streamingDedupWithinWatermark _,
-      "streaming_full_outer_join" -> streamingFullOuterJoin _,
-      "streaming_outer_join" -> streamingOuterJoin _,
-      "streaming_cusum_shift" -> streamingCusumShift _,
-      "streaming_topk" -> streamingTopK _,
-      "streaming_quantile_hist" -> streamingQuantileHist _,
-      "streaming_quantile_sketch" -> streamingQuantileSketch _,
-      "streaming_dedup" -> streamingDedup _,
-      "streaming_hll_distinct" -> streamingHllDistinct _,
-      "streaming_window_agg" -> streamingWindowAgg _,
-      "streaming_enrich" -> streamingEnrich _,
-      "streaming_sessionize" -> streamingSessionize _,
-      "streaming_sessionize_tws" -> streamingSessionizeTws _,
-      "streaming_restart_recovery" -> streamingRestartRecovery _,
-      "streaming_merge_upsert" -> streamingMergeUpsert _,
-      "streaming_session_timers" -> streamingSessionTimers _,
-      "streaming_burst_detect" -> streamingBurstDetect _,
-      "streaming_sessionize_bootstrap" -> streamingSessionizeBootstrap _,
-      "streaming_type_transitions" -> streamingTypeTransitions _,
-      "streaming_funnel" -> streamingFunnel _,
-      "streaming_rate_alert" -> streamingRateAlert _,
-      "streaming_freq_sketch" -> streamingFreqSketch _,
-      "streaming_join" -> streamingJoin _)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Map[String, Op] = Map(
     // explicit late-row filter + final-watermark window cut: what the
     // stream must have emitted iff allowed-lateness semantics hold
-    "streaming_late_data" -> s"""
+    "streaming_late_data" -> Op(streamingLateData _, s"""
       WITH mx AS (SELECT max(ts) AS m FROM events),
       kept AS (
         SELECT e.* FROM events e, mx
         WHERE NOT (e.event_id % 10 = 0 AND e.ts <= mx.m - INTERVAL 3 HOUR)),
       agg AS (
         SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
-          COUNT(*) AS n, ${graft.operators.Exact.sqlDsum("value")} AS sum_value
+          COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
         FROM kept GROUP BY 1, 2)
       SELECT a.hour_start, a.event_type, a.n, a.sum_value
       FROM agg a, mx
       WHERE a.hour_start + INTERVAL 1 HOUR <= mx.m - INTERVAL 1 HOUR
-      ORDER BY 1, 2""",
+      ORDER BY 1, 2"""),
     // full join + BOTH state-expiry cuts: a null-click row survives where
     // the purchase is strictly below the final min-watermark; a
     // null-purchase row where the click's match horizon (c_ts + 30 min)
     // is strictly below it
-    "streaming_full_outer_join" -> """
+    "streaming_full_outer_join" -> Op(streamingFullOuterJoin _, """
       WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts
                  FROM events WHERE event_type = 'purchase'),
       c AS (SELECT event_id AS c_id, user_id AS c_user, ts AS c_ts
@@ -1524,11 +1480,11 @@ object Streams {
       WHERE (p_id IS NOT NULL AND c_id IS NOT NULL)
          OR (c_id IS NULL AND p_us < wm.w_us)
          OR (p_id IS NULL AND c_us + 1800000000 < wm.w_us)
-      ORDER BY p_id, c_id, user_id""",
+      ORDER BY p_id, c_id, user_id"""),
     // left join + the state-expiry cut: a null row survives only where the
     // purchase is STRICTLY below the final min-watermark (ms-truncated max
     // per stream, the engine's EventTimeStats precision)
-    "streaming_outer_join" -> """
+    "streaming_outer_join" -> Op(streamingOuterJoin _, """
       WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts
                  FROM events WHERE event_type = 'purchase'),
       c AS (SELECT event_id AS c_id, user_id AS c_user, ts AS c_ts
@@ -1544,28 +1500,26 @@ object Streams {
              AND c.c_ts >= p.p_ts - INTERVAL '30 minutes' AND c.c_ts <= p.p_ts)
       SELECT p_id, c_id, user_id FROM m, wm
       WHERE c_id IS NOT NULL OR p_us < wm.w_us
-      ORDER BY p_id, c_id""",
+      ORDER BY p_id, c_id"""),
     // the streaming CUSUM drains to the batch hourly grid: share C22's
-    "streaming_cusum_shift" ->
-      graft.operators.Signals.oracles("events_cusum_shift"),
+    "streaming_cusum_shift" -> Op(streamingCusumShift _, Signals.ops("events_cusum_shift").oracle),
     // the streaming histogram drains to the batch grid: share B36's oracle
     "streaming_quantile_hist" ->
-      graft.operators.Analytics.oracles("approx_quantile_hist"),
+      Op(streamingQuantileHist _, Analytics.ops("approx_quantile_hist").oracle),
     // the streaming log-bucket sketch drains to the batch grid: share B61's
-    "streaming_quantile_sketch" ->
-      graft.operators.Analytics.quantileSketchLogSql,
+    "streaming_quantile_sketch" -> Op(streamingQuantileSketch _, Analytics.quantileSketchLogSql),
     // the streaming funnel must equal the batch funnel on the bounded source
-    "streaming_funnel" -> graft.operators.Analytics.oracles("event_funnel"),
+    "streaming_funnel" -> Op(streamingFunnel _, Analytics.ops("event_funnel").oracle),
     // streaming twins of the batch alert/sketch share their batch oracles
-    "streaming_rate_alert" -> graft.operators.Signals.oracles("events_rate_alert"),
-    "streaming_freq_sketch" -> graft.operators.Signals.oracles("freq_sketch_cms"),
+    "streaming_rate_alert" -> Op(streamingRateAlert _, Signals.ops("events_rate_alert").oracle),
+    "streaming_freq_sketch" -> Op(streamingFreqSketch _, Signals.ops("freq_sketch_cms").oracle),
     // B16b's register-replay oracle instantiated over the stream's source
-    "streaming_hll_distinct" -> graft.operators.Relational.hllSql("events", "user_id"),
+    "streaming_hll_distinct" -> Op(streamingHllDistinct _, Relational.hllSql("events", "user_id")),
     "streaming_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type",
+      Op(streamingDedup _, "SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type"),
     // bounded-state dedup: registry selection (latest old-era row per key),
     // the ms-truncated watermark, and the µs expiry compare replayed exactly
-    "streaming_dedup_within_watermark" -> s"""
+    "streaming_dedup_within_watermark" -> Op(streamingDedupWithinWatermark _, s"""
       WITH e AS (SELECT event_id, user_id, event_type, ts FROM events),
       cut AS (SELECT max(ts) - INTERVAL 2 HOUR AS c2 FROM e),
       b0 AS (
@@ -1586,8 +1540,8 @@ object Streams {
         WHERE b0.user_id IS NULL
            OR epoch_us(b0.ts) + $DedupTtlUs <= wm.w_us)
       SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n_emits
-      FROM em GROUP BY 1, 2 ORDER BY 1, 2""",
-    "streaming_topk" -> s"""
+      FROM em GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "streaming_topk" -> Op(streamingTopK _, s"""
       WITH c AS (
         SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
           COUNT(*) AS n
@@ -1597,38 +1551,38 @@ object Streams {
           ROW_NUMBER() OVER (PARTITION BY hour_start
             ORDER BY n DESC, event_type) AS rank
         FROM c) t
-      WHERE rank <= $StreamTopK ORDER BY hour_start, rank""",
-    "streaming_window_agg" -> s"""
+      WHERE rank <= $StreamTopK ORDER BY hour_start, rank"""),
+    "streaming_window_agg" -> Op(streamingWindowAgg _, s"""
       SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
-        COUNT(*) AS n, ${graft.operators.Exact.sqlDsum("value")} AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "streaming_enrich" -> """
+        COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "streaming_enrich" -> Op(streamingEnrich _, """
       SELECT event_id, user_id, event_type, value, c_mktsegment
       FROM events JOIN customer ON user_id = c_custkey
-      ORDER BY event_id""",
-    "streaming_join" -> """
+      ORDER BY event_id"""),
+    "streaming_join" -> Op(streamingJoin _, """
       SELECT p.event_id AS p_id, c.event_id AS c_id, p.user_id
       FROM events p JOIN events c
         ON c.user_id = p.user_id
        AND p.event_type = 'purchase' AND c.event_type = 'click'
        AND c.ts >= p.ts - INTERVAL '30 minutes' AND c.ts <= p.ts
-      ORDER BY p_id, c_id""",
-    "streaming_sessionize" -> sessionizeOracleSql,
+      ORDER BY p_id, c_id"""),
+    "streaming_sessionize" -> Op(streamingSessionize _, sessionizeOracleSql),
     // C30: the transformWithState twin emits under the SAME session rule —
     // one oracle text for both state APIs, so they provably cannot diverge
-    "streaming_sessionize_tws" -> sessionizeOracleSql,
+    "streaming_sessionize_tws" -> Op(streamingSessionizeTws _, sessionizeOracleSql),
     // C37: stop-with-open-state/restart must be invisible — the SAME oracle
     // text as C4/C30; any state loss or sink duplication breaks the hash gate
-    "streaming_restart_recovery" -> sessionizeOracleSql,
+    "streaming_restart_recovery" -> Op(streamingRestartRecovery _, sessionizeOracleSql),
     // C38: the continuously-merged snapshot must equal B32's one-shot
     // recompute over all orders (same oracle text as merge_upsert)
-    "streaming_merge_upsert" -> s"""
+    "streaming_merge_upsert" -> Op(streamingMergeUpsert _, s"""
       SELECT o_custkey, COUNT(*) AS n_orders, MAX(o_orderdate) AS last_odate,
-        ${graft.operators.Exact.sqlDsum("o_totalprice")} AS sum_price
-      FROM orders GROUP BY 1 ORDER BY 1""",
+        ${sqlDsum("o_totalprice")} AS sum_price
+      FROM orders GROUP BY 1 ORDER BY 1"""),
     // C35: lag gives the transition; per-(user, from, to) row_number gives
     // the running count
-    "streaming_type_transitions" -> """
+    "streaming_type_transitions" -> Op(streamingTypeTransitions _, """
       WITH o AS (
         SELECT user_id, event_id, ts, event_type,
           LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1639,11 +1593,11 @@ object Streams {
         CAST(ROW_NUMBER() OVER (PARTITION BY user_id, prev_type, event_type
           ORDER BY ts, event_id) AS BIGINT) AS n_so_far
       FROM o WHERE prev_type IS NOT NULL
-      ORDER BY user_id, ts_us, event_id""",
+      ORDER BY user_id, ts_us, event_id"""),
     // C34: a full-corpus session is stream-emitted iff its CLOSING event
     // (the next session's first event) lands in the new era (ts > ms-grain
     // max − 2h) — old-era-closed sessions belong to the batch job
-    "streaming_sessionize_bootstrap" -> """
+    "streaming_sessionize_bootstrap" -> Op(streamingSessionizeBootstrap _, """
       WITH flagged AS (
         SELECT user_id, ts, event_id,
           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -1668,10 +1622,10 @@ object Streams {
         n_events
       FROM nxt, cut
       WHERE next_start IS NOT NULL AND epoch_us(next_start) > cut_us
-      ORDER BY user_id, start_us""",
+      ORDER BY user_id, start_us"""),
     // C33: per-purchase horizon count = rn − |rows at or before t−horizon|
     // (RANGE frame), alert rows where it reaches BurstK
-    "streaming_burst_detect" -> """
+    "streaming_burst_detect" -> Op(streamingBurstDetect _, """
       WITH p AS (
         SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
       w AS (
@@ -1684,11 +1638,11 @@ object Streams {
       SELECT user_id, event_id, ts_us,
         CAST(rn - before_horizon AS BIGINT) AS n_in_window
       FROM w WHERE rn - before_horizon >= 3
-      ORDER BY user_id, ts_us, event_id""",
+      ORDER BY user_id, ts_us, event_id"""),
     // C32: sessions emitted iff event-closed OR expired at the final
     // watermark (ms-grain end + gap behind ms-truncated max − 1h) — the
     // timer-flush semantics batch-characterized
-    "streaming_session_timers" -> """
+    "streaming_session_timers" -> Op(streamingSessionTimers _, """
       WITH flagged AS (
         SELECT user_id, ts, event_id,
           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -1711,7 +1665,7 @@ object Streams {
       WHERE s_start < (SELECT MAX(s_start) FROM sessions m
                        WHERE m.user_id = s.user_id)
          OR (epoch_ms(s_end) + 1800000) < wm.wm_ms
-      ORDER BY user_id, start_us""")
+      ORDER BY user_id, start_us"""))
 
   private lazy val sessionizeOracleSql: String = """
       WITH flagged AS (

@@ -216,7 +216,7 @@ class BpeTrainSpec extends SparkSpec {
     val packs = BpeTrain.packBpeLearned(spark, sf).collect()
     assert(packs.nonEmpty)
     val nChunks = packs.map(_.getAs[Long]("n_chunks")).sum
-    val direct = graft.operators.CorpusClean.queries("corpus_pack_bpe")(spark, sf)
+    val direct = graft.operators.CorpusClean.ops("corpus_pack_bpe").run(spark, sf)
       .agg(sum("n_chunks")).head.getLong(0)
     assert(nChunks == direct, "learned packing lost or duplicated chunks")
   }

@@ -674,7 +674,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("H37 dup matrix: pair conservation, canonical source order, cross-source rows") {
-    val pairs = graft.dedup.Dedup.queries("dedup_jaccard_pairs")(spark, sf).count()
+    val pairs = graft.dedup.Dedup.ops("dedup_jaccard_pairs").run(spark, sf).count()
     val m = graft.dedup.Dedup.dupMatrix(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("n_pairs")))
     assert(m.nonEmpty && m.map(_._3).sum == pairs, "pair mass not conserved")

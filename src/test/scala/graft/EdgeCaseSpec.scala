@@ -17,6 +17,27 @@ class EdgeCaseSpec extends SparkSpec {
     assert(global.getLong(0) == 0 && global.isNullAt(1))
   }
 
+  test("a TIMESTAMP(NANOS) events.ts fails loudly and leaves the session conf alone") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), hconf)).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000000000000L))
+    finally w.close()
+    val conf0 = spark.conf.getAll
+    val e = intercept[Exception](graft.operators.Tables.events(spark, dir))
+    assert(String.valueOf(e.getMessage).contains("TIMESTAMP(NANOS"), e.getMessage)
+    assert(spark.conf.getAll == conf0)
+  }
+
   test("polyHash/winnow iterate code points, not UTF-16 units (oracle parity for any Unicode)") {
     // DuckDB ord()/substring()/length() are code-point-based; Java
     // charAt/length count UTF-16 units. The two diverge exactly on

@@ -72,11 +72,11 @@ class StreamingSpec extends SparkSpec {
 
   test("every streaming key leaves views, streams and conf as it found them; its frame reads twice") {
     def views() = spark.catalog.listTables().collect().count(_.isTemporary)
-    Streams.queries.toSeq.sortBy(_._1).foreach { case (key, run) =>
+    Streams.ops.toSeq.sortBy(_._1).foreach { case (key, op) =>
       val views0 = views()
       val active0 = spark.streams.active.length
       val conf0 = spark.conf.getAll
-      val df = run(spark, sf)
+      val df = op.run(spark, sf)
       val rows = df.collect()
       val n = df.count()
       assert(rows.length.toLong == n, s"$key: collect saw ${rows.length} rows, count $n")
