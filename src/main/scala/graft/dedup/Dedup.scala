@@ -928,13 +928,20 @@ object Dedup {
     * broadcast is unsafe (200k rows x 64 doubles ~= 110 MB packed, plus row
     * overhead — comfortably inside an executor, uncomfortably beyond it at
     * 10x). Overridable per session via `graft.embedding.broadcastMaxRows`
-    * (the spec uses this to pin the switchover).
+    * (the spec uses this to pin the switchover). The same cap gates the
+    * driver-local IVF/PQ k-means training in [[graft.similarity.Ann]],
+    * whose probe is a `limit(cap + 1)` collect: a cap at or past
+    * Int.MaxValue would silently truncate it, so it must stay below.
     */
   val EmbeddingBroadcastMaxRowsDefault = 200000L
 
-  private def embeddingBroadcastMaxRows(s: SparkSession): Long =
-    s.conf.getOption("graft.embedding.broadcastMaxRows")
+  private[graft] def embeddingBroadcastMaxRows(s: SparkSession): Long = {
+    val cap = s.conf.getOption("graft.embedding.broadcastMaxRows")
       .map(_.toLong).getOrElse(EmbeddingBroadcastMaxRowsDefault)
+    require(cap > 0 && cap < Int.MaxValue,
+      s"graft.embedding.broadcastMaxRows must be in (0, ${Int.MaxValue}), got $cap")
+    cap
+  }
 
   /** E5 — embedding-cosine near-dup pairs (threshold 0.4), exact, with an
     * automatic scale guard: corpora whose row count fits
@@ -980,10 +987,7 @@ object Dedup {
           block.iterator
             .filter(_._1 > ida)
             .flatMap { case (idb, vb, nb) =>
-              var acc = 0.0
-              var j = 0
-              while (j < va.length) { acc += va(j) * vb(j); j += 1 }
-              val raw = acc / (na * nb)
+              val raw = graft.plans.DotProduct.dot(va, vb) / (na * nb)
               // round(x,6) >= 0.4 requires x >= 0.3999995, so a 0.39999
               // double guard is strictly conservative: the expensive
               // BigDecimal HALF_UP round runs only for pairs near/above
@@ -1044,10 +1048,7 @@ object Dedup {
           rb.iterator
             .filter(r => !diag || r._1 > ida)
             .flatMap { case (idb, vb, nb) =>
-              var acc = 0.0
-              var j = 0
-              while (j < va.length) { acc += va(j) * vb(j); j += 1 }
-              val raw = acc / (na * nb)
+              val raw = graft.plans.DotProduct.dot(va, vb) / (na * nb)
               if (raw >= 0.39999) {
                 val cos = BigDecimal(raw)
                   .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

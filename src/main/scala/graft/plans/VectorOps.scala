@@ -48,6 +48,19 @@ object DotProduct {
     acc
   }
 
+  /** The same sequential fold over plain arrays, for driver-side kernels
+    * that must score exactly as the expression does. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += a(i) * b(i)
+      i += 1
+    }
+    acc
+  }
+
   /** Column builder: dot product of two array<double> columns. */
   def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 }

@@ -76,10 +76,7 @@ object Ann {
         while (i < qs.length) {
           val (qid, qv, qn) = qs(i)
           if (nid != qid) {
-            var acc = 0.0
-            var j = 0
-            while (j < qv.length) { acc += qv(j) * v(j); j += 1 }
-            val rcos = BigDecimal(acc / (qn * nrm))
+            val rcos = BigDecimal(graft.plans.DotProduct.dot(qv, v) / (qn * nrm))
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
             val cand = (rcos, nid)
             if (heaps(i).size < k) heaps(i).enqueue(cand)
@@ -214,12 +211,13 @@ object Ann {
     * seeds (the min-vec_id vector of each `vec_id % k` residue class — a
     * deterministic pseudo-random sample), `IvfIters` Lloyd iterations by
     * cosine, nearest-centroid corpus assignment, queries probe their
-    * nprobe=2 nearest cells. Only the k x dim centroid matrix ever reaches
-    * the driver (the same bounded state every distributed k-means keeps —
-    * the corpus itself is never collected); each Lloyd iteration is one
-    * scan + one k-row aggregate, the standard index-build cost. At 100 TB
-    * you train on a sample instead of full scans; the routing/probing plan
-    * is unchanged.
+    * nprobe=2 nearest cells. A training set that fits
+    * `graft.embedding.broadcastMaxRows` is collected ONCE and trained on
+    * the driver ([[lloydLocal]], bit-identical to the distributed plan);
+    * above the cap only the k x dim centroid matrix reaches the driver
+    * (the bounded state every distributed k-means keeps) and each Lloyd
+    * iteration is one scan + one k-row aggregate. At 100 TB you train on a
+    * sample instead of full scans; the routing/probing plan is unchanged.
     */
   val IvfCells = 16
   val IvfIters = 3
@@ -263,12 +261,19 @@ object Ann {
     */
   private def nearestCellCol(v: String, cents: Array[Array[Double]]): Column = {
     val cells = cents.zipWithIndex.map { case (c, i) =>
-      val cn = math.sqrt(c.map(x => x * x).sum).max(java.lang.Double.MIN_NORMAL)
       val carr = array(c.toIndexedSeq.map(lit): _*)
-      struct((graft.plans.DotProduct.dot(col(v), carr) / lit(cn)).as("s"), lit(-i).as("ni"))
+      struct((graft.plans.DotProduct.dot(col(v), carr) / lit(cellNorm(c))).as("s"),
+        lit(-i).as("ni"))
     }
     -array_max(array(cells: _*)).getField("ni")
   }
+
+  private def sqNorm(c: Array[Double]): Double = c.map(x => x * x).sum
+
+  /** A centroid's cosine denominator, floored so a zero centroid cannot
+    * divide by zero — shared by [[nearestCellCol]] and [[nearestCosine]]. */
+  private def cellNorm(c: Array[Double]): Double =
+    math.sqrt(sqNorm(c)).max(java.lang.Double.MIN_NORMAL)
 
   /** Stored IVF index — trained ONCE per (JVM, dataset) and materialized as
     * two parquet tables: the nearest-centroid corpus assignment
@@ -283,46 +288,88 @@ object Ann {
     val maxTrainKey = s.conf.getOption("graft.ann.trainSampleRows").getOrElse("")
     graft.Artifacts.stored(s, "ivf_index", d, Seq("embeddings.parquet"),
         maxTrainKey, ivfCellsConf(s)) { dir =>
-      import s.implicits._
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
       // SAMPLED TRAINING (SURVEY §5's 100 TB path, now code): above
-      // `graft.ann.trainSampleRows` the Lloyd iterations scan only a
+      // `graft.ann.trainSampleRows` the Lloyd iterations see only a
       // deterministic splitmix64 residue sample of ~that many rows — k-means
       // quality depends on the sample being representative, not exhaustive,
       // and a hash residue of vec_id is replayable and stable under corpus
       // growth (the H6 discipline). ASSIGNMENT stays full-corpus below, so
       // the stored index still covers every vector.
-      val n = Tables.embeddings(s, d).count() // parquet count-star: footers only
-      val maxTrain = s.conf.getOption("graft.ann.trainSampleRows")
-        .map(_.toLong).getOrElse(1000000L)
-      val sampled = n > maxTrain
-      val trainSrc = if (!sampled) full else {
-        val den = 1L << 20
-        val keep = (den * maxTrain / n).max(1L)
-        full.filter(pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
-          lit(den)) < lit(keep))
+      val maxTrain = trainSampleRowsConf(s)
+      val den = 1L << 20
+      def keepOf(n: Long): Long = (den * maxTrain / n).max(1L)
+      def write(cents: Array[Array[Double]], assignSrc: DataFrame): Unit =
+        writeIvf(cents, assignSrc, s"$dir/corpus", s"$dir/centroids")
+      localTrainingSet(full) match {
+        case Some(rows) =>
+          // n is the probe's length; the residue sample runs on the driver
+          val n = rows.length.toLong
+          val train = if (n <= maxTrain) rows else {
+            val keep = keepOf(n)
+            rows.filter(r =>
+              Math.floorMod(graft.plans.MixHash.splitmix64(r._1), den) < keep)
+          }
+          write(lloydTrainLocal(s, train), full)
+        case None =>
+          val n = Tables.embeddings(s, d).count() // parquet count-star: footers only
+          val sampled = n > maxTrain
+          val trainSrc = if (!sampled) full else
+            full.filter(pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
+              lit(den)) < lit(keepOf(n)))
+          // training scans the (possibly sampled) set IvfIters+1 times:
+          // persist for the build, release synchronously once both tables
+          // are written
+          val e = graft.CacheScope.scopedPersist(trainSrc)
+          // full-corpus assignment reads the cached training set when it IS
+          // the corpus; under sampling it re-scans the source once instead
+          try write(lloydTrain(e), if (sampled) full else e)
+          finally e.unpersist(blocking = true)
       }
-      // training scans the (possibly sampled) set IvfIters+1 times: persist
-      // for the build, release synchronously once both tables are written
-      val e = graft.CacheScope.scopedPersist(trainSrc)
-      // full-corpus assignment reads the cached training set when it IS the
-      // corpus; under sampling it re-scans the source once instead
-      val assignSrc = if (sampled) full else e
-      try {
-        val cents = lloydTrain(e)
-        assignSrc.withColumn("cell", nearestCellCol("v", cents))
-          .write.mode("overwrite").parquet(s"$dir/corpus")
-        writeCentroids(s, cents, s"$dir/centroids")
-      } finally e.unpersist(blocking = true)
     }
   }
 
-  /** Deterministic Lloyd training over a PERSISTED frame (vec_id, v):
-    * seeds = min-vec_id vector per residue class, [[IvfIters]] iterations
-    * with order-independent integer sums (the [[IvfScale]] exactness
-    * argument). Factored out of [[ivfIndexDir]] so the incremental index
-    * (F26) trains its BASE generation through the identical code. */
+  /** `graft.ann.trainSampleRows`: the IVF training-sample target (default
+    * 1M rows; a corpus at or below it trains on every vector). */
+  private def trainSampleRowsConf(s: SparkSession): Long = {
+    val m = s.conf.getOption("graft.ann.trainSampleRows")
+      .map(_.toLong).getOrElse(1000000L)
+    require(m > 0, s"graft.ann.trainSampleRows must be positive, got $m")
+    m
+  }
+
+  /** The size gate shared by every IVF/PQ trainer: ONE bounded collect of
+    * `train`'s (vec_id, v), at most `graft.embedding.broadcastMaxRows` + 1
+    * rows — the [[graft.operators.Graph.pageRank]] probe. When the
+    * training set fits the cap the probe IS the training collect (Some);
+    * an overflowing take is discarded (None) and the caller trains
+    * distributed, unchanged. */
+  private def localTrainingSet(
+      train: DataFrame): Option[Array[(Long, Array[Double])]] = {
+    val s = train.sparkSession
+    import s.implicits._
+    val cap = graft.dedup.Dedup.embeddingBroadcastMaxRows(s)
+    val rows = train.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+      .limit((cap + 1).toInt).collect()
+    if (rows.length <= cap) Some(rows) else None
+  }
+
+  private def requireIvfTrainingRows(n: Long): Unit =
+    require(n > 0, "IVF training set is empty: the embeddings table has no " +
+      "rows, or the graft.ann.trainSampleRows sample kept none")
+
+  /** Seed for an empty residue class (can't happen at n >= k, but keeps
+    * norms nonzero): a basis vector. */
+  private def basisSeed(i: Int, dim: Int): Array[Double] = {
+    val a = new Array[Double](dim); a(i % dim) = 1.0; a
+  }
+
+  /** Distributed Lloyd over a PERSISTED frame (vec_id, v) — the above-cap
+    * trainer of [[ivfIndexDir]] and the incremental index (F26): seeds =
+    * min-vec_id vector per residue class, [[IvfIters]] iterations with
+    * order-independent integer sums (the [[IvfScale]] exactness argument).
+    * [[lloydTrainLocal]] replays it on the driver. */
   private def lloydTrain(e: DataFrame): Array[Array[Double]] = {
     val k = ivfCellsConf(e.sparkSession)
     // deterministic seeds: min-vec_id vector per residue class
@@ -332,12 +379,9 @@ object Ann {
         Window.partitionBy(col("cls")).orderBy(col("vec_id"))))
       .filter(col("rn") === 1)
       .select(col("cls"), col("v")).collect()
+    requireIvfTrainingRows(seedRows.length)
     val dim = seedRows.head.getSeq[Double](1).length
-    var cents = Array.tabulate(k) { i =>
-      // basis-vector fallback for an empty residue class (can't happen at
-      // n >= k, but keeps norms nonzero)
-      val a = new Array[Double](dim); a(i % dim) = 1.0; a
-    }
+    var cents = Array.tabulate(k)(basisSeed(_, dim))
     seedRows.foreach(r => cents(r.getLong(0).toInt) = r.getSeq[Double](1).toArray)
     for (_ <- 1 to IvfIters) {
       val sums = e.withColumn("cell", nearestCellCol("v", cents))
@@ -358,13 +402,110 @@ object Ann {
     cents
   }
 
-  private def writeCentroids(s: SparkSession, cents: Array[Array[Double]],
-      loc: String): Unit = {
+  /** [[lloydTrain]] on the driver, over the collected training set. */
+  private def lloydTrainLocal(s: SparkSession,
+      rows: Array[(Long, Array[Double])]): Array[Array[Double]] = {
+    requireIvfTrainingRows(rows.length)
+    val k = ivfCellsConf(s)
+    val seeds = residueSeeds(rows.map(_._1), k)
+    val dim = rows.head._2.length
+    val init = Array.tabulate(k)(i =>
+      if (seeds(i) >= 0) rows(seeds(i))._2 else basisSeed(i, dim))
+    lloydLocal(rows.map(_._2), init, IvfIters, nearestCosine)
+  }
+
+  /** Per `vec_id % k` residue class, the index of its min-vec_id row (-1
+    * for an empty class): the distributed trainers' seed window. */
+  private def residueSeeds(ids: Array[Long], k: Int): Array[Int] = {
+    val best = Array.fill(k)(-1)
+    var i = 0
+    while (i < ids.length) {
+      val c = Math.floorMod(ids(i), k.toLong).toInt
+      if (best(c) < 0 || ids(i) < ids(best(c))) best(c) = i
+      i += 1
+    }
+    best
+  }
+
+  /** THE driver-local k-means kernel of both trainers (IVF and PQ) below
+    * the gate. It replays the distributed Lloyd step exactly: each point
+    * goes to `nearest`'s cell; components are rounded to the [[IvfScale]]
+    * grid by [[graft.plans.ScaledLong.scale]] (the HALF_UP rounding of
+    * Spark's `round`) and summed as longs — order-free, so the collect
+    * order cannot matter, and `addExact` fails loudly where the
+    * distributed long sum would overflow; each non-empty cell becomes
+    * sum / (IvfScale · count), the same division the distributed trainer
+    * runs on its collected sums; an empty cell keeps its old centroid. */
+  private def lloydLocal(pts: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int, nearest: Array[Array[Double]] => Array[Double] => Int)
+      : Array[Array[Double]] = {
+    val k = init.length
+    val dim = init.head.length
+    var cents = init
+    for (_ <- 1 to iters) {
+      val cellOf = nearest(cents)
+      val sums = Array.ofDim[Long](k, dim)
+      val cnt = new Array[Long](k)
+      pts.foreach { p =>
+        val c = cellOf(p)
+        val acc = sums(c)
+        cnt(c) += 1
+        var j = 0
+        while (j < dim) {
+          acc(j) = Math.addExact(acc(j), graft.plans.ScaledLong.scale(p(j), IvfScale))
+          j += 1
+        }
+      }
+      val prev = cents
+      cents = Array.tabulate(k)(c =>
+        if (cnt(c) == 0) prev(c)
+        else sums(c).map(x => x.toDouble / (IvfScale * cnt(c))))
+    }
+    cents
+  }
+
+  /** Lowest index with the best score under Spark's SQL double order
+    * (-0.0 == 0.0, NaN above every number): the tie rule of
+    * [[nearestCellCol]]'s `array_max` and [[assignPqCells]]'s `min(struct)`. */
+  private def argBest(k: Int, score: Int => Double, larger: Boolean): Int = {
+    var best = 0
+    var bs = score(0)
+    var i = 1
+    while (i < k) {
+      val sc = score(i)
+      val cmp = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(sc, bs)
+      if (if (larger) cmp > 0 else cmp < 0) { best = i; bs = sc }
+      i += 1
+    }
+    best
+  }
+
+  /** [[nearestCellCol]] on the driver: cosine argmax. */
+  private def nearestCosine(cents: Array[Array[Double]]): Array[Double] => Int = {
+    val cn = cents.map(cellNorm)
+    v => argBest(cents.length,
+      i => graft.plans.DotProduct.dot(v, cents(i)) / cn(i), larger = true)
+  }
+
+  /** [[assignPqCells]] on the driver: argmin of ‖c‖² − 2⟨v,c⟩. */
+  private def nearestL2(cents: Array[Array[Double]]): Array[Double] => Int = {
+    val cn2 = cents.map(sqNorm)
+    v => argBest(cents.length,
+      i => cn2(i) - 2.0 * graft.plans.DotProduct.dot(v, cents(i)), larger = false)
+  }
+
+  /** Write an IVF generation: `assignSrc`'s nearest-centroid assignment
+    * and the k-row centroid table. */
+  private def writeIvf(cents: Array[Array[Double]], assignSrc: DataFrame,
+      corpusLoc: String, centroidsLoc: String): Unit = {
+    val s = assignSrc.sparkSession
     import s.implicits._
+    assignSrc.withColumn("cell", nearestCellCol("v", cents))
+      .write.mode("overwrite").parquet(corpusLoc)
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell_id", "cv")
       .withColumn("cn", sqrt(graft.plans.DotProduct.dot(col("cv"), col("cv"))))
-      .write.mode("overwrite").parquet(loc)
+      .write.mode("overwrite").parquet(centroidsLoc)
   }
 
   // ------------------------------------------------------------------
@@ -400,15 +541,18 @@ object Ann {
   private def ivfIncrDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivf_incr", d, Seq("embeddings.parquet"),
         ivfCellsConf(s)) { dir =>
-      val full = withNorm(Tables.embeddings(s, d))
+      val base = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
-      val baseSet = graft.CacheScope.scopedPersist(full.filter(!ivfDeltaPred))
-      try {
-        val cents = lloydTrain(baseSet)
-        baseSet.withColumn("cell", nearestCellCol("v", cents))
-          .write.mode("overwrite").parquet(s"$dir/gen-0/corpus")
-        writeCentroids(s, cents, s"$dir/centroids")
-      } finally baseSet.unpersist(blocking = true)
+        .filter(!ivfDeltaPred)
+      def write(cents: Array[Array[Double]], assignSrc: DataFrame): Unit =
+        writeIvf(cents, assignSrc, s"$dir/gen-0/corpus", s"$dir/centroids")
+      localTrainingSet(base) match {
+        case Some(rows) => write(lloydTrainLocal(s, rows), base)
+        case None =>
+          val baseSet = graft.CacheScope.scopedPersist(base)
+          try write(lloydTrain(baseSet), baseSet)
+          finally baseSet.unpersist(blocking = true)
+      }
       // the APPEND: its input is the batch and the 16-row centroid table
       // — the base assignment is never read, so batch cost is O(|batch|)
       ivfAppendAssign(s, d, s"$dir/centroids")
@@ -481,15 +625,7 @@ object Ann {
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
-      val svb = graft.CacheScope.scopedPersist(
-        subVectors(ev.filter(!ivfDeltaPred)))
-      try {
-        val cents = pqTrain(svb)
-        val ci2 = pqCi2(cents)
-        pqCodesFrame(svb, cents, ci2)
-          .write.mode("overwrite").parquet(s"$dir/gen-0/codes")
-        writePqCodebook(s, cents, ci2, s"$dir/codebook")
-      } finally svb.unpersist(blocking = true)
+      pqBuild(ev.filter(!ivfDeltaPred), s"$dir/gen-0/codes", s"$dir/codebook")
       // the APPEND: encode ONLY the arrival batch under the stored
       // codebook — gen-0 is never read, so batch cost is O(|batch|)
       pqAppendEncode(s, d, s"$dir/codebook")
@@ -596,6 +732,10 @@ object Ann {
 
   private[graft] def ivfIndexDirForSpec(s: SparkSession, d: String): String =
     ivfIndexDir(s, d)
+  private[graft] def ivfIncrDirForSpec(s: SparkSession, d: String): String =
+    ivfIncrDir(s, d)
+  private[graft] def pqIndexDirForSpec(s: SparkSession, d: String): String =
+    pqIndexDir(s, d)
   private[graft] def ivfCandsForSpec(s: SparkSession, d: String,
       nprobe: Int): DataFrame = ivfCandsAt(s, d, nprobe)
 
@@ -979,7 +1119,7 @@ object Ann {
     import s.implicits._
     val cbDf = (for (j <- 0 until PqSubs; i <- 0 until PqK) yield {
       val c = cents(j)(i)
-      (j, i, c.toSeq, c.map(x => x * x).sum)
+      (j, i, c.toSeq, sqNorm(c))
     }).toDF("sub", "cell", "cv", "cn2")
     sv.join(broadcast(cbDf), "sub")
       .withColumn("d", col("cn2") -
@@ -1002,21 +1142,41 @@ object Ann {
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
-      // training scans the subvector frame PqIters+2 times: persist, release
-      // synchronously once both tables are written
-      val sv = graft.CacheScope.scopedPersist(subVectors(ev))
-      try {
-        val cents = pqTrain(sv)
-        val ci2 = pqCi2(cents)
-        pqCodesFrame(sv, cents, ci2)
-          .write.mode("overwrite").parquet(s"$dir/codes")
-        writePqCodebook(s, cents, ci2, s"$dir/codebook")
-      } finally sv.unpersist(blocking = true)
+      pqBuild(ev, s"$dir/codes", s"$dir/codebook")
     }
 
+  /** Train a codebook on `ev` (vec_id, v), then write ev's codes and the
+    * codebook — the build of [[pqIndexDir]] and of the incremental PQ
+    * artifact's (F27) base generation. A training set under the
+    * [[localTrainingSet]] gate trains on the driver ([[pqTrainLocal]]) and
+    * the codes write scans `ev` once more; above it, distributed training
+    * and encoding scan the subvector frame PqIters+2 times, so it is
+    * persisted and released synchronously once both tables are written. */
+  private def pqBuild(ev: DataFrame, codesLoc: String, cbLoc: String): Unit = {
+    def write(cents: Array[Array[Array[Double]]], sv: DataFrame): Unit = {
+      val ci2 = pqCi2(cents)
+      pqCodesFrame(sv, cents, ci2).write.mode("overwrite").parquet(codesLoc)
+      writePqCodebook(ev.sparkSession, cents, ci2, cbLoc)
+    }
+    localTrainingSet(ev) match {
+      case Some(rows) => write(pqTrainLocal(rows), subVectors(ev))
+      case None =>
+        val sv = graft.CacheScope.scopedPersist(subVectors(ev))
+        try write(pqTrain(sv), sv) finally sv.unpersist(blocking = true)
+    }
+  }
+
+  /** The SQL oracle has no seed fallback for an empty residue class, so a
+    * sub-PqK corpus must fail LOUDLY rather than as a confusing
+    * cross-engine parity mismatch downstream. */
+  private def requirePqSeeds(got: Int): Unit =
+    require(got == PqSubs * PqK,
+      s"PQ training needs >= $PqK vectors (every vec_id % $PqK residue " +
+        s"class non-empty); got $got/${PqSubs * PqK} seeds")
+
   /** Deterministic per-subspace Lloyd over a PERSISTED subvector frame —
-    * factored out of [[pqIndexDir]] so the incremental PQ artifact (F27)
-    * trains its base codebook through the identical code. */
+    * the above-cap trainer of [[pqBuild]]; [[pqTrainLocal]] replays it on
+    * the driver. */
   private def pqTrain(sv: DataFrame): Array[Array[Array[Double]]] = {
     // deterministic seeds: min-vec_id subvector per (sub, residue class)
     val seedRows = sv
@@ -1025,12 +1185,7 @@ object Ann {
         Window.partitionBy(col("sub"), col("cls")).orderBy(col("vec_id"))))
       .filter(col("rn") === 1)
       .select(col("sub"), col("cls"), col("sv")).collect()
-    // the SQL oracle has no seed fallback for an empty residue class, so
-    // a sub-PqK corpus must fail LOUDLY here rather than as a confusing
-    // cross-engine parity mismatch downstream
-    require(seedRows.length == PqSubs * PqK,
-      s"PQ training needs >= $PqK vectors (every vec_id % $PqK residue " +
-        s"class non-empty); got ${seedRows.length}/${PqSubs * PqK} seeds")
+    requirePqSeeds(seedRows.length)
     var cents = Array.ofDim[Array[Double]](PqSubs, PqK)
     seedRows.foreach(r =>
       cents(r.getInt(0))(r.getLong(1).toInt) = r.getSeq[Double](2).toArray)
@@ -1053,11 +1208,23 @@ object Ann {
     cents
   }
 
+  /** [[pqTrain]] on the driver: per subspace, [[lloydLocal]] over the
+    * collected vectors' subvectors from the same residue-class seeds. */
+  private def pqTrainLocal(
+      rows: Array[(Long, Array[Double])]): Array[Array[Array[Double]]] = {
+    val seeds = residueSeeds(rows.map(_._1), PqK)
+    requirePqSeeds(seeds.count(_ >= 0) * PqSubs)
+    Array.tabulate(PqSubs) { j =>
+      val sv = rows.map(_._2.slice(j * PqSubDim, (j + 1) * PqSubDim))
+      lloydLocal(sv, seeds.map(sv), PqIters, nearestL2)
+    }
+  }
+
   /** Fixed-point codeword squared norms (HALF_UP away-from-zero, the
     * SQL round semantics — NOT Scala math.round, which rounds negative
     * halves toward +inf; ci2 is non-negative but the rule is uniform). */
   private def pqCi2(cents: Array[Array[Array[Double]]]): Array[Array[Long]] =
-    cents.map(_.map(c => BigDecimal(c.map(x => x * x).sum * PqScale)
+    cents.map(_.map(c => BigDecimal(sqNorm(c) * PqScale)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
 
   /** ENCODE a subvector frame under a codebook: (vec_id, codes, n2i) —
@@ -2407,10 +2574,7 @@ object Ann {
         (Long, Array[Double], Double, Int), (Long, Array[Double], Double, Int)](
       e, qs, _._1, _._1,
       score = (q, c) => {
-        var acc = 0.0
-        var j = 0
-        while (j < q._2.length) { acc += q._2(j) * c._2(j); j += 1 }
-        BigDecimal(acc / (q._3 * c._3))
+        BigDecimal(graft.plans.DotProduct.dot(q._2, c._2) / (q._3 * c._3))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       },
       r = TopK, desc = true,

@@ -184,10 +184,7 @@ object Pca {
       .flatMap { case (id, vec) =>
         val r = bc.value
         (0 until pd).iterator.map { j =>
-          val row = r(j)
-          var acc = 0.0
-          var i = 0
-          while (i < vec.length) { acc += vec(i) * row(i); i += 1 }
+          val acc = graft.plans.DotProduct.dot(vec, r(j))
           (id, j,
             BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
         }
@@ -226,10 +223,7 @@ object Pca {
       .flatMap { case (id, vec) =>
         val (r, w) = bc.value
         (0 until pd).iterator.map { j =>
-          val row = r(j)
-          var acc = 0.0
-          var i = 0
-          while (i < vec.length) { acc += vec(i) * row(i); i += 1 }
+          val acc = graft.plans.DotProduct.dot(vec, r(j))
           (id, j,
             BigDecimal(acc * w(j)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
         }
@@ -255,11 +249,7 @@ object Pca {
         val out = new Array[Double](r.length)
         var j = 0
         while (j < r.length) {
-          val row = r(j)
-          var acc = 0.0
-          var i = 0
-          while (i < vec.length) { acc += vec(i) * row(i); i += 1 }
-          out(j) = acc
+          out(j) = graft.plans.DotProduct.dot(vec, r(j))
           j += 1
         }
         (id, out)
