@@ -3,11 +3,14 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Content fingerprinting for the per-JVM stored-artifact caches (the F3/F5
-  * ANN indexes, the B57 edge table, the E7/E8 dedup artifacts, the events
-  * ts-type probe). Keying those caches on the dataset *path* alone serves
+  * ANN indexes, the B57 edge table, the E7/E8 dedup artifacts, the resolved
+  * parquet inputs). Keying those caches on the dataset *path* alone serves
   * stale answers when the files at that path are regenerated inside one
   * JVM — a long-lived session would keep routing queries through an index
   * built from the old corpus. The fingerprint is METADATA-ONLY (one
@@ -223,17 +226,68 @@ object Artifacts {
     dropped.toSeq
   }
 
-  /** Generic build-once-per-(key, fingerprint) value cache — the
-    * [[stored]] pattern for non-path values (e.g. the events
-    * ts-type probe). One entry per key: a moved fingerprint REPLACES the
+  /** Generic build-once-per-(key, token) value cache — the [[stored]]
+    * pattern for non-path values (the events era check, the resolved
+    * parquet relations). One entry per key: a moved token REPLACES the
     * stale entry instead of accumulating beside it.
+    *
+    * `build` runs outside any map lock: it may run Spark jobs or read
+    * another entry of the same map, and a nested `compute` on one map
+    * throws "Recursive update". Two threads missing at once both build;
+    * the first to install wins and the other returns its value.
     */
-  def cachedValue[V](
-      map: ConcurrentHashMap[String, (String, V)], key: String, fp: String)(
-      build: => V): V =
-    map.compute(key, (_, old) =>
-      if (old != null && old._1 == fp) old else (fp, build)
-    )._2
+  def cachedValue[T, V](map: ConcurrentHashMap[String, (T, V)], key: String,
+      token: T)(build: => V): V = {
+    val hit = map.get(key)
+    if (hit != null && hit._1 == token) hit._2
+    else {
+      val fresh = (token, build)
+      map.compute(key, (_, cur) =>
+        if (cur != null && cur._1 == token) cur else fresh)._2
+    }
+  }
+
+  /** What a resolved parquet relation depends on: the session (by
+    * identity — `SparkSession` keeps `Object.equals`), the input's
+    * fingerprint, and the session confs that steer schema inference. */
+  private final case class ReadToken(
+      session: SparkSession, fingerprint: String, confs: Map[String, String])
+
+  private val relations =
+    new ConcurrentHashMap[String, (ReadToken, LogicalPlan with MultiInstanceRelation)]()
+
+  private def inferenceConfs(s: SparkSession): Map[String, String] =
+    s.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+
+  /** `s.read.parquet(path)`, resolved once per (session, fingerprint,
+    * inference confs). Each uncached read lists the files and runs a
+    * one-stage Spark job to infer the schema from the footers; a hit
+    * reuses the resolved relation (file index and schema) and costs one
+    * fingerprint listing. Every call returns a new frame over fresh
+    * attribute ids, so a table read twice in one plan self-joins like two
+    * uncached reads. One entry per path: a new session, a moved
+    * fingerprint or a flipped conf re-reads and replaces it.
+    *
+    * For source tables and [[stored]] generation directories. A per-call
+    * scratch output is rewritten on every call; read it directly.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    parquetFp(s, path, fingerprint(s, path))
+
+  /** [[parquet]] under a fingerprint of `path` the caller already holds. */
+  private[graft] def parquetFp(s: SparkSession, path: String, fp: String): DataFrame = {
+    val plan = cachedValue(relations, path, ReadToken(s, fp, inferenceConfs(s))) {
+      ColumnBridge.planOf(s.read.parquet(path)) match {
+        case r: LogicalPlan with MultiInstanceRelation => r
+        case other => throw new IllegalStateException(
+          s"parquet read of $path resolved to ${other.nodeName}, not a relation")
+      }
+    }
+    ColumnBridge.ofRows(s, plan.newInstance())
+  }
 
   /** Fingerprint ledger for warehouse-TABLE artifacts (E7's corpus index,
     * B22's bucketed facts): those sites gate the build on

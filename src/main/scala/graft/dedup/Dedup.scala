@@ -372,7 +372,7 @@ object Dedup {
   }
 
   private[graft] def pairsParquet(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pairsArtifact(s, d)._2)
+    graft.Artifacts.parquet(s, pairsArtifact(s, d)._2)
 
   def clusterPairs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("doc_id"))
@@ -397,7 +397,7 @@ object Dedup {
     // checkpoint blocks to manage. Above the threshold (the 100 TB shape)
     // the distributed path below runs.
     val (ccFp, pairsLoc) = pairsArtifact(s, d)
-    val pairsPq = s.read.parquet(pairsLoc).select(col("doc_a"), col("doc_b"))
+    val pairsPq = graft.Artifacts.parquet(s, pairsLoc).select(col("doc_a"), col("doc_b"))
     val nEdges = pairsPq.count() // parquet count-star: footers only
     if (nEdges <= ccLocalMaxEdges(s)) {
       val edges = pairsPq.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -418,7 +418,7 @@ object Dedup {
     //
     // The converged labels parquet is a stored artifact keyed on the
     // fingerprint the PAIRS were resolved under (see [[pairsArtifact]]).
-    s.read.parquet(graft.Artifacts.storedFp(s, "dedup_labels", d, ccFp) { dir =>
+    graft.Artifacts.parquet(s, graft.Artifacts.storedFp(s, "dedup_labels", d, ccFp) { dir =>
       propagateMinLabels(s, pairsPq.toDF("src", "dst"), dir)
     })
   }

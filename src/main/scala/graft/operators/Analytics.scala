@@ -373,7 +373,7 @@ object Analytics {
   }
 
   def layoutZorderScan(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(zorderLayoutDir(s, d))
+    graft.Artifacts.parquet(s, zorderLayoutDir(s, d))
       .filter(col("o_custkey").between(ZscanCustLo, ZscanCustHi) &&
         col("o_orderdate").between(lit(ZscanDateLo).cast("date"),
           lit(ZscanDateHi).cast("date")))

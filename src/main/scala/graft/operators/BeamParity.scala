@@ -438,7 +438,7 @@ object BeamParity {
       val binDir = writeBinaryDocs(s, d)
       compactBinaryDir(s, binDir, dir, BinCompactTargetBytes)
     }
-    s.read.parquet(loc).select(col("doc_id"), col("payload"))
+    graft.Artifacts.parquet(s, loc).select(col("doc_id"), col("payload"))
   }
 
   /** A28 — Beam's Partition transform through the Pipe DSL: route users

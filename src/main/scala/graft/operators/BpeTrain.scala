@@ -114,7 +114,7 @@ object BpeTrain {
   /** The learned rule table, read back from the stored artifact (K rows —
     * bounded driver state by construction). */
   private[graft] def learnedRules(s: SparkSession, d: String): (Seq[Int], Seq[Int], Seq[Int]) = {
-    val rows = s.read.parquet(rulesLocation(s, d))
+    val rows = graft.Artifacts.parquet(s, rulesLocation(s, d))
       .orderBy(col("round")).collect()
     (rows.map(_.getAs[Long]("sym_a").toInt).toSeq,
       rows.map(_.getAs[Long]("sym_b").toInt).toSeq,
@@ -130,7 +130,7 @@ object BpeTrain {
     * won. Reads the STORED artifact — the gate proves the parquet
     * round-trip as well as the training. */
   def trainMerges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(rulesLocation(s, d))
+    graft.Artifacts.parquet(s, rulesLocation(s, d))
       .select(col("round"), col("sym_a"), col("sym_b"), col("merged"), col("n_pairs"))
 
   /** H34 — per-document token counts under the LEARNED table (H18b's
@@ -394,7 +394,7 @@ object BpeTrain {
     }
 
   private[graft] def learnedRulesPretok(s: SparkSession, d: String): (Seq[Int], Seq[Int], Seq[Int]) = {
-    val rows = s.read.parquet(pretokRulesLocation(s, d))
+    val rows = graft.Artifacts.parquet(s, pretokRulesLocation(s, d))
       .orderBy(col("round")).collect()
     (rows.map(_.getAs[Long]("sym_a").toInt).toSeq,
       rows.map(_.getAs[Long]("sym_b").toInt).toSeq,
@@ -407,7 +407,7 @@ object BpeTrain {
     * regex pre-tokens). The spec shows the learned rules genuinely differ
     * from H33's boundary-free table. */
   def trainMergesPretok(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pretokRulesLocation(s, d))
+    graft.Artifacts.parquet(s, pretokRulesLocation(s, d))
       .select(col("round"), col("sym_a"), col("sym_b"), col("merged"), col("n_pairs"))
 
   /** H42 — tokenizer fertility RE-DERIVED under the pre-tokenized learned

@@ -960,7 +960,7 @@ object CorpusClean {
     * scoped persist for the waterfill tail). */
   private[graft] def prepareIncrementalTok(s: SparkSession, d: String): DataFrame = {
     val (ra, rb, rm) = BpeTrain.learnedRules(s, d)
-    val evalGrams = s.read.parquet(evalGramsLocation(s, d))
+    val evalGrams = graft.Artifacts.parquet(s, evalGramsLocation(s, d))
     val batch = Tables.documents(s, d)
       .filter(graft.dedup.Dedup.incrementalBatchPredicate)
     val gated = batch

@@ -33,7 +33,7 @@ object Graph {
     * derived edges, so it shapes the artifact too.
     */
   private def edges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graft.Artifacts.stored(s, "graph_edges", d,
+    graft.Artifacts.parquet(s, graft.Artifacts.stored(s, "graph_edges", d,
         Seq("lineitem.parquet"), TpchMore.basketMaxItems(s)) { dir =>
       val pairs = TpchMore.coPurchasePairs(s, d, PrMinSupport)
       pairs.select(col("pa").as("src"), col("pb").as("dst"))

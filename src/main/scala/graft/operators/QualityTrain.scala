@@ -162,7 +162,7 @@ object QualityTrain {
 
   /** Final learned weight vector, read back from the stored artifact. */
   private[graft] def learnedWeights(s: SparkSession, d: String): Array[Long] = {
-    val last = s.read.parquet(trajLocation(s, d))
+    val last = graft.Artifacts.parquet(s, trajLocation(s, d))
       .orderBy(col("round").desc).head()
     Array.tabulate(NFeat)(j => last.getAs[Long](s"w$j"))
   }
@@ -175,7 +175,7 @@ object QualityTrain {
     * itself is the gate: 48 rounds of gradient sums and preconditioned
     * updates must land on identical integers in both engines. */
   def qualityWeights(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(trajLocation(s, d))
+    graft.Artifacts.parquet(s, trajLocation(s, d))
       .select(col("round"), col("w0"), col("w1"), col("w2"), col("w3"),
         col("w4"), col("w5"))
 

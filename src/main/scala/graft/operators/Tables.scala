@@ -6,13 +6,15 @@ import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the star schema + LLM-pipeline tables.
   *
-  * Plain `spark.read.parquet` so Catalyst owns column pruning and filter
-  * pushdown — every query's scan should show `PushedFilters`/`ReadSchema`
-  * limited to what the plan needs.
+  * Each read goes through [[graft.Artifacts.parquet]], which resolves a
+  * path's schema and file listing once per session and fingerprint; the
+  * returned frame is a plain parquet scan, so Catalyst owns column pruning
+  * and filter pushdown — every query's scan should show
+  * `PushedFilters`/`ReadSchema` limited to what the plan needs.
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.Artifacts.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -22,34 +24,18 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
 
-  /** Physical-type probe for `events.ts`, cached per path (one parquet
-    * footer read). `ts` may be timestamp[us/ms] with or without UTC
-    * adjustment (TIMESTAMP or TIMESTAMP_NTZ on read). A parquet
-    * TIMESTAMP(NANOS) `ts` fails here with Spark's own "Illegal Parquet
-    * type" error: reading it would need the legacy `nanosAsLong` conf, which
-    * is session-wide. A source layer hardcoding one encoding breaks every
-    * events consumer when the file flips (round 6: 21 operators), so the
-    * reader probes and branches instead.
-    *
-    * Cached per path with the metadata fingerprint as the staleness token
-    * ([[graft.Artifacts.cachedValue]]): regenerating the file in place
-    * (even with a different ts encoding) takes a fresh probe instead of the
-    * stale branch, a moved fingerprint REPLACES the old entry (no
-    * unbounded growth), and [[events]] computes the fingerprint once per
-    * call and shares it with the era probe — one listing per events() call.
+  /** Physical type of `events.ts`, read off the resolved events frame.
+    * `ts` may be timestamp[us/ms] with or without UTC adjustment
+    * (TIMESTAMP or TIMESTAMP_NTZ on read). A parquet TIMESTAMP(NANOS) `ts`
+    * fails here with Spark's own "Illegal Parquet type" error: reading it
+    * would need the legacy `nanosAsLong` conf, which is session-wide. A
+    * source layer hardcoding one encoding breaks every events consumer
+    * when the file flips (round 6: 21 operators), so the reader probes and
+    * branches instead. The resolved frame is keyed on the file's
+    * fingerprint, so an in-place regeneration is probed afresh.
     */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataType)]()
-
   def eventsTsType(s: SparkSession, d: String): DataType =
-    eventsTsTypeFp(s, d, graft.Artifacts.fingerprint(s, s"$d/events.parquet"))
-
-  private def eventsTsTypeFp(s: SparkSession, d: String, fp: String): DataType = {
-    val path = s"$d/events.parquet"
-    graft.Artifacts.cachedValue(tsTypeCache, path, fp) {
-      s.read.parquet(path).schema("ts").dataType
-    }
-  }
+    t(s, d, "events").schema("ts").dataType
 
   /** Data-era sanity gate, cached per path (one column-pruned scan per JVM):
     * after normalization, min(ts) must be a plausible event time. A
@@ -88,17 +74,18 @@ object Tables {
     * entry point pins `spark.sql.session.timeZone=UTC`, so the NTZ→LTZ cast
     * is wall-clock-identical to DuckDB's naive read of the same file).
     */
-  private def eventsNormalizedFp(s: SparkSession, d: String, fp: String): DataFrame =
-    eventsTsTypeFp(s, d, fp) match {
-      case TimestampType    => t(s, d, "events")
-      case TimestampNTZType => t(s, d, "events")
-        .withColumn("ts", col("ts").cast(TimestampType))
+  private def eventsNormalizedFp(s: SparkSession, d: String, fp: String): DataFrame = {
+    val raw = graft.Artifacts.parquetFp(s, s"$d/events.parquet", fp)
+    raw.schema("ts").dataType match {
+      case TimestampType    => raw
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case other => throw new IllegalStateException(
         s"events.ts has unsupported physical type $other — expected timestamp[us/ms]")
     }
+  }
 
   def events(s: SparkSession, d: String): DataFrame = {
-    // ONE metadata listing per call, shared by the ts-type and era probes
+    // ONE metadata listing per call, shared by the read and the era check
     val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
     val df = eventsNormalizedFp(s, d, fp)
     assertEventsEraFp(s, d, fp)

@@ -173,7 +173,7 @@ object UlmTrain {
   /** The FINAL vocabulary (survivors of round [[Rounds]]), in priority
     * order — ≤ SeedN rows, bounded driver state. */
   private[graft] def learnedVocab(s: SparkSession, d: String): Seq[(Long, String)] =
-    s.read.parquet(trajLocation(s, d))
+    graft.Artifacts.parquet(s, trajLocation(s, d))
       .filter(col("round") === Rounds && col("kept") === 1L)
       .orderBy(col("pid")).collect()
       .map(r => (r.getAs[Long]("pid"), r.getAs[String]("piece"))).toSeq
@@ -186,7 +186,7 @@ object UlmTrain {
     * count under that round's segmentation and whether it survived the
     * prune. The training replay IS the gate. */
   def ulmTrainVocab(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(trajLocation(s, d))
+    graft.Artifacts.parquet(s, trajLocation(s, d))
       .select(col("round"), col("pid"), col("piece"), col("usage"), col("kept"))
 
   /** H52 — H30's fertility report re-derived under the learned unigram-LM

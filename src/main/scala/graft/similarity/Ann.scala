@@ -565,7 +565,7 @@ object Ann {
     * once and the stored corpus never. */
   private def ivfAppendAssign(s: SparkSession, d: String,
       centroidsLoc: String): DataFrame = {
-    val cents = s.read.parquet(centroidsLoc).collect()
+    val cents = graft.Artifacts.parquet(s, centroidsLoc).collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     withNorm(Tables.embeddings(s, d))
       .select(col("vec_id"), col("v"), col("nrm"))
@@ -581,7 +581,7 @@ object Ann {
     * of the whole index, and the retrain flag. Integer throughout. */
   def ivfAppendReport(s: SparkSession, d: String): DataFrame = {
     val dir = ivfIncrDir(s, d)
-    def counts(gen: String, as: String) = s.read.parquet(s"$dir/$gen/corpus")
+    def counts(gen: String, as: String) = graft.Artifacts.parquet(s, s"$dir/$gen/corpus")
       .groupBy(col("cell").cast("int").as("cell"))
       .agg(count(lit(1)).as(as))
     val per = counts("gen-0", "n_base")
@@ -650,7 +650,7 @@ object Ann {
     * streaming ingest (collected ONCE, closure-captured per stream). */
   private def readPqCodebookArrays(s: SparkSession, cbLoc: String)
       : (Array[Array[Array[Double]]], Array[Array[Long]]) = {
-    val rows = s.read.parquet(cbLoc).collect()
+    val rows = graft.Artifacts.parquet(s, cbLoc).collect()
     val cents = Array.ofDim[Array[Double]](PqSubs, PqK)
     val ci2 = Array.ofDim[Long](PqSubs, PqK)
     rows.foreach { r =>
@@ -670,12 +670,12 @@ object Ann {
     * over the STORED codes + codebook. */
   def pqAppendReport(s: SparkSession, d: String): DataFrame = {
     val dir = pqIncrDir(s, d)
-    val cb = s.read.parquet(s"$dir/codebook")
+    val cb = graft.Artifacts.parquet(s, s"$dir/codebook")
     val ev = Tables.embeddings(s, d)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
     def mse(gen: String, nAs: String, mseAs: String): DataFrame = {
-      val assigned = s.read.parquet(s"$dir/$gen/codes")
+      val assigned = graft.Artifacts.parquet(s, s"$dir/$gen/codes")
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "cell")))
       subVectors(ev).join(assigned, Seq("vec_id", "sub"))
         .join(broadcast(cb), Seq("sub", "cell"))
@@ -719,8 +719,8 @@ object Ann {
     * routed cells, unranked (callers rank-cut or aggregate). */
   private def ivfCandsAt(s: SparkSession, d: String, nprobe: Int): DataFrame = {
     val dir = ivfIndexDir(s, d)
-    val corpus = s.read.parquet(s"$dir/corpus")
-    val routed = ivfRouted(corpus, s.read.parquet(s"$dir/centroids"), nprobe)
+    val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
+    val routed = ivfRouted(corpus, graft.Artifacts.parquet(s, s"$dir/centroids"), nprobe)
     corpus.join(broadcast(routed),
         col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
       .withColumn("rcos", round(dotCol("qv", "v") / (col("qn") * col("nrm")), 6))
@@ -800,7 +800,7 @@ object Ann {
   }
 
   private def int8Index(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(
+    graft.Artifacts.parquet(s,
       graft.Artifacts.stored(s, "int8_codes", d, Seq("embeddings.parquet")) { dir =>
         quantizedCodes(Tables.embeddings(s, d), Nil)
           .write.mode("overwrite").parquet(dir)
@@ -1037,7 +1037,7 @@ object Ann {
     }
     // partition-column read-back: label comes back via partition inference;
     // pin the int type so the gate schema matches the unpartitioned source
-    s.read.parquet(path).withColumn("label", col("label").cast("int"))
+    graft.Artifacts.parquet(s, path).withColumn("label", col("label").cast("int"))
   }
 
   /** F9 — INDEX-BACKED filtered vector search (the F8 semantics on the F5/F7
@@ -1266,10 +1266,10 @@ object Ann {
     */
   def pqDistortionReport(s: SparkSession, d: String): DataFrame = {
     val dir = pqIndexDir(s, d)
-    val cb = s.read.parquet(s"$dir/codebook")
+    val cb = graft.Artifacts.parquet(s, s"$dir/codebook")
     val ev = Tables.embeddings(s, d)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-    val assigned = s.read.parquet(s"$dir/codes")
+    val assigned = graft.Artifacts.parquet(s, s"$dir/codes")
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "cell")))
     subVectors(ev).join(assigned, Seq("vec_id", "sub"))
       .join(broadcast(cb), Seq("sub", "cell"))
@@ -1365,7 +1365,7 @@ object Ann {
     * (qid, dt[PqSubs*PqK], qn) — shared by F10 and the F15 IVFPQ cascade
     * so the ADC arithmetic exists once. */
   private def pqQueryTables(s: SparkSession, d: String, pqDir: String): DataFrame = {
-    val cb = s.read.parquet(s"$pqDir/codebook")
+    val cb = graft.Artifacts.parquet(s, s"$pqDir/codebook")
     val ev = withNorm(Tables.embeddings(s, d))
       .select(col("vec_id"), col("v"), col("nrm"))
     subVectors(ev.filter(col("vec_id") < NumQueries))
@@ -1394,7 +1394,7 @@ object Ann {
   def pqTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dir = pqIndexDir(s, d)
-    val codes = s.read.parquet(s"$dir/codes")
+    val codes = graft.Artifacts.parquet(s, s"$dir/codes")
     // per-query ADC table: PqSubs*PqK (= 512) fixed-point entries, (sub, cell)-ordered
     val qdt = pqQueryTables(s, d, dir)
     // ADC: PqSubs (= 16) lookups + integer adds per candidate — the point
@@ -1445,9 +1445,9 @@ object Ann {
   private def ivfpqIndexDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_postings", d, Seq("embeddings.parquet"),
         ivfCellsConf(s)) { dir =>
-      val cells = s.read.parquet(s"${ivfIndexDir(s, d)}/corpus")
+      val cells = graft.Artifacts.parquet(s, s"${ivfIndexDir(s, d)}/corpus")
         .select(col("vec_id"), col("cell"))
-      s.read.parquet(s"${pqIndexDir(s, d)}/codes")
+      graft.Artifacts.parquet(s, s"${pqIndexDir(s, d)}/codes")
         .join(cells, "vec_id")
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
     }
@@ -1460,7 +1460,8 @@ object Ann {
     // definition with F3); the routed set is queries×nprobe rows — a
     // bounded collect by construction (the query-block discipline)
     val routedRows = ivfRouted(
-      s.read.parquet(s"$ivfDir/corpus"), s.read.parquet(s"$ivfDir/centroids"),
+      graft.Artifacts.parquet(s, s"$ivfDir/corpus"),
+      graft.Artifacts.parquet(s, s"$ivfDir/centroids"),
       IvfPqNprobe)
       .select(col("qid"), col("qcell")).collect()
     val cellsOf = routedRows.groupBy(_.getLong(0))
@@ -1474,7 +1475,7 @@ object Ann {
     // postings scan: the isin filter prunes non-probed cell partitions at
     // plan time (directory pruning on the partitionBy layout); the admit
     // predicate scopes each query to ITS cells within the probed union
-    val postings = s.read.parquet(ivfpqIndexDir(s, d))
+    val postings = graft.Artifacts.parquet(s, ivfpqIndexDir(s, d))
       .filter(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), col("codes"), col("n2i"), col("cell").cast("int"))
       .as[(Long, Array[Int], Long, Int)]
@@ -1515,9 +1516,9 @@ object Ann {
   private def ivfpqIncrDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_incr", d, Seq("embeddings.parquet"),
         ivfCellsConf(s)) { dir =>
-      val cells0 = s.read.parquet(s"${ivfIncrDir(s, d)}/gen-0/corpus")
+      val cells0 = graft.Artifacts.parquet(s, s"${ivfIncrDir(s, d)}/gen-0/corpus")
         .select(col("vec_id"), col("cell"))
-      s.read.parquet(s"${pqIncrDir(s, d)}/gen-0/codes")
+      graft.Artifacts.parquet(s, s"${pqIncrDir(s, d)}/gen-0/codes")
         .join(cells0, "vec_id")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/gen-0/postings")
@@ -1547,8 +1548,8 @@ object Ann {
   def ivfpqAppendTopK(s: SparkSession, d: String): DataFrame = {
     val pdir = ivfpqIncrDir(s, d)
     ivfpqIncrServe(s, d,
-      s.read.parquet(s"$pdir/gen-0/postings")
-        .unionByName(s.read.parquet(s"$pdir/gen-1/postings")))
+      graft.Artifacts.parquet(s, s"$pdir/gen-0/postings")
+        .unionByName(graft.Artifacts.parquet(s, s"$pdir/gen-1/postings")))
   }
 
   /** The one incremental-store serve definition — F15's cascade over a
@@ -1564,7 +1565,7 @@ object Ann {
     // under the stored incremental centroids — queries×nprobe rows
     val full = withNorm(Tables.embeddings(s, d))
       .select(col("vec_id"), col("v"), col("nrm"))
-    val routedRows = ivfRouted(full, s.read.parquet(s"$ivfDir/centroids"),
+    val routedRows = ivfRouted(full, graft.Artifacts.parquet(s, s"$ivfDir/centroids"),
         IvfPqNprobe)
       .select(col("qid"), col("qcell")).collect()
     val cellsOf = routedRows.groupBy(_.getLong(0))
@@ -1651,9 +1652,9 @@ object Ann {
       val flagged = stats.filter(_.getLong(6) == 1L).map(_.getInt(0)).toSeq
       // merged live postings for the flagged cells ONLY — the rewrite
       // cost tracks the dirty set, not the index
-      val tomb = s.read.parquet(s"$dir/tombstones")
-      s.read.parquet(s"$store/gen-0/postings")
-        .unionByName(s.read.parquet(s"$store/gen-1/postings"))
+      val tomb = graft.Artifacts.parquet(s, s"$dir/tombstones")
+      graft.Artifacts.parquet(s, s"$store/gen-0/postings")
+        .unionByName(graft.Artifacts.parquet(s, s"$store/gen-1/postings"))
         .filter(col("cell").isin(flagged: _*))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
@@ -1676,9 +1677,9 @@ object Ann {
     * compact flag. Integer throughout. */
   private def lifecycleStats(s: SparkSession, tombLoc: String,
       store: String): DataFrame = {
-    val tomb = s.read.parquet(tombLoc)
+    val tomb = graft.Artifacts.parquet(s, tombLoc)
     def counts(gen: String, as: String, deadAs: String) =
-      s.read.parquet(s"$store/$gen/postings")
+      graft.Artifacts.parquet(s, s"$store/$gen/postings")
         .join(broadcast(tomb.withColumn("dead", lit(1L))), Seq("vec_id"), "left")
         .groupBy(col("cell").cast("int").as("cell"))
         .agg(count(lit(1)).as(as), sum(coalesce(col("dead"), lit(0L))).as(deadAs))
@@ -1704,10 +1705,10 @@ object Ann {
     * log lands, with zero index rewrite. */
   def ivfpqDeleteTopK(s: SparkSession, d: String): DataFrame = {
     val pdir = ivfpqIncrDir(s, d)
-    val tomb = s.read.parquet(s"${lifecycleDir(s, d)}/tombstones")
+    val tomb = graft.Artifacts.parquet(s, s"${lifecycleDir(s, d)}/tombstones")
     ivfpqIncrServe(s, d,
-      s.read.parquet(s"$pdir/gen-0/postings")
-        .unionByName(s.read.parquet(s"$pdir/gen-1/postings"))
+      graft.Artifacts.parquet(s, s"$pdir/gen-0/postings")
+        .unionByName(graft.Artifacts.parquet(s, s"$pdir/gen-1/postings"))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"))
   }
 
@@ -1733,9 +1734,9 @@ object Ann {
     val kinds = lines.map { l => val a = l.split('\t'); (a(0).toInt, a(1)) }
     val newCells = kinds.collect { case (c, "new") => c }
     val refCells = kinds.collect { case (c, "ref") => c }
-    val tomb = s.read.parquet(s"$lc/tombstones")
-    val refPart = s.read.parquet(s"$store/gen-0/postings")
-      .unionByName(s.read.parquet(s"$store/gen-1/postings"))
+    val tomb = graft.Artifacts.parquet(s, s"$lc/tombstones")
+    val refPart = graft.Artifacts.parquet(s, s"$store/gen-0/postings")
+      .unionByName(graft.Artifacts.parquet(s, s"$store/gen-1/postings"))
       .filter(col("cell").isin(refCells: _*))
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
     // a fully-clean store compacts nothing — cells/ then has no parquet
@@ -1743,7 +1744,7 @@ object Ann {
     val merged =
       if (newCells.isEmpty) refPart
       else refPart.unionByName(
-        s.read.parquet(s"$lc/cells").filter(col("cell").isin(newCells: _*)))
+        graft.Artifacts.parquet(s, s"$lc/cells").filter(col("cell").isin(newCells: _*)))
     ivfpqIncrServe(s, d, merged)
   }
 
@@ -1795,7 +1796,7 @@ object Ann {
     import org.apache.spark.sql.streaming.Trigger
     val fix = ingestFixtureDir(s, d)
     val (cb, ci2) = readPqCodebookArrays(s, s"${pqIncrDir(s, d)}/codebook")
-    val cents = s.read.parquet(s"${ivfIncrDir(s, d)}/centroids").collect()
+    val cents = graft.Artifacts.parquet(s, s"${ivfIncrDir(s, d)}/centroids").collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     val q = s.readStream
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
@@ -1836,14 +1837,14 @@ object Ann {
       .filter(_.getName.startsWith("gen-s"))
       .sortBy(_.getName.stripPrefix("gen-s").toLong).map(_.toString)
     require(gens.nonEmpty, s"no streamed generations under $dir")
-    gens.map(g => s.read.parquet(s"$g/postings")).reduce(_.unionByName(_))
+    gens.map(g => graft.Artifacts.parquet(s, s"$g/postings")).reduce(_.unionByName(_))
   }
 
   /** The F28 cascade over base + STREAMED generations — the spec pins it
     * bit-identical to the batch append's serve ([[ivfpqAppendTopK]]). */
   private[graft] def streamedServeForSpec(s: SparkSession, d: String): DataFrame =
     ivfpqIncrServe(s, d,
-      s.read.parquet(s"${ivfpqIncrDir(s, d)}/gen-0/postings")
+      graft.Artifacts.parquet(s, s"${ivfpqIncrDir(s, d)}/gen-0/postings")
         .unionByName(streamedPostings(s, d)))
 
   /** C39's gated frame: per-cell postings balance of the streamed store —
@@ -1855,7 +1856,7 @@ object Ann {
     * replay idempotence, serve equivalence with the batch append) are
     * spec-pinned — the C37/C38 division of labor. */
   def streamingIndexIngest(s: SparkSession, d: String): DataFrame = {
-    val base = s.read.parquet(s"${ivfpqIncrDir(s, d)}/gen-0/postings")
+    val base = graft.Artifacts.parquet(s, s"${ivfpqIncrDir(s, d)}/gen-0/postings")
     def counts(df: DataFrame, as: String) = df
       .groupBy(col("cell").cast("int").as("cell"))
       .agg(count(lit(1)).as(as))
@@ -1895,10 +1896,10 @@ object Ann {
     // outright). Persisted across the sweep's 8 consuming subtrees.
     val maxNp = RecallCurveNprobes.max
     val dir = ivfIndexDir(s, d)
-    val corpus = s.read.parquet(s"$dir/corpus")
+    val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
     val routed = corpus.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      .join(broadcast(s.read.parquet(s"$dir/centroids")))
+      .join(broadcast(graft.Artifacts.parquet(s, s"$dir/centroids")))
       .withColumn("ccos", dotCol("qv", "cv") / (col("qn") * col("cn")))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("ccos").desc, col("cell_id"))))
@@ -2132,7 +2133,7 @@ object Ann {
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val dir = ivfIndexDir(s, d)
-    val corpus = s.read.parquet(s"$dir/corpus")
+    val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
     val a = corpus.select(col("cell"), col("vec_id"), col("v"), col("nrm"))
     val dups = a.as("a").join(a.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
@@ -2199,10 +2200,10 @@ object Ann {
 
   def knnJoin(s: SparkSession, d: String): DataFrame = {
     val dir = ivfIndexDir(s, d)
-    val corpus = s.read.parquet(s"$dir/corpus")
+    val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
     // the k-row centroid table as driver literals — bounded by construction
     // (k = IvfCells), the same k rows every probe path broadcasts
-    val cents = s.read.parquet(s"$dir/centroids").collect()
+    val cents = graft.Artifacts.parquet(s, s"$dir/centroids").collect()
       .map(r => (r.getInt(0),
         r.getAs[scala.collection.Seq[Double]]("cv").toArray, r.getDouble(2)))
       .sortBy(_._1)
@@ -2248,8 +2249,8 @@ object Ann {
     */
   def knnJoinRecall(s: SparkSession, d: String): DataFrame = {
     val dir = ivfIndexDir(s, d)
-    val corpus = s.read.parquet(s"$dir/corpus")
-    val cents = s.read.parquet(s"$dir/centroids").collect()
+    val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
+    val cents = graft.Artifacts.parquet(s, s"$dir/centroids").collect()
       .map(r => (r.getInt(0),
         r.getAs[scala.collection.Seq[Double]]("cv").toArray, r.getDouble(2)))
       .sortBy(_._1)
@@ -2323,18 +2324,18 @@ object Ann {
   /** Spec accessors for the stored index tables (read-only; the report's
     * exactness is pinned against these same artifacts). */
   private[graft] def ivfCorpusForSpec(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ivfIndexDir(s, d)}/corpus")
+    graft.Artifacts.parquet(s, s"${ivfIndexDir(s, d)}/corpus")
   private[graft] def ivfCentroidsForSpec(
       s: SparkSession, d: String): Map[Int, (Array[Double], Double)] =
-    s.read.parquet(s"${ivfIndexDir(s, d)}/centroids").collect()
+    graft.Artifacts.parquet(s, s"${ivfIndexDir(s, d)}/centroids").collect()
       .map(r => r.getInt(0) ->
         (r.getAs[scala.collection.Seq[Double]]("cv").toArray,
           r.getAs[Double]("cn"))).toMap
 
   def ivfCellReport(s: SparkSession, d: String): DataFrame = {
     val dir = ivfIndexDir(s, d)
-    val per = s.read.parquet(s"$dir/corpus")
-      .join(broadcast(s.read.parquet(s"$dir/centroids")),
+    val per = graft.Artifacts.parquet(s, s"$dir/corpus")
+      .join(broadcast(graft.Artifacts.parquet(s, s"$dir/centroids")),
         col("cell") === col("cell_id"))
       .withColumn("cos6",
         round(dotCol("v", "cv") / (col("nrm") * col("cn")), 6))

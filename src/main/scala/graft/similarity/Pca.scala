@@ -158,7 +158,7 @@ object Pca {
     * eigenvalue-descending. */
   private[graft] def learnedRotation(
       s: SparkSession, d: String): (Array[Double], Array[Array[Double]]) = {
-    val rows = s.read.parquet(rotLocation(s, d)).orderBy(col("j")).collect()
+    val rows = graft.Artifacts.parquet(s, rotLocation(s, d)).orderBy(col("j")).collect()
     val out = (rows.map(_.getAs[Double]("eigval_units")),
       rows.map(_.getAs[scala.collection.Seq[Double]]("rv").toArray))
     stash = Some(out)

@@ -668,7 +668,7 @@ object Streams {
   /** The phase-boundary instant (epoch µs) the recovery fixture cut at —
     * spec accessor for asserting a session actually spans the restart. */
   private[graft] def recoveryCutUs(s: SparkSession, d: String): Long =
-    s.read.parquet(s"${recoveryFixtureDir(s, d)}/cutinfo.parquet").head.getLong(0)
+    graft.Artifacts.parquet(s, s"${recoveryFixtureDir(s, d)}/cutinfo.parquet").head.getLong(0)
 
   /** C37 — checkpoint RESTART RECOVERY (round-14, verdict item 3): the
     * production property the other streaming keys run to completion without

@@ -9,7 +9,7 @@ import graft.operators.{Bucketed, Graph, Tables}
 
 /** The stored-artifact staleness contract (round-9 verdict item 1): every
   * per-JVM cache — the F3/F5 ANN indexes, the B57 edge table, the E7/E8
-  * dedup artifacts, B22's bucketed facts, the events ts-type/era probes —
+  * dedup artifacts, B22's bucketed facts, the events era probe —
   * keys on a METADATA FINGERPRINT of its input dataset, so overwriting the
   * data in place forces a rebuild instead of serving answers derived from
   * the old corpus.
@@ -160,6 +160,21 @@ class ArtifactsSpec extends SparkSpec {
       assert(new String(Files.readAllBytes(Paths.get(top, "depth"))) == "24")
       assert(level(24) == top, "a served nested artifact was rebuilt")
     }
+  }
+
+  test("a cachedValue build that reads the same map completes") {
+    // each value is built from the next key down on the SAME map; a build
+    // run inside `compute` would hit a bin an enclosing build reserved
+    val m = new java.util.concurrent.ConcurrentHashMap[String, (String, Integer)]()
+    def level(i: Int): Int =
+      Artifacts.cachedValue(m, s"nested_$i", "fp") {
+        Integer.valueOf(if (i == 0) 0 else level(i - 1) + 1)
+      }
+    assert(level(40) == 40)
+    assert(m.size == 41)
+    // a moved token replaces the entry instead of adding one beside it
+    assert(Artifacts.cachedValue(m, "nested_0", "fp2")(Integer.valueOf(7)) == 7)
+    assert(m.size == 41 && level(0) == 0)
   }
 
   test("repointing graft.ivf.dir mid-session rebuilds into the new root") {
