@@ -311,14 +311,10 @@ object Dedup {
       case _ => ()
     }
 
-  /** Edge-count ceiling for the driver-local CC fast path (below it the
-    * pair set is collected and union-found on the driver; above it the
-    * distributed bucketed-table iteration runs). 1M edges ≈ 16 MB of longs —
-    * comfortably driver-sized; same scale-guard pattern as
-    * `graft.embedding.broadcastMaxRows`.
-    */
-  private[graft] def ccLocalMaxEdges(s: SparkSession): Long =
-    s.conf.getOption("graft.dedup.ccLocalMaxEdges").map(_.toLong).getOrElse(1000000L)
+  /** Edge-count ceiling for the driver-local CC branch
+    * ([[localClusterLabels]]); above it the distributed contraction
+    * ([[propagateMinLabels]]) runs. 1M edges ≈ 16 MB of longs. */
+  val CcLocal = graft.Gate("graft.dedup.ccLocalMaxEdges", 1000000, 0)
 
   /** Driver-side union-find over a collected edge list: root labels
     * compressed to the MIN doc_id of each component (the same label the
@@ -339,6 +335,16 @@ object Dedup {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** The driver-local CC branch of E8 and mm_prepare: `pairs`' (a, b) long
+    * columns union-found into a broadcast (`idCol`, cluster_id) label
+    * table, or None when the pair graph is over [[CcLocal]]. */
+  private[graft] def localClusterLabels(pairs: DataFrame, idCol: String): Option[DataFrame] = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    CcLocal.collect(pairs.as[(Long, Long)]).map(e =>
+      broadcast(unionFindMinLabels(e).toSeq.toDF(idCol, "cluster_id")))
   }
 
   /** The E2 verified pair set as a STORED per-corpus artifact (doc_a,
@@ -387,40 +393,22 @@ object Dedup {
     * a document frame (H13 v2's keep-best stage) can attach labels without
     * a second documents scan. */
   private[graft] def clusterLabelsSparse(s: SparkSession, d: String): DataFrame = {
-    // E2's pair output is derived ONCE PER CORPUS ([[pairsParquet]]); the CC
-    // strategy is size-adaptive (the E5 broadcast→grid guard pattern): the
-    // edge count is probed from the stored parquet, and below
-    // `graft.dedup.ccLocalMaxEdges` the edges are collected and union-found
-    // ON THE DRIVER — a near-dup pair graph that fits there gains nothing
-    // from 5 rounds of distributed join latency, and the returned frame
-    // (a broadcast-ready local label table) is trivially replayable with no
-    // checkpoint blocks to manage. Above the threshold (the 100 TB shape)
-    // the distributed path below runs.
+    // E2's pair output is derived ONCE PER CORPUS ([[pairsParquet]]). A pair
+    // graph within `graft.dedup.ccLocalMaxEdges` is union-found ON THE
+    // DRIVER: it gains nothing from distributed join rounds, and the
+    // broadcast label table is replayable with no checkpoint blocks to
+    // manage. Above the cap (the 100 TB shape) the alternating-star
+    // contraction consumes the stored pair parquet DIRECTLY — already the
+    // reliable, replayable per-corpus edge artifact (SURVEY §5) — over only
+    // the vertices that touch an edge, so its state is bounded by the pair
+    // graph, not the corpus. Its labels parquet is a stored artifact keyed
+    // on the fingerprint the PAIRS were resolved under ([[pairsArtifact]]).
     val (ccFp, pairsLoc) = pairsArtifact(s, d)
     val pairsPq = graft.Artifacts.parquet(s, pairsLoc).select(col("doc_a"), col("doc_b"))
-    val nEdges = pairsPq.count() // parquet count-star: footers only
-    if (nEdges <= ccLocalMaxEdges(s)) {
-      val edges = pairsPq.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labels = unionFindMinLabels(edges).toSeq
-      import s.implicits._
-      return broadcast(labels.toDF("doc_id", "cluster_id"))
-    }
-    // Distributed path: the alternating-star contraction consumes the
-    // stored E2 pair parquet DIRECTLY — it already is the reliable,
-    // replayable per-corpus edge artifact (SURVEY §5), and unlike the old
-    // min-label propagation (whose per-round `src` equi-join justified a
-    // pre-bucketed copy) the star rounds re-shape the edge set every
-    // iteration, so no write-time bucketing can pre-pay their shuffles.
-    // The contraction runs over ONLY the vertices that touch an edge — an
-    // isolated doc is its own cluster by construction, so the iteration
-    // state is bounded by the pair-graph size (tiny vs the corpus:
-    // near-dup graphs are sparse), not the corpus.
-    //
-    // The converged labels parquet is a stored artifact keyed on the
-    // fingerprint the PAIRS were resolved under (see [[pairsArtifact]]).
-    graft.Artifacts.parquet(s, graft.Artifacts.storedFp(s, "dedup_labels", d, ccFp) { dir =>
-      propagateMinLabels(s, pairsPq.toDF("src", "dst"), dir)
-    })
+    localClusterLabels(pairsPq, "doc_id").getOrElse(
+      graft.Artifacts.parquet(s, graft.Artifacts.storedFp(s, "dedup_labels", d, ccFp) { dir =>
+        propagateMinLabels(s, pairsPq.toDF("src", "dst"), dir)
+      }))
   }
 
   /** Round cap for the distributed CC iteration (`graft.dedup.ccMaxRounds`,
@@ -552,11 +540,7 @@ object Dedup {
     * bucket of another band can still emit them). No-op below the cap — test
     * SFs are unchanged. Overridable via `graft.dedup.maxBandBucket`.
     */
-  val MaxBandBucketDefault = 1000L
-
-  private[graft] def maxBandBucket(s: SparkSession): Long =
-    s.conf.getOption("graft.dedup.maxBandBucket")
-      .map(_.toLong).getOrElse(MaxBandBucketDefault)
+  val BandBucket = graft.Gate("graft.dedup.maxBandBucket", 1000, 1)
 
   /** Attach bucket size (`bn`) and representative (`rep`) per band bucket —
     * via a KEY-SIZED aggregate, not a full-data window: the groupBy shuffles
@@ -606,13 +590,13 @@ object Dedup {
       struct(lit(b).as("band"),
         slice(col("m"), b * MinhashRows + 1, MinhashRows).as("bh"))
     }
-    // mega-bucket skew cap (see MaxBandBucketDefault): all-pairs only inside
+    // mega-bucket skew cap (see BandBucket): all-pairs only inside
     // sub-cap buckets; oversized buckets emit member→representative stars
     val bandRows = graft.CacheScope.scopedPersist(
       sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
         .select(col("doc_id"), col("bk.band"), col("bk.bh")))
     val buckets = withBucketStats(bandRows, Seq("band", "bh"),
-      col("doc_id"), maxBandBucket(s))
+      col("doc_id"), BandBucket.cap(s))
     val small = buckets.filter(col("bn").isNull)
       .select(col("doc_id"), col("band"), col("bh"))
     val star = buckets.filter(col("bn").isNotNull && col("doc_id") =!= col("rep"))
@@ -670,7 +654,7 @@ object Dedup {
     val bandRows = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.bh"))
     val buckets = withBucketStats(bandRows, Seq("band", "bh"),
-      col("doc_id"), maxBandBucket(s))
+      col("doc_id"), BandBucket.cap(s))
     val small = buckets.filter(col("bn").isNull)
       .select(col("doc_id"), col("band"), col("bh"))
     val star = buckets.filter(col("bn").isNotNull && col("doc_id") =!= col("rep"))
@@ -824,7 +808,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("bk.band"), col("bk.bv"))
       .transform(graft.CacheScope.scopedPersist)
     val banded = withBucketStats(bandRows, Seq("band", "bv"),
-      struct(col("doc_id"), col("simhash")), maxBandBucket(s))
+      struct(col("doc_id"), col("simhash")), BandBucket.cap(s))
     val small = banded.filter(col("bn").isNull)
       .select(col("doc_id"), col("simhash"), col("band"), col("bv"))
     val star = banded.filter(col("bn").isNotNull && col("doc_id") =!= col("rep.doc_id"))
@@ -929,23 +913,14 @@ object Dedup {
     * overhead — comfortably inside an executor, uncomfortably beyond it at
     * 10x). Overridable per session via `graft.embedding.broadcastMaxRows`
     * (the spec uses this to pin the switchover). The same cap gates the
-    * driver-local IVF/PQ k-means training in [[graft.similarity.Ann]],
-    * whose probe is a `limit(cap + 1)` collect: a cap at or past
-    * Int.MaxValue would silently truncate it, so it must stay below.
+    * driver-local IVF/PQ k-means training in [[graft.similarity.Ann]].
+    * At least 1: the grid kernel divides by it.
     */
-  val EmbeddingBroadcastMaxRowsDefault = 200000L
-
-  private[graft] def embeddingBroadcastMaxRows(s: SparkSession): Long = {
-    val cap = s.conf.getOption("graft.embedding.broadcastMaxRows")
-      .map(_.toLong).getOrElse(EmbeddingBroadcastMaxRowsDefault)
-    require(cap > 0 && cap < Int.MaxValue,
-      s"graft.embedding.broadcastMaxRows must be in (0, ${Int.MaxValue}), got $cap")
-    cap
-  }
+  val EmbeddingBroadcast = graft.Gate("graft.embedding.broadcastMaxRows", 200000, 1)
 
   /** E5 — embedding-cosine near-dup pairs (threshold 0.4), exact, with an
     * automatic scale guard: corpora whose row count fits
-    * [[embeddingBroadcastMaxRows]] take the packed broadcast-block kernel
+    * [[EmbeddingBroadcast]] take the packed broadcast-block kernel
     * (cheapest at small n); anything larger degrades gracefully to the
     * grid-blocked kernel — same exact semantics, no broadcast, bounded
     * per-task memory — instead of OOMing the broadcast (round-2 verdict
@@ -954,7 +929,7 @@ object Dedup {
     * candidates + verify.
     */
   def embeddingPairs(s: SparkSession, d: String): DataFrame =
-    if (Tables.embeddings(s, d).count() <= embeddingBroadcastMaxRows(s))
+    if (EmbeddingBroadcast.fits(s, Tables.embeddings(s, d).count()))
       embeddingPairsPacked(s, d)
     else embeddingPairsGrid(s, d)
 
@@ -1018,9 +993,9 @@ object Dedup {
   private[graft] def embeddingPairsGrid(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = withNorm(Tables.embeddings(s, d)).select(col("vec_id"), col("v"), col("nrm"))
-    val g = math.max(2L,
-      (Tables.embeddings(s, d).count() + embeddingBroadcastMaxRows(s) - 1)
-        / embeddingBroadcastMaxRows(s)).toInt
+    val n = Tables.embeddings(s, d).count()
+    val cap = EmbeddingBroadcast.cap(s)
+    val g = math.max(2L, (n + cap - 1) / cap).toInt
     // block assignment hashes the id (not pmod of the raw value): structured
     // id spaces — all-even ids, strided ids — would concentrate rows into few
     // pmod classes and blow a block past broadcastMaxRows, defeating the

@@ -438,7 +438,7 @@ object Multimodal {
     // sub-cap buckets; saturated buckets emit member→representative edges
     val stats = graft.dedup.Dedup.withBucketStats(
       bands, Seq("band", "bv"), col("doc_id"),
-      graft.dedup.Dedup.maxBandBucket(s))
+      graft.dedup.Dedup.BandBucket.cap(s))
     val small = stats.filter(col("bn").isNull)
     val candSmall = small.as("a").join(small.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -705,13 +705,7 @@ object Multimodal {
     try {
       val pairs = mmPairFrame(s, ent).persist()
       val labels = try {
-        val nEdges = pairs.count()
-        if (nEdges <= graft.dedup.Dedup.ccLocalMaxEdges(s)) {
-          import s.implicits._
-          val e = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-          broadcast(graft.dedup.Dedup.unionFindMinLabels(e).toSeq
-            .toDF("entity_id", "cluster_id"))
-        } else {
+        graft.dedup.Dedup.localClusterLabels(pairs, "entity_id").getOrElse {
           // the 100 TB path: alternating-star contraction, labels parquet
           val loc = new org.apache.hadoop.fs.Path(graft.Artifacts.scratchBase(s),
             "graft_mm_prepare_labels_" + java.util.UUID.randomUUID().toString

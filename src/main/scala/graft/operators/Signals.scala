@@ -307,18 +307,14 @@ object Signals {
     * every member pairs only with the bucket representative (min
     * (user_id, island) interval), m−1 candidates, so the hottest bucket
     * costs linear, not quadratic. Recall trade, documented like
-    * MaxBandBucketDefault: member–member overlaps inside an oversized
+    * `maxBandBucket`: member–member overlaps inside an oversized
     * bucket whose overlap STARTS there are not emitted (a pair whose
     * overlap starts in a sub-cap bucket is still emitted by that bucket's
     * all-pairs path). No-op below the cap — the gate corpora peak at ~51
     * intervals per (hour, type) at sf0.1, so CORRECTNESS and the oracle
     * are unchanged. Overridable via `graft.interval.maxBucketOccupancy`.
     */
-  val MaxBucketOccupancyDefault = 10000L
-
-  private[graft] def maxBucketOccupancy(s: SparkSession): Long =
-    s.conf.getOption("graft.interval.maxBucketOccupancy")
-      .map(_.toLong).getOrElse(MaxBucketOccupancyDefault)
+  val BucketOccupancy = graft.Gate("graft.interval.maxBucketOccupancy", 10000, 1)
 
   /** B69 — INTERVAL-OVERLAP join (round-13): pairs of intervals that
     * intersect in time — the temporal-join shape Spark has no native
@@ -328,7 +324,7 @@ object Signals {
     * spans intersect. The SCALE DEVICE is time binning: each interval
     * explodes to the hour buckets it covers, the join keys on
     * (bucket, type) — so the quadratic work is per-bucket, bounded by
-    * bucket occupancy (itself capped: see [[MaxBucketOccupancyDefault]]),
+    * bucket occupancy (itself capped: see [[BucketOccupancy]]),
     * never all-pairs — and the classic duplicate
     * problem (one pair overlapping in many buckets) is solved WITHOUT a
     * distinct shuffle: only the bucket containing the overlap START emits
@@ -352,7 +348,7 @@ object Signals {
     // (bkt, type) keys come back non-null, AQE broadcasts the tiny key table
     val stats = graft.dedup.Dedup.withBucketStats(binned, Seq("bkt", "event_type"),
       struct(col("user_id"), col("island"), col("valid_from"), col("valid_to")),
-      maxBucketOccupancy(s))
+      BucketOccupancy.cap(s))
     val small = stats.filter(col("bn").isNull)
     def side(p: String) = small.select(col("user_id").as(s"${p}_user"),
       col("island").as(s"${p}_island"), col("event_type"),

@@ -232,11 +232,7 @@ object TpchMore {
     * mega-basket in a real feed would blow executor memory (or trip
     * array_pairs' Int.MaxValue limit and abort the job) without a cap.
     */
-  val BasketMaxItemsDefault = 1024
-
-  private[graft] def basketMaxItems(s: SparkSession): Int =
-    s.conf.getOption("graft.basket.maxItems")
-      .map(_.toInt).getOrElse(BasketMaxItemsDefault)
+  val BasketItems = graft.Gate("graft.basket.maxItems", 1024, 1)
 
   /** Per-basket derivation with the scale cap ENFORCED IN THE AGGREGATE
     * ([[graft.plans.BoundedBasketAgg]] — the E2/E6 BoundedPostingsAgg
@@ -248,12 +244,12 @@ object TpchMore {
     Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))
       .agg(graft.plans.SketchAggs
-        .boundedBasket(col("l_partkey"), basketMaxItems(s)).as("b"))
+        .boundedBasket(col("l_partkey"), BasketItems.cap(s)).as("b"))
 
   /** Co-purchase pair counts above `minSupport`, shared by [[basketPairs]]
     * and the B57 PageRank edge derivation. NOT a self-join: each order's
     * distinct parts are collected into one sorted basket array (bounded by
-    * [[basketMaxItems]] — mega-baskets degrade to a deterministic prefix
+    * [[BasketItems]] — mega-baskets degrade to a deterministic prefix
     * instead of a quadratic blow-up, see [[baskets]]) and the pairs
     * enumerate IN-ARRAY, so the whole derivation is two hash aggregates —
     * one shuffle on l_orderkey, one on the pair key — where the join form

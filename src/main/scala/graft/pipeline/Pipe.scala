@@ -76,22 +76,19 @@ object SideInput {
   /** Rows a side input may collect to the driver before we refuse. A side
     * input IS a driver-materialized broadcast by contract (same as Beam's),
     * so the cap is a guard rail against feeding a full-size table through
-    * it at scale — conf `graft.sideinput.maxRows` raises/lowers it.
+    * it at scale — conf `graft.sideinput.maxRows` raises/lowers it. The
+    * probe is bounded: an oversized side input fails with cap + 1 rows
+    * held, not the full dataset.
     */
-  val DefaultMaxRows = 10000000
+  val MaxRows = graft.Gate("graft.sideinput.maxRows", 10000000, 0)
 
   private def of[T, S: ClassTag](p: Pipe[T], view: Array[T] => S): SideInput[S] = {
     val spark = p.ds.sparkSession
-    val max = spark.conf.getOption("graft.sideinput.maxRows")
-      .map(_.toInt).getOrElse(DefaultMaxRows)
-    // limit(max+1) bounds what ever reaches the driver: an oversized side
-    // input fails with max+1 rows held, not the full dataset
-    val xs = p.consumed.limit(max + 1).collect()
-    if (xs.length > max) throw new IllegalStateException(
-      s"side input exceeds graft.sideinput.maxRows=$max rows; a side input " +
-        "is driver-materialized broadcast state — for large lookup tables " +
-        "use a broadcast join on the Dataset (join(broadcast(dim), ...)) " +
-        "or raise graft.sideinput.maxRows deliberately")
+    val xs = MaxRows.collect(p.consumed).getOrElse(throw new IllegalStateException(
+      s"side input exceeds graft.sideinput.maxRows=${MaxRows.cap(spark)} rows; " +
+        "a side input is driver-materialized broadcast state — for large " +
+        "lookup tables use a broadcast join on the Dataset " +
+        "(join(broadcast(dim), ...)) or raise graft.sideinput.maxRows deliberately"))
     new SideInput(spark.sparkContext.broadcast(view(xs)))
   }
 }

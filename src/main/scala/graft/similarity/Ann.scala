@@ -340,19 +340,15 @@ object Ann {
   }
 
   /** The size gate shared by every IVF/PQ trainer: ONE bounded collect of
-    * `train`'s (vec_id, v), at most `graft.embedding.broadcastMaxRows` + 1
-    * rows — the [[graft.operators.Graph.pageRank]] probe. When the
-    * training set fits the cap the probe IS the training collect (Some);
-    * an overflowing take is discarded (None) and the caller trains
-    * distributed, unchanged. */
+    * `train`'s (vec_id, v) under `graft.embedding.broadcastMaxRows`. When
+    * the training set fits the cap the probe IS the training collect
+    * (Some); otherwise (None) the caller trains distributed, unchanged. */
   private def localTrainingSet(
       train: DataFrame): Option[Array[(Long, Array[Double])]] = {
     val s = train.sparkSession
     import s.implicits._
-    val cap = graft.dedup.Dedup.embeddingBroadcastMaxRows(s)
-    val rows = train.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
-      .limit((cap + 1).toInt).collect()
-    if (rows.length <= cap) Some(rows) else None
+    graft.dedup.Dedup.EmbeddingBroadcast.collect(
+      train.select(col("vec_id"), col("v")).as[(Long, Array[Double])])
   }
 
   private def requireIvfTrainingRows(n: Long): Unit =

@@ -385,6 +385,18 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  test("G13 mm_prepare: the distributed CC branch equals the driver-local one") {
+    def rows(): Seq[String] = Multimodal.mmPrepare(spark, sf).collect()
+      .map(_.toSeq.mkString("|")).sorted.toSeq
+    val local = rows()
+    spark.conf.set("graft.dedup.ccLocalMaxEdges", "0")
+    try {
+      val dist = rows()
+      assert(local.nonEmpty && dist == local)
+      assert(graft.Gate.taken.contains("graft.dedup.ccLocalMaxEdges:over"))
+    } finally spark.conf.unset("graft.dedup.ccLocalMaxEdges")
+  }
+
   test("G9 scene cuts fire only at the scene boundary and somewhere in the corpus") {
     val res = Multimodal.sceneCuts(spark, sf).collect()
     assert(res.nonEmpty)

@@ -160,6 +160,15 @@ class PipelineSpec extends SparkSpec {
       assert(e.getMessage.contains("broadcast join"))
       // at or under the cap still works
       assert(SideInput.asList(Pipe.create(spark, (1 to 10))).value.size == 10)
+      // a cap at Int.MaxValue would wrap the cap + 1 probe negative and a
+      // larger one is no Int at all: both fail naming the conf, even for a
+      // 10-row side input
+      Seq(Int.MaxValue.toString, (Int.MaxValue.toLong + 1).toString).foreach { cap =>
+        spark.conf.set("graft.sideinput.maxRows", cap)
+        val bad = intercept[IllegalArgumentException](
+          SideInput.asList(Pipe.create(spark, (1 to 10))))
+        assert(bad.getMessage.contains("graft.sideinput.maxRows"), bad.getMessage)
+      }
     } finally spark.conf.unset("graft.sideinput.maxRows")
   }
 

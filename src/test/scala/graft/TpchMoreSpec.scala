@@ -149,6 +149,26 @@ class TpchMoreSpec extends SparkSpec {
     } finally spark.conf.unset("graft.graph.localMaxEdges")
   }
 
+  test("pagerank: broadcast and shuffle-joined rank rounds agree row for row") {
+    // graft.graph.broadcastMaxNodes only steers the distributed loop, so
+    // force that loop (localMaxEdges = 0) and run it with the rank vector
+    // broadcast (default cap) and shuffle-joined (cap 0)
+    def ranks(): Seq[(Long, Double)] = graft.operators.Graph.pageRank(spark, sf)
+      .collect().map(r => (r.getAs[Long]("node"), r.getAs[Double]("pr"))).sorted.toSeq
+    spark.conf.set("graft.graph.localMaxEdges", "0")
+    try {
+      val bcast = ranks()
+      spark.conf.set("graft.graph.broadcastMaxNodes", "0")
+      val shuffled = ranks()
+      assert(bcast.nonEmpty && shuffled == bcast)
+      assert(Seq("fits", "over").forall(b =>
+        graft.Gate.taken.contains(s"graft.graph.broadcastMaxNodes:$b")))
+    } finally {
+      spark.conf.unset("graft.graph.broadcastMaxNodes")
+      spark.conf.unset("graft.graph.localMaxEdges")
+    }
+  }
+
   test("pagerank: a local-edge cap at or above Int.MaxValue fails instead of truncating") {
     // the probing collect is limit(cap + 1): a cap past Int.MaxValue would
     // truncate the edges and rank a partial graph
