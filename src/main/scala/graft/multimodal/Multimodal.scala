@@ -372,6 +372,15 @@ object Multimodal {
     w
   }
 
+  /** Sign-vs-mean bit run: bits [from, from+width) of the signature packed
+    * into one long ([[graft.plans.SignBits]]: bit b set iff
+    * codes(from+b)·W > tot). THE signature definition, shared by G5's
+    * words/bands and G6's per-frame hash — a threshold change landing in
+    * one copy would silently desynchronize their signatures and oracles.
+    */
+  private def signBits(from: Int, width: Int): org.apache.spark.sql.Column =
+    graft.plans.SignBits.of(col("codes"), col("tot"), from, width)
+
   /** Signature + band values in ONE codegen'd pass: `ph` is the packed
     * W-bit signature as W/64 long words; `bvs` the T+1 band values,
     * assembled directly from the per-sample sign bits (no cross-word bit
@@ -380,32 +389,15 @@ object Multimodal {
     * W×substring form re-walks the string per sample (O(k·n)/row; it was
     * ~half this query's wall time at W=64).
     */
-  /** The W stride-sampled code points as long columns (1-based array). */
-  private def sampleCodes(wBits: Int): IndexedSeq[org.apache.spark.sql.Column] =
-    (0 until wBits).map(i => element_at(col("codes"), i + 1).cast("long"))
-
-  /** Sign-vs-mean bit run: bits [from, from+width) of the signature packed
-    * into one long (bit b set iff codes(from+b)·W > tot). THE signature
-    * definition, shared by G5's words/bands and G6's per-frame hash — a
-    * threshold change landing in one copy would silently desynchronize
-    * their signatures and oracles.
-    */
-  private def signBits(codes: IndexedSeq[org.apache.spark.sql.Column],
-      from: Int, width: Int): org.apache.spark.sql.Column =
-    (0 until width).map(b =>
-      when(codes(from + b) * codes.length > col("tot"), lit(1L << b))
-        .otherwise(0L)).reduce(_ + _)
-
   private def phashFrame(s: SparkSession, d: String, wBits: Int): DataFrame = {
     val nBands = PhashHamT + 1
     val base = wBits / nBands
     val extra = wBits % nBands           // first `extra` bands get base+1
     val widths = (0 until nBands).map(i => base + (if (i < extra) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
-    val codes = sampleCodes(wBits)
-    val tot = codes.reduce(_ + _)
-    val words = (0 until wBits / 64).map(w => signBits(codes, w * 64, 64))
-    val bands = (0 until nBands).map(i => signBits(codes, offsets(i), widths(i)))
+    val tot = (1 to wBits).map(i => element_at(col("codes"), i).cast("long")).reduce(_ + _)
+    val words = (0 until wBits / 64).map(w => signBits(w * 64, 64))
+    val bands = (0 until nBands).map(i => signBits(offsets(i), widths(i)))
     // codes come off a DECODED raster: the W stride samples are packed as a
     // genuine W×1 PGM (P5) payload and parsed back — pixel values equal the
     // sampled code points, so the signature arithmetic and oracle are
@@ -706,13 +698,14 @@ object Multimodal {
       val pairs = mmPairFrame(s, ent).persist()
       val labels = try {
         graft.dedup.Dedup.localClusterLabels(pairs, "entity_id").getOrElse {
-          // the 100 TB path: alternating-star contraction, labels parquet
-          val loc = new org.apache.hadoop.fs.Path(graft.Artifacts.scratchBase(s),
-            "graft_mm_prepare_labels_" + java.util.UUID.randomUUID().toString
-              .take(8)).toString
-          graft.dedup.Dedup.propagateMinLabels(s,
-            pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), loc)
-          s.read.parquet(loc).toDF("entity_id", "cluster_id")
+          // the 100 TB path: alternating-star contraction into a labels
+          // parquet, stored per (documents fingerprint, band-bucket cap)
+          val loc = graft.Artifacts.stored(s, "mm_prepare_labels", d,
+              Seq("documents.parquet"), graft.dedup.Dedup.BandBucket.cap(s)) { dir =>
+            graft.dedup.Dedup.propagateMinLabels(s,
+              pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), dir)
+          }
+          graft.Artifacts.parquet(s, loc).toDF("entity_id", "cluster_id")
         }
       } finally { pairs.unpersist(blocking = false); () }
       val w = Window.partitionBy(col("cluster_id"))

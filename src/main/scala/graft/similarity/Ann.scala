@@ -211,13 +211,11 @@ object Ann {
     * seeds (the min-vec_id vector of each `vec_id % k` residue class — a
     * deterministic pseudo-random sample), `IvfIters` Lloyd iterations by
     * cosine, nearest-centroid corpus assignment, queries probe their
-    * nprobe=2 nearest cells. A training set that fits
-    * `graft.embedding.broadcastMaxRows` is collected ONCE and trained on
-    * the driver ([[lloydLocal]], bit-identical to the distributed plan);
-    * above the cap only the k x dim centroid matrix reaches the driver
-    * (the bounded state every distributed k-means keeps) and each Lloyd
-    * iteration is one scan + one k-row aggregate. At 100 TB you train on a
-    * sample instead of full scans; the routing/probing plan is unchanged.
+    * nprobe=2 nearest cells. Training always runs on the driver
+    * ([[lloydLocal]]) over ONE bounded sample ([[trainingSample]], at most
+    * `graft.embedding.broadcastMaxRows` rows); only the full-corpus
+    * assignment is distributed. At 100 TB you train on that sample and
+    * assign every vector; the routing/probing plan is unchanged.
     */
   val IvfCells = 16
   val IvfIters = 3
@@ -282,73 +280,55 @@ object Ann {
     * OFFLINE artifact the ingest pipeline builds; queries only route and
     * probe. The per-JVM build here stands in for that offline step (same
     * pattern as [[int8Index]]). A [[graft.Artifacts.stored]] artifact of
-    * the `graft.ivf.dir` family, shaped by the training-sample conf and k.
+    * the `graft.ivf.dir` family, shaped by the training-sample target and k.
     */
-  private def ivfIndexDir(s: SparkSession, d: String): String = {
-    val maxTrainKey = s.conf.getOption("graft.ann.trainSampleRows").getOrElse("")
+  private def ivfIndexDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivf_index", d, Seq("embeddings.parquet"),
-        maxTrainKey, ivfCellsConf(s)) { dir =>
+        trainTarget(s), ivfCellsConf(s)) { dir =>
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
-      // SAMPLED TRAINING (SURVEY §5's 100 TB path, now code): above
-      // `graft.ann.trainSampleRows` the Lloyd iterations see only a
-      // deterministic splitmix64 residue sample of ~that many rows — k-means
-      // quality depends on the sample being representative, not exhaustive,
-      // and a hash residue of vec_id is replayable and stable under corpus
-      // growth (the H6 discipline). ASSIGNMENT stays full-corpus below, so
-      // the stored index still covers every vector.
-      val maxTrain = trainSampleRowsConf(s)
-      val den = 1L << 20
-      def keepOf(n: Long): Long = (den * maxTrain / n).max(1L)
-      def write(cents: Array[Array[Double]], assignSrc: DataFrame): Unit =
-        writeIvf(cents, assignSrc, s"$dir/corpus", s"$dir/centroids")
-      localTrainingSet(full) match {
-        case Some(rows) =>
-          // n is the probe's length; the residue sample runs on the driver
-          val n = rows.length.toLong
-          val train = if (n <= maxTrain) rows else {
-            val keep = keepOf(n)
-            rows.filter(r =>
-              Math.floorMod(graft.plans.MixHash.splitmix64(r._1), den) < keep)
-          }
-          write(lloydTrainLocal(s, train), full)
-        case None =>
-          val n = Tables.embeddings(s, d).count() // parquet count-star: footers only
-          val sampled = n > maxTrain
-          val trainSrc = if (!sampled) full else
-            full.filter(pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
-              lit(den)) < lit(keepOf(n)))
-          // training scans the (possibly sampled) set IvfIters+1 times:
-          // persist for the build, release synchronously once both tables
-          // are written
-          val e = graft.CacheScope.scopedPersist(trainSrc)
-          // full-corpus assignment reads the cached training set when it IS
-          // the corpus; under sampling it re-scans the source once instead
-          try write(lloydTrain(e), if (sampled) full else e)
-          finally e.unpersist(blocking = true)
-      }
+      writeIvf(lloydTrainLocal(s, trainingSample(full)), full,
+        s"$dir/corpus", s"$dir/centroids")
     }
-  }
 
-  /** `graft.ann.trainSampleRows`: the IVF training-sample target (default
-    * 1M rows; a corpus at or below it trains on every vector). */
-  private def trainSampleRowsConf(s: SparkSession): Long = {
+  /** The training-sample target of every IVF/PQ trainer:
+    * `graft.ann.trainSampleRows` (default 1M), capped by
+    * `graft.embedding.broadcastMaxRows` ([[graft.dedup.Dedup.EmbeddingBroadcast]]). */
+  private def trainTarget(s: SparkSession): Long = {
     val m = s.conf.getOption("graft.ann.trainSampleRows")
       .map(_.toLong).getOrElse(1000000L)
     require(m > 0, s"graft.ann.trainSampleRows must be positive, got $m")
-    m
+    m.min(graft.dedup.Dedup.EmbeddingBroadcast.cap(s).toLong)
   }
 
-  /** The size gate shared by every IVF/PQ trainer: ONE bounded collect of
-    * `train`'s (vec_id, v) under `graft.embedding.broadcastMaxRows`. When
-    * the training set fits the cap the probe IS the training collect
-    * (Some); otherwise (None) the caller trains distributed, unchanged. */
-  private def localTrainingSet(
-      train: DataFrame): Option[Array[(Long, Array[Double])]] = {
+  /** SAMPLED TRAINING (SURVEY §5's 100 TB path): the one training set of
+    * every IVF/PQ trainer — `train`'s (vec_id, v) cut to ~[[trainTarget]]
+    * rows by a deterministic splitmix64 residue of vec_id. k-means quality
+    * depends on the sample being representative, not exhaustive, and a
+    * hash residue is replayable and stable under corpus growth (the H6
+    * discipline). Under the cap the gate's probe IS the collect and the
+    * residue filter runs on the driver; above it, one count and one
+    * collect of the filtered rows, keeping the cap rows of smallest
+    * (residue, vec_id) if the filter overshoots. The callers' assignment
+    * stays full-corpus, so the stored index still covers every vector. */
+  private def trainingSample(train: DataFrame): Array[(Long, Array[Double])] = {
     val s = train.sparkSession
     import s.implicits._
-    graft.dedup.Dedup.EmbeddingBroadcast.collect(
-      train.select(col("vec_id"), col("v")).as[(Long, Array[Double])])
+    val gate = graft.dedup.Dedup.EmbeddingBroadcast
+    val target = trainTarget(s)
+    val den = 1L << 20
+    def keepOf(n: Long): Long = (den * target / n).max(1L)
+    val ds = train.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    gate.collect(ds) match {
+      case Some(rows) if rows.length <= target => rows
+      case Some(rows) =>
+        val keep = keepOf(rows.length)
+        rows.filter(r => Math.floorMod(graft.plans.MixHash.splitmix64(r._1), den) < keep)
+      case None =>
+        val residue = pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")), lit(den))
+        ds.filter(residue < keepOf(train.count()))
+          .orderBy(residue, col("vec_id")).limit(gate.cap(s)).collect()
+    }
   }
 
   private def requireIvfTrainingRows(n: Long): Unit =
@@ -361,44 +341,9 @@ object Ann {
     val a = new Array[Double](dim); a(i % dim) = 1.0; a
   }
 
-  /** Distributed Lloyd over a PERSISTED frame (vec_id, v) — the above-cap
-    * trainer of [[ivfIndexDir]] and the incremental index (F26): seeds =
-    * min-vec_id vector per residue class, [[IvfIters]] iterations with
-    * order-independent integer sums (the [[IvfScale]] exactness argument).
-    * [[lloydTrainLocal]] replays it on the driver. */
-  private def lloydTrain(e: DataFrame): Array[Array[Double]] = {
-    val k = ivfCellsConf(e.sparkSession)
-    // deterministic seeds: min-vec_id vector per residue class
-    val seedRows = e
-      .withColumn("cls", pmod(col("vec_id"), lit(k.toLong)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cls")).orderBy(col("vec_id"))))
-      .filter(col("rn") === 1)
-      .select(col("cls"), col("v")).collect()
-    requireIvfTrainingRows(seedRows.length)
-    val dim = seedRows.head.getSeq[Double](1).length
-    var cents = Array.tabulate(k)(basisSeed(_, dim))
-    seedRows.foreach(r => cents(r.getLong(0).toInt) = r.getSeq[Double](1).toArray)
-    for (_ <- 1 to IvfIters) {
-      val sums = e.withColumn("cell", nearestCellCol("v", cents))
-        .groupBy(col("cell"))
-        .agg(
-          array((0 until dim).map(i =>
-            sum(round(element_at(col("v"), i + 1) * IvfScale).cast("long"))): _*).as("sv"),
-          count(lit(1)).as("cnt"))
-        .collect()
-      val next = cents.map(_.clone())  // empty-cell guard: keep old centroid
-      sums.foreach { r =>
-        val cnt = r.getLong(2)
-        next(r.getInt(0)) =
-          r.getSeq[Long](1).map(s => s.toDouble / (IvfScale * cnt)).toArray
-      }
-      cents = next
-    }
-    cents
-  }
-
-  /** [[lloydTrain]] on the driver, over the collected training set. */
+  /** The IVF trainer of [[ivfIndexDir]] and the incremental index (F26):
+    * seeds = min-vec_id vector per residue class ([[basisSeed]] for an
+    * empty one), then [[IvfIters]] [[lloydLocal]] iterations by cosine. */
   private def lloydTrainLocal(s: SparkSession,
       rows: Array[(Long, Array[Double])]): Array[Array[Double]] = {
     requireIvfTrainingRows(rows.length)
@@ -411,7 +356,7 @@ object Ann {
   }
 
   /** Per `vec_id % k` residue class, the index of its min-vec_id row (-1
-    * for an empty class): the distributed trainers' seed window. */
+    * for an empty class): the seeds of both trainers. */
   private def residueSeeds(ids: Array[Long], k: Int): Array[Int] = {
     val best = Array.fill(k)(-1)
     var i = 0
@@ -423,15 +368,14 @@ object Ann {
     best
   }
 
-  /** THE driver-local k-means kernel of both trainers (IVF and PQ) below
-    * the gate. It replays the distributed Lloyd step exactly: each point
-    * goes to `nearest`'s cell; components are rounded to the [[IvfScale]]
-    * grid by [[graft.plans.ScaledLong.scale]] (the HALF_UP rounding of
-    * Spark's `round`) and summed as longs — order-free, so the collect
-    * order cannot matter, and `addExact` fails loudly where the
-    * distributed long sum would overflow; each non-empty cell becomes
-    * sum / (IvfScale · count), the same division the distributed trainer
-    * runs on its collected sums; an empty cell keeps its old centroid. */
+  /** THE k-means kernel of both trainers (IVF and PQ), on the driver over
+    * the training sample: each point goes to `nearest`'s cell; components
+    * are rounded to the [[IvfScale]] grid by [[graft.plans.ScaledLong.scale]]
+    * (the HALF_UP rounding of the oracles' SQL `round`) and summed as longs
+    * — order-free, so the sample's row order cannot matter, and `addExact`
+    * fails loudly on overflow; each non-empty cell becomes
+    * sum / (IvfScale · count), the division the oracles replay; an empty
+    * cell keeps its old centroid. */
   private def lloydLocal(pts: Array[Array[Double]], init: Array[Array[Double]],
       iters: Int, nearest: Array[Array[Double]] => Array[Double] => Int)
       : Array[Array[Double]] = {
@@ -530,25 +474,18 @@ object Ann {
       lit(IvfIncrMod.toLong)) === lit(IvfIncrRes.toLong)
 
   /** The incremental index: `gen-0/corpus` (base assignment, trained on
-    * base arrivals only), `centroids` (STORED — never touched by an
-    * append), `gen-1/corpus` (the arrival batch assigned under the stored
-    * centroids). Same per-(corpus, fingerprint) build-once discipline as
-    * [[ivfIndexDir]]. */
+    * the [[trainingSample]] of base arrivals only), `centroids` (STORED —
+    * never touched by an append), `gen-1/corpus` (the arrival batch
+    * assigned under the stored centroids). Same per-(corpus, fingerprint,
+    * training target) build-once discipline as [[ivfIndexDir]]. */
   private def ivfIncrDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivf_incr", d, Seq("embeddings.parquet"),
-        ivfCellsConf(s)) { dir =>
+        trainTarget(s), ivfCellsConf(s)) { dir =>
       val base = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
         .filter(!ivfDeltaPred)
-      def write(cents: Array[Array[Double]], assignSrc: DataFrame): Unit =
-        writeIvf(cents, assignSrc, s"$dir/gen-0/corpus", s"$dir/centroids")
-      localTrainingSet(base) match {
-        case Some(rows) => write(lloydTrainLocal(s, rows), base)
-        case None =>
-          val baseSet = graft.CacheScope.scopedPersist(base)
-          try write(lloydTrain(baseSet), baseSet)
-          finally baseSet.unpersist(blocking = true)
-      }
+      writeIvf(lloydTrainLocal(s, trainingSample(base)), base,
+        s"$dir/gen-0/corpus", s"$dir/centroids")
       // the APPEND: its input is the batch and the 16-row centroid table
       // — the base assignment is never read, so batch cost is O(|batch|)
       ivfAppendAssign(s, d, s"$dir/centroids")
@@ -611,13 +548,15 @@ object Ann {
     * squared error exceeds the base's by this factor (permille). */
   val PqDriftRetrainPermille = 1200L
 
-  /** The incremental PQ artifact: `codebook` (trained on base arrivals —
-    * never touched by an append), `gen-0/codes` (base encoding),
-    * `gen-1/codes` (the arrival batch encoded under the stored
-    * codebook). Same arrival split as F26 ([[ivfDeltaPred]]) so the two
-    * incremental paths describe ONE ingest story. */
+  /** The incremental PQ artifact: `codebook` (trained on the
+    * [[trainingSample]] of base arrivals — never touched by an append),
+    * `gen-0/codes` (base encoding), `gen-1/codes` (the arrival batch
+    * encoded under the stored codebook). Same arrival split as F26
+    * ([[ivfDeltaPred]]) so the two incremental paths describe ONE ingest
+    * story. */
   private def pqIncrDir(s: SparkSession, d: String): String =
-    graft.Artifacts.stored(s, "pq_incr", d, Seq("embeddings.parquet")) { dir =>
+    graft.Artifacts.stored(s, "pq_incr", d, Seq("embeddings.parquet"),
+        trainTarget(s)) { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -732,6 +671,8 @@ object Ann {
     ivfIncrDir(s, d)
   private[graft] def pqIndexDirForSpec(s: SparkSession, d: String): String =
     pqIndexDir(s, d)
+  private[graft] def trainingSampleIdsForSpec(train: DataFrame): Array[Long] =
+    trainingSample(train).map(_._1)
   private[graft] def ivfCandsForSpec(s: SparkSession, d: String,
       nprobe: Int): DataFrame = ivfCandsAt(s, d, nprobe)
 
@@ -1074,7 +1015,8 @@ object Ann {
     * bounded candidate set).
     *
     * Trained like F3's IVF (per-subspace Lloyd under the [[IvfScale]]
-    * fixed-point scheme, deterministic residue-class seeds) and stored like
+    * fixed-point scheme, deterministic residue-class seeds, on the driver
+    * over the same bounded [[trainingSample]]) and stored like
     * F5's index ([[graft.Artifacts]]-fingerprinted codes + codebook parquet).
     * Determinism is TOTAL here: ADC entries and codeword norms snap to a
     * 2^20 fixed-point grid, but the snapped inputs are already bit-identical
@@ -1134,32 +1076,23 @@ object Ann {
     * Family root: `graft.pq.dir`.
     */
   private def pqIndexDir(s: SparkSession, d: String): String =
-    graft.Artifacts.stored(s, "pq_index", d, Seq("embeddings.parquet")) { dir =>
+    graft.Artifacts.stored(s, "pq_index", d, Seq("embeddings.parquet"),
+        trainTarget(s)) { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
       pqBuild(ev, s"$dir/codes", s"$dir/codebook")
     }
 
-  /** Train a codebook on `ev` (vec_id, v), then write ev's codes and the
-    * codebook — the build of [[pqIndexDir]] and of the incremental PQ
-    * artifact's (F27) base generation. A training set under the
-    * [[localTrainingSet]] gate trains on the driver ([[pqTrainLocal]]) and
-    * the codes write scans `ev` once more; above it, distributed training
-    * and encoding scan the subvector frame PqIters+2 times, so it is
-    * persisted and released synchronously once both tables are written. */
+  /** Train a codebook on `ev` (vec_id, v)'s [[trainingSample]] on the
+    * driver ([[pqTrainLocal]]), then write ev's codes (the distributed
+    * encode of every vector) and the codebook — the build of [[pqIndexDir]]
+    * and of the incremental PQ artifact's (F27) base generation. */
   private def pqBuild(ev: DataFrame, codesLoc: String, cbLoc: String): Unit = {
-    def write(cents: Array[Array[Array[Double]]], sv: DataFrame): Unit = {
-      val ci2 = pqCi2(cents)
-      pqCodesFrame(sv, cents, ci2).write.mode("overwrite").parquet(codesLoc)
-      writePqCodebook(ev.sparkSession, cents, ci2, cbLoc)
-    }
-    localTrainingSet(ev) match {
-      case Some(rows) => write(pqTrainLocal(rows), subVectors(ev))
-      case None =>
-        val sv = graft.CacheScope.scopedPersist(subVectors(ev))
-        try write(pqTrain(sv), sv) finally sv.unpersist(blocking = true)
-    }
+    val cents = pqTrainLocal(trainingSample(ev))
+    val ci2 = pqCi2(cents)
+    pqCodesFrame(subVectors(ev), cents, ci2).write.mode("overwrite").parquet(codesLoc)
+    writePqCodebook(ev.sparkSession, cents, ci2, cbLoc)
   }
 
   /** The SQL oracle has no seed fallback for an empty residue class, so a
@@ -1170,42 +1103,9 @@ object Ann {
       s"PQ training needs >= $PqK vectors (every vec_id % $PqK residue " +
         s"class non-empty); got $got/${PqSubs * PqK} seeds")
 
-  /** Deterministic per-subspace Lloyd over a PERSISTED subvector frame —
-    * the above-cap trainer of [[pqBuild]]; [[pqTrainLocal]] replays it on
-    * the driver. */
-  private def pqTrain(sv: DataFrame): Array[Array[Array[Double]]] = {
-    // deterministic seeds: min-vec_id subvector per (sub, residue class)
-    val seedRows = sv
-      .withColumn("cls", pmod(col("vec_id"), lit(PqK.toLong)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("sub"), col("cls")).orderBy(col("vec_id"))))
-      .filter(col("rn") === 1)
-      .select(col("sub"), col("cls"), col("sv")).collect()
-    requirePqSeeds(seedRows.length)
-    var cents = Array.ofDim[Array[Double]](PqSubs, PqK)
-    seedRows.foreach(r =>
-      cents(r.getInt(0))(r.getLong(1).toInt) = r.getSeq[Double](2).toArray)
-    for (_ <- 1 to PqIters) {
-      val sums = assignPqCells(sv.sparkSession, sv, cents)
-        .groupBy(col("sub"), col("cell"))
-        .agg(
-          array((0 until PqSubDim).map(i =>
-            sum(round(element_at(col("sv"), i + 1) * IvfScale).cast("long"))): _*).as("sm"),
-          count(lit(1)).as("cnt"))
-        .collect()
-      val next = cents.map(_.map(_.clone()))
-      sums.foreach { r =>
-        val cnt = r.getLong(3)
-        next(r.getInt(0))(r.getInt(1)) =
-          r.getSeq[Long](2).map(x => x.toDouble / (IvfScale * cnt)).toArray
-      }
-      cents = next
-    }
-    cents
-  }
-
-  /** [[pqTrain]] on the driver: per subspace, [[lloydLocal]] over the
-    * collected vectors' subvectors from the same residue-class seeds. */
+  /** Deterministic per-subspace Lloyd: per subspace, [[lloydLocal]] by L2
+    * over the sample's subvectors, seeded by the min-vec_id subvector of
+    * each `vec_id % PqK` residue class. */
   private def pqTrainLocal(
       rows: Array[(Long, Array[Double])]): Array[Array[Array[Double]]] = {
     val seeds = residueSeeds(rows.map(_._1), PqK)
@@ -1436,11 +1336,11 @@ object Ann {
   val IvfPqNprobe = 2
 
   /** Stored per-cell PQ postings: (vec_id, codes, n2i) partitioned by the
-    * IVF cell — built once per corpus fingerprint from the two existing
-    * artifacts (cheap join, no retraining). */
+    * IVF cell — built once per (corpus fingerprint, training target) from
+    * the two existing artifacts (cheap join, no retraining). */
   private def ivfpqIndexDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_postings", d, Seq("embeddings.parquet"),
-        ivfCellsConf(s)) { dir =>
+        trainTarget(s), ivfCellsConf(s)) { dir =>
       val cells = graft.Artifacts.parquet(s, s"${ivfIndexDir(s, d)}/corpus")
         .select(col("vec_id"), col("cell"))
       graft.Artifacts.parquet(s, s"${pqIndexDir(s, d)}/codes")
@@ -1511,7 +1411,7 @@ object Ann {
     * EVERY generation. */
   private def ivfpqIncrDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_incr", d, Seq("embeddings.parquet"),
-        ivfCellsConf(s)) { dir =>
+        trainTarget(s), ivfCellsConf(s)) { dir =>
       val cells0 = graft.Artifacts.parquet(s, s"${ivfIncrDir(s, d)}/gen-0/corpus")
         .select(col("vec_id"), col("cell"))
       graft.Artifacts.parquet(s, s"${pqIncrDir(s, d)}/gen-0/codes")
@@ -1637,7 +1537,7 @@ object Ann {
     * → `new` or `ref`). Built once per corpus fingerprint. */
   private def lifecycleDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_lifecycle", d, Seq("embeddings.parquet"),
-        ivfCellsConf(s), compactPermilleConf(s)) { dir =>
+        trainTarget(s), ivfCellsConf(s), compactPermilleConf(s)) { dir =>
       val store = ivfpqIncrDir(s, d)
       // the delete log: O(|deletes|), never a base rewrite
       Tables.embeddings(s, d).select(col("vec_id")).filter(deletePred)
@@ -1778,10 +1678,10 @@ object Ann {
     }
 
   /** The streamed generation store: runs the AvailableNow ingest once per
-    * (JVM, corpus fingerprint, k) over the fixture feed. */
+    * (JVM, corpus fingerprint, training target, k) over the fixture feed. */
   private def ingestDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_stream", d, Seq("embeddings.parquet"),
-      ivfCellsConf(s))(runIngestStream(s, d, _))
+      trainTarget(s), ivfCellsConf(s))(runIngestStream(s, d, _))
 
   /** One ingest run: stream the fixture feed, one file per micro-batch,
     * each batch encoded + routed under the stored artifacts and written
@@ -2614,9 +2514,9 @@ object Ann {
     * splitmix64-residue sample of the corpus, FULL-corpus assignment under
     * the sampled centroids — demonstrated and gated, through the exact
     * conf (`graft.ann.trainSampleRows`) a deployment would set, so the
-    * tested code path IS the production path (`ivfIndexDir`'s sampling
-    * branch, previously spec-only). Output: F14's per-query recall report
-    * under the sampled index. The oracle replays the sample filter
+    * tested code path IS the production path ([[trainingSample]]).
+    * Output: F14's per-query recall report under the sampled index. The
+    * oracle replays the sample filter
     * (splitmix64 in HUGEINT mod 2^64, the H6 chain), residue-class seeds
     * WITH the basis-vector fallback (a 10% sample can leave a residue
     * class empty — the Spark builder's fallback, now in SQL too), the

@@ -3,16 +3,18 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod, transform}
+import graft.plans.MixHash
 import graft.similarity.Ann
 
-/** The IVF and PQ trainers run on the driver when the training set fits
-  * `graft.embedding.broadcastMaxRows`, and distributed above it. Both
-  * branches must write the same index: centroids and codebooks equal by
-  * raw double bits, corpus and code tables equal row for row. Each build
-  * lands in a fresh family root, so the two branches never share an
-  * artifact generation.
+/** Every IVF and PQ trainer runs on the driver over one bounded sample:
+  * the whole training set when it fits `graft.embedding.broadcastMaxRows`,
+  * else a deterministic splitmix64 residue sample of at most cap rows.
+  * Over the cap, a build must be repeatable, and its centroids or codebook
+  * must equal an under-cap build over a corpus that holds exactly the
+  * sample rows (raw double bits). Each build lands in a fresh family root,
+  * so no two builds share an artifact generation.
   */
 class AnnLocalTrainSpec extends SparkSpec {
 
@@ -58,52 +60,87 @@ class AnnLocalTrainSpec extends SparkSpec {
 
   private val Forced = Map("graft.embedding.broadcastMaxRows" -> "100")
 
-  /** Local vs forced-distributed build of one artifact; returns the two
-    * shuffle-stage counts after asserting the tables are identical. */
-  private def bothBranches(family: String, d: String, confs: Map[String, String],
-      dirOf: (SparkSession, String) => String, tables: Seq[String]): (Int, Int) = {
-    val (local, localShuffles) = build(family, d, confs, dirOf, tables)
-    val (dist, distShuffles) = build(family, d, confs ++ Forced, dirOf, tables)
-    tables.foreach { t =>
-      assert(local(t).nonEmpty, s"$t is empty")
-      assert(local(t) == dist(t), s"$t differs between the local and distributed builds")
-    }
-    assert(distShuffles > 0, "the forced build must train distributed")
-    (localShuffles, distShuffles)
-  }
-
   private val IvfTables = Seq("centroids", "corpus")
 
-  test("ivf_index at 16 cells: the local build equals the distributed one, with no shuffle") {
-    val (local, _) = bothBranches("ivf", sf, Map.empty, Ann.ivfIndexDirForSpec, IvfTables)
-    assert(local == 0, s"the local build ran $local shuffle stages")
+  test("ivf_index at 16 cells: an under-cap build runs no shuffle") {
+    val (tables, shuffles) = build("ivf", sf, Map.empty, Ann.ivfIndexDirForSpec, IvfTables)
+    assert(tables("centroids").length == Ann.IvfCells && tables("corpus").nonEmpty)
+    assert(shuffles == 0, s"the under-cap build ran $shuffles shuffle stages")
   }
 
-  test("ivf_index at 64 cells: the local build equals the distributed one, with no shuffle") {
-    val (local, _) = bothBranches("ivf", sf, Map("graft.ivf.cells" -> "64"),
+  test("ivf_index at 64 cells: an under-cap build runs no shuffle") {
+    val (tables, shuffles) = build("ivf", sf, Map("graft.ivf.cells" -> "64"),
       Ann.ivfIndexDirForSpec, IvfTables)
-    assert(local == 0, s"the local build ran $local shuffle stages")
+    assert(tables("centroids").length == 64 && tables("corpus").nonEmpty)
+    assert(shuffles == 0, s"the under-cap build ran $shuffles shuffle stages")
   }
 
-  test("sampled ivf_index: the driver-side residue sample equals the distributed one") {
-    // 2,000 vectors at sf0.1 against a 500-row sample target
-    val (local, _) = bothBranches("ivf", sf01, Map("graft.ann.trainSampleRows" -> "500"),
-      Ann.ivfIndexDirForSpec, IvfTables)
-    assert(local == 0, s"the local build ran $local shuffle stages")
+  /** (vec_id, v) of `d`'s embeddings in the trainers' input shape. */
+  private def vectors(d: String)(s: SparkSession): DataFrame =
+    graft.operators.Tables.embeddings(s, d)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+
+  /** The over-cap sample replayed from its definition: the splitmix64
+    * residue filter at target min(trainSampleRows, cap) over the n training
+    * ids, then the cap ids of smallest (residue, vec_id). */
+  private def replaySample(ids: Seq[Long], target: Long, cap: Int): Seq[Long] = {
+    val den = 1L << 20
+    val keep = (den * target / ids.length).max(1L)
+    def residue(id: Long) = Math.floorMod(MixHash.splitmix64(id), den)
+    ids.filter(residue(_) < keep).sortBy(id => (residue(id), id)).take(cap)
   }
 
-  test("ivf_incr: the local build equals the distributed one, with no shuffle") {
-    val (local, _) = bothBranches("ivf", sf, Map.empty, Ann.ivfIncrDirForSpec,
-      Seq("centroids", "gen-0/corpus", "gen-1/corpus"))
-    assert(local == 0, s"the local build ran $local shuffle stages")
+  /** A dataset dir whose embeddings table holds exactly `ids` of `d`'s. */
+  private def plantedCorpus(d: String, ids: Seq[Long]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-train-sample").toString
+    graft.operators.Tables.embeddings(spark, d).filter(col("vec_id").isin(ids: _*))
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
   }
 
-  test("pq_index: the local build equals the distributed one, with fewer shuffles") {
-    // the codes write aggregates per vector in both branches; only the
-    // training's seed window and Lloyd aggregates go away
-    val (local, dist) = bothBranches("pq", sf, Map.empty, Ann.pqIndexDirForSpec,
-      Seq("codebook", "codes"))
-    assert(local < dist, s"local build ran $local shuffle stages, distributed $dist")
+  /** An over-cap build of one artifact, whose training set is `train`:
+    * it samples at most `cap` rows by the residue rule, two builds in
+    * fresh roots are identical, and its `trained` table equals an
+    * under-cap build's over a corpus planted with exactly the sample. */
+  private def overCapBuild(family: String, d: String, cap: Int,
+      train: SparkSession => DataFrame, dirOf: (SparkSession, String) => String,
+      tables: Seq[String], trained: String): Unit = {
+    val confs = Map("graft.embedding.broadcastMaxRows" -> cap.toString)
+    val s = spark.newSession()
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val ids = train(s).select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+    assert(ids.length > cap, s"the training set (${ids.length} rows) must exceed cap $cap")
+    val sample = Ann.trainingSampleIdsForSpec(train(s))
+    assert(sample.nonEmpty && sample.length <= cap,
+      s"the sample has ${sample.length} rows against cap $cap")
+    assert(sample.sorted.toSeq == replaySample(ids, cap, cap).sorted)
+    val (first, _) = build(family, d, confs, dirOf, tables)
+    val (second, _) = build(family, d, confs, dirOf, tables)
+    assert(first == second, "two over-cap builds differ")
+    val (planted, _) = build(family, plantedCorpus(d, sample.toSeq), Map.empty, dirOf,
+      Seq(trained))
+    assert(first(trained).nonEmpty && first(trained) == planted(trained),
+      s"$trained differs from an under-cap build over the sample")
+  }
+
+  test("ivf_index over the cap: repeatable, trained on at most cap sampled rows") {
+    overCapBuild("ivf", sf, 100, vectors(sf), Ann.ivfIndexDirForSpec, IvfTables,
+      "centroids")
+  }
+
+  test("ivf_incr over the cap: repeatable, trained on at most cap sampled rows") {
+    // the base arrivals: every vector outside the appended residue class
+    def base(s: SparkSession): DataFrame = vectors(sf)(s).filter(
+      pmod(MixHash.splitmix64Col(col("vec_id")), lit(Ann.IvfIncrMod.toLong)) =!= Ann.IvfIncrRes)
+    overCapBuild("ivf", sf, 100, base, Ann.ivfIncrDirForSpec,
+      Seq("centroids", "gen-0/corpus", "gen-1/corpus"), "centroids")
+  }
+
+  test("pq_index over the cap: repeatable, trained on at most cap sampled rows") {
+    // 2,000 vectors against a 500-row cap: ~62 per vec_id % 32 residue
+    // class, ~1/4 sampled, so every class keeps a seed
+    overCapBuild("pq", sf01, 500, vectors(sf01), Ann.pqIndexDirForSpec,
+      Seq("codebook", "codes"), "codebook")
   }
 
   /** A dataset dir holding the first `n` vectors of the sf0.001 corpus. */
@@ -121,7 +158,7 @@ class AnnLocalTrainSpec extends SparkSpec {
   }
 
   test("an empty embeddings table fails the IVF build loudly") {
-    // zero rows fit every cap, so both settings take the local branch
+    // zero rows fit every cap, so both settings take the under-cap branch
     val d = corpusPrefix(0)
     Seq(Map.empty[String, String], Forced).foreach { confs =>
       assert(ivfBuildError(d, confs).contains("IVF training set is empty"))

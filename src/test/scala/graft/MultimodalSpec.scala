@@ -389,12 +389,19 @@ class MultimodalSpec extends SparkSpec {
     def rows(): Seq[String] = Multimodal.mmPrepare(spark, sf).collect()
       .map(_.toSeq.mkString("|")).sorted.toSeq
     val local = rows()
+    val scratch = java.nio.file.Files.createTempDirectory("graft-mm-labels").toFile
     spark.conf.set("graft.dedup.ccLocalMaxEdges", "0")
+    spark.conf.set("graft.scratch.dir", scratch.toString)
     try {
-      val dist = rows()
-      assert(local.nonEmpty && dist == local)
+      // two calls serve one stored labels generation
+      Seq(rows(), rows()).foreach(dist => assert(local.nonEmpty && dist == local))
       assert(graft.Gate.taken.contains("graft.dedup.ccLocalMaxEdges:over"))
-    } finally spark.conf.unset("graft.dedup.ccLocalMaxEdges")
+      val labelDirs = scratch.list().filter(_.startsWith("graft_mm_prepare_labels"))
+      assert(labelDirs.length == 1, labelDirs.mkString(", "))
+    } finally {
+      spark.conf.unset("graft.dedup.ccLocalMaxEdges")
+      spark.conf.unset("graft.scratch.dir")
+    }
   }
 
   test("G9 scene cuts fire only at the scene boundary and somewhere in the corpus") {

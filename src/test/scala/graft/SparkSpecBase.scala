@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one JVM-wide SparkSession, UTC, AQE on. */
+/** Shared local session for specs: one JVM-wide SparkSession, UTC, AQE on,
+  * no interpreted fallback for a whole-stage plan that fails to compile. */
 object SparkSpecBase {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,6 +14,9 @@ object SparkSpecBase {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a whole-stage compile failure fails the spec instead of falling
+      // back to interpreted execution with only a logged error
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
