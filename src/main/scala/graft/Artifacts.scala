@@ -289,54 +289,22 @@ object Artifacts {
     ColumnBridge.ofRows(s, plan.newInstance())
   }
 
-  /** Fingerprint ledger for warehouse-TABLE artifacts (E7's corpus index,
-    * B22's bucketed facts): those sites gate the build on
-    * `catalog.tableExists`, which a fresh JVM fails (→ rebuild, correct)
-    * but a long-lived JVM passes even after the source dataset was
-    * regenerated. `tableStale` adds the fingerprint check; callers record
-    * the build with `markTableBuilt`.
-    *
-    * The fingerprint is ALSO persisted beside the artifact (a
-    * `_fingerprint` file inside the table's warehouse dir — underscore
-    * prefix keeps Spark's file index from reading it as data): a fresh JVM
-    * whose catalog still knows the table (persistent metastore) validates
-    * the on-disk fingerprint instead of unconditionally rebuilding — the
-    * cross-JVM reuse the in-memory ledger alone would lose.
-    */
-  private val tableFps = new ConcurrentHashMap[String, String]()
+  /** The catalog name of table `prefix` in the stored generation `dir`:
+    * the prefix plus a hash of the directory, so every generation has its
+    * own table and a served name never points at another generation's
+    * files. */
+  def tableIn(dir: String, prefix: String): String =
+    s"${prefix}_${java.lang.Long.toHexString(graft.plans.MixHash.polyHash(dir))}"
 
-  private def fpFile(s: SparkSession, tbl: String): Path =
-    new Path(new Path(s.conf.get("spark.sql.warehouse.dir"), tbl), "_fingerprint")
-
-  def tableStale(s: SparkSession, tbl: String, fp: String): Boolean = {
-    val mem = tableFps.get(tbl)
-    if (mem != null) return mem != fp
-    // fresh JVM: fall back to the fingerprint persisted beside the table
-    val persisted =
-      try {
-        val f = fpFile(s, tbl)
-        val fs = f.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(f)) None
-        else {
-          val in = fs.open(f)
-          try Some(new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-          finally in.close()
-        }
-      } catch { case _: java.io.IOException => None }
-    if (persisted.contains(fp)) { tableFps.put(tbl, fp); false } else true
-  }
-
-  /** Test-only: forget every in-JVM table fingerprint, simulating a fresh
-    * JVM so the persisted `_fingerprint` fallback path is exercised. */
-  private[graft] def clearTableLedgerForTest(): Unit = tableFps.clear()
-
-  def markTableBuilt(s: SparkSession, tbl: String, fp: String): Unit = {
-    val f = fpFile(s, tbl)
-    val fs = f.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(f, true)
-    try out.write(fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    tableFps.put(tbl, fp); ()
-  }
+  /** Writes `df` as table `prefix` of the generation `dir` being built:
+    * bucketed and sorted on `key`, its files under `<dir>/<prefix>`, and
+    * registered as [[tableIn]]. Call it only inside a [[stored]] build:
+    * re-registering a bucketed table over existing files would need its
+    * column list spelled out. Overwrite mode replaces the registration an
+    * A→B→A fingerprint cycle left under the same name. */
+  def saveBucketed(df: DataFrame, dir: String, prefix: String,
+      buckets: Int, key: String): Unit =
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, key).sortBy(key)
+      .option("path", s"$dir/$prefix").saveAsTable(tableIn(dir, prefix))
 }

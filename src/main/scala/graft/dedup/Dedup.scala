@@ -190,36 +190,20 @@ object Dedup {
   }
 
   /** Build (once per corpus dir) the E7 corpus-side index: three bucketed
-    * parquet tables in the warehouse, the same persistent-artifact pattern as
-    * E8's pair table — replayable on executor loss, bucketed on their join
-    * keys so the per-batch index-side shuffle is pre-paid at write time.
-    * Kept across calls BY DESIGN (the whole point of incremental dedup is
-    * that the corpus index is amortized over batches); rebuilt only when
-    * absent from the catalog. Returns (prefix postings, shingle df, shingle
-    * arrays) as plain table reads.
+    * parquet tables in one [[graft.Artifacts.stored]] generation, the same
+    * stored-artifact rule as E8's pair table — replayable on executor loss,
+    * bucketed on their join keys so the per-batch index-side shuffle is
+    * pre-paid at write time. Kept across calls BY DESIGN (the whole point of
+    * incremental dedup is that the corpus index is amortized over batches);
+    * rebuilt when documents.parquet changes in place or
+    * `graft.dedup.edgeBuckets` is flipped. Returns (prefix postings, shingle
+    * df, shingle arrays) as plain table reads.
     */
   private def ensureIncrementalIndex(
       s: SparkSession, d: String, isOld: Column): (DataFrame, DataFrame, DataFrame) = {
-    val slug = dirSlug(d)
-    // "..h" names: the r18 index keys postings on the polyHash long (schema
-    // change) — fresh identifiers so a warehouse left by an older build can
-    // never serve the string-keyed layout to this code
-    val prefixTbl = s"graft_incr_prefixh_$slug"
-    val dfTbl = s"graft_incr_dfh_$slug"
-    val arrTbl = s"graft_incr_arrh_$slug"
-    val names = Seq(prefixTbl, dfTbl, arrTbl)
-    // the string-keyed layout an older build left under the pre-"h" names:
-    // dropped with every rebuild, never read
-    val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
-    // amortized across batches BY DESIGN, but never across a corpus
-    // regeneration: the fingerprint ledger (in-JVM, with the persisted
-    // _fingerprint fallback for fresh JVMs) forces a rebuild when
-    // documents.parquet changes under an existing catalog entry
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    if (!names.forall(s.catalog.tableExists) ||
-        graft.Artifacts.tableStale(s, prefixTbl, fp)) {
-      (names ++ legacy).foreach(resetTable(s, _))
-      val nb = edgeBuckets(s)
+    val nb = edgeBuckets(s)
+    val dir = graft.Artifacts.stored(s, "dedup_incr_index", d,
+        Seq("documents.parquet"), nb) { dir =>
       val old = withShingles(Tables.documents(s, d).filter(isOld))
         .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
         .persist()
@@ -234,27 +218,25 @@ object Dedup {
       val kept = withDf.filter(col("df") <= MaxShingleDf)
       val ranked = kept.withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      ranked.filter(col("rk") <= col("sz") - expr("(4*sz + 4) DIV 5") + 1)
-        .select(col("h"), col("doc_id"))
-        .repartition(nb, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(nb, "h").sortBy("h").saveAsTable(prefixTbl)
+      graft.Artifacts.saveBucketed(
+        ranked.filter(col("rk") <= col("sz") - expr("(4*sz + 4) DIV 5") + 1)
+          .select(col("h"), col("doc_id")).repartition(nb, col("h")),
+        dir, "graft_incr_prefix", nb, "h")
       // FULL df table (capped shingles included): the batch side must
       // distinguish corpus-hot shingles (dropped, as the corpus side dropped
       // them) from corpus-unseen ones (ranked last but kept)
-      withDf.select(col("h"), col("df")).groupBy(col("h"))
-        .agg(max(col("df")).as("df"))
-        .repartition(nb, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(nb, "h").sortBy("h").saveAsTable(dfTbl)
-      old.select(col("doc_id"), col("shingles"), col("sz"))
-        .repartition(nb, col("doc_id"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(nb, "doc_id").sortBy("doc_id").saveAsTable(arrTbl)
+      graft.Artifacts.saveBucketed(
+        withDf.select(col("h"), col("df")).groupBy(col("h"))
+          .agg(max(col("df")).as("df")).repartition(nb, col("h")),
+        dir, "graft_incr_df", nb, "h")
+      graft.Artifacts.saveBucketed(
+        old.select(col("doc_id"), col("shingles"), col("sz"))
+          .repartition(nb, col("doc_id")),
+        dir, "graft_incr_arr", nb, "doc_id")
       old.unpersist(blocking = false)
-      graft.Artifacts.markTableBuilt(s, prefixTbl, fp)
     }
-    (s.table(prefixTbl), s.table(dfTbl), s.table(arrTbl))
+    def table(prefix: String) = s.table(graft.Artifacts.tableIn(dir, prefix))
+    (table("graft_incr_prefix"), table("graft_incr_df"), table("graft_incr_arr"))
   }
 
   /** E8 — near-dup CLUSTER resolution: connected components over the E2
@@ -274,29 +256,6 @@ object Dedup {
   private[graft] def edgeBuckets(s: SparkSession): Int =
     s.conf.getOption("graft.dedup.edgeBuckets")
       .map(_.toInt).getOrElse(EdgeBucketsDefault)
-
-  /** Warehouse identifier for a data dir. The catalog lowercases identifiers,
-    * so the slug is lowercased up front — manual stale-location cleanup and
-    * the catalog must agree on the on-disk path (an uppercase dir name would
-    * otherwise write to the lowercased location while cleanup deletes the
-    * raw-cased one). Single writer per data dir assumed: two concurrent
-    * builds against the same dir race on DROP/delete/CTAS.
-    */
-  private[graft] def dirSlug(d: String): String =
-    d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-
-  private def warehousePath(s: SparkSession, name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
-
-  /** Clear a table and any stale on-disk location a previous JVM left behind
-    * (a fresh in-memory catalog doesn't know the table exists, so DROP alone
-    * can't reach the files and a CTAS fails with LOCATION_ALREADY_EXISTS).
-    */
-  private def resetTable(s: SparkSession, tbl: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-    val loc = warehousePath(s, tbl)
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-  }
 
   /** Free the block-manager storage behind a `localCheckpoint`ed frame.
     * Dataset.unpersist goes through the CacheManager and does NOT reach

@@ -9,53 +9,29 @@ import graft.SparkEntry.Op
   * written ONCE per data dir as bucketed+sorted tables (hash-pre-shuffled on
   * the join key at write time), and every subsequent join on that key plans
   * with NO shuffle exchange on either side — the co-location contract a
-  * 100 TB fact table amortizes across every query that joins it. The tables
-  * are kept across calls BY DESIGN (write-once is the point; same persistent
-  * -artifact pattern as the E7 corpus index); rebuilt only when absent from
-  * the catalog. BucketingSpec pins the no-exchange plan shape; the oracle
-  * pins the result against the plain unbucketed join.
+  * 100 TB fact table amortizes across every query that joins it. The two
+  * tables are one [[graft.Artifacts.stored]] generation, registered per
+  * generation ([[graft.Artifacts.saveBucketed]]): kept across calls BY
+  * DESIGN, rebuilt when either fact table changes in place. BucketingSpec
+  * pins the no-exchange plan shape; the oracle pins the result against the
+  * plain unbucketed join.
   */
 object Bucketed {
 
   val Buckets = 8
 
-  private def dirSlug(d: String): String =
-    d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-
-  /** Clear a table and any stale on-disk location a previous JVM left
-    * behind (the in-memory catalog forgets tables across JVMs but their
-    * warehouse dirs persist; CTAS refuses a stale location).
-    */
-  private def resetTable(s: SparkSession, tbl: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-  }
-
   private def ensureTables(s: SparkSession, d: String): (String, String) = {
-    val slug = dirSlug(d)
-    val lt = s"graft_bkt_lineitem_$slug"
-    val ot = s"graft_bkt_orders_$slug"
-    // write-once BY DESIGN, but never across a source regeneration: the
-    // in-JVM fingerprint ledger ([[graft.Artifacts]]) forces a rebuild when
-    // the fact parquet changes under an existing catalog entry
-    val fp = graft.Artifacts.fingerprint(
-      s, s"$d/lineitem.parquet", s"$d/orders.parquet")
-    if (!Seq(lt, ot).forall(s.catalog.tableExists) ||
-        graft.Artifacts.tableStale(s, lt, fp)) {
-      Seq(lt, ot).foreach(resetTable(s, _))
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-        .write.bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable(lt)
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-        .write.bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable(ot)
-      graft.Artifacts.markTableBuilt(s, lt, fp)
+    val dir = graft.Artifacts.stored(s, "bucketed_facts", d,
+        Seq("lineitem.parquet", "orders.parquet"), Buckets) { dir =>
+      graft.Artifacts.saveBucketed(
+        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice")),
+        dir, "graft_bkt_lineitem", Buckets, "l_orderkey")
+      graft.Artifacts.saveBucketed(
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")),
+        dir, "graft_bkt_orders", Buckets, "o_orderkey")
     }
-    (lt, ot)
+    (graft.Artifacts.tableIn(dir, "graft_bkt_lineitem"),
+      graft.Artifacts.tableIn(dir, "graft_bkt_orders"))
   }
 
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {

@@ -928,7 +928,7 @@ object CorpusClean {
     * standing corpus-generation artifacts instead of recomputing anything
     * corpus-sized:
     *   - near-dup ADMISSION against the existing corpus through E7's
-    *     stored PPJoin index (the plan scans the graft_incr_* tables —
+    *     stored PPJoin index (the plan scans its graft_incr_* generation tables —
     *     corpus text is never re-shingled);
     *   - eval-set decontamination against the STORED eval-gram artifact
     *     ([[evalGramsLocation]], fingerprint-versioned);

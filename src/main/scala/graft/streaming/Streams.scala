@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQueryProgress, Trigger}
 import graft.operators.{Analytics, Relational, Signals, Tables}
@@ -519,7 +520,14 @@ object Streams {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val q = writer.trigger(Trigger.AvailableNow()).start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable()
+      finally {
+        q.stop()
+        // a stopped query's RocksDB stores stay loaded until JVM exit, whose
+        // late close fails MANIFEST verification; release them now unless
+        // another query of this session still holds a store
+        if (rocksDb && s.streams.active.isEmpty) ColumnBridge.unloadStateStores()
+      }
       lastProgress = q.recentProgress.toSeq
       lastProgress
     } finally saved.foreach {

@@ -31,4 +31,8 @@ object ColumnBridge {
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
   def typeCollection(ts: AbstractType*): AbstractType =
     org.apache.spark.sql.types.TypeCollection(ts: _*)
+
+  /** Closes every state-store provider loaded in this JVM. */
+  def unloadStateStores(): Unit =
+    org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 }

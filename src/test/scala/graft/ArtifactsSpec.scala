@@ -93,11 +93,16 @@ class ArtifactsSpec extends SparkSpec {
     d
   }
 
-  /** Runs `body` with the scratch root pointed at a fresh temp dir. */
+  /** Runs `body` with the scratch root pointed at a fresh temp dir, and
+    * deletes that root afterwards. */
   private def withScratch[T](body: String => T): T = {
     val root = Files.createTempDirectory("graft-scratch-spec").toString
     spark.conf.set("graft.scratch.dir", root)
-    try body(root) finally spark.conf.unset("graft.scratch.dir")
+    try body(root)
+    finally {
+      spark.conf.unset("graft.scratch.dir")
+      new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    }
   }
 
   test("sweepStale never deletes a live generation after a fingerprint cycle") {
@@ -213,22 +218,6 @@ class ArtifactsSpec extends SparkSpec {
     }
   }
 
-  test("persisted _fingerprint validates tables across a (simulated) fresh JVM") {
-    val tbl = "graft_artifacts_spec_fp_tbl"
-    // the _fingerprint file lands inside the table's warehouse dir
-    Files.createDirectories(Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
-    Artifacts.markTableBuilt(spark, tbl, "fp_v1")
-    assert(!Artifacts.tableStale(spark, tbl, "fp_v1"))
-    // fresh JVM: the in-memory ledger is empty, but the persisted file
-    // validates the existing artifact instead of forcing a rebuild
-    Artifacts.clearTableLedgerForTest()
-    assert(!Artifacts.tableStale(spark, tbl, "fp_v1"))
-    // ...and still catches a moved input fingerprint
-    Artifacts.clearTableLedgerForTest()
-    assert(Artifacts.tableStale(spark, tbl, "fp_v2"))
-  }
-
   test("events ts-type and era probes re-run after an in-place overwrite") {
     val dir = Files.createTempDirectory("graft-stale-ev").toString
     copyFile(s"$sf/events.parquet", s"$dir/events.parquet")
@@ -271,14 +260,48 @@ class ArtifactsSpec extends SparkSpec {
     assert(n2 == 0, s"stale int8 index served after overwrite ($n2 rows)")
   }
 
+  /** A B22 query over `dir`: the (name, location) of each table it scans,
+    * and its answer. */
+  private def bucketed(dir: String): (Set[(String, java.net.URI)], Set[org.apache.spark.sql.Row]) = {
+    val df = Bucketed.bucketedJoin(spark, dir)
+    (servedTables(df).map(t => t.identifier.table -> t.location).toSet, df.collect().toSet)
+  }
+
   test("B22 bucketed facts rebuild when the source tables change in place") {
-    val dir = Files.createTempDirectory("graft-stale-bkt").toString
-    copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
-    copyFile(s"$sf/orders.parquet", s"$dir/orders.parquet")
-    val r1 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
-    Tables.lineitem(spark, sf).filter(col("l_orderkey") % 2 === 0)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r2 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
-    assert(r2 < r1, "stale bucketed fact tables served after overwrite")
+    withScratch { _ =>
+      val dir = Files.createTempDirectory("graft-stale-bkt").toString
+      copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
+      copyFile(s"$sf/orders.parquet", s"$dir/orders.parquet")
+      val r1 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
+      Tables.lineitem(spark, sf).filter(col("l_orderkey") % 2 === 0)
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      val r2 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
+      assert(r2 < r1, "stale bucketed fact tables served after overwrite")
+    }
+  }
+
+  test("B22 bucketed facts rebuild into the first generation after an A→B→A cycle") {
+    withScratch { root =>
+      val dir = Files.createTempDirectory("graft-cycle-bkt").toString
+      copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
+      copyFile(s"$sf/orders.parquet", s"$dir/orders.parquet")
+      val orders = Paths.get(dir, "orders.parquet")
+      val t0 = Files.getLastModifiedTime(orders)
+      val (tablesA, answerA) = bucketed(dir)
+      assert(tablesA.size == 2 && tablesA.forall(_._2.getPath.startsWith(root)),
+        s"bucketed facts not in the scratch generation: $tablesA")
+      // B: orders rewritten in place with half the keys
+      Files.delete(orders)
+      Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0).write.parquet(orders.toString)
+      val (tablesB, answerB) = bucketed(dir)
+      assert((tablesB.map(_._1) & tablesA.map(_._1)).isEmpty && answerB != answerA)
+      // A again: the same bytes and mtime give A's fingerprint back
+      new scala.reflect.io.Directory(orders.toFile).deleteRecursively()
+      copyFile(s"$sf/orders.parquet", orders.toString)
+      Files.setLastModifiedTime(orders, t0)
+      val (tablesA2, answerA2) = bucketed(dir)
+      assert(tablesA2 == tablesA, s"A rebuilt into $tablesA2, not $tablesA")
+      assert(answerA2 == answerA)
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 import graft.dedup.Dedup
 import graft.similarity.Ann
@@ -397,23 +399,30 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset("graft.dedup.maxBandBucket")
   }
 
+  /** The E7 index tables `df`'s plan reads. */
+  private def incrIndexTables(df: org.apache.spark.sql.DataFrame) =
+    servedTables(df).filter(_.identifier.table.startsWith("graft_incr_"))
+
   test("incremental dedup scans the persisted corpus index and skips rebuilds") {
-    val slug = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val tbls = Seq("prefixh", "dfh", "arrh").map(k => s"graft_incr_${k}_$slug")
-    tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    val r1 = Dedup.incrementalNew(spark, sf).collect().map(_.getLong(0)).toSet
-    assert(tbls.forall(spark.catalog.tableExists), "index tables not materialized")
+    val df1 = Dedup.incrementalNew(spark, sf)
+    val r1 = df1.collect().map(_.getLong(0)).toSet
+    val tbls = incrIndexTables(df1)
+    assert(tbls.size == 3 && tbls.forall(t => spark.catalog.tableExists(t.identifier.table)),
+      "index tables not materialized")
     // the query plan consumes the stored index (plain table scans), not a
     // re-shingled corpus: the only documents scan is the batch side
     val plan = Dedup.incrementalNew(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("graft_incr_prefix") && plan.contains("graft_incr_arr")
       && plan.contains("graft_incr_df"), "plan does not scan the stored index")
-    // a second run must NOT rebuild the artifact (mtimes untouched)...
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    def mtimes() = tbls.flatMap { t =>
-      val dir = new java.io.File(wh, t)
-      dir.listFiles().toSeq.map(f => f.getName -> f.lastModified)
-    }.sorted
+    // a second run must NOT rebuild the artifact (mtimes in its generation
+    // directory untouched)...
+    val gen = java.nio.file.Paths.get(tbls.head.location).getParent
+    def mtimes() = {
+      val files = java.nio.file.Files.walk(gen)
+      try files.iterator().asScala.toSeq
+        .map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis).sorted
+      finally files.close()
+    }
     val before = mtimes()
     val r2 = Dedup.incrementalNew(spark, sf).collect().map(_.getLong(0)).toSet
     assert(mtimes() == before, "index was rebuilt on a second batch run")
@@ -421,23 +430,25 @@ class DedupSpec extends SparkSpec {
     assert(r2 == r1 && r1.nonEmpty)
   }
 
-  test("rebuilding the incremental index drops the legacy string-keyed tables") {
-    val slug = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    legacy.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      new scala.reflect.io.Directory(new java.io.File(wh, t)).deleteRecursively()
-      spark.range(3).write.saveAsTable(t)
+  test("flipping graft.dedup.edgeBuckets serves an E7 index with that bucket count") {
+    def run(): (Int, Set[Long]) = {
+      val df = Dedup.incrementalNew(spark, sf)
+      val prefix = incrIndexTables(df).map(_.identifier.table)
+        .filter(_.startsWith("graft_incr_prefix"))
+      assert(prefix.size == 1, s"served prefix tables: $prefix")
+      val buckets = spark.sql(s"DESCRIBE TABLE EXTENDED `${prefix.head}`").collect()
+        .collectFirst { case r if r.getString(0) == "Num Buckets" => r.getString(1).trim.toInt }
+      (buckets.getOrElse(fail(s"${prefix.head} is not bucketed")),
+        df.collect().map(_.getLong(0)).toSet)
     }
-    assert(legacy.forall(spark.catalog.tableExists))
-    // a missing h-keyed table forces the rebuild
-    spark.sql(s"DROP TABLE IF EXISTS `graft_incr_prefixh_$slug`")
-    assert(Dedup.incrementalNew(spark, sf).collect().nonEmpty)
-    legacy.foreach { t =>
-      assert(!spark.catalog.tableExists(t), s"legacy table $t survived the rebuild")
-      assert(!new java.io.File(wh, t).exists, s"legacy table dir $t survived the rebuild")
-    }
+    val (b32, r32) = run()
+    assert(b32 == Dedup.EdgeBucketsDefault)
+    spark.conf.set("graft.dedup.edgeBuckets", "4")
+    try {
+      val (b4, r4) = run()
+      assert(b4 == 4, s"the index built under ${Dedup.EdgeBucketsDefault} buckets was served")
+      assert(r4 == r32)
+    } finally spark.conf.unset("graft.dedup.edgeBuckets")
   }
 
   test("clusterPairs leaves no persisted or checkpointed blocks behind") {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: one JVM-wide SparkSession, UTC, AQE on,
@@ -30,4 +32,8 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpecBase.spark
   def sf: String = SparkSpecBase.sf
   def sf01: String = SparkSpecBase.sf01
+
+  /** The catalog tables `df`'s plan reads. */
+  def servedTables(df: DataFrame): Seq[CatalogTable] =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.catalogTable }.flatten
 }
