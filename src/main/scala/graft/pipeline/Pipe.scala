@@ -535,11 +535,9 @@ object Pipe {
   def readStreamText(spark: SparkSession, path: String): Pipe[String] =
     Pipe(spark.readStream.textFile(path))
 
-  private val drainId = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Run a STREAMING pipe to completion over its (bounded) source — an
-    * AvailableNow trigger into a uniquely-named memory sink — and return
-    * the drained table. The harness for batch≡stream parity: the
+  /** Run a STREAMING pipe to completion over its (bounded) source through
+    * the streaming keys' runner ([[graft.streaming.Streams.drain]]) and
+    * return the drained rows. The harness for batch≡stream parity: the
     * PipelineSpec pins that the same transform chain through [[readText]]
     * and [[readStreamText]] produces identical results. `mode` is the
     * output mode ("append" for elementwise chains, "complete" for
@@ -547,14 +545,7 @@ object Pipe {
     */
   def drain[T](p: Pipe[T], mode: String = "append"): org.apache.spark.sql.DataFrame = {
     require(p.ds.isStreaming, "drain() runs streaming pipes; use collect() on batch pipes")
-    val name = "graft_pipe_drain_" + drainId.incrementAndGet()
-    val q = p.ds.writeStream.format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    p.spark.table(name)
+    graft.streaming.Streams.drain(p.spark, p.ds, mode)
   }
 
   implicit final class KVPipe[K, V](private val p: Pipe[(K, V)]) extends AnyVal {

@@ -282,7 +282,7 @@ object Ann {
     * pattern as [[int8Index]]). A [[graft.Artifacts.stored]] artifact of
     * the `graft.ivf.dir` family, shaped by the training-sample target and k.
     */
-  private def ivfIndexDir(s: SparkSession, d: String): String =
+  private[graft] def ivfIndexDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivf_index", d, Seq("embeddings.parquet"),
         trainTarget(s), ivfCellsConf(s)) { dir =>
       val full = withNorm(Tables.embeddings(s, d))
@@ -478,7 +478,7 @@ object Ann {
     * never touched by an append), `gen-1/corpus` (the arrival batch
     * assigned under the stored centroids). Same per-(corpus, fingerprint,
     * training target) build-once discipline as [[ivfIndexDir]]. */
-  private def ivfIncrDir(s: SparkSession, d: String): String =
+  private[graft] def ivfIncrDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivf_incr", d, Seq("embeddings.parquet"),
         trainTarget(s), ivfCellsConf(s)) { dir =>
       val base = withNorm(Tables.embeddings(s, d))
@@ -652,7 +652,7 @@ object Ann {
 
   /** IVF probe at a given nprobe: exact-cosine scored candidates from the
     * routed cells, unranked (callers rank-cut or aggregate). */
-  private def ivfCandsAt(s: SparkSession, d: String, nprobe: Int): DataFrame = {
+  private[graft] def ivfCandsAt(s: SparkSession, d: String, nprobe: Int): DataFrame = {
     val dir = ivfIndexDir(s, d)
     val corpus = graft.Artifacts.parquet(s, s"$dir/corpus")
     val routed = ivfRouted(corpus, graft.Artifacts.parquet(s, s"$dir/centroids"), nprobe)
@@ -665,16 +665,8 @@ object Ann {
   def ivfTopK(s: SparkSession, d: String): DataFrame =
     rankTopK(ivfCandsAt(s, d, 2))
 
-  private[graft] def ivfIndexDirForSpec(s: SparkSession, d: String): String =
-    ivfIndexDir(s, d)
-  private[graft] def ivfIncrDirForSpec(s: SparkSession, d: String): String =
-    ivfIncrDir(s, d)
-  private[graft] def pqIndexDirForSpec(s: SparkSession, d: String): String =
-    pqIndexDir(s, d)
   private[graft] def trainingSampleIdsForSpec(train: DataFrame): Array[Long] =
     trainingSample(train).map(_._1)
-  private[graft] def ivfCandsForSpec(s: SparkSession, d: String,
-      nprobe: Int): DataFrame = ivfCandsAt(s, d, nprobe)
 
   /** F4 — symmetric int8 quantization, the storage/transport format every
     * large ANN deployment ships vectors in (4x smaller than float32, SIMD
@@ -1075,7 +1067,7 @@ object Ann {
     * integer, so the build's per-vector sum is accumulation-order-proof.
     * Family root: `graft.pq.dir`.
     */
-  private def pqIndexDir(s: SparkSession, d: String): String =
+  private[graft] def pqIndexDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "pq_index", d, Seq("embeddings.parquet"),
         trainTarget(s)) { dir =>
       val ev = Tables.embeddings(s, d)
@@ -1429,13 +1421,10 @@ object Ann {
     * stored routing literals (F26's device) joined to its codes under
     * the collected codebook (F27's device) — two batch-filtered
     * embeddings scans, zero index reads. Exposed to the spec. */
-  private def ivfpqAppendPostings(s: SparkSession, d: String): DataFrame =
+  private[graft] def ivfpqAppendPostings(s: SparkSession, d: String): DataFrame =
     pqAppendEncode(s, d, s"${pqIncrDir(s, d)}/codebook")
       .join(ivfAppendAssign(s, d, s"${ivfIncrDir(s, d)}/centroids")
         .select(col("vec_id"), col("cell")), "vec_id")
-
-  private[graft] def ivfpqAppendPostingsForSpec(s: SparkSession, d: String): DataFrame =
-    ivfpqAppendPostings(s, d)
 
   /** F28's gated frame: F15's cascade (routing → per-cell ADC shortlist
     * through the bounded-heap device → exact rerank, shared definitions)
@@ -1535,7 +1524,7 @@ object Ann {
     * `tombstones` (the persisted delete log), `cells/cell=K` (merged LIVE
     * postings for the cells compaction selected), `_MANIFEST` (every cell
     * → `new` or `ref`). Built once per corpus fingerprint. */
-  private def lifecycleDir(s: SparkSession, d: String): String =
+  private[graft] def lifecycleDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_lifecycle", d, Seq("embeddings.parquet"),
         trainTarget(s), ivfCellsConf(s), compactPermilleConf(s)) { dir =>
       val store = ivfpqIncrDir(s, d)
@@ -1592,9 +1581,6 @@ object Ann {
         expr(s"CAST(CASE WHEN dirty_permille > ${compactPermilleConf(s)} " +
           "THEN 1 ELSE 0 END AS BIGINT)"))
   }
-
-  private[graft] def lifecycleDirForSpec(s: SparkSession, d: String): String =
-    lifecycleDir(s, d)
 
   /** F29's gated frame: the F28 cascade with the tombstone log applied —
     * deleted vectors stop being retrievable the moment the O(|deletes|)
@@ -1679,7 +1665,7 @@ object Ann {
 
   /** The streamed generation store: runs the AvailableNow ingest once per
     * (JVM, corpus fingerprint, training target, k) over the fixture feed. */
-  private def ingestDir(s: SparkSession, d: String): String =
+  private[graft] def ingestDir(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "ivfpq_stream", d, Seq("embeddings.parquet"),
       trainTarget(s), ivfCellsConf(s))(runIngestStream(s, d, _))
 
@@ -1714,11 +1700,8 @@ object Ann {
       }
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
+    try q.processAllAvailable() finally q.stop()
   }
-
-  private[graft] def ingestDirForSpec(s: SparkSession, d: String): String =
-    ingestDir(s, d)
 
   /** The streamed generations, unioned — shared by the gated report and
     * the spec's serve-equivalence pin. */

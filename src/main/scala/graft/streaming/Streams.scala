@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStoreProviderId
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQueryProgress, Trigger}
@@ -490,10 +491,15 @@ object Streams {
   /** Per-batch progress of the last [[runToCompletion]] query (spec probe). */
   @volatile private[graft] var lastProgress: Seq[StreamingQueryProgress] = Nil
 
+  /** State-store providers of the last [[runToCompletion]] query (spec probe). */
+  @volatile private[graft] var lastStateStores: Seq[StateStoreProviderId] = Nil
+
   /** Runs one bounded streaming query to completion — the one place every
-    * gated streaming key starts, drains and stops a query. `writer` is built
-    * inside the conf scope and started with an AvailableNow trigger; the
-    * query is stopped and the session conf restored even when it fails.
+    * streaming key and `Pipe.drain` start, drain and stop a query. `writer`
+    * is built inside the conf scope and started with an AvailableNow
+    * trigger; the query is stopped, its state stores closed (unless another
+    * query of the session still runs) and the session conf restored even
+    * when it fails.
     *
     * The stateful-operator partition count is decoupled from the session's
     * batch shuffle width via `graft.streaming.statePartitions` (default 8).
@@ -522,11 +528,14 @@ object Streams {
       val q = writer.trigger(Trigger.AvailableNow()).start()
       try q.processAllAvailable()
       finally {
-        q.stop()
-        // a stopped query's RocksDB stores stay loaded until JVM exit, whose
-        // late close fails MANIFEST verification; release them now unless
-        // another query of this session still holds a store
-        if (rocksDb && s.streams.active.isEmpty) ColumnBridge.unloadStateStores()
+        try q.stop()
+        finally {
+          // a stopped query's HDFS-backed maps stay on the heap until Spark's
+          // maintenance sweep, its RocksDB stores until JVM exit (whose late
+          // close fails MANIFEST verification)
+          if (s.streams.active.isEmpty) ColumnBridge.unloadStateStores()
+          lastStateStores = ColumnBridge.stateStores(q)
+        }
       }
       lastProgress = q.recentProgress.toSeq
       lastProgress
@@ -539,12 +548,14 @@ object Streams {
   /** [[runToCompletion]] into a uniquely named memory sink: returns a frame
     * backed by the drained rows, with the sink's catalog view already
     * dropped (the frame keeps the rows; nothing is left in the session). */
-  private def drain(s: SparkSession, df: => Dataset[_], mode: String,
+  private[graft] def drain(s: SparkSession, df: => Dataset[_], mode: String,
       rocksDb: Boolean = false): DataFrame = {
     val name = "graft_stream_sink_" + sinkId.incrementAndGet()
-    runToCompletion(s, rocksDb)(
-      df.writeStream.format("memory").queryName(name).outputMode(mode))
-    try s.table(name) finally s.catalog.dropTempView(name)
+    try {
+      runToCompletion(s, rocksDb)(
+        df.writeStream.format("memory").queryName(name).outputMode(mode))
+      s.table(name)
+    } finally s.catalog.dropTempView(name)
   }
 
   /** C5 as a CORRECTNESS-GATED query: exact streaming dedup over a bounded
@@ -632,7 +643,7 @@ object Streams {
     * (one parquet file each), fingerprint-cached like the other stream
     * fixtures. Arrival ORDER is controlled per run by the recovery driver
     * (phase 1 stages half0 only), so no modTime choreography is needed. */
-  private def recoveryFixtureDir(s: SparkSession, d: String): String = {
+  private[graft] def recoveryFixtureDir(s: SparkSession, d: String): String = {
     graft.Artifacts.stored(s, "recovery_fixture", d, Seq("events.parquet")) { loc =>
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val mm = ev.agg(min(col("ts")), max(col("ts"))).head // 2 scalars, bounded
@@ -717,10 +728,6 @@ object Streams {
       .outputMode("append")).map(_.batchId)
   }
 
-  /** Spec accessor: the C37 fixture location (read-only). */
-  private[graft] def recoveryFixtureDirForSpec(s: SparkSession, d: String): String =
-    recoveryFixtureDir(s, d)
-
   def streamingRestartRecovery(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val fix = recoveryFixtureDir(s, d)
@@ -753,7 +760,7 @@ object Streams {
   /** Fixture for C38: orders split into three date-ordered CDC slices, the
     * arrival choreography the other stream fixtures use (modTime order +
     * maxFilesPerTrigger=1 → one slice per micro-batch). */
-  private def cdcFixtureDir(s: SparkSession, d: String): String = {
+  private[graft] def cdcFixtureDir(s: SparkSession, d: String): String = {
     graft.Artifacts.stored(s, "cdc_fixture", d, Seq("orders.parquet")) { loc =>
       val o = Tables.orders(s, d)
         .select(col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
@@ -768,10 +775,6 @@ object Streams {
       writeOne(o.filter(col("o_orderdate") >= c2), "cdc2", t0 - 60000)
     }
   }
-
-  /** Spec accessor: the CDC fixture location (read-only). */
-  private[graft] def cdcFixtureDirForSpec(s: SparkSession, d: String): String =
-    cdcFixtureDir(s, d)
 
   /** Buckets in the C38 snapshot layout (B22's bucket discipline applied
     * to a continuously-merged table). Each snapshot generation holds only

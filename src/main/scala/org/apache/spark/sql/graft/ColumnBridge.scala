@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Bridge into Spark's `private[sql]` APIs (Spark 4 wraps Columns around
   * ColumnNode, not Expression; DataFrame construction from a LogicalPlan is
@@ -33,6 +37,16 @@ object ColumnBridge {
     org.apache.spark.sql.types.TypeCollection(ts: _*)
 
   /** Closes every state-store provider loaded in this JVM. */
-  def unloadStateStores(): Unit =
-    org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+  def unloadStateStores(): Unit = StateStore.unloadAll()
+
+  /** The state-store providers of `q`'s last micro-batch plan, one per
+    * (stateful operator, partition, store name); empty when no batch was
+    * planned. A batch that failed in planning leaves no plan to read. */
+  def stateStores(q: StreamingQuery): Seq[StateStoreProviderId] = {
+    val last = Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+    last.flatMap(e => scala.util.Try(e.executedPlan).toOption).toSeq.flatMap(_.collect {
+      case w: StateStoreWriter => for (p <- 0 until w.getStateInfo.numPartitions;
+        n <- w.stateStoreNames) yield StateStoreProviderId(w.getStateInfo, p, n)
+    }.flatten)
+  }
 }

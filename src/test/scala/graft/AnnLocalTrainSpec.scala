@@ -63,14 +63,14 @@ class AnnLocalTrainSpec extends SparkSpec {
   private val IvfTables = Seq("centroids", "corpus")
 
   test("ivf_index at 16 cells: an under-cap build runs no shuffle") {
-    val (tables, shuffles) = build("ivf", sf, Map.empty, Ann.ivfIndexDirForSpec, IvfTables)
+    val (tables, shuffles) = build("ivf", sf, Map.empty, Ann.ivfIndexDir, IvfTables)
     assert(tables("centroids").length == Ann.IvfCells && tables("corpus").nonEmpty)
     assert(shuffles == 0, s"the under-cap build ran $shuffles shuffle stages")
   }
 
   test("ivf_index at 64 cells: an under-cap build runs no shuffle") {
     val (tables, shuffles) = build("ivf", sf, Map("graft.ivf.cells" -> "64"),
-      Ann.ivfIndexDirForSpec, IvfTables)
+      Ann.ivfIndexDir, IvfTables)
     assert(tables("centroids").length == 64 && tables("corpus").nonEmpty)
     assert(shuffles == 0, s"the under-cap build ran $shuffles shuffle stages")
   }
@@ -124,7 +124,7 @@ class AnnLocalTrainSpec extends SparkSpec {
   }
 
   test("ivf_index over the cap: repeatable, trained on at most cap sampled rows") {
-    overCapBuild("ivf", sf, 100, vectors(sf), Ann.ivfIndexDirForSpec, IvfTables,
+    overCapBuild("ivf", sf, 100, vectors(sf), Ann.ivfIndexDir, IvfTables,
       "centroids")
   }
 
@@ -132,14 +132,14 @@ class AnnLocalTrainSpec extends SparkSpec {
     // the base arrivals: every vector outside the appended residue class
     def base(s: SparkSession): DataFrame = vectors(sf)(s).filter(
       pmod(MixHash.splitmix64Col(col("vec_id")), lit(Ann.IvfIncrMod.toLong)) =!= Ann.IvfIncrRes)
-    overCapBuild("ivf", sf, 100, base, Ann.ivfIncrDirForSpec,
+    overCapBuild("ivf", sf, 100, base, Ann.ivfIncrDir,
       Seq("centroids", "gen-0/corpus", "gen-1/corpus"), "centroids")
   }
 
   test("pq_index over the cap: repeatable, trained on at most cap sampled rows") {
     // 2,000 vectors against a 500-row cap: ~62 per vec_id % 32 residue
     // class, ~1/4 sampled, so every class keeps a seed
-    overCapBuild("pq", sf01, 500, vectors(sf01), Ann.pqIndexDirForSpec,
+    overCapBuild("pq", sf01, 500, vectors(sf01), Ann.pqIndexDir,
       Seq("codebook", "codes"), "codebook")
   }
 
@@ -153,7 +153,7 @@ class AnnLocalTrainSpec extends SparkSpec {
 
   private def ivfBuildError(d: String, confs: Map[String, String]): String = {
     val e = intercept[IllegalArgumentException](
-      build("ivf", d, confs, Ann.ivfIndexDirForSpec, IvfTables))
+      build("ivf", d, confs, Ann.ivfIndexDir, IvfTables))
     e.getMessage
   }
 

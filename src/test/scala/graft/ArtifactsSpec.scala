@@ -60,8 +60,7 @@ class ArtifactsSpec extends SparkSpec {
     val dataDir = Files.createTempDirectory("graft-sweep-data").toString
     val idxBase = Files.createTempDirectory("graft-sweep-idx").toString
     copyFile(s"$sf/embeddings.parquet", s"$dataDir/embeddings.parquet")
-    spark.conf.set("graft.int8.dir", idxBase)
-    try {
+    withConf("graft.int8.dir" -> idxBase) {
       def idxDirs = new java.io.File(idxBase).listFiles().map(_.getName).toSet
       assert(graft.similarity.Ann.quantizedTopK(spark, dataDir).count() > 0)
       val gen1 = idxDirs
@@ -81,8 +80,6 @@ class ArtifactsSpec extends SparkSpec {
       assert(graft.similarity.Ann.quantizedTopK(spark, dataDir).count() > 0)
       // idempotent: nothing left to sweep
       assert(Artifacts.sweepStale(spark).isEmpty)
-    } finally {
-      spark.conf.unset("graft.int8.dir")
     }
   }
 
@@ -97,12 +94,8 @@ class ArtifactsSpec extends SparkSpec {
     * deletes that root afterwards. */
   private def withScratch[T](body: String => T): T = {
     val root = Files.createTempDirectory("graft-scratch-spec").toString
-    spark.conf.set("graft.scratch.dir", root)
-    try body(root)
-    finally {
-      spark.conf.unset("graft.scratch.dir")
-      new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    }
+    try withConf("graft.scratch.dir" -> root)(body(root))
+    finally new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
   test("sweepStale never deletes a live generation after a fingerprint cycle") {
@@ -187,18 +180,17 @@ class ArtifactsSpec extends SparkSpec {
     copyFile(s"$sf/embeddings.parquet", s"$d/embeddings.parquet")
     val r1 = Files.createTempDirectory("graft-ivf-r1").toString
     val r2 = Files.createTempDirectory("graft-ivf-r2").toString
-    spark.conf.set("graft.ivf.dir", r1)
-    try {
-      val a = graft.similarity.Ann.ivfIndexDirForSpec(spark, d)
+    withConf("graft.ivf.dir" -> r1) {
+      val a = graft.similarity.Ann.ivfIndexDir(spark, d)
       assert(a.startsWith(r1 + "/"), s"index at $a, not under $r1")
       spark.conf.set("graft.ivf.dir", r2)
-      val b = graft.similarity.Ann.ivfIndexDirForSpec(spark, d)
+      val b = graft.similarity.Ann.ivfIndexDir(spark, d)
       assert(b.startsWith(r2 + "/"), s"index at $b, not under $r2")
       assert(Files.exists(Paths.get(b, "centroids")) && Files.exists(Paths.get(b, "corpus")))
       // the first root's generation is still served when pointed back
       spark.conf.set("graft.ivf.dir", r1)
-      assert(graft.similarity.Ann.ivfIndexDirForSpec(spark, d) == a)
-    } finally spark.conf.unset("graft.ivf.dir")
+      assert(graft.similarity.Ann.ivfIndexDir(spark, d) == a)
+    }
   }
 
   test("two names with equal dataset and params never share a directory") {

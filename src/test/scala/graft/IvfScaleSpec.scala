@@ -23,8 +23,8 @@ class IvfScaleSpec extends SparkSpec {
       assert(n >= 128, s"corpus too small for the regime: $n")
       // the artifact follows the conf: a fresh k-versioned location, a
       // 64-row centroid table, and an assignment covering the corpus
-      val dir = Ann.ivfIndexDirForSpec(s2, sf)
-      val defaultDir = Ann.ivfIndexDirForSpec(spark, sf)
+      val dir = Ann.ivfIndexDir(s2, sf)
+      val defaultDir = Ann.ivfIndexDir(spark, sf)
       assert(dir != defaultDir, "k must version the artifact location")
       val cents = s2.read.parquet(s"$dir/centroids")
       assert(cents.count() == 64L, "centroid table must have k rows")
@@ -35,7 +35,7 @@ class IvfScaleSpec extends SparkSpec {
       // is a small slice of the corpus — strictly below the 1/8 the
       // gate-scale default scans (expected ~2/64; assert a loose 8% so
       // skewed cells can't flake the build)
-      val scanned = Ann.ivfCandsForSpec(s2, sf, 2).count()
+      val scanned = Ann.ivfCandsAt(s2, sf, 2).count()
       val pairSpace = Ann.NumQueries.toLong * (n - 1)
       assert(scanned.toDouble / pairSpace < 0.08,
         s"probe scanned $scanned of $pairSpace pairs — pruning did not scale with k")

@@ -390,17 +390,12 @@ class MultimodalSpec extends SparkSpec {
       .map(_.toSeq.mkString("|")).sorted.toSeq
     val local = rows()
     val scratch = java.nio.file.Files.createTempDirectory("graft-mm-labels").toFile
-    spark.conf.set("graft.dedup.ccLocalMaxEdges", "0")
-    spark.conf.set("graft.scratch.dir", scratch.toString)
-    try {
+    withConf("graft.dedup.ccLocalMaxEdges" -> "0", "graft.scratch.dir" -> scratch.toString) {
       // two calls serve one stored labels generation
       Seq(rows(), rows()).foreach(dist => assert(local.nonEmpty && dist == local))
       assert(graft.Gate.taken.contains("graft.dedup.ccLocalMaxEdges:over"))
       val labelDirs = scratch.list().filter(_.startsWith("graft_mm_prepare_labels"))
       assert(labelDirs.length == 1, labelDirs.mkString(", "))
-    } finally {
-      spark.conf.unset("graft.dedup.ccLocalMaxEdges")
-      spark.conf.unset("graft.scratch.dir")
     }
   }
 

@@ -116,8 +116,7 @@ class ParquetReadSpec extends SparkSpec {
 
   test("an A→B→A rebuild of a stored artifact is read fresh") {
     val root = Files.createTempDirectory("graft-read-cycle").toString
-    spark.conf.set("graft.scratch.dir", root)
-    try {
+    withConf("graft.scratch.dir" -> root) {
       val d = Files.createTempDirectory("graft-read-cycle-data").toString
       val builds = new AtomicInteger()
       def build(dir: String): Unit = {
@@ -133,6 +132,6 @@ class ParquetReadSpec extends SparkSpec {
       val locA2 = Artifacts.storedFp(spark, "read_cycle_spec", d, "A")(build)
       assert(locA2 == locA, "the cycle must rebuild into the same directory")
       assert(ids(locA2) == Seq(0L, 1L, 2L), "the rebuilt generation was read stale")
-    } finally spark.conf.unset("graft.scratch.dir")
+    }
   }
 }

@@ -277,9 +277,14 @@ class PipelineSpec extends SparkSpec {
           def extractOutput(a: Long): Long = a
         })
     val batch = wordCount(Pipe.readText(spark, in)).collect().sorted
+    def views() = spark.catalog.listTables().collect().count(_.isTemporary)
+    val views0 = views()
     val stream = Pipe.drain(wordCount(Pipe.readStreamText(spark, in)), "complete")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     assert(stream == batch && batch.nonEmpty)
+    // drain stops its query and drops its sink view, leaving the rows
+    assert(views() == views0, "drain left its sink view registered")
+    assert(spark.streams.active.isEmpty, "drain left its query active")
     // elementwise (append-mode) chains drain identically too
     val batchWords = Pipe.readText(spark, in)
       .flatMap(_.split(" ").toSeq).map(_.toUpperCase).collect().sorted
@@ -287,6 +292,7 @@ class PipelineSpec extends SparkSpec {
         Pipe.readStreamText(spark, in).flatMap(_.split(" ").toSeq).map(_.toUpperCase))
       .collect().map(_.getString(0)).toSeq.sorted
     assert(streamWords == batchWords)
+    assert(views() == views0 && spark.streams.active.isEmpty)
     // batch-only sinks reject unbounded pipes with the engine's own error
     intercept[Exception] {
       Pipe.readStreamText(spark, in).collect()

@@ -206,7 +206,7 @@ class PlanSpec extends SparkSpec {
     import graft.similarity.Ann
     // the composed append plan: two batch-filtered embeddings scans
     // (routing + encoding), zero reads of any base artifact
-    val ap = plan(Ann.ivfpqAppendPostingsForSpec(spark, sf))
+    val ap = plan(Ann.ivfpqAppendPostings(spark, sf))
     assert("\\(\\d+\\) Scan parquet".r.findAllIn(ap).length == 2, ap)
     assert(!ap.contains("gen-0"), ap)
     // the query path returns a full top-k per query and RETRIEVES
@@ -260,7 +260,7 @@ class PlanSpec extends SparkSpec {
     assert(flagged.nonEmpty && flagged.size < rep.length,
       s"${flagged.size}/${rep.length} cells flagged — need both regimes")
     // the cells/ directory holds ONLY the flagged cells' merged postings
-    val lc = Ann.lifecycleDirForSpec(spark, sf)
+    val lc = Ann.lifecycleDir(spark, sf)
     val cellDirs = new java.io.File(s"$lc/cells").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName.drop(5).toInt).toSet
     assert(cellDirs == flagged,
@@ -280,7 +280,7 @@ class PlanSpec extends SparkSpec {
 
   test("C39: streamed generations isolate per batch, replay is a no-op, serve equals the batch append") {
     import graft.similarity.Ann
-    val dir = Ann.ingestDirForSpec(spark, sf)
+    val dir = Ann.ingestDir(spark, sf)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one generation per micro-batch, and the multiset of generation

@@ -1,15 +1,25 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.reflect.io.Directory
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: one JVM-wide SparkSession, UTC, AQE on,
-  * no interpreted fallback for a whole-stage plan that fails to compile. */
+  * no interpreted fallback for a whole-stage plan that fails to compile.
+  * Every stored-artifact root points at one per-JVM directory, deleted at
+  * exit, so a run leaves no artifact generation in `java.io.tmpdir`. */
 object SparkSpecBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val artifacts = Files.createTempDirectory("graft-spec-artifacts")
+    sys.addShutdownHook(new Directory(artifacts.toFile).deleteRecursively())
+    val roots = "graft.scratch.dir" +:
+      Seq("ivf", "int8", "pq", "ivfpq", "graph").map(f => s"graft.$f.dir")
+    val s = roots.foldLeft(SparkSession.builder())(_.config(_, artifacts.toString))
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -32,6 +42,20 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpecBase.spark
   def sf: String = SparkSpecBase.sf
   def sf01: String = SparkSpecBase.sf01
+
+  /** Runs `body` with `settings` in the session conf, then restores each
+    * key's previous value (or unsets it when it had none). */
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
+    // explicit settings only: getOption returns a registered conf's default
+    val explicit = spark.conf.getAll
+    val saved = settings.map { case (k, _) => k -> explicit.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** The catalog tables `df`'s plan reads. */
   def servedTables(df: DataFrame): Seq[CatalogTable] =

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Relational, Tables}
 import graft.streaming.Streams
@@ -70,12 +72,17 @@ class StreamingSpec extends SparkSpec {
     assert(got == want && want.nonEmpty)
   }
 
+  /** The providers among `stores` still loaded in this JVM. */
+  private def loaded(stores: Seq[StateStoreProviderId]) = stores.filter(StateStore.isLoaded)
+
+  // also pins that the key closes the state-store providers it loaded
   test("every streaming key leaves views, streams and conf as it found them; its frame reads twice") {
     def views() = spark.catalog.listTables().collect().count(_.isTemporary)
-    Streams.ops.toSeq.sortBy(_._1).foreach { case (key, op) =>
+    val stateful = Streams.ops.toSeq.sortBy(_._1).flatMap { case (key, op) =>
       val views0 = views()
       val active0 = spark.streams.active.length
       val conf0 = spark.conf.getAll
+      Streams.lastStateStores = Nil
       val df = op.run(spark, sf)
       val rows = df.collect()
       val n = df.count()
@@ -85,26 +92,60 @@ class StreamingSpec extends SparkSpec {
       val conf1 = spark.conf.getAll
       val changed = (conf0.keySet ++ conf1.keySet).filter(k => conf0.get(k) != conf1.get(k))
       assert(changed.isEmpty, s"$key changed session conf: ${changed.mkString(", ")}")
+      val stores = Streams.lastStateStores
+      val left = loaded(stores).length
+      assert(left == 0, s"$key left $left of ${stores.length} state-store providers loaded")
+      if (stores.nonEmpty) Some(key) else None
     }
+    // HDFS-backed (dropDuplicates) and RocksDB (transformWithState) stores
+    assert(Set("streaming_dedup", "streaming_sessionize_tws").subsetOf(stateful.toSet),
+      s"state-store check vacuous: stateful keys $stateful")
   }
 
+  test("a query still active in the session keeps its state stores until it stops") {
+    val held = streamFrom(stageDir()).dropDuplicates("user_id", "event_type")
+      .writeStream.format("noop").start()
+    val heldStores = try {
+      held.processAllAvailable()
+      val stores = ColumnBridge.stateStores(held)
+      assert(stores.nonEmpty && loaded(stores) == stores, "the active query holds no store")
+      Streams.ops("streaming_dedup").run(spark, sf).collect()
+      assert(Streams.lastStateStores.nonEmpty)
+      assert(loaded(stores) == stores, "a finished key closed an active query's stores")
+      stores
+    } finally held.stop()
+    // the next finished query, with none left active, releases them
+    Streams.ops("streaming_dedup").run(spark, sf).collect()
+    val left = loaded(heldStores).length
+    assert(left == 0, s"$left providers of a stopped query outlived the next release")
+  }
+
+  // ... and closes its state-store providers, for both store kinds
   test("runToCompletion rethrows a failing stream, stops it and restores the conf") {
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.streaming.stateStore.providerClass")
-    val conf0 = spark.conf.getAll
-    val err = intercept[Exception] {
-      Streams.runToCompletion(spark, rocksDb = true)(
-        spark.readStream.schema("user_id BIGINT").parquet(s"$sf/{events.parquet}")
-          .as[Long]
-          .map { u => if (u >= 0) throw new IllegalStateException("planted stream failure"); u }
-          .writeStream.format("noop"))
+    Seq(true, false).foreach { rocksDb =>
+      val conf0 = spark.conf.getAll
+      Streams.lastStateStores = Nil
+      val err = intercept[Exception] {
+        Streams.runToCompletion(spark, rocksDb)(
+          spark.readStream.schema("user_id BIGINT").parquet(s"$sf/{events.parquet}")
+            .dropDuplicates()
+            .as[Long]
+            .map { u => if (u >= 0) throw new IllegalStateException("planted stream failure"); u }
+            .writeStream.format("noop"))
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(e => String.valueOf(e.getMessage).contains("planted stream failure")),
+        s"unexpected failure: $err")
+      assert(spark.streams.active.isEmpty, "the failed query is still active")
+      val stores = Streams.lastStateStores
+      assert(stores.nonEmpty, s"rocksDb=$rocksDb: the failed query planned no state store")
+      val left = loaded(stores).length
+      assert(left == 0, s"rocksDb=$rocksDb: the failed query left $left providers loaded")
+      val conf1 = spark.conf.getAll
+      keys.foreach(k => assert(conf1.get(k) == conf0.get(k), s"$k not restored"))
     }
-    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-    assert(causes.exists(e => String.valueOf(e.getMessage).contains("planted stream failure")),
-      s"unexpected failure: $err")
-    assert(spark.streams.active.isEmpty, "the failed query is still active")
-    val conf1 = spark.conf.getAll
-    keys.foreach(k => assert(conf1.get(k) == conf0.get(k), s"$k not restored"))
   }
 
   test("C25: late rows beyond the watermark are provably dropped, count pinned") {
@@ -435,7 +476,7 @@ class StreamingSpec extends SparkSpec {
       walk(snapDir).map(f => f.getPath -> f.lastModified).sorted
     }
     val before = state()
-    val batch2 = spark.read.parquet(s"${Streams.cdcFixtureDirForSpec(spark, sf)}/cdc2.parquet")
+    val batch2 = spark.read.parquet(s"${Streams.cdcFixtureDir(spark, sf)}/cdc2.parquet")
     Streams.applyCdcBatch(spark, snap, batch2, 2L)
     assert(state() == before, "retried batch 2 mutated the snapshot")
     val after = Streams.readCdcSnapshot(spark, snap)
@@ -499,7 +540,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("C37: restart from a PARTIALLY committed batch — the file sink's commit log dedups the replay") {
-    val fix = Streams.recoveryFixtureDirForSpec(spark, sf)
+    val fix = Streams.recoveryFixtureDir(spark, sf)
     val base = new org.apache.hadoop.fs.Path(
       graft.Artifacts.scratchBase(spark), "graft_recov_crash_spec")
     val hconf = spark.sparkContext.hadoopConfiguration
