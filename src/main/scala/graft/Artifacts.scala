@@ -34,6 +34,19 @@ object Artifacts {
     s.conf.getOption("graft.scratch.dir")
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
+  /** The scratch dir of one (data dir, label) pair under [[scratchBase]],
+    * wiped before use: a key that writes per-call output (a sink round
+    * trip, a streaming run's input, checkpoint and output) rewrites the
+    * same dir on every call, so repeated runs never accumulate files. A
+    * frame read from the dir is valid until the next call with the same
+    * pair. */
+  private[graft] def scratchDir(s: SparkSession, d: String, label: String): Path = {
+    val dir = new Path(scratchBase(s),
+      s"graft_${label}_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
+    dir
+  }
+
   /** Metadata fingerprint of one or more dataset paths. Per-file hashes are
     * XOR-combined so the (filesystem-dependent) listing order cannot change
     * the result; a missing path contributes a distinct constant rather than

@@ -210,8 +210,7 @@ object PlanAudit {
     if (args.contains("--selftest-plant")) {
       // deliberately strand a materialized persisted RDD: the first audited
       // query's leaked check must see it and the run must exit non-zero
-      val planted = spark.range(10).persist()
-      planted.count()
+      CacheScope.persist(spark.range(10)).count() // no scope open: untracked
     }
 
     val violations = scala.collection.mutable.ArrayBuffer[String]()

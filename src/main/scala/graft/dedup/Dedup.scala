@@ -57,19 +57,20 @@ object Dedup {
     * `ceil(0.8*sz)` rounds up spuriously (0.8*295 = 236.0000000000003).
     */
   def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val (pairs, scoped) = jaccardCore(s, d)
+    val (pairs, scoped) = jaccardCore(s, d, graft.CacheScope.scopedPersist)
     graft.CacheScope.releaseAfterUse(pairs, scoped: _*)
   }
 
   /** The E2 pipeline minus presentation concerns: unsorted verified pairs
-    * plus the persisted intermediates the caller must release (via
-    * [[graft.CacheScope]] for lazy consumers, or directly once materialized).
+    * plus the intermediates it persisted with `persist` —
+    * [[graft.CacheScope.scopedPersist]] for a lazy consumer, which releases
+    * them after use, or [[graft.CacheScope.persist]] inside an eager scope.
     */
-  private[graft] def jaccardCore(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def jaccardCore(s: SparkSession, d: String,
+      persist: DataFrame => DataFrame): (DataFrame, Seq[DataFrame]) = {
     // shingle arrays feed the index build AND candidate verification: persist
-    // so the (expensive) shingling runs once; released after the first
-    // consuming action (CacheScope)
-    val docs = graft.CacheScope.scopedPersist(withShingles(Tables.documents(s, d))
+    // so the (expensive) shingling runs once
+    val docs = persist(withShingles(Tables.documents(s, d))
       .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz")))
     // the index/placement path shuffles 8-byte polyHash LONGS, not ~24-byte
     // shingle strings (r18, guide §2.3 "shuffle keys and metadata instead of
@@ -109,7 +110,7 @@ object Dedup {
     val ranked = withDf
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-    val prefix = graft.CacheScope.scopedPersist(
+    val prefix = persist(
       ranked.filter(col("rk") <= col("sz") - expr("(4*sz + 4) DIV 5") + 1)
         .select(col("doc_id"), col("h")))
     val cand = prefix.as("a").join(prefix.as("b"), col("a.h") === col("b.h")
@@ -204,36 +205,37 @@ object Dedup {
     val nb = edgeBuckets(s)
     val dir = graft.Artifacts.stored(s, "dedup_incr_index", d,
         Seq("documents.parquet"), nb) { dir =>
-      val old = withShingles(Tables.documents(s, d).filter(isOld))
-        .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
-        .persist()
-      val postings = old
-        .select(col("doc_id"), col("sz"), explode(col("shingles")).as("sh"))
-        .select(col("doc_id"), col("sz"),
-          graft.plans.MixHash.polyHashCol(col("sh")).as("h"))
-      // same window-df + rank shape as E2 (see jaccardPairs for the rationale
-      // vs the round-2 object-aggregate form), keyed on the polyHash long
-      val withDf = postings
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      val kept = withDf.filter(col("df") <= MaxShingleDf)
-      val ranked = kept.withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      graft.Artifacts.saveBucketed(
-        ranked.filter(col("rk") <= col("sz") - expr("(4*sz + 4) DIV 5") + 1)
-          .select(col("h"), col("doc_id")).repartition(nb, col("h")),
-        dir, "graft_incr_prefix", nb, "h")
-      // FULL df table (capped shingles included): the batch side must
-      // distinguish corpus-hot shingles (dropped, as the corpus side dropped
-      // them) from corpus-unseen ones (ranked last but kept)
-      graft.Artifacts.saveBucketed(
-        withDf.select(col("h"), col("df")).groupBy(col("h"))
-          .agg(max(col("df")).as("df")).repartition(nb, col("h")),
-        dir, "graft_incr_df", nb, "h")
-      graft.Artifacts.saveBucketed(
-        old.select(col("doc_id"), col("shingles"), col("sz"))
-          .repartition(nb, col("doc_id")),
-        dir, "graft_incr_arr", nb, "doc_id")
-      old.unpersist(blocking = false)
+      graft.CacheScope.run {
+        val old = graft.CacheScope.persist(
+          withShingles(Tables.documents(s, d).filter(isOld))
+            .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz")))
+        val postings = old
+          .select(col("doc_id"), col("sz"), explode(col("shingles")).as("sh"))
+          .select(col("doc_id"), col("sz"),
+            graft.plans.MixHash.polyHashCol(col("sh")).as("h"))
+        // same window-df + rank shape as E2 (see jaccardPairs for the rationale
+        // vs the round-2 object-aggregate form), keyed on the polyHash long
+        val withDf = postings
+          .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
+        val kept = withDf.filter(col("df") <= MaxShingleDf)
+        val ranked = kept.withColumn("rk", row_number().over(
+          Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
+        graft.Artifacts.saveBucketed(
+          ranked.filter(col("rk") <= col("sz") - expr("(4*sz + 4) DIV 5") + 1)
+            .select(col("h"), col("doc_id")).repartition(nb, col("h")),
+          dir, "graft_incr_prefix", nb, "h")
+        // FULL df table (capped shingles included): the batch side must
+        // distinguish corpus-hot shingles (dropped, as the corpus side dropped
+        // them) from corpus-unseen ones (ranked last but kept)
+        graft.Artifacts.saveBucketed(
+          withDf.select(col("h"), col("df")).groupBy(col("h"))
+            .agg(max(col("df")).as("df")).repartition(nb, col("h")),
+          dir, "graft_incr_df", nb, "h")
+        graft.Artifacts.saveBucketed(
+          old.select(col("doc_id"), col("shingles"), col("sz"))
+            .repartition(nb, col("doc_id")),
+          dir, "graft_incr_arr", nb, "doc_id")
+      }
     }
     def table(prefix: String) = s.table(graft.Artifacts.tableIn(dir, prefix))
     (table("graft_incr_prefix"), table("graft_incr_df"), table("graft_incr_arr"))
@@ -329,10 +331,11 @@ object Dedup {
   private def pairsArtifact(s: SparkSession, d: String): (String, String) = {
     val pairsFp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
     (pairsFp, graft.Artifacts.storedFp(s, "dedup_pairs", d, pairsFp) { dir =>
-      val (pairsUnsorted, scoped) = jaccardCore(s, d)
-      pairsUnsorted.select(col("doc_a"), col("doc_b"), col("jac"))
-        .write.mode("overwrite").parquet(dir)
-      scoped.foreach(_.unpersist(false))
+      graft.CacheScope.run {
+        jaccardCore(s, d, graft.CacheScope.persist(_))._1
+          .select(col("doc_a"), col("doc_b"), col("jac"))
+          .write.mode("overwrite").parquet(dir)
+      }
     })
   }
 

@@ -692,11 +692,11 @@ object Multimodal {
 
   def mmPrepare(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ent = mmEntityFrame(s, d)
-      .persist() // consumed by the banding AND the keep-best join
-    try {
-      val pairs = mmPairFrame(s, ent).persist()
-      val labels = try {
+    graft.CacheScope.run {
+      // consumed by the banding AND the keep-best join
+      val ent = graft.CacheScope.persist(mmEntityFrame(s, d))
+      val labels = graft.CacheScope.run {
+        val pairs = graft.CacheScope.persist(mmPairFrame(s, ent))
         graft.dedup.Dedup.localClusterLabels(pairs, "entity_id").getOrElse {
           // the 100 TB path: alternating-star contraction into a labels
           // parquet, stored per (documents fingerprint, band-bucket cap)
@@ -707,7 +707,7 @@ object Multimodal {
           }
           graft.Artifacts.parquet(s, loc).toDF("entity_id", "cluster_id")
         }
-      } finally { pairs.unpersist(blocking = false); () }
+      }
       val w = Window.partitionBy(col("cluster_id"))
       val kept = ent.drop("ph", "bvs")
         .join(labels, Seq("entity_id"), "left")
@@ -721,9 +721,9 @@ object Multimodal {
       // H27's two-pass prefix sum: shard by cumulative pixel mass in
       // entity order — distributed, no single-partition window
       val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val sorted = kept.repartitionByRange(p, col("entity_id"))
-        .sortWithinPartitions(col("entity_id"))
-        .persist()
+      val sorted = graft.CacheScope.scopedPersist(
+        kept.repartitionByRange(p, col("entity_id"))
+          .sortWithinPartitions(col("entity_id")))
       val rdd = sorted.rdd.map(r => (r.getLong(0), r.getString(1),
         r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5)))
       // pass 1 (eager, fills the sorted cache — after which `ent` is done)
@@ -749,7 +749,7 @@ object Multimodal {
       // sorted's cache serves the consumer's action, then the listener
       // releases it (the H27 discipline — no checkpoint blocks left behind)
       graft.CacheScope.releaseAfterUse(out, sorted)
-    } finally { ent.unpersist(blocking = true); () }
+    }
   }
 
   /** PlanAudit sub-row builders: the constituent DISTRIBUTED frames of

@@ -186,11 +186,7 @@ object BeamParity {
   def sinkTextRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.pipeline.Pipe
-    val dir = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_sink_rt_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
+    val dir = graft.Artifacts.scratchDir(s, d, "sink_rt")
     val lines = Tables.documents(s, d)
       .select(concat_ws("\t", col("doc_id"), col("text")).as("line"))
       .as[String]
@@ -211,11 +207,7 @@ object BeamParity {
     * per call like [[sinkTextRoundtrip]].
     */
   def sourceSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_schema_ev_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
+    val dir = graft.Artifacts.scratchDir(s, d, "schema_ev")
     val docs = Tables.documents(s, d)
     docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id"), col("text"), col("lang"))
@@ -232,18 +224,6 @@ object BeamParity {
         sum(col("n_chars")).as("sum_chars"))
   }
 
-  /** Deterministic per-(data dir, label) scratch dir under java.io.tmpdir,
-    * wiped before use — shared by the source/sink round-trip queries so
-    * repeated runs never accumulate files.
-    */
-  private def scratchDir(s: SparkSession, d: String, label: String): org.apache.hadoop.fs.Path = {
-    val dir = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      s"graft_${label}_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
-    dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
-    dir
-  }
-
   /** A20 — Hive-style partitioned layout + partition-pruned read: documents
     * written `partitionBy("lang")` (one directory per language — THE layout
     * decision that makes a 100 TB corpus queryable: a single-language query
@@ -255,7 +235,7 @@ object BeamParity {
     * pages, so it's dropped from the files and re-derived on read.
     */
   def sinkPartitionedPrune(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, d, "part_prune")
+    val dir = graft.Artifacts.scratchDir(s, d, "part_prune")
     Tables.documents(s, d)
       .write.partitionBy("lang").parquet(dir.toString)
     s.read.parquet(dir.toString)
@@ -273,7 +253,7 @@ object BeamParity {
     * contains; the oracle hash-verifies losslessness.
     */
   def sourceJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, d, "jsonl_rt")
+    val dir = graft.Artifacts.scratchDir(s, d, "jsonl_rt")
     Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
       .write.json(dir.toString)
@@ -288,7 +268,7 @@ object BeamParity {
     * newlines. Same schema-on-read contract as A21.
     */
   def sourceCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, d, "csv_rt")
+    val dir = graft.Artifacts.scratchDir(s, d, "csv_rt")
     Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
       .write.option("quoteAll", "true").option("escape", "\"").csv(dir.toString)
@@ -304,7 +284,7 @@ object BeamParity {
     * through the format, including multi-line UTF-8 text.
     */
   def sourceOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, d, "orc_rt")
+    val dir = graft.Artifacts.scratchDir(s, d, "orc_rt")
     Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
       .write.orc(dir.toString)
@@ -419,7 +399,7 @@ object BeamParity {
 
   def sourceBinaryCompacted(s: SparkSession, d: String): DataFrame = {
     val binDir = writeBinaryDocs(s, d)
-    val outDir = scratchDir(s, d, "bin_compact").toString
+    val outDir = graft.Artifacts.scratchDir(s, d, "bin_compact").toString
     compactBinaryDir(s, binDir, outDir, BinCompactTargetBytes)
     s.read.parquet(outDir)
       .select(col("doc_id"),
@@ -460,8 +440,8 @@ object BeamParity {
         .select(lit(i.toLong).as("part"), col("n_events"), col("n_users"))
     }.reduce(_ unionByName _)
     // the n-way fan-out auto-persists the shared upstream (the advice-fixed
-    // exactly-one-output guarantee); scope that cache to THIS query's first
-    // action — library hygiene, since no Pipe.run scope is active here
+    // exactly-one-output guarantee); no CacheScope.run is open here, so that
+    // persist is untracked and released after THIS query's first action
     graft.CacheScope.releaseAfterUse(out, users.ds)
   }
 

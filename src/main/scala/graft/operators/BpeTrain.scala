@@ -92,12 +92,11 @@ object BpeTrain {
 
   /** One training run: K rounds over the persisted corpus. Returns
     * (sym_a, sym_b, merged, n_pairs) per round in learned order. */
-  private def trainRules(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] = {
-    val docs = Tables.documents(s, d).select(col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainLoop(docs, MergeBase, None)
-    finally { docs.unpersist(blocking = false); () }
-  }
+  private def trainRules(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] =
+    graft.CacheScope.run {
+      trainLoop(graft.CacheScope.persist(Tables.documents(s, d).select(col("text"))),
+        MergeBase, None)
+    }
 
   /** Stored-artifact location of the learned table for corpus `d` (train
     * once per corpus fingerprint, parquet out, consumers read back). */
@@ -376,12 +375,12 @@ object BpeTrain {
     s"regexp_replace($x, '$pat', '\\0' || chr($PretokSepCp), 'g')"
   }
 
-  private def trainRulesPretok(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] = {
-    val docs = Tables.documents(s, d).select(pretokCol(col("text")).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainLoop(docs, MergeBasePretok, Some(PretokSepCp))
-    finally { docs.unpersist(blocking = false); () }
-  }
+  private def trainRulesPretok(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] =
+    graft.CacheScope.run {
+      trainLoop(graft.CacheScope.persist(
+          Tables.documents(s, d).select(pretokCol(col("text")).as("text"))),
+        MergeBasePretok, Some(PretokSepCp))
+    }
 
   private def pretokRulesLocation(s: SparkSession, d: String): String =
     graft.Artifacts.stored(s, "bpe_pretok_rules", d, Seq("documents.parquet")) { dir =>

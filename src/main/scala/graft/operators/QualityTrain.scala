@@ -115,10 +115,10 @@ object QualityTrain {
 
   /** One training run: the per-round weight trajectory (Rounds × NFeat,
     * weights AFTER each round's update). */
-  private def trainTrajectory(s: SparkSession, d: String): Seq[Array[Long]] = {
-    val ftrain = featureFrame(Tables.documents(s, d)).filter(col("hold") === 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private def trainTrajectory(s: SparkSession, d: String): Seq[Array[Long]] =
+    graft.CacheScope.run {
+      val ftrain = graft.CacheScope.persist(
+        featureFrame(Tables.documents(s, d)).filter(col("hold") === 0))
       val qRow = ftrain.agg(
         sum(expr("f0 * f0")), sum(expr("f1 * f1")), sum(expr("f2 * f2")),
         sum(expr("f3 * f3")), sum(expr("f4 * f4")), sum(expr("f5 * f5"))).head()
@@ -145,8 +145,7 @@ object QualityTrain {
         r += 1
       }
       out.toSeq
-    } finally { ftrain.unpersist(blocking = false); () }
-  }
+    }
 
   /** Stored-artifact location of the learned trajectory for corpus `d`
     * (train once per corpus fingerprint, parquet out, consumers read). */

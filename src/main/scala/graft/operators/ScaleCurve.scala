@@ -123,23 +123,19 @@ object ScaleCurve {
     import scala.concurrent.ExecutionContext.Implicits.global
     import graft.functions.TextFunctions.wsTokens
     val nBase = Tables.documents(s, d).count()
-    // plain persist + blocking unpersist: each scale's doc frame feeds
-    // SEVERAL separate actions (scopedPersist would release after the
-    // first). Materialize the shared frames first, then fan the per-scale
-    // counts out as CONCURRENT jobs: under the certification window every
-    // count is tiny, so sequential execution paid the multi-stage
-    // scheduling floor 5×|scales| times — concurrency pays it ~once
-    // (measured 10.2 → ~4 s at sf0.1).
-    val perScale = scales.map { k =>
-      val sd = scaledDocs(s, d, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (k, sd, scaledEvents(s, d, k))
-    }
-    // try/finally around the whole fan-out (round-15 ADVICE): if any
-    // concurrent action throws, Await rethrows — without the finally every
-    // persisted per-scale frame would leak (sibling futures may still be
-    // running Spark jobs, but unpersist is safe concurrently)
-    val rows = try {
+    // an eager scope: each scale's doc frame feeds SEVERAL separate actions
+    // (scopedPersist would release after the first). Materialize the shared
+    // frames first, then fan the per-scale counts out as CONCURRENT jobs:
+    // under the certification window every count is tiny, so sequential
+    // execution paid the multi-stage scheduling floor 5×|scales| times —
+    // concurrency pays it ~once (measured 10.2 → ~4 s at sf0.1). If any
+    // concurrent action throws, Await rethrows and the scope still releases
+    // every per-scale frame (sibling futures may still be running Spark
+    // jobs, but unpersist is safe concurrently).
+    val rows = graft.CacheScope.run {
+      val perScale = scales.map { k =>
+        (k, graft.CacheScope.persist(scaledDocs(s, d, k)), scaledEvents(s, d, k))
+      }
       perScale.foreach(_._2.count())
       val futs = perScale.map { case (k, sd, se) =>
         val docAggF = Future(sd.agg(count(lit(1)),
@@ -168,7 +164,7 @@ object ScaleCurve {
           ("dedup_minhash", k.toLong, nDocs, nPairs, 0L),
           ("interval_overlap", k.toLong, nEv, nOverlap, 0L))
       }
-    } finally perScale.foreach(_._2.unpersist(blocking = true))
+    }
     rows.toDF("key", "scale", "n_input", "n_output", "input_chars")
   }
 

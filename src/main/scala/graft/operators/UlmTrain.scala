@@ -131,9 +131,8 @@ object UlmTrain {
   private def trainTrajectory(
       s: SparkSession, d: String): Seq[(Int, Long, String, Long, Long)] = {
     val seed = computeSeed(s, d)
-    val docs = Tables.documents(s, d).select(col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheScope.run {
+      val docs = graft.CacheScope.persist(Tables.documents(s, d).select(col("text")))
       var alive = seed.map(_._1).toSet
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String, Long, Long)]
       var r = 1
@@ -159,7 +158,7 @@ object UlmTrain {
         r += 1
       }
       out.toSeq
-    } finally { docs.unpersist(blocking = false); () }
+    }
   }
 
   private def trajLocation(s: SparkSession, d: String): String =

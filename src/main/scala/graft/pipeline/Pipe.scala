@@ -5,7 +5,6 @@ import scala.reflect.ClassTag
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.storage.StorageLevel
 
 /** Per-worker lifecycle contract, mirroring the reference DoFn semantics
   * (reference: beam_pyspark_runner/transform_evaluators.py:56-76 —
@@ -108,9 +107,10 @@ object SideInput {
   *  - multi-consumer caching → AUTOMATIC, like the reference: any node read
   *    by more than one downstream transform is persisted without user action
   *    (the reference decides this from its child_map, eval_context.py:57-61;
-  *    here the DSL counts consumers as the graph is built). [[Pipe.cache]]
-  *    remains for explicit control; Catalyst additionally reuses
-  *    exchange/subquery subtrees automatically.
+  *    here the DSL counts consumers as the graph is built). Build and run a
+  *    pipeline inside [[graft.CacheScope.run]] to release those persists
+  *    when it ends; Catalyst additionally reuses exchange/subquery subtrees
+  *    automatically.
   */
 final case class Pipe[T](ds: Dataset[T]) {
   def spark: SparkSession = ds.sparkSession
@@ -123,22 +123,19 @@ final case class Pipe[T](ds: Dataset[T]) {
     * action already populates the cache (the reference materializes whole
     * stages for the same reason — Beam graphs are built fully before run()).
     *
-    * Storage hygiene (round-9 verdict item 5): every auto-persist is
-    * REGISTERED — with the enclosing [[Pipe.run]] scope when one is active
-    * (released when the scope closes, the CacheScope discipline applied to
-    * the DSL), else with the session-wide ledger [[Pipe.releaseAll]] drains.
-    * The reference leaks these by design (its persists die with the
-    * pipeline process); a long-lived graft session must not.
+    * The [[graft.CacheScope.run]] scope open when this NODE was constructed
+    * owns its auto-persist and releases it when the scope exits (the
+    * reference leaks these by design — its persists die with the pipeline
+    * process; a long-lived graft session must not). Ownership at
+    * construction, not at consumption: a pipe built outside any scope whose
+    * second consumer merely happens inside one keeps its cache past that
+    * scope, since releasing it there would leave the node's consumer count
+    * past the persist-once trigger with no cache, silently recomputing the
+    * shared branch for every later consumer. A node with no open owner
+    * scope is persisted untracked, like Spark's own `persist`: its caller
+    * unpersists `ds`.
     */
-  /** The [[Pipe.run]] scope active when this NODE was constructed owns its
-    * auto-persist. Ownership-at-construction (not at consumption) matters:
-    * a pipe built outside any scope whose second consumer merely happens
-    * inside one must keep reference-parity lifetime — releasing it when
-    * that scope exits would leave the node's consumer count past the
-    * persist-once trigger with no cache, silently recomputing the shared
-    * branch for every later consumer.
-    */
-  private val ownerScope = Pipe.activeScope
+  private val ownerScope = graft.CacheScope.current
 
   private[pipeline] def consumed: Dataset[T] = consumedBy(1)
 
@@ -154,10 +151,8 @@ final case class Pipe[T](ds: Dataset[T]) {
     // engine's job (each sink re-reads the source; Beam's unified model has
     // the same property for unbounded PCollections)
     val before = consumers.getAndAdd(n)
-    if (before < 2 && before + n >= 2 && !ds.isStreaming) {
-      ds.persist(StorageLevel.MEMORY_AND_DISK)
-      Pipe.registerAutoPersist(ownerScope, ds)
-    }
+    if (before < 2 && before + n >= 2 && !ds.isStreaming)
+      graft.CacheScope.persistInto(ownerScope, ds)
     ds
   }
 
@@ -281,10 +276,6 @@ final case class Pipe[T](ds: Dataset[T]) {
 
   def keyBy[K](f: T => K)(implicit e: Encoder[(K, T)]): Pipe[(K, T)] =
     Pipe(consumed.map(t => (f(t), t))(e))
-
-  /** Mark this branch for reuse (reference caches any node with >1 consumer,
-    * eval_context.py:57). */
-  def cache(): Pipe[T] = Pipe(ds.persist(StorageLevel.MEMORY_AND_DISK))
 
   def writeText(path: String): Unit =
     consumed.map(_.toString)(Encoders.STRING).write.text(path)
@@ -446,66 +437,6 @@ final class WindowedPipe[T](p: Pipe[T], fn: WindowFn, tsOf: T => Long)
 }
 
 object Pipe {
-
-  /** Auto-persists of the pipeline graph(s) built inside the active
-    * [[run]] scope (thread-local: graph CONSTRUCTION is driver-side and
-    * single-threaded per pipeline, like Beam's). The session-wide ledger
-    * catches scopeless use.
-    *
-    * A scope CLOSES when its [[run]] block exits: a Pipe constructed inside
-    * the block whose second consumer only arrives after the block returns
-    * (the caller kept the Pipe) must not register into the already-drained
-    * buffer — that persist would be unreachable by both the scope release
-    * and [[releaseAll]], a silent storage leak. Registration into a closed
-    * scope falls back to the session-wide ledger instead.
-    */
-  private[pipeline] final class Scope {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-    var closed = false
-  }
-
-  private val scopePersists = new ThreadLocal[Scope]()
-  private val globalPersists =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Dataset[_], java.lang.Boolean]())
-
-  private[pipeline] def activeScope: Scope = scopePersists.get()
-
-  private[pipeline] def registerAutoPersist(scope: Scope, ds: Dataset[_]): Unit = {
-    val tookScope = scope != null && scope.synchronized {
-      if (!scope.closed) { scope.buf += ds; true } else false
-    }
-    if (!tookScope) { globalPersists.add(ds); () }
-  }
-
-  /** Execute a whole pipeline — construction plus every terminal action —
-    * and release ALL auto-persisted shared branches when the block exits
-    * (normally or not). This is the Beam `pipeline.run()` shape: within the
-    * scope every multi-consumer branch is computed once; after it, no
-    * persistent-RDD entries survive (PipelineSpec pins this). Persists made
-    * outside any scope keep reference-parity lifetime and can be drained
-    * explicitly with [[releaseAll]].
-    */
-  def run[A](body: => A): A = {
-    val outer = scopePersists.get()
-    val scope = new Scope
-    scopePersists.set(scope)
-    try body
-    finally {
-      scopePersists.set(outer)
-      // close BEFORE draining: a registration racing the drain lands in the
-      // global ledger (releasable) instead of the dead buffer (leaked)
-      val drained = scope.synchronized { scope.closed = true; scope.buf.toList }
-      drained.foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Drain every scopeless auto-persist made so far (session cleanup for
-    * DSL use outside [[run]]). */
-  def releaseAll(): Unit = {
-    val it = globalPersists.iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
-  }
 
   /** Create from in-memory values, with the reference's partition heuristic:
     * ceil(sqrt(n)/sqrt(100)) partitions (transform_evaluators.py:19) — a tiny

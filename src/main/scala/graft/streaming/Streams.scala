@@ -731,12 +731,9 @@ object Streams {
   def streamingRestartRecovery(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val fix = recoveryFixtureDir(s, d)
-    val base = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_recov_run_" + sinkId.incrementAndGet())
+    val base = graft.Artifacts.scratchDir(s, d, "recov_run")
     val hconf = s.sparkContext.hadoopConfiguration
     val fs = base.getFileSystem(hconf)
-    fs.delete(base, true)
     val in = new org.apache.hadoop.fs.Path(base, "in")
     fs.mkdirs(in)
     val ckpt = new org.apache.hadoop.fs.Path(base, "ckpt").toString
@@ -906,15 +903,9 @@ object Streams {
         finally in.close()
       val (last, owner) = parts.split(",", 2) match {
         case Array(l, o) => (l.toLong, o)
-        case Array(l) =>
-          // legacy ownerless marker interpreted as same-owner (migration
-          // tradeoff, round-17 ADVICE): make the silent takeover of a
-          // pre-upgrade snapshot at least visible
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"legacy _LAST_BATCH marker (no owner field) under $snapP " +
-              s"treated as owned by query $qid; batches <= $l will no-op " +
-              "until one new batch rewrites the marker")
-          (l.toLong, qid)
+        case _ => throw new IllegalStateException(
+          s"$lastF holds '$parts', not 'batchId,queryId': refusing to guess " +
+            "which query owns the snapshot")
       }
       if (batchId <= last) {
         require(owner == qid, s"batch $batchId arrived below the committed " +
@@ -931,8 +922,9 @@ object Streams {
       .agg(count(lit(1)).as("d_n"), max(col("o_orderdate")).as("d_last"),
         sum(col("o_totalprice").cast("decimal(18,4)")).cast(dec).as("d_sum"))
       .withColumn("bucket", bkt)
-      .persist() // two driver actions below (touched-set, merge write)
-    try {
+    graft.CacheScope.run {
+      // two driver actions below (touched-set, merge write)
+      graft.CacheScope.persist(delta)
       // bounded collect: ≤ min(buckets, distinct delta keys) values
       val touched = delta.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).sorted
@@ -1004,8 +996,7 @@ object Streams {
               }
           }
         }
-      ()
-    } finally { delta.unpersist(blocking = true); () }
+    }
   }
 
   /** C38 — streaming CDC APPLY (round-14, verdict item 8): B32's
@@ -1028,11 +1019,9 @@ object Streams {
 
   private[graft] def runCdcMerge(s: SparkSession, d: String): (String, DataFrame) = {
     val fix = cdcFixtureDir(s, d)
-    val base = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_cdc_run_" + sinkId.incrementAndGet())
+    val base = graft.Artifacts.scratchDir(s, d, "cdc_run")
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(base, true); fs.mkdirs(base)
+    fs.mkdirs(base)
     val snap = new org.apache.hadoop.fs.Path(base, "snap").toString
     val ckpt = new org.apache.hadoop.fs.Path(base, "ckpt").toString
     // NTZ, matching the batch reader's type for the same parquet (the

@@ -180,7 +180,7 @@ class AnalyticsSpec extends SparkSpec {
     val (zHit, zTotal) = overlapStats(Analytics.zorderLayoutDir(spark, sf))
     // round-robin baseline with the same file count: every file sees the
     // full value range, so (nearly) every row group overlaps the box
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-zorder-rr").toString
+    val baseDir = tempDir("graft-zorder-rr").toString
     Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
         col("o_totalprice"))

@@ -39,7 +39,7 @@ class AnnLocalTrainSpec extends SparkSpec {
     val s = spark.newSession()
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     s.conf.set(s"graft.$family.dir",
-      java.nio.file.Files.createTempDirectory(s"graft-$family-gate").toString)
+      tempDir(s"graft-$family-gate").toString)
     val shuffleStages = new AtomicInteger()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -92,7 +92,7 @@ class AnnLocalTrainSpec extends SparkSpec {
 
   /** A dataset dir whose embeddings table holds exactly `ids` of `d`'s. */
   private def plantedCorpus(d: String, ids: Seq[Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-train-sample").toString
+    val dir = tempDir("graft-train-sample").toString
     graft.operators.Tables.embeddings(spark, d).filter(col("vec_id").isin(ids: _*))
       .write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -145,7 +145,7 @@ class AnnLocalTrainSpec extends SparkSpec {
 
   /** A dataset dir holding the first `n` vectors of the sf0.001 corpus. */
   private def corpusPrefix(n: Long): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-train").toString
+    val dir = tempDir("graft-ivf-train").toString
     graft.operators.Tables.embeddings(spark, sf).filter(col("vec_id") < n)
       .write.parquet(s"$dir/embeddings.parquet")
     dir

@@ -22,7 +22,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("fingerprint is stable on unchanged data and moves on overwrite") {
-    val dir = Files.createTempDirectory("graft-fp").toString
+    val dir = tempDir("graft-fp").toString
     copyFile(s"$sf/events.parquet", s"$dir/events.parquet")
     val f1 = Artifacts.fingerprint(spark, s"$dir/events.parquet")
     val f2 = Artifacts.fingerprint(spark, s"$dir/events.parquet")
@@ -41,7 +41,7 @@ class ArtifactsSpec extends SparkSpec {
     // the (length, mtime) metadata pair cannot see this rewrite: identical
     // byte count, mtime forced back to the original tick. Only the local-FS
     // content hint (last 16 bytes) distinguishes the generations.
-    val dir = Files.createTempDirectory("graft-fp-tail").toString
+    val dir = tempDir("graft-fp-tail").toString
     val f = Paths.get(dir, "data.bin")
     Files.write(f, Array.fill[Byte](64)('a'))
     val t0 = Files.getLastModifiedTime(f)
@@ -57,8 +57,8 @@ class ArtifactsSpec extends SparkSpec {
     // per-generation discipline: a rebuild under a moved fingerprint must
     // NOT delete the old generation's dir (lazily-held readers), but a
     // long-lived session can reclaim superseded generations deliberately.
-    val dataDir = Files.createTempDirectory("graft-sweep-data").toString
-    val idxBase = Files.createTempDirectory("graft-sweep-idx").toString
+    val dataDir = tempDir("graft-sweep-data").toString
+    val idxBase = tempDir("graft-sweep-idx").toString
     copyFile(s"$sf/embeddings.parquet", s"$dataDir/embeddings.parquet")
     withConf("graft.int8.dir" -> idxBase) {
       def idxDirs = new java.io.File(idxBase).listFiles().map(_.getName).toSet
@@ -85,7 +85,7 @@ class ArtifactsSpec extends SparkSpec {
 
   /** A fresh dataset dir holding one small input file, `data.bin`. */
   private def tinyDataset(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
+    val d = tempDir(prefix).toString
     Files.write(Paths.get(d, "data.bin"), Array.fill[Byte](16)('x'))
     d
   }
@@ -93,7 +93,7 @@ class ArtifactsSpec extends SparkSpec {
   /** Runs `body` with the scratch root pointed at a fresh temp dir, and
     * deletes that root afterwards. */
   private def withScratch[T](body: String => T): T = {
-    val root = Files.createTempDirectory("graft-scratch-spec").toString
+    val root = tempDir("graft-scratch-spec").toString
     try withConf("graft.scratch.dir" -> root)(body(root))
     finally new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
@@ -176,10 +176,10 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("repointing graft.ivf.dir mid-session rebuilds into the new root") {
-    val d = Files.createTempDirectory("graft-repoint").toString
+    val d = tempDir("graft-repoint").toString
     copyFile(s"$sf/embeddings.parquet", s"$d/embeddings.parquet")
-    val r1 = Files.createTempDirectory("graft-ivf-r1").toString
-    val r2 = Files.createTempDirectory("graft-ivf-r2").toString
+    val r1 = tempDir("graft-ivf-r1").toString
+    val r2 = tempDir("graft-ivf-r2").toString
     withConf("graft.ivf.dir" -> r1) {
       val a = graft.similarity.Ann.ivfIndexDir(spark, d)
       assert(a.startsWith(r1 + "/"), s"index at $a, not under $r1")
@@ -211,7 +211,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("events ts-type and era probes re-run after an in-place overwrite") {
-    val dir = Files.createTempDirectory("graft-stale-ev").toString
+    val dir = tempDir("graft-stale-ev").toString
     copyFile(s"$sf/events.parquet", s"$dir/events.parquet")
     assert(Tables.events(spark, dir).limit(1).count() == 1) // probes pass
     // overwrite IN PLACE with a 1000x-shrunk file: with a path-only cache
@@ -227,7 +227,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("B57 edge artifact rebuilds when lineitem is regenerated in place") {
-    val dir = Files.createTempDirectory("graft-stale-gr").toString
+    val dir = tempDir("graft-stale-gr").toString
     copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
     val n1 = Graph.pageRank(spark, dir).count()
     assert(n1 > 0)
@@ -239,7 +239,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("F5 int8 index rebuilds when embeddings are regenerated in place") {
-    val dir = Files.createTempDirectory("graft-stale-i8").toString
+    val dir = tempDir("graft-stale-i8").toString
     copyFile(s"$sf/embeddings.parquet", s"$dir/embeddings.parquet")
     val n1 = graft.similarity.Ann.quantizedTopK(spark, dir).count()
     assert(n1 > 0)
@@ -261,7 +261,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("B22 bucketed facts rebuild when the source tables change in place") {
     withScratch { _ =>
-      val dir = Files.createTempDirectory("graft-stale-bkt").toString
+      val dir = tempDir("graft-stale-bkt").toString
       copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
       copyFile(s"$sf/orders.parquet", s"$dir/orders.parquet")
       val r1 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
@@ -274,7 +274,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("B22 bucketed facts rebuild into the first generation after an A→B→A cycle") {
     withScratch { root =>
-      val dir = Files.createTempDirectory("graft-cycle-bkt").toString
+      val dir = tempDir("graft-cycle-bkt").toString
       copyFile(s"$sf/lineitem.parquet", s"$dir/lineitem.parquet")
       copyFile(s"$sf/orders.parquet", s"$dir/orders.parquet")
       val orders = Paths.get(dir, "orders.parquet")

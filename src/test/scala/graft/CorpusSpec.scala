@@ -225,7 +225,7 @@ class CorpusSpec extends SparkSpec {
     import SparkSpecBase.spark.implicits._
     // capacities engineered around the budget: tokens per source via
     // documents of known word counts, epochs from the pinned source hash
-    val dir = java.nio.file.Files.createTempDirectory("graft-wf").toString
+    val dir = tempDir("graft-wf").toString
     def doc(i: Long, src: String, words: Int) =
       (i, (1 to words).map(_ => "w").mkString(" "), "en", src, 0L)
     // three sources with very different volumes

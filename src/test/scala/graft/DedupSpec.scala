@@ -65,7 +65,7 @@ class DedupSpec extends SparkSpec {
     // floor division produced none (a latent hash-gate flip)
     import SparkSpecBase.spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-boiler-empty").toString
+    val dir = tempDir("graft-boiler-empty").toString
     Seq((1L, "", "web"), (2L, "   ", "web"),
       (3L, "twenty one words here " * 5 + "end", "web"))
       .toDF("doc_id", "text", "source")
@@ -291,7 +291,7 @@ class DedupSpec extends SparkSpec {
     // The source table is a single-row-group parquet (always ONE non-empty
     // scan partition regardless of split confs), so write a genuinely
     // multi-file copy and run against that.
-    val root = java.nio.file.Files.createTempDirectory("graft-parts").toString
+    val root = tempDir("graft-parts").toString
     graft.operators.Tables.embeddings(spark, sf)
       .repartition(7)
       .write.parquet(s"$root/embeddings.parquet")
@@ -331,7 +331,7 @@ class DedupSpec extends SparkSpec {
     val n = 60L
     val edges = (0L until n - 1)
       .flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
-    val loc = java.nio.file.Files.createTempDirectory("graft-cc").toString + "/labels"
+    val loc = tempDir("graft-cc").toString + "/labels"
     Dedup.propagateMinLabels(spark, edges, loc) // default cap: must converge
     val labels = spark.read.parquet(loc).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -343,7 +343,7 @@ class DedupSpec extends SparkSpec {
     try {
       val e = intercept[IllegalStateException](
         Dedup.propagateMinLabels(spark, edges,
-          java.nio.file.Files.createTempDirectory("graft-cc2").toString + "/labels"))
+          tempDir("graft-cc2").toString + "/labels"))
       assert(e.getMessage.contains("did not converge"))
     } finally spark.conf.unset("graft.dedup.ccMaxRounds")
   }
@@ -382,7 +382,7 @@ class DedupSpec extends SparkSpec {
     // the band self-join enumerates 16 x 5000^2/2 candidate pairs — the LSH
     // mega-bucket blowup. Capped, each oversized bucket emits member->rep
     // stars: exactly n-1 verified pairs, all anchored at the representative.
-    val root = java.nio.file.Files.createTempDirectory("graft-mega").toString
+    val root = tempDir("graft-mega").toString
     val s = spark
     import s.implicits._
     val n = 5000
@@ -811,7 +811,7 @@ class DedupSpec extends SparkSpec {
     // sample — the scale the recall pin belongs at
     val dir = sf01
     val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
-    val idxBase = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+    val idxBase = tempDir("graft-ivf-idx").toString
     spark.conf.set("graft.ann.trainSampleRows", "500")
     spark.conf.set("graft.ivf.dir", idxBase)
     try {

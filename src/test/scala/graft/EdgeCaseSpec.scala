@@ -23,7 +23,7 @@ class EdgeCaseSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts-nanos").toString
+    val dir = tempDir("graft-ts-nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -254,7 +254,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("basket pairs on single-item and empty basket sets") {
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-basket-edge").toString
+    val dir = tempDir("graft-basket-edge").toString
     // every order has exactly one (possibly repeated) part: zero pairs
     Seq((1L, 5L), (1L, 5L), (2L, 7L), (3L, 9L))
       .toDF("l_orderkey", "l_partkey")
@@ -266,7 +266,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("phash dedup on a corpus with no payload long enough is empty, not a crash") {
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-short").toString
+    val dir = tempDir("graft-phash-short").toString
     Seq((1L, "tiny"), (2L, "also tiny")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     assert(graft.multimodal.Multimodal.phashDedup(spark, dir).count() == 0)
@@ -275,7 +275,7 @@ class EdgeCaseSpec extends SparkSpec {
     // the partition-boundary shapes a 100 TB run hits constantly: empty
     // text, single words, whitespace runs — every new per-doc operator
     // must stay defined (guarded floor divisions, no crashes)
-    val tmp = java.nio.file.Files.createTempDirectory("edge-r11").toString
+    val tmp = tempDir("edge-r11").toString
     Seq(
       (0L, "", "en", "s0", 0L),
       (1L, "just four small words", "en", "s0", 21L),

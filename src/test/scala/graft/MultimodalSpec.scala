@@ -100,7 +100,7 @@ class MultimodalSpec extends SparkSpec {
     // raster is known byte-for-byte and the resize is hand-computable
     val rnd = new scala.util.Random(11)
     val text = (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft-resize").toString
+    val dir = tempDir("graft-resize").toString
     Seq((1L, text)).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val row = Multimodal.imageResize(spark, dir).collect().head
     assert(row.getAs[Int]("src_w") == g && row.getAs[Int]("src_h") == g)
@@ -119,7 +119,7 @@ class MultimodalSpec extends SparkSpec {
     val n = g * g * ch
     val rnd = new scala.util.Random(23)
     val text = (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft-aug").toString
+    val dir = tempDir("graft-aug").toString
     Seq((1L, text)).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val row = Multimodal.imageAugment(spark, dir).collect().head
     // identity-layout raster: replay all three transforms by hand
@@ -193,7 +193,7 @@ class MultimodalSpec extends SparkSpec {
     // must emit m-1 representative edges instead of C(m,2) — hamming 0, so
     // all survive verification and connectivity is preserved
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-mega").toString
+    val dir = tempDir("graft-phash-mega").toString
     val m = 300L
     val text = (1 to 30).map(_ => "same words here").mkString(" ") // >= 64 chars
     (0L until m).map(i => (i, text)).toDF("doc_id", "text")
@@ -227,7 +227,7 @@ class MultimodalSpec extends SparkSpec {
     // plant dups here: random docs plus exact-duplicate and lightly
     // perturbed copies.
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-exact").toString
+    val dir = tempDir("graft-phash-exact").toString
     val rnd = new scala.util.Random(7)
     def txt() = (0 until 256).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
     val base = (0 until 100).map(i => (i.toLong, txt()))
@@ -268,7 +268,7 @@ class MultimodalSpec extends SparkSpec {
     // chance across C(m,2) pairs; 128-bit banding (14-15-bit bands) is
     // ~128x more selective per band — the width lever the scaladoc claims.
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-wide").toString
+    val dir = tempDir("graft-phash-wide").toString
     val rnd = new scala.util.Random(42)
     val m = 400
     (0 until m).map { i =>
@@ -318,7 +318,7 @@ class MultimodalSpec extends SparkSpec {
     val rot = Array.tabulate(g * g) { i =>          // 90° rotation
       val r = i / g; val c = i % g; a((g - 1 - c) * g + r)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash2d").toString
+    val dir = tempDir("graft-phash2d").toString
     Seq((1L, new String(a)), (2L, new String(bright)), (3L, new String(rot)))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     // base entities carry eid = 2*doc_id
@@ -389,7 +389,7 @@ class MultimodalSpec extends SparkSpec {
     def rows(): Seq[String] = Multimodal.mmPrepare(spark, sf).collect()
       .map(_.toSeq.mkString("|")).sorted.toSeq
     val local = rows()
-    val scratch = java.nio.file.Files.createTempDirectory("graft-mm-labels").toFile
+    val scratch = tempDir("graft-mm-labels").toFile
     withConf("graft.dedup.ccLocalMaxEdges" -> "0", "graft.scratch.dir" -> scratch.toString) {
       // two calls serve one stored labels generation
       Seq(rows(), rows()).foreach(dist => assert(local.nonEmpty && dist == local))

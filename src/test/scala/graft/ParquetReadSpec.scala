@@ -36,7 +36,7 @@ class ParquetReadSpec extends SparkSpec {
 
   /** A fresh dataset dir holding a copy of the sf0.001 `table`. */
   private def copyOf(table: String): String = {
-    val d = Files.createTempDirectory(s"graft-read-$table").toString
+    val d = tempDir(s"graft-read-$table").toString
     Files.copy(Paths.get(s"$sf/$table.parquet"), Paths.get(s"$d/$table.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     d
@@ -86,7 +86,7 @@ class ParquetReadSpec extends SparkSpec {
     // an unannotated BINARY column without Spark's schema in the footer:
     // only then does binaryAsString steer inference
     val s = spark.newSession()
-    val d = Files.createTempDirectory("graft-read-bin").toString
+    val d = tempDir("graft-read-bin").toString
     val schema = MessageTypeParser.parseMessageType("message documents { required binary b; }")
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
       new org.apache.hadoop.fs.Path(s"$d/documents.parquet"),
@@ -115,9 +115,9 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("an A→B→A rebuild of a stored artifact is read fresh") {
-    val root = Files.createTempDirectory("graft-read-cycle").toString
+    val root = tempDir("graft-read-cycle").toString
     withConf("graft.scratch.dir" -> root) {
-      val d = Files.createTempDirectory("graft-read-cycle-data").toString
+      val d = tempDir("graft-read-cycle-data").toString
       val builds = new AtomicInteger()
       def build(dir: String): Unit = {
         val n = builds.incrementAndGet()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.pipeline._
@@ -23,15 +22,20 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("multi-branch DAG with cached shared node (test_multiple_paths)") {
-    val shared = Pipe.create(spark, Seq(1)).cache()
-    val b1 = shared.map(_ / 5.0)
-    val b2 = shared.map(_ + 1).map(_ * 2).map(_ - 1)
-    val b3 = shared.map(_ + 2)
-    val b4 = b2.map(_ * 100)
-    assert(b1.collect() == Seq(0.2))
-    assert(b2.collect() == Seq(3))
-    assert(b3.collect() == Seq(3))
-    assert(b4.collect() == Seq(300))
+    // no explicit cache: the shared node's three consumers auto-persist it
+    val evals = spark.sparkContext.longAccumulator("multiple-paths-evals")
+    CacheScope.run {
+      val shared = Pipe.create(spark, Seq(1)).map { x => evals.add(1); x }
+      val b1 = shared.map(_ / 5.0)
+      val b2 = shared.map(_ + 1).map(_ * 2).map(_ - 1)
+      val b3 = shared.map(_ + 2)
+      val b4 = b2.map(_ * 100)
+      assert(b1.collect() == Seq(0.2))
+      assert(b2.collect() == Seq(3))
+      assert(b3.collect() == Seq(3))
+      assert(b4.collect() == Seq(300))
+    }
+    assert(evals.value == 1, s"shared node computed ${evals.value} times, want once")
   }
 
   test("multi-consumer node is auto-cached: shared branch computes once") {
@@ -45,15 +49,18 @@ class PipelineSpec extends SparkSpec {
     assert(b1.collect().sorted == Seq(11, 21, 31, 41))
     assert(b2.collect().sorted == Seq(12, 22, 32, 42))
     assert(evals.value == 4, s"shared branch evaluated ${evals.value} times, want 4 (computed once)")
+    // built outside any CacheScope.run: the persist is untracked, so its
+    // caller releases it
+    shared.ds.unpersist(blocking = true)
   }
 
-  test("Pipe.run releases auto-persisted shared branches after the pipeline") {
+  test("CacheScope.run releases auto-persisted shared branches after the pipeline") {
     // the CacheScope discipline applied to the DSL (round-9 verdict item 5):
     // inside the run scope the shared branch still computes once; after it,
     // no persistent-RDD entries survive the completed DSL run
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val evals = spark.sparkContext.longAccumulator("run-scope-evals")
-    Pipe.run {
+    CacheScope.run {
       val shared = Pipe.create(spark, Seq(1, 2, 3, 4))
         .map { x => evals.add(1); x * 10 }
       val b1 = shared.map(_ + 1)
@@ -63,33 +70,31 @@ class PipelineSpec extends SparkSpec {
     }
     assert(evals.value == 4,
       s"shared branch evaluated ${evals.value} times inside run, want 4")
-    // unpersist is async; storage dies shortly after the scope closes
-    val deadline = System.nanoTime() + 10000000000L
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"auto-persists survived Pipe.run: $leaked")
+    // the scope's release is blocking: nothing is left once run returns
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"auto-persists survived CacheScope.run: $leaked")
   }
 
-  test("late second consumer after Pipe.run exits registers a releasable persist") {
+  test("late second consumer after CacheScope.run exits persists untracked") {
     // a Pipe BUILT inside run() whose second consumer only arrives after the
-    // block returns would register its auto-persist into the already-drained
-    // scope buffer — unreachable by both the scope release and releaseAll, a
-    // silent storage leak. A closed scope must route the persist to the
-    // session-wide ledger instead.
+    // block returns is persisted like Spark's own persist: the closed scope
+    // does not release it, and its caller unpersists it
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val escaped = Pipe.run {
-      Pipe.create(spark, Seq(1, 2, 3)).map(_ * 10)
+    val evals = spark.sparkContext.longAccumulator("escaped-evals")
+    val escaped = CacheScope.run {
+      Pipe.create(spark, Seq(1, 2, 3)).map { x => evals.add(1); x * 10 }
     }
-    // both consumers fire after the scope closed → persist-once triggers now
-    assert(escaped.map(_ + 1).collect().sorted == Seq(11, 21, 31))
-    assert(escaped.map(_ + 2).collect().sorted == Seq(12, 22, 32))
+    // both consumers arrive after the scope closed → persist-once triggers now
+    val b1 = escaped.map(_ + 1)
+    val b2 = escaped.map(_ + 2)
+    assert(b1.collect().sorted == Seq(11, 21, 31))
+    assert(b2.collect().sorted == Seq(12, 22, 32))
+    assert(evals.value == 3, s"escaped pipe evaluated ${evals.value} elements, want 3 (once)")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "escaped pipe's shared branch was not persisted at its second consumer")
-    Pipe.releaseAll() // the global ledger CAN drain it
-    val deadline = System.nanoTime() + 10000000000L
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"late-registered auto-persist leaked: $leaked")
+    escaped.ds.unpersist(blocking = true)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"ds.unpersist left the escaped persist: $leaked")
   }
 
   test("groupByKey (test_create_map_and_groupby)") {
@@ -224,7 +229,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sharded writeText emits Beam-style part-SSSSS-of-NNNNN files") {
-    val dir = Files.createTempDirectory("graft-shards").toFile
+    val dir = tempDir("graft-shards").toFile
     val out = s"${dir.getAbsolutePath}/sharded"
     Pipe.create(spark, (1 to 100).toSeq).map(x => s"line$x").writeText(out, 3)
     val files = new java.io.File(out).listFiles.map(_.getName)
@@ -247,7 +252,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("readText + writeText round-trip (test_write)") {
-    val dir = Files.createTempDirectory("graft-io").toFile
+    val dir = tempDir("graft-io").toFile
     val out = s"${dir.getAbsolutePath}/out"
     Pipe.create(spark, Seq(1, 2, 3, 4, 10)).map(x => (x * 2, x))
       .map { case (k, v) => s"($k, [$v])" }
@@ -259,7 +264,7 @@ class PipelineSpec extends SparkSpec {
   test("unified model: the same transform chain over readText and readStreamText " +
       "produces identical results on a bounded source") {
     import SparkSpecBase.spark.implicits._
-    val dir = Files.createTempDirectory("graft-pipe-stream").toFile
+    val dir = tempDir("graft-pipe-stream").toFile
     val in = s"${dir.getAbsolutePath}/in"
     Pipe.create(spark, Seq(
       "the quick brown fox", "jumps over the lazy dog",
@@ -300,7 +305,7 @@ class PipelineSpec extends SparkSpec {
   }
   test("A29 windowInto: fixed/sliding assignment and session merging, batch == stream") {
     import SparkSpecBase.spark.implicits._
-    val dir = Files.createTempDirectory("graft-pipe-win").toFile
+    val dir = tempDir("graft-pipe-win").toFile
     val in = s"${dir.getAbsolutePath}/in"
     // lines "key,tsMinutes,value" — a deterministic mini event log whose
     // timestamps exercise window boundaries (0, 59, 60) and session gaps
@@ -361,21 +366,24 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("A28 partition is disjoint, exhaustive, and fails fast on a bad index") {
-    val s = spark
-    import s.implicits._
-    val p = graft.pipeline.Pipe(s.range(0, 100).as[Long])
-    val parts = p.partition(4)(v => (v % 4).toInt)
-    assert(parts.length == 4)
-    val sets = parts.map(_.ds.collect().toSet)
-    // exhaustive: the union recovers every element; disjoint: sizes add up
-    assert(sets.reduce(_ ++ _) == (0L until 100L).toSet)
-    assert(sets.map(_.size).sum == 100)
-    sets.zipWithIndex.foreach { case (set, i) =>
-      assert(set.forall(_ % 4 == i), s"element leaked across partition $i")
+    // the fan-out's auto-persist is released when the scope exits
+    CacheScope.run {
+      val s = spark
+      import s.implicits._
+      val p = graft.pipeline.Pipe(s.range(0, 100).as[Long])
+      val parts = p.partition(4)(v => (v % 4).toInt)
+      assert(parts.length == 4)
+      val sets = parts.map(_.ds.collect().toSet)
+      // exhaustive: the union recovers every element; disjoint: sizes add up
+      assert(sets.reduce(_ ++ _) == (0L until 100L).toSet)
+      assert(sets.map(_.size).sum == 100)
+      sets.zipWithIndex.foreach { case (set, i) =>
+        assert(set.forall(_ % 4 == i), s"element leaked across partition $i")
+      }
+      // an out-of-range partition index fails the job, never drops silently
+      val bad = p.partition(2)(_ => 7)
+      intercept[org.apache.spark.SparkException] { bad.head.ds.count() }
     }
-    // an out-of-range partition index fails the job, never drops silently
-    val bad = p.partition(2)(_ => 7)
-    intercept[org.apache.spark.SparkException] { bad.head.ds.count() }
   }
 
 }

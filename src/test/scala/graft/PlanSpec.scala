@@ -105,7 +105,7 @@ class PlanSpec extends SparkSpec {
       // multi-file inputs: AQE splits a skewed reduce partition by MAP
       // OUTPUT ranges, so a single-file (one-mapper) source is unsplittable
       // no matter how skewed — exactly the situation of the 1-file sf dirs
-      val root = java.nio.file.Files.createTempDirectory("graft-aqe-skew").toString
+      val root = tempDir("graft-aqe-skew").toString
       Tables.events(spark, sf).repartition(8)
         .write.parquet(s"$root/events.parquet")
       Tables.orders(spark, sf).repartition(8)

@@ -160,8 +160,7 @@ class PropertySpec extends SparkSpec {
     } yield es.filter { case (a, b) => a != b }
     forAllSeeded(edgesGen.suchThat(_.nonEmpty), n = 12) { es =>
       val want = Dedup.unionFindMinLabels(es.toArray)
-      val loc = java.nio.file.Files
-        .createTempDirectory("graft-cc-prop").toString + "/labels"
+      val loc = tempDir("graft-cc-prop").toString + "/labels"
       // both directions, like clusterPairs feeds it
       Dedup.propagateMinLabels(spark,
         es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst"), loc)

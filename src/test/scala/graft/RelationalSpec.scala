@@ -105,7 +105,7 @@ class RelationalSpec extends SparkSpec {
     // planted fixture with SHORT names (filter-powerless) and near-typos:
     // the length-banded branch must catch "cat"~"cap" while the gram
     // branch catches the long pair
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy").toString
+    val dir = tempDir("graft-fuzzy").toString
     Seq((1L, "cat"), (2L, "cap"), (3L, "dog"), (4L, "evergreen widget"),
       (5L, "evergreen widgets"), (6L, "completely different"),
       (7L, "abcd"), (8L, "abcdef"))
@@ -153,7 +153,7 @@ class RelationalSpec extends SparkSpec {
     // planted fixture: same-block typo pairs link (one short-x-long through
     // the gram path, one both-short through the in-block cross join); the
     // SAME near-identical names in DIFFERENT blocks must NOT link
-    val dir = java.nio.file.Files.createTempDirectory("graft-linkage").toString
+    val dir = tempDir("graft-linkage").toString
     Seq((1L, "M1", "abcd"), (2L, "M1", "abcdef"), // short x long, ed=2, in-block
       (3L, "M1", "cat"), (4L, "M1", "cap"),       // both short, ed=1, in-block
       (5L, "M2", "abcd"),                          // M2 twin of 'abcd': cross-block only

@@ -15,7 +15,7 @@ class SetSketchSpec extends SparkSpec {
     // must be exactly the true cardinality (the degenerate-KMV contract).
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("kmv-exact").toString
+    val tmp = tempDir("kmv-exact").toString
     val mk = (i: Int) => (0 until 12).map(j => s"w${i}_$j").mkString(" ")
     val docs = Seq(
       (0L, mk(0), "en", "pa", 1L),

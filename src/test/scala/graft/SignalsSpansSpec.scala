@@ -145,7 +145,7 @@ class SignalsSpansSpec extends SparkSpec {
     assert(passage.split(" ").tail.forall(w => !"048c".contains(lastNibble(w))))
     val docA = s"alpha bravo charlie $passage uniform victor"   // passage at 3
     val docB = s"one two $passage five"                          // passage at 2
-    val dir = java.nio.file.Files.createTempDirectory("graft-anchor").toString
+    val dir = tempDir("graft-anchor").toString
     Seq((1L, docA), (2L, docB)).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     // H14 misses: every block survives in BOTH docs (no block text repeats)
@@ -348,7 +348,7 @@ class SignalsSpansSpec extends SparkSpec {
     import SparkSpecBase.spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dynsess").toString
+    val dir = tempDir("graft-dynsess").toString
     Seq((1L, 1L, "purchase", at(0)), (2L, 1L, "click", at(45)),
         (3L, 2L, "click", at(0)), (4L, 2L, "click", at(45)))
       .toDF("event_id", "user_id", "event_type", "ts")
@@ -372,7 +372,7 @@ class SignalsSpansSpec extends SparkSpec {
     // planted fixture: identical twins share every 5-gram (novelty 0);
     // a unique doc's grams appear nowhere else (novelty 10000)
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-novel").toString
+    val dir = tempDir("graft-novel").toString
     val twin = (1 to 8).map(i => s"twin word number $i").mkString(" ")
     val uniq = (1 to 8).map(i => s"only here token $i").mkString(" ")
     Seq((1L, twin, "en", "src0", twin.length.toLong),
@@ -436,7 +436,7 @@ class SignalsSpansSpec extends SparkSpec {
     // blowup. Capped, the oversized bucket emits member->representative
     // stars (299 pairs anchored at the min interval); sub-cap buckets are
     // untouched.
-    val root = java.nio.file.Files.createTempDirectory("graft-hotbkt").toString
+    val root = tempDir("graft-hotbkt").toString
     val s = spark
     import s.implicits._
     val hotTs = java.sql.Timestamp.valueOf("2024-01-01 12:30:00")
@@ -592,7 +592,7 @@ class SignalsSpansSpec extends SparkSpec {
     // Spark's non-ANSI x/0 is NULL but DuckDB's SQRT(0)*SQRT(0) denominator
     // is NaN — the explicit guard keeps a constant-valued group gate-safe
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-corr0").toString
+    val dir = tempDir("graft-corr0").toString
     Seq((1L, "A", 5.0, 10.0), (2L, "A", 5.0, 20.0),   // x constant: r undefined
         (3L, "B", 1.0, 2.0), (4L, "B", 2.0, 4.0))     // perfect correlation
       .toDF("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")

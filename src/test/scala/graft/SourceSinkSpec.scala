@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.operators.Tables
 
@@ -11,7 +9,7 @@ import graft.operators.Tables
 class SourceSinkSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString + "/out"
+    tempDir(s"graft-$name").toString + "/out"
 
   test("binary-file source: per-file ingestion is lossless and ids recover from paths") {
     import graft.operators.BeamParity
@@ -107,7 +105,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("compaction rewrites a shattered directory into few full files, losslessly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact").toString
     val inDir = s"$base/shattered"
     val outDir = s"$base/compacted"
     val docs = Tables.documents(spark, sf).select("doc_id", "text", "source")
@@ -143,7 +141,7 @@ class SourceSinkSpec extends SparkSpec {
     assert(binFiles == nDocs, s"$binFiles .bin objects for $nDocs docs")
     val binBytes = new java.io.File(binDir).listFiles
       .filter(_.getName.endsWith(".bin")).map(_.length).sum
-    val outDir = java.nio.file.Files.createTempDirectory("graft-bin-compact").toString
+    val outDir = tempDir("graft-bin-compact").toString
     val planned = graft.operators.BeamParity.compactBinaryDir(
       spark, binDir, outDir, (binBytes / 3) max 1L)
     // ceil(B / floor(B/3)) is 3, or 4 when the division leaves a remainder

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import scala.reflect.io.Directory
 
@@ -11,15 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: one JVM-wide SparkSession, UTC, AQE on,
   * no interpreted fallback for a whole-stage plan that fails to compile.
-  * Every stored-artifact root points at one per-JVM directory, deleted at
-  * exit, so a run leaves no artifact generation in `java.io.tmpdir`. */
+  * Every stored-artifact root and every spec input dir ([[SparkSpec.tempDir]])
+  * lives under one per-JVM directory, deleted at exit, so a run leaves
+  * nothing in `java.io.tmpdir`. */
 object SparkSpecBase {
+  lazy val root: Path = {
+    val dir = Files.createTempDirectory("graft-spec-artifacts")
+    sys.addShutdownHook(new Directory(dir.toFile).deleteRecursively())
+    dir
+  }
   lazy val spark: SparkSession = {
-    val artifacts = Files.createTempDirectory("graft-spec-artifacts")
-    sys.addShutdownHook(new Directory(artifacts.toFile).deleteRecursively())
     val roots = "graft.scratch.dir" +:
       Seq("ivf", "int8", "pq", "ivfpq", "graph").map(f => s"graft.$f.dir")
-    val s = roots.foldLeft(SparkSession.builder())(_.config(_, artifacts.toString))
+    val s = roots.foldLeft(SparkSession.builder())(_.config(_, root.toString))
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -56,6 +60,9 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** A new empty directory under the per-JVM root, deleted at exit. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(SparkSpecBase.root, prefix)
 
   /** The catalog tables `df`'s plan reads. */
   def servedTables(df: DataFrame): Seq[CatalogTable] =

@@ -23,7 +23,7 @@ class StreamingSpec extends SparkSpec {
     * micro-batch (file order by name: 0_events before 1_flush).
     */
   private def stageDir(): String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     ev.coalesce(1).write.parquet(s"$dir/batch0")
@@ -31,7 +31,7 @@ class StreamingSpec extends SparkSpec {
     users.select(lit(-1L).as("event_id"), expr(s"timestamp'$flushTs'").as("ts"),
         col("user_id"), lit("flush").as("event_type"), lit(0.0).as("value"))
       .coalesce(1).write.parquet(s"$dir/batch1")
-    val staged = Files.createTempDirectory("graft-stream-in").toString
+    val staged = tempDir("graft-stream-in").toString
     // file source triggers in lexicographic-discovery order; copy batch0/1 parts
     def copyPart(sub: String, name: String): Unit = {
       val part = new java.io.File(s"$dir/$sub").listFiles()
@@ -100,6 +100,19 @@ class StreamingSpec extends SparkSpec {
     // HDFS-backed (dropDuplicates) and RocksDB (transformWithState) stores
     assert(Set("streaming_dedup", "streaming_sessionize_tws").subsetOf(stateful.toSet),
       s"state-store check vacuous: stateful keys $stateful")
+  }
+
+  test("two calls of each streaming run key leave one run dir per key") {
+    val scratch = new java.io.File(Artifacts.scratchBase(spark))
+    Seq("streaming_restart_recovery" -> "graft_recov_run_",
+        "streaming_merge_upsert" -> "graft_cdc_run_").foreach { case (key, prefix) =>
+      // a frame reads its run dir, which the next call rewrites: collect first
+      def rows() = SparkEntry.queries(key)(spark, sf).collect().map(_.toString).sorted.toSeq
+      val first = rows()
+      assert(rows() == first, s"$key: the second call's rows differ")
+      val dirs = scratch.listFiles().map(_.getName).filter(_.startsWith(prefix))
+      assert(dirs.length == 1, s"$key left ${dirs.length} run dirs: ${dirs.mkString(", ")}")
+    }
   }
 
   test("a query still active in the session keeps its state stores until it stops") {
@@ -370,7 +383,7 @@ class StreamingSpec extends SparkSpec {
     // plant a file whose timestamps were compressed 1000x (the exact
     // corruption a µs-as-ns read produces): every reader must CRASH on it,
     // never silently aggregate 1970-era windows
-    val dir = Files.createTempDirectory("graft-era").toString
+    val dir = tempDir("graft-era").toString
     Tables.events(spark, sf)
       .select(col("event_id"),
         timestamp_micros(expr("unix_micros(ts) DIV 1000")).as("ts"),
@@ -704,6 +717,26 @@ class StreamingSpec extends SparkSpec {
     fs.delete(base, true); ()
   }
 
+  test("C38: a _LAST_BATCH marker without the owner field fails, naming the file") {
+    val base = new org.apache.hadoop.fs.Path(
+      graft.Artifacts.scratchBase(spark), "graft_cdc_ownerless_spec")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(base, true)
+    val snap = new org.apache.hadoop.fs.Path(base, "snap")
+    val marker = new org.apache.hadoop.fs.Path(snap, "_LAST_BATCH")
+    val out = fs.create(marker, true)
+    try out.write("0".getBytes("UTF-8")) finally out.close()
+    val batch = Seq((1L, 10.0, java.time.LocalDateTime.of(1995, 1, 1, 0, 0)))
+      .toDF("o_custkey", "o_totalprice", "o_orderdate")
+    val e = intercept[IllegalStateException] {
+      Streams.applyCdcBatch(spark, snap.toString, batch, 0L)
+    }
+    assert(e.getMessage.contains(marker.toString), e.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(snap, "gen-0")),
+      "the batch was applied over an ownerless marker")
+    fs.delete(base, true); ()
+  }
+
   test("C32: timer flush emits exactly the expired finals on top of the event-closed set") {
     val timed = Streams.streamingSessionTimers(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -790,7 +823,7 @@ class StreamingSpec extends SparkSpec {
     import SparkSpecBase.spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(h: Double) = new java.sql.Timestamp(t0.getTime + (h * 3600000L).toLong)
-    val dir = java.nio.file.Files.createTempDirectory("graft-burst").toString
+    val dir = tempDir("graft-burst").toString
     Seq((1L, 1L, "purchase", 1.0, at(0)), (2L, 1L, "purchase", 1.0, at(5)),
         (3L, 1L, "purchase", 1.0, at(11)), (4L, 1L, "purchase", 1.0, at(23)),
         (5L, 1L, "purchase", 1.0, at(23.5)),

@@ -225,7 +225,7 @@ class TpchMoreSpec extends SparkSpec {
     // audit flag), never enumerate Θ(m²) pairs or abort on the array_pairs
     // hard limit
     import SparkSpecBase.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-megabasket").toString
+    val dir = tempDir("graft-megabasket").toString
     val mega = (1L to 10000L).map(p => (1L, p))        // one 10k-part order
     val normal = // a support-2 pair on part keys disjoint from the mega basket
       Seq((2L, 20001L), (2L, 20002L), (3L, 20001L), (3L, 20002L))
